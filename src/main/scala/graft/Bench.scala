@@ -83,9 +83,9 @@ object Bench {
       .replace("\n", " ").replace("\r", " ").take(200)
 
   /** The single JSON-escape point for error text: backslash, quote,
-    * and EVERY control char < 0x20 (Verify.q's rule) — a raw tab in a
-    * captured exception message is invalid JSON to strict parsers and
-    * would null the whole artifact parse.
+    * and EVERY control char < 0x20 — a raw tab in a captured exception
+    * message is invalid JSON to strict parsers and would null the
+    * whole artifact parse.
     */
   private def jsonEscape(s: String): String = {
     val b = new StringBuilder
@@ -98,42 +98,29 @@ object Bench {
     b.toString
   }
 
-  /** Time `run` for `reps` repetitions, excluding failed reps from the
-    * stats and capturing the first error. Public and Spark-free so the
-    * failure contract is unit-testable with a deliberately-throwing
-    * thunk (BenchSpec).
+  /** One timed rep of `run`: wall seconds plus, when it threw, the
+    * (clipped, class-prefixed) error. Spark-free so the failure
+    * contract is unit-testable with a deliberately-throwing thunk
+    * (BenchSpec).
     */
-  def measure(name: String, reps: Int, warmFirst: Boolean = false)(
-      run: () => Unit): QueryStats = {
-    // Per-query untimed warm rep (VERDICT r14 #2): heavy shapes whose
-    // artifacts/caches decay between the GLOBAL prewarm pass and their
-    // own timed reps (~70 queries later in the headline) recorded
-    // monotonically-decaying triples (x132 [14.0, 11.2, 4.4] vs a
-    // 4.4 s steady state). One warm run immediately before the timed
-    // reps restores steady state. The reference's own protocol note
-    // is weaker but pointing the same way: benchmark.py's docstring
-    // advises re-running the script because the first (cold) run "may
-    // be slower than the others" — it never times a cold rep as the
-    // steady-state number. Either way the change is declared: every
-    // query that takes the warm rep is stamped in the artifact's
-    // heavy_warm field, so the JSON says exactly what was timed.
-    if (warmFirst) {
-      try run()
+  def timeRep(name: String)(run: () => Unit): (Double, Option[String]) = {
+    val t0 = System.nanoTime()
+    val err =
+      try { run(); None }
       catch { case e: Throwable =>
-        System.err.println(s"[bench] $name warm rep: ${e.getMessage}") }
-    }
-    val results = (1 to reps).map { _ =>
-      val t0 = System.nanoTime()
-      val err =
-        try { run(); None }
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] $name: ${e.getMessage}")
-          Some(s"${e.getClass.getSimpleName}: ${clip(e.getMessage)}")
-        }
-      ((System.nanoTime() - t0) / 1e9, err)
-    }
-    val ok = results.collect { case (t, None) => t }
-    val firstErr = results.flatMap(_._2).headOption
+        System.err.println(s"[bench] $name: ${e.getMessage}")
+        Some(s"${e.getClass.getSimpleName}: ${clip(e.getMessage)}")
+      }
+    ((System.nanoTime() - t0) / 1e9, err)
+  }
+
+  /** Stats over timed reps: failed reps are EXCLUDED and the first
+    * error is kept; a query with no successful rep gets zeroed stats
+    * and an err.
+    */
+  def repStats(name: String, reps: Seq[(Double, Option[String])]): QueryStats = {
+    val ok = reps.collect { case (t, None) => t }
+    val firstErr = reps.flatMap(_._2).headOption
     if (ok.isEmpty)
       QueryStats(name, 0.0, 0.0, 0.0, 0, firstErr.orElse(Some("all reps failed")))
     else {
@@ -146,6 +133,55 @@ object Bench {
       QueryStats(name, mean, std, median, ok.size, firstErr, ok)
     }
   }
+
+  /** Untimed warm rep: its seconds are returned for display only and a
+    * failure is logged, never recorded in the stats.
+    */
+  private def warmRep(name: String)(run: () => Unit): Double =
+    timeRep(s"$name warm rep")(run)._1
+
+  /** Time `run` for `reps` repetitions (see [[repStats]]).
+    *
+    * Per-query untimed warm rep (VERDICT r14 #2): heavy shapes whose
+    * artifacts/caches decay between the GLOBAL prewarm pass and their
+    * own timed reps (~70 queries later in the headline) recorded
+    * monotonically-decaying triples (x132 [14.0, 11.2, 4.4] vs a
+    * 4.4 s steady state). One warm run immediately before the timed
+    * reps restores steady state. The reference's own protocol note
+    * is weaker but pointing the same way: benchmark.py's docstring
+    * advises re-running the script because the first (cold) run "may
+    * be slower than the others" — it never times a cold rep as the
+    * steady-state number. Either way the change is declared: every
+    * query that takes the warm rep is stamped in the artifact's
+    * heavy_warm field, so the JSON says exactly what was timed.
+    */
+  def measure(name: String, reps: Int, warmFirst: Boolean = false)(
+      run: () => Unit): QueryStats = {
+    if (warmFirst) warmRep(name)(run)
+    repStats(name, Seq.fill(reps)(timeRep(name)(run)))
+  }
+
+  /** In-session A/B(/C…) timing: each arm is warmed once, then the arms
+    * are timed INTERLEAVED for `rounds` rounds (A B A B …) — the only
+    * protocol on this box that separates an arm's effect from window
+    * drift (cross-session walls for sub-2 s queries vary up to ±2×;
+    * see OPTIMIZATION_r18.md "Measurement protocol"). Returns each
+    * arm's warm-rep seconds and its [[repStats]]; an arm that throws is
+    * flagged in its own err without touching the others' stats.
+    */
+  def measureArms(name: String, rounds: Int)(
+      arms: Seq[() => Unit]): Seq[(Double, QueryStats)] = {
+    val warm = arms.map(warmRep(name))
+    val timed = Seq.fill(rounds)(arms.map(timeRep(name)))
+    arms.indices.map(i => (warm(i), repStats(name, timed.map(_(i)))))
+  }
+
+  /** One rep of registered query `name` at `dir` — the single place
+    * that decides how a warm, prewarm or timed rep executes a query
+    * (today `count()`). Returns the row count.
+    */
+  def runQuery(spark: SparkSession, name: String, dir: String): Long =
+    SparkEntry.queries(name)(spark, dir).count()
 
   /** JSON object mapping each failed query to its first error — empty
     * when everything ran clean. Split out so BenchSpec can pin the
@@ -532,7 +568,6 @@ object Bench {
       }).getOrElse(default)
 
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val reps = envInt("SPARK_GRAFT_REPS", 3)
     // 3 big reps by default: with 2, the recorded "median" is a mean
     // of two, and a single contended rep moves the official big/mid
@@ -543,14 +578,7 @@ object Bench {
     val budgetSec = envInt("SPARK_GRAFT_BENCH_BUDGET_SEC", 1500)
     def remainingSec: Double = budgetSec - elapsedSec
 
-    val spark = graft.engine.Tuning.rightSize(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir", "/tmp/graft-warehouse")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.engine.Tuning.session()
 
     def fmt(d: Double) = f"$d%.4f"
 
@@ -683,7 +711,7 @@ object Bench {
     // warm-Lambda runs (its cold/warm flag exists to tell them apart).
     def prewarm(queryNames: Seq[String], dir: String): Unit =
       queryNames.foreach { n =>
-        try SparkEntry.queries(n)(spark, dir).count()
+        try runQuery(spark, n, dir)
         catch { case e: Throwable =>
           System.err.println(s"[bench] $n prewarm@$dir: ${e.getMessage}") }
       }
@@ -700,7 +728,7 @@ object Bench {
       scala.collection.mutable.LinkedHashMap[String, String]()
     def timeQuery(name: String, dir: String, n: Int): QueryStats = {
       val s = measure(name, n, warmFirst = heavyWarm(name))(
-        () => { SparkEntry.queries(name)(spark, dir).count(); () })
+        () => { runQuery(spark, name, dir); () })
       if (s.okReps > 1 && s.raw.min > 0.5 &&
           s.raw.max / s.raw.min > 2.5) {
         val sent = sentinel()
@@ -749,8 +777,7 @@ object Bench {
     // band's top keeps genuinely-idle runs passing on the first read
     // and defers contended ones (bounded: 10 × 20 s, then proceed
     // with the contended flag stamped).
-    val sentinelIdleMax = sys.env.get("SPARK_GRAFT_SENTINEL_IDLE_MAX")
-      .flatMap(_.toDoubleOption).getOrElse(0.45)
+    val sentinelIdleMax = 0.45
     var headlineSent = sentinel()
     var gateAttempts = 0
     while (headlineSent > sentinelIdleMax && gateAttempts < 10 &&
@@ -1009,7 +1036,7 @@ object Bench {
         val d = Lake.table(spark, dir, "documents")
         parts += s""""x285_verified_pairs":${graft.ext.Dedup
           .ngramJaccardPairs(d, threshold = 0.5,
-            checkpoint = (n, f) => Lake.materialize(spark, dir, n)(f),
+            checkpoint = graft.ext.Dedup.lakeCheckpoint(spark, dir),
             nDocs = Lake.rowCount(spark, dir, "documents")).count()}"""
       } catch { case e: Throwable =>
         parts += s""""x285_verified_pairs_err":"${jsonEscape(e.getMessage)}"""" }
@@ -1235,29 +1262,6 @@ object Bench {
           (s"FAILED: ${clip(e.getMessage)}", Map.empty[String, QueryStats],
             "{}", "{}", 0.0, "{}")
         }
-      // VERDICT r17 #1 probe knob: a second pass over the big point in
-      // the SAME session with the shape order REVERSED. Identical
-      // prewarmed artifacts, adjacent windows — if a shape's wall
-      // tracks its position in the phase (in-phase contention /
-      // page-cache decay) the two passes disagree; if it tracks the
-      // plan they agree. Off unless SPARK_GRAFT_BIG_TWICE=1 (probe
-      // runs only — the official protocol is unchanged).
-      val bigRepeat =
-        if (sys.env.get("SPARK_GRAFT_BIG_TWICE").contains("1") &&
-            bigStats.nonEmpty && remainingSec > 420) try {
-          val d = Lake.ensureScaledDir(spark, sfDir, bigFactor)
-          val (rs, _, _, rsent, rshape) =
-            timePoint(d, bigNames.reverse, bigRepsFor, perShapeSentinel = true)
-          val rq = bigNames.reverse.map { n =>
-            s""""$n":{"median":${fmt(med(rs, n).getOrElse(0.0))},""" +
-              s""""raw":${rawJson(rs, n)}}"""
-          }.mkString("{", ",", "}")
-          Some(s"""{"order":"reversed","sentinel":${fmt(rsent)},""" +
-            s""""shape_sentinels":$rshape,"queries":$rq}""")
-        } catch { case e: Throwable =>
-          Some(s"""{"err":"${jsonEscape(e.getMessage)}"}""")
-        } else None
-      bigRepeat.foreach(r => fields("scaling_big_repeat") = r)
       val entries = scalingNames.map { name =>
         (med(smallStats, name), med(midStats, name), med(bigStats, name)) match {
           case (Some(s), Some(m), b) =>

@@ -153,22 +153,13 @@ object SparkEngine {
       f.name -> v
     }.toMap
 
-  /** Default local engine: one long-lived session, AQE on, shuffle
-    * parallelism sized for local[32] (not the 200 default).
+  /** Default local engine: one long-lived session from the shared
+    * factory, shuffle parallelism sized for local[32] (not the 200
+    * default), parquet timestamps written as MICROS.
     */
-  def local(master: String = "local[*]"): SparkEngine = new SparkEngine(() => {
-    val s = Tuning.rightSize(SparkSession.builder()
-      .master(master)
-      .appName("graft-engine")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.sql.warehouse.dir", "/tmp/graft-warehouse")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  })
+  def local(master: String = "local[*]"): SparkEngine = new SparkEngine(() =>
+    Tuning.session(master, shufflePartitions = 32, extraConfs = Map(
+      "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS")))
 
   /** Wrap an existing session (tests, Verify/Bench mains). Pins the
     * session timezone to UTC so formatTimestamp's UTC rendering agrees

@@ -2,10 +2,12 @@ package graft.engine
 
 import org.apache.spark.sql.SparkSession
 
-/** Shared session tuning applied by every entry point that builds a
-  * SparkSession (Bench, Verify, the serving engine, the probe tools)
-  * — one definition so the measured surface and the served surface
-  * can never drift.
+/** The single SparkSession factory: every entry point that builds a
+  * session (the serving engine, Bench, Verify, the probe tools) gets
+  * it from [[session]], so the measured surface and the served surface
+  * can never drift. The one exception is the test suite's shared
+  * session, which needs `spark.sql.extensions` on the context at
+  * creation.
   *
   * PARTITION RIGHT-SIZING (guide §2.2, VERDICT r17 #3): with the
   * stock AQE defaults (`coalescePartitions.parallelismFirst=true`)
@@ -34,20 +36,40 @@ import org.apache.spark.sql.SparkSession
   * the guide §9 range — 256m — set via the same env/conf; the
   * mechanism (size-adaptive coalescing) is what scales, the constant
   * is deployment-sized like `spark.sql.shuffle.partitions` itself.
+  * The stock-AQE shape stays reachable for A/B probes as a runtime
+  * conf arm of `graft.tools.Time`
+  * (`spark.sql.adaptive.coalescePartitions.parallelismFirst=false,true`).
   */
 object Tuning {
-  /** "off" disables the right-sizing entirely (A/B harness — the same
-    * binary can run the stock-AQE shape for before/after probes).
+  /** Local core count (`SPARK_GRAFT_CPUS`, default 4): the default
+    * master `local[Cpus]` and shuffle-partition count of [[session]].
     */
+  val Cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").flatMap(_.trim.toIntOption)
+    .getOrElse(4)
+
   val AdvisoryPartitionBytes: String =
     sys.env.getOrElse("SPARK_GRAFT_ADVISORY_PARTITION", "4m")
 
-  def rightSize(b: SparkSession.Builder): SparkSession.Builder = {
-    val base = b.config("spark.sql.adaptive.enabled", "true")
-    if (AdvisoryPartitionBytes == "off") base
-    else base
+  /** Get or create the process's session: `master`, the initial
+    * shuffle-partition count, and `extraConfs` on top of the shared
+    * shape — AQE right-sizing, UTC session time zone, the
+    * `/tmp/graft-warehouse` warehouse dir, UI off, log level WARN.
+    */
+  def session(master: String = s"local[$Cpus]",
+      shufflePartitions: Int = Cpus,
+      extraConfs: Map[String, String] = Map.empty): SparkSession = {
+    val s = extraConfs.foldLeft(SparkSession.builder()
+      .master(master)
+      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.warehouse.dir", "/tmp/graft-warehouse")
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
       .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        AdvisoryPartitionBytes)
+        AdvisoryPartitionBytes)) { case (b, (k, v)) => b.config(k, v) }
+      .getOrCreate()
+    s.sparkContext.setLogLevel("WARN")
+    s
   }
 }

@@ -193,6 +193,18 @@ object Dedup {
   def shingleTable(df: DataFrame): DataFrame =
     df.select(col("doc_id"), explode(shingles(3)).as("shingle"))
 
+  /** The lake materializer that lake callers of the x05 pair family
+    * ([[ngramJaccardPairs]], [[containmentPairs]]) pass as
+    * `checkpoint`. It also retires `x05_shingles_gated_v1`, the gated
+    * table's name before the cap joined it (r17), so an existing lake
+    * root does not carry that orphan forever.
+    */
+  private[graft] def lakeCheckpoint(spark: SparkSession,
+      sfDir: String): (String, DataFrame) => DataFrame = {
+    Lake.retireDerived(spark, sfDir, "x05_shingles_gated_v1")
+    (n, f) => Lake.materialize(spark, sfDir, n)(f)
+  }
+
   /** Exact n-gram Jaccard via inverted-index join: explode distinct
     * shingles, equi-join on the shingle (the "index"), count
     * intersections per pair, compute |A∩B| / (|A|+|B|-|A∩B|).
@@ -356,9 +368,7 @@ object Dedup {
     * x239/x285, so the r17 close's apparent 25-40% filter cost was
     * cross-session noise, not the filter.
     */
-  private[graft] val PairMemberSkipCoverage: Double =
-    sys.env.get("SPARK_GRAFT_PAIR_MEMBER_SKIP_COVERAGE")
-      .flatMap(_.toDoubleOption).getOrElse(0.9)
+  private[graft] val PairMemberSkipCoverage: Double = 0.9
 
   /** Docs restricted to the broadcast pair set's member ids: every
     * consumer of the per-doc gram-count tables equi-joins them back
@@ -977,7 +987,7 @@ object Dedup {
     val tkey = s"t${(threshold * 100).toInt}"
     val pairs = Lake.materialize(spark, sfDir, s"x18_ngram_pairs_$tkey") {
       ngramJaccardPairs(docs(spark, sfDir), threshold = threshold,
-        checkpoint = (n, f) => Lake.materialize(spark, sfDir, n)(f),
+        checkpoint = lakeCheckpoint(spark, sfDir),
         nDocs = Lake.rowCount(spark, sfDir, "documents"))
         .select(col("doc_a"), col("doc_b"))
     }
@@ -1599,7 +1609,7 @@ object Dedup {
 
     "x05_dedup_ngram_jaccard" -> ((spark, sfDir) =>
       ngramJaccardPairs(docs(spark, sfDir), threshold = 0.5,
-        checkpoint = (n, f) => Lake.materialize(spark, sfDir, n)(f),
+        checkpoint = lakeCheckpoint(spark, sfDir),
         nDocs = Lake.rowCount(spark, sfDir, "documents"))
         .orderBy(col("doc_a"), col("doc_b"))),
 
@@ -1612,7 +1622,7 @@ object Dedup {
     "x239_bleu_pairs" -> ((spark, sfDir) => {
       val d = docs(spark, sfDir)
       bleuOnPairs(d, ngramJaccardPairs(d, threshold = 0.5,
-        checkpoint = (n, f) => Lake.materialize(spark, sfDir, n)(f),
+        checkpoint = lakeCheckpoint(spark, sfDir),
         nDocs = Lake.rowCount(spark, sfDir, "documents")),
         nDocs = Lake.rowCount(spark, sfDir, "documents"))
     }),
@@ -1634,8 +1644,9 @@ object Dedup {
       val pairs = ids.as("a").join(ids.as("b"),
           col("a.doc_id") =!= col("b.doc_id"))
         .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      // nDocs = the 200-doc sample bound: far below the member-filter
-      // threshold, so the gate skips the semi-join with zero probe work
+      // nDocs = the 200-doc sample bound: the sample's members cover
+      // it, so the gate skips the semi-join — after one memberList
+      // count() job over the pair frame, paid on every call
       bleuOnPairs(d, pairs, nDocs = 200L)
         .select(when(col("bleu2").isNotNull,
           round(col("bleu2") * 1000000.0, 0).cast("long")).as("b_fp"))
@@ -1657,7 +1668,7 @@ object Dedup {
     "x285_rouge_pairs" -> ((spark, sfDir) => {
       val d = docs(spark, sfDir)
       rougeOnPairs(d, ngramJaccardPairs(d, threshold = 0.5,
-        checkpoint = (n, f) => Lake.materialize(spark, sfDir, n)(f),
+        checkpoint = lakeCheckpoint(spark, sfDir),
         nDocs = Lake.rowCount(spark, sfDir, "documents")),
         nDocs = Lake.rowCount(spark, sfDir, "documents"))
     }),
@@ -1669,7 +1680,7 @@ object Dedup {
     "x259_chrf_pairs" -> ((spark, sfDir) => {
       val d = docs(spark, sfDir)
       chrfOnPairs(d, ngramJaccardPairs(d, threshold = 0.5,
-        checkpoint = (n, f) => Lake.materialize(spark, sfDir, n)(f),
+        checkpoint = lakeCheckpoint(spark, sfDir),
         nDocs = Lake.rowCount(spark, sfDir, "documents")),
         nDocs = Lake.rowCount(spark, sfDir, "documents"))
     }),
@@ -1766,7 +1777,7 @@ object Dedup {
       val meta = d.select(col("doc_id"), col("lang"), col("source"),
         expr("n_chars DIV 50").as("len_b"))
       val cand = ngramJaccardPairs(d, threshold = 0.3,
-        checkpoint = (n, f) => Lake.materialize(spark, sfDir, n)(f),
+        checkpoint = lakeCheckpoint(spark, sfDir),
         nDocs = Lake.rowCount(spark, sfDir, "documents"))
       fellegiSunter(cand, meta)
         .orderBy(desc("score_fp"), col("doc_a"), col("doc_b"))
@@ -1782,7 +1793,7 @@ object Dedup {
     // the prefix-positioned subset), so no injection is needed.
     "x97_containment_dedup" -> ((spark, sfDir) =>
       containmentPairs(docs(spark, sfDir), threshold = 0.9,
-        checkpoint = (n, f) => Lake.materialize(spark, sfDir, n)(f),
+        checkpoint = lakeCheckpoint(spark, sfDir),
         nDocs = Lake.rowCount(spark, sfDir, "documents"))
         .orderBy(col("inner_id"), col("outer_id"))),
 
@@ -1973,7 +1984,7 @@ object Dedup {
       val tkey = "t50"
       val pairs = Lake.materialize(spark, sfDir, s"x18_ngram_pairs_$tkey") {
         ngramJaccardPairs(docs(spark, sfDir), threshold = 0.5,
-          checkpoint = (n, f) => Lake.materialize(spark, sfDir, n)(f),
+          checkpoint = lakeCheckpoint(spark, sfDir),
           nDocs = Lake.rowCount(spark, sfDir, "documents"))
           .select(col("doc_a"), col("doc_b"))
       }
@@ -2072,7 +2083,7 @@ object Dedup {
     // are exact distinct counts over the (small) pair table.
     "x109_threshold_curve" -> ((spark, sfDir) => {
       val wp = ngramJaccardPairs(docs(spark, sfDir), threshold = 0.5,
-        checkpoint = (n, f) => Lake.materialize(spark, sfDir, n)(f),
+        checkpoint = lakeCheckpoint(spark, sfDir),
         nDocs = Lake.rowCount(spark, sfDir, "documents"))
       Seq(0.5, 0.7, 0.9).map { t =>
         val f = wp.filter(col("jaccard") >= t)

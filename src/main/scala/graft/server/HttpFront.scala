@@ -41,7 +41,8 @@ import graft.sources.Lake
   */
 object HttpFront {
 
-  private val mapper = new ObjectMapper().registerModule(DefaultScalaModule)
+  /** The process's JSON codec (also writes Verify's oracle_sql.json). */
+  private[graft] val mapper = new ObjectMapper().registerModule(DefaultScalaModule)
 
   def start(engine: SparkEngine, spark: SparkSession, sfDir: String,
       port: Int, bindHost: String = "127.0.0.1"): HttpServer = {

@@ -1,8 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 import graft.SparkEntry
+import graft.engine.Tuning
 
 /** Plan-inspection CLI: print the formatted physical plan of registered
   * queries — the "is this the plan you'd want at 100 TB" review loop
@@ -23,14 +22,7 @@ object Explain {
     val (sfDir, names) =
       if (args.nonEmpty && args.head.startsWith("/")) (args.head, args.tail.toSeq)
       else (sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01"), args.toSeq)
-    val spark = graft.engine.Tuning.rightSize(SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir", "/tmp/graft-warehouse")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Tuning.session()
     val targets = if (names.nonEmpty) names else SparkEntry.queries.keys.toSeq.sorted
     targets.foreach { name =>
       SparkEntry.queries.get(name) match {

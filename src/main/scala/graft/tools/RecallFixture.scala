@@ -1,7 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
+import graft.engine.Tuning
 import graft.ext.Similarity
 
 /** Regenerates the committed ANN-recall oracle fixtures
@@ -26,19 +27,14 @@ object RecallFixture {
       .getOrElse(sys.error(s"no sf token in $sfDir"))
     val suffix = if (tag == graft.ext.RecallFixtures.FixtureSf) ""
       else tag.stripPrefix("sf").replace(".", "")
-    // SAME session shape as the Verify gate (SPARK_GRAFT_CPUS, default
-    // 4): ivfFit/pqFit's k-means init sampling and float accumulation
-    // are partitioning-sensitive, so a dump at a different parallelism
-    // can pin candidate sets the gate session won't reproduce
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir", "/tmp/graft-warehouse")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // The Verify gate's session (Tuning.session, SPARK_GRAFT_CPUS,
+    // default 4): ivfFit/pqFit's k-means init sampling and float
+    // accumulation are partitioning-sensitive, so a dump at a different
+    // parallelism can pin candidate sets the gate session won't
+    // reproduce. The committed fixtures predate the shared factory and
+    // were dumped WITHOUT the AQE right-sizing the gate applies; the
+    // gate reproduces them regardless, so they stand as committed.
+    val spark = Tuning.session()
 
     def valuesOf(df: DataFrame): String =
       df.select("query_id", "neighbor_id").collect()

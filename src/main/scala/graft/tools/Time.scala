@@ -1,50 +1,80 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
-import graft.SparkEntry
+import graft.{Bench, SparkEntry}
+import graft.engine.Tuning
 
 /** Targeted wall-clock probe for individual registered queries — the
   * iterate-on-one-operator loop Bench is too heavy for (Bench prewarm
   * runs the whole headline set; this warms and times only what you
-  * name, with the same local[32]/AQE session shape Bench uses).
+  * name, on the shared [[Tuning.session]] shape).
   *
-  * Usage: runMain graft.tools.Time [sfDir] <query names...>
-  * Env:   SPARK_GRAFT_CPUS (default 32), SPARK_GRAFT_REPS (default 3)
+  * With a `confKey=v1,v2,…` argument each value is one ARM: the
+  * runtime SQL conf is set to that value before every rep of the arm,
+  * each arm is warmed once, and the arms are then timed interleaved
+  * inside ONE session ([[Bench.measureArms]]) — the in-session A/B
+  * protocol that separates a conf effect from window drift. Without
+  * it there is a single arm: warm rep, then the timed reps.
+  *
+  * Usage: runMain graft.tools.Time <sfDir> [confKey=v1,v2,...] <query names...>
+  * Env:   SPARK_GRAFT_CPUS (default 4), SPARK_GRAFT_REPS (default 3
+  *        rounds; each round times every arm once)
   */
 object Time {
-  def main(args: Array[String]): Unit = {
-    val (sfDir, names) =
-      if (args.nonEmpty && args.head.startsWith("/")) (args.head, args.tail.toSeq)
-      else (sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01"), args.toSeq)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val reps = sys.env.get("SPARK_GRAFT_REPS").flatMap(_.toIntOption).getOrElse(3)
-    val spark = graft.engine.Tuning.rightSize(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir", "/tmp/graft-warehouse")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    names.foreach { name =>
-      SparkEntry.queries.get(name) match {
-        case Some(fn) =>
-          // warm rep (artifact builds, codegen) then timed reps
-          val w0 = System.nanoTime()
-          val n = fn(spark, sfDir).count()
-          val warm = (System.nanoTime() - w0) / 1e9
-          val times = (1 to reps).map { _ =>
-            val t0 = System.nanoTime()
-            fn(spark, sfDir).count()
-            (System.nanoTime() - t0) / 1e9
-          }
-          println(f"[time] $name rows=$n warm=$warm%.3f reps=" +
-            times.map(t => f"$t%.3f").mkString(",") +
-            f" median=${times.sorted.apply(times.size / 2)}%.3f")
-        case None => println(s"[time] unknown query: $name")
-      }
+  val Usage =
+    "usage: runMain graft.tools.Time <sfDir> [confKey=v1,v2,...] <query names...>"
+
+  /** `conf` is the optional conf key with its arm values. */
+  final case class Args(sfDir: String, conf: Option[(String, Seq[String])],
+      names: Seq[String])
+
+  /** Parse the command line; [[Usage]] on too few args or a malformed
+    * `key=v1,v2` (empty key, empty value, or a second conf argument).
+    */
+  def parseArgs(args: Seq[String]): Either[String, Args] = {
+    def namesOk(names: Seq[String]) =
+      names.nonEmpty && !names.exists(_.contains('='))
+    args match {
+      case Seq(sfDir, conf, names @ _*) if conf.contains('=') =>
+        conf.split("=", 2) match {
+          case Array(key, vs) if key.nonEmpty && namesOk(names) &&
+              vs.split(",", -1).forall(_.nonEmpty) =>
+            Right(Args(sfDir, Some(key -> vs.split(",").toSeq), names))
+          case _ => Left(Usage)
+        }
+      case Seq(sfDir, names @ _*) if namesOk(names) =>
+        Right(Args(sfDir, None, names))
+      case _ => Left(Usage)
     }
-    spark.stop()
+  }
+
+  def main(args: Array[String]): Unit = parseArgs(args.toSeq) match {
+    case Left(usage) =>
+      System.err.println(usage)
+      sys.exit(2)
+    case Right(Args(sfDir, conf, names)) =>
+      val reps = sys.env.get("SPARK_GRAFT_REPS").flatMap(_.toIntOption).getOrElse(3)
+      val spark = Tuning.session()
+      val arms: Seq[Option[(String, String)]] = conf match {
+        case Some((key, values)) => values.map(v => Some(key -> v))
+        case None => Seq(None)
+      }
+      names.foreach { name =>
+        if (!SparkEntry.queries.contains(name)) println(s"[time] unknown query: $name")
+        else {
+          val rows = Array.fill(arms.size)(0L)
+          val results = Bench.measureArms(name, reps)(arms.indices.map(i => () => {
+            arms(i).foreach { case (k, v) => spark.conf.set(k, v) }
+            rows(i) = Bench.runQuery(spark, name, sfDir)
+          }))
+          arms.indices.foreach { i =>
+            val (warm, s) = results(i)
+            val arm = arms(i).map { case (k, v) => s" $k=$v" }.getOrElse("")
+            println(f"[time] $name$arm rows=${rows(i)} warm=$warm%.3f reps=" +
+              s.raw.map(t => f"$t%.3f").mkString(",") +
+              f" median=${s.median}%.3f" + s.err.map(e => s" err=$e").getOrElse(""))
+          }
+        }
+      }
+      spark.stop()
   }
 }

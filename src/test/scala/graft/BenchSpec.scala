@@ -59,4 +59,18 @@ newline"""))
     assert(s.median < 0.1, s"median ${s.median} should sit at the unspiked reps")
     assert(s.mean > s.median)
   }
+
+  test("interleaved arms: a throwing arm is flagged and excluded, the other arm stays intact") {
+    val calls = scala.collection.mutable.ArrayBuffer[String]()
+    val res = Bench.measureArms("ab", 3)(Seq(
+      () => { calls += "A"; sys.error("arm A broke") },
+      () => { calls += "B"; Thread.sleep(5) }))
+    // each arm warmed once, then timed A B A B A B
+    assert(calls.mkString == "AB" + "AB" * 3)
+    val (a, b) = (res(0)._2, res(1)._2)
+    assert(a.okReps == 0 && a.raw.isEmpty && a.median == 0.0)
+    assert(a.err.exists(_.contains("arm A broke")))
+    assert(b.err.isEmpty && b.okReps == 3 && b.raw.size == 3)
+    assert(b.median >= 0.005, s"median ${b.median} should reflect B's real reps")
+  }
 }
