@@ -1,10 +1,17 @@
 package graft
 
+import scala.collection.immutable.ListMap
+import scala.collection.mutable
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.FileSourceScanExec
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.{DataSourceScanExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+import org.apache.spark.sql.execution.exchange.Exchange
+import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.functions._
 
+import graft.server.HttpFront
 import graft.sources.Lake
 
 /** Benchmark harness — the reference's protocol (SURVEY §2.A A13/A14,
@@ -24,11 +31,23 @@ import graft.sources.Lake
   *     query is flagged in a top-level "errors" object. Averaging a
   *     near-zero failed-rep wall time silently converts a broken
   *     query into a fast one.
-  *   - Both sides of the scaling contrast run the same protocol: a
-  *     global prewarm pass over the query set at that sf dir, then
-  *     timed reps with no per-query warm rep. Mixing a
-  *     globally-prewarmed big side with a per-query-warmed small side
-  *     compares two different measurement protocols.
+  *   - Every timed query, in every phase and at every scale point,
+  *     runs the same protocol ([[measureArms]] with one arm): one
+  *     untimed warm rep, then the timed reps. The warm rep pays plan
+  *     codegen, JIT and file listing and builds the query's lake
+  *     artifacts immediately before its own reps, so no artifact or
+  *     cache decays between a distant warm-up and the reps it serves
+  *     (a global warm-up pass ~70 queries earlier recorded decaying
+  *     triples such as x132 [14.0, 11.2, 4.4] against a 4.4 s steady
+  *     state). benchmark.py's own docstring warns that a first (cold)
+  *     run "may be slower than the others".
+  *   - Each timed query's record carries a `plan_shape`: scans and
+  *     files read, exchanges, and every join with its output rows,
+  *     read from the executed plan of its last timed rep ([[planShape]]).
+  *     A candidate-pair volume is the output of the join that builds
+  *     the pairs, so a wall ratio can be read against the volume the
+  *     plan actually moved. The shape is that of the timed `count()`
+  *     action, not of a full materialization.
   *   - All compared scaling points are timed ADJACENT, inside the
   *     scaling phase, each with its own load-sentinel reading — the
   *     mid point is re-timed there rather than reusing the headline
@@ -48,55 +67,55 @@ import graft.sources.Lake
   *     tail) is printed to stdout. A timeout kill at any point leaves
   *     the last phase's complete, parseable record on disk and in the
   *     tail — never a truncated single mega-line.
-  *   - The big scale point is TRIMMED to the riskiest shapes at 2
-  *     reps, and expensive phases are skipped (with the reason in the
-  *     artifact) when the SPARK_GRAFT_BENCH_BUDGET_SEC budget is
-  *     nearly spent, so the driver-visible run finishes with rc 0.
-  *   - The FULL record (means/stds/medians/raw per-rep times/scaling
-  *     detail) lives in bench/bench_latest.json (committed) and
-  *     /tmp/graft-bench.json; the stdout line carries the headline
-  *     numbers plus a pointer.
+  *   - The record holds values, not JSON text; one codec
+  *     ([[HttpFront.mapper]]) writes both the artifact and the compact
+  *     line, so no captured error message can break the JSON.
+  *   - The big scale point is TRIMMED to the riskiest shapes, and
+  *     expensive phases are skipped (with the reason in the artifact)
+  *     when the SPARK_GRAFT_BENCH_BUDGET_SEC budget is nearly spent,
+  *     so the driver-visible run finishes with rc 0.
+  *   - The FULL record (means/stds/medians/raw per-rep times/plan
+  *     shapes/scaling detail) lives in bench/bench_latest.json
+  *     (committed) and /tmp/graft-bench.json; the stdout line carries
+  *     the headline numbers plus a pointer.
   */
 object Bench {
 
   /** Per-query timing result. `err` carries the first failure message
-    * when any rep (or the prewarm) threw; stats are over the
-    * successful reps only (`raw` lists them in run order). A query
-    * whose every rep failed has okReps == 0 and zeroed stats —
-    * callers must treat it as broken, never as fast.
+    * when any timed rep threw; stats are over the successful reps only
+    * (`raw` lists them in run order). A query whose every rep failed
+    * has okReps == 0 and zeroed stats — callers must treat it as
+    * broken, never as fast.
     */
   final case class QueryStats(name: String, mean: Double, std: Double,
       median: Double, okReps: Int, err: Option[String],
       raw: Seq[Double] = Nil)
 
-  /** Bound a captured error message: newlines flattened (the artifact
-    * is one line) and truncated to 200 chars of RAW text. No JSON
-    * escaping here — `QueryStats.err` stores the raw message and
-    * [[jsonEscape]] escapes exactly once at emission time. The old
-    * scheme escaped in both places AND truncated after escaping, so the
-    * cut could split a two-char escape pair and leave a lone trailing
-    * backslash that ate the JSON closing quote — the exact
-    * 'parsed: null' failure the artifact file exists to prevent.
+  /** One executed join operator and the rows it emitted. */
+  final case class JoinNode(name: String, rows: Long)
+
+  /** What an executed plan did: its source scans and the files they
+    * read after partition pruning, its exchanges, and each join with
+    * its output rows.
     */
-  private def clip(msg: String): String =
+  final case class PlanShape(scans: Int, files: Long, exchanges: Int,
+      joins: Seq[JoinNode])
+
+  /** Bound a captured error message: newlines flattened (the artifact
+    * is one line) and truncated to 200 chars of raw text. Escaping is
+    * the codec's job at write time.
+    */
+  private[graft] def clip(msg: String): String =
     Option(msg).getOrElse("null")
       .replace("\n", " ").replace("\r", " ").take(200)
 
-  /** The single JSON-escape point for error text: backslash, quote,
-    * and EVERY control char < 0x20 — a raw tab in a captured exception
-    * message is invalid JSON to strict parsers and would null the
-    * whole artifact parse.
+  /** The bench's JSON writer: the artifact, the compact stdout line
+    * and the HTTP phase's request body all go through it.
     */
-  private def jsonEscape(s: String): String = {
-    val b = new StringBuilder
-    clip(s).foreach {
-      case '\\' => b.append("\\\\")
-      case '"' => b.append("\\\"")
-      case c if c < 0x20 => b.append(f"\\u${c.toInt}%04x")
-      case c => b.append(c)
-    }
-    b.toString
-  }
+  def json(value: Any): String = HttpFront.mapper.writeValueAsString(value)
+
+  /** Round to the record's 4-decimal precision. */
+  private def r4(d: Double): Double = math.round(d * 1e4) / 1e4
 
   /** One timed rep of `run`: wall seconds plus, when it threw, the
     * (clipped, class-prefixed) error. Spark-free so the failure
@@ -134,109 +153,146 @@ object Bench {
     }
   }
 
-  /** Untimed warm rep: its seconds are returned for display only and a
-    * failure is logged, never recorded in the stats.
-    */
-  private def warmRep(name: String)(run: () => Unit): Double =
-    timeRep(s"$name warm rep")(run)._1
-
-  /** Time `run` for `reps` repetitions (see [[repStats]]).
-    *
-    * Per-query untimed warm rep (VERDICT r14 #2): heavy shapes whose
-    * artifacts/caches decay between the GLOBAL prewarm pass and their
-    * own timed reps (~70 queries later in the headline) recorded
-    * monotonically-decaying triples (x132 [14.0, 11.2, 4.4] vs a
-    * 4.4 s steady state). One warm run immediately before the timed
-    * reps restores steady state. The reference's own protocol note
-    * is weaker but pointing the same way: benchmark.py's docstring
-    * advises re-running the script because the first (cold) run "may
-    * be slower than the others" — it never times a cold rep as the
-    * steady-state number. Either way the change is declared: every
-    * query that takes the warm rep is stamped in the artifact's
-    * heavy_warm field, so the JSON says exactly what was timed.
-    */
-  def measure(name: String, reps: Int, warmFirst: Boolean = false)(
-      run: () => Unit): QueryStats = {
-    if (warmFirst) warmRep(name)(run)
-    repStats(name, Seq.fill(reps)(timeRep(name)(run)))
-  }
-
-  /** In-session A/B(/C…) timing: each arm is warmed once, then the arms
-    * are timed INTERLEAVED for `rounds` rounds (A B A B …) — the only
-    * protocol on this box that separates an arm's effect from window
-    * drift (cross-session walls for sub-2 s queries vary up to ±2×;
-    * see OPTIMIZATION_r18.md "Measurement protocol"). Returns each
-    * arm's warm-rep seconds and its [[repStats]]; an arm that throws is
-    * flagged in its own err without touching the others' stats.
+  /** The one timing loop: each arm is warmed once (untimed; a failure
+    * is logged, never recorded in the stats), then the arms are timed
+    * INTERLEAVED for `rounds` rounds (A B A B …). With several arms
+    * this is the only protocol on this box that separates an arm's
+    * effect from window drift (cross-session walls for sub-2 s queries
+    * vary up to ±2×; see OPTIMIZATION_r18.md "Measurement protocol");
+    * with one arm it is the bench's warm-rep-then-reps rule. Returns
+    * each arm's warm-rep seconds and its [[repStats]]; an arm that
+    * throws is flagged in its own err without touching the others'.
     */
   def measureArms(name: String, rounds: Int)(
       arms: Seq[() => Unit]): Seq[(Double, QueryStats)] = {
-    val warm = arms.map(warmRep(name))
+    val warm = arms.map(arm => timeRep(s"$name warm rep")(arm)._1)
     val timed = Seq.fill(rounds)(arms.map(timeRep(name)))
     arms.indices.map(i => (warm(i), repStats(name, timed.map(_(i)))))
   }
 
+  /** Run `df` the way `Dataset.count()` does — the same
+    * `groupBy().count()` plan, executed once — and return the count
+    * with the [[planShape]] of that execution.
+    */
+  def countWithShape(df: DataFrame): (Long, PlanShape) = {
+    val counted = df.groupBy().count()
+    (counted.collect().head.getLong(0), planShape(counted.queryExecution))
+  }
+
   /** One rep of registered query `name` at `dir` — the single place
-    * that decides how a warm, prewarm or timed rep executes a query
-    * (today `count()`). Returns the row count.
+    * that decides how a warm or timed rep executes a query (today
+    * `count()`, see [[countWithShape]]).
     */
-  def runQuery(spark: SparkSession, name: String, dir: String): Long =
-    SparkEntry.queries(name)(spark, dir).count()
+  def runQuery(spark: SparkSession, name: String, dir: String): (Long, PlanShape) =
+    countWithShape(SparkEntry.queries(name)(spark, dir))
 
-  /** JSON object mapping each failed query to its first error — empty
-    * when everything ran clean. Split out so BenchSpec can pin the
-    * "a broken query surfaces in the artifact" contract.
+  /** The shape of an ALREADY EXECUTED plan, read from its operators'
+    * metrics in one walk. AQE wraps the plan in AdaptiveSparkPlanExec
+    * and finalized stages are leaves that hold their subtree in
+    * `plan`, so both are unwrapped; subqueries are walked too. A
+    * reused exchange is a leaf, so nothing is counted twice. Scans
+    * report `numFiles` AFTER partition pruning (`DataFrame.inputFiles`
+    * lists the whole table).
     */
-  def errorsJson(stats: Seq[QueryStats]): String =
-    stats.collect { case QueryStats(n, _, _, _, _, Some(e), _) =>
-      s""""$n":"${jsonEscape(e)}""""
-    }.mkString("{", ",", "}")
-
-  /** Files actually read by the plan's parquet scans, counted AFTER
-    * partition pruning. `DataFrame.inputFiles` resolves the listing
-    * before pruning (it reports the full table), so the real evidence
-    * is the executed plan's `numFiles` metric, populated when the scan
-    * runs. AQE wraps the plan in AdaptiveSparkPlanExec; unwrap to reach
-    * the final physical scans.
-    */
-  def scanFileCount(df: DataFrame): Long = {
-    // Execute THIS plan instance (df.count() would build and run a
-    // separate QueryExecution whose metrics we couldn't read back).
-    val plan = df.queryExecution.executedPlan
-    plan.execute().count()
-    def scans(p: org.apache.spark.sql.execution.SparkPlan): Seq[FileSourceScanExec] =
-      p match {
-        case a: AdaptiveSparkPlanExec => scans(a.executedPlan)
-        case s: FileSourceScanExec    => Seq(s)
-        case other => other.children.flatMap(scans) ++
-          other.subqueries.flatMap(scans)
-      }
-    scans(plan).map(_.metrics("numFiles").value).sum
+  def planShape(qe: QueryExecution): PlanShape = {
+    val nodes = mutable.ArrayBuffer[SparkPlan]()
+    def walk(p: SparkPlan): Unit = p match {
+      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
+      case q: QueryStageExec => walk(q.plan)
+      case other =>
+        nodes += other
+        other.children.foreach(walk)
+        other.subqueries.foreach(walk)
+    }
+    walk(qe.executedPlan)
+    def metric(p: SparkPlan, name: String): Long =
+      p.metrics.get(name).map(_.value).getOrElse(0L)
+    val scans = nodes.filter {
+      case _: DataSourceScanExec | _: BatchScanExec => true
+      case _ => false
+    }
+    PlanShape(
+      scans = scans.size,
+      files = scans.map(metric(_, "numFiles")).sum,
+      exchanges = nodes.count(_.isInstanceOf[Exchange]),
+      joins = nodes.collect { case j: BaseJoinExec =>
+        JoinNode(j.nodeName, metric(j, "numOutputRows")) }.toSeq)
   }
 
-  /** Distinct join-operator node names in the AQE-FINAL physical plan
-    * of `df`, sorted and '+'-joined (e.g.
-    * "BroadcastHashJoin" / "SortMergeJoin"). Executes the plan (AQE
-    * only finalizes strategies at runtime) — the scale artifact
-    * records, per scale point, which side of the broadcast→SMJ cliff
-    * a join actually ran on, instead of leaving it inferred.
+  /** Each failed query mapped to its first error (clipped) — empty
+    * when everything ran clean.
     */
-  def joinStrategy(df: DataFrame): String = {
-    val plan = df.queryExecution.executedPlan
-    plan.execute().count()
-    def joins(p: org.apache.spark.sql.execution.SparkPlan): Seq[String] =
-      p match {
-        case a: AdaptiveSparkPlanExec => joins(a.executedPlan)
-        // materialized AQE stages report no children; descend into the
-        // finalized stage plan explicitly
-        case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-          joins(q.plan)
-        case other =>
-          (if (other.nodeName.contains("Join")) Seq(other.nodeName) else Nil) ++
-            other.children.flatMap(joins) ++ other.subqueries.flatMap(joins)
-      }
-    joins(plan).distinct.sorted.mkString("+")
+  def errors(stats: Seq[QueryStats]): ListMap[String, String] =
+    ListMap.from(stats.collect { case QueryStats(n, _, _, _, _, Some(e), _) =>
+      n -> clip(e) })
+
+  /** Headline shapes the compact stdout line keeps in its `queries`
+    * map: the ones BASELINE.md compares directly.
+    */
+  private val stdoutSet = Set("flagship", "b02_glob_scan", "b03_pruned_scan",
+    "b09_partial_final", "c02_join_large", "c07_agg_tpch_q1",
+    "c32_range_join", "x03_dedup_minhash", "x31_passage_dedup",
+    "x46_bigram_logprob", "x69_pagerank", "x92_span_dedup")
+
+  /** The headline phase's record fields, from its per-query stats. */
+  def headlineFields(stats: Seq[QueryStats]): Seq[(String, Any)] = {
+    val usable = stats.filter(_.okReps > 0)
+    def byName[V](qs: Seq[QueryStats])(f: QueryStats => V) =
+      ListMap.from(qs.map(s => s.name -> f(s)))
+    val failed = stats.filter(_.err.isDefined)
+    Seq(
+      "queries" -> byName(usable)(s => r4(s.mean)),
+      "queries_n" -> usable.size,
+      "queries_stdout" -> byName(usable.filter(s => stdoutSet(s.name)))(s => r4(s.mean)),
+      "std" -> byName(usable)(s => r4(s.std)),
+      "median" -> byName(usable)(s => r4(s.median)),
+      "raw" -> byName(usable)(_.raw.map(r4)),
+      "errors" -> errors(stats),
+      // a mass-failure round would blow the ~2 KB stdout budget if the
+      // full error map rode the compact line (the artifact keeps it);
+      // count + first example suffice there
+      "errors_compact" -> failed.headOption.fold(ListMap.empty[String, Any])(f =>
+        ListMap("n" -> failed.size, "first" -> clip(s"${f.name}: ${f.err.get.take(120)}"))),
+      "value" -> r4(usable.map(_.mean).sum),
+      // median-based: one spiked rep must not move the headline
+      // pruning ratio (see object scaladoc)
+      "pruned_vs_full" -> r4((for {
+        full <- usable.find(_.name == "b02_glob_scan")
+        pruned <- usable.find(_.name == "b03_pruned_scan")
+        if pruned.median > 0
+      } yield full.median / pruned.median).getOrElse(0.0)))
   }
+
+  /** Keys of the compact stdout line: the driver contract fields plus
+    * small headline extras — kept under ~2 KB so a tail-only log
+    * capture still holds one complete line.
+    */
+  val compactKeys = Seq("metric", "value", "unit", "queries",
+    "queries_n", "sf",
+    "reps", "probe_ok", "pruned_vs_full", "full_scan_files",
+    "pruned_scan_files", "http", "scaling_summary", "load_sentinel",
+    "errors_compact", "phases_complete", "elapsed_sec", "detail")
+
+  /** The compact stdout line: the [[compactKeys]] present in `record`,
+    * with the trimmed `queries_stdout` map standing in for `queries`
+    * (the full map pushed the line past the driver's tail-capture
+    * window: the r11 record had rc 0 but parsed:null, VERDICT r11 §2).
+    */
+  def compactLine(record: collection.Map[String, Any]): String =
+    json(ListMap.from(compactKeys.flatMap { k =>
+      val v = if (k == "queries") record.get("queries_stdout").orElse(record.get(k))
+        else record.get(k)
+      v.map(k -> _)
+    }))
+
+  /** One scaling point's results: per-query stats and plan shapes, the
+    * lake-checkpoint flags read after its reps, its load sentinel, and
+    * (big point only) a sentinel read before each shape's reps.
+    */
+  private final case class Point(stats: Map[String, QueryStats],
+      shapes: ListMap[String, PlanShape], ckptWarm: ListMap[String, Boolean],
+      sentinel: Double, shapeSentinels: ListMap[String, Double])
+  private val NoPoint = Point(Map.empty, ListMap.empty, ListMap.empty, 0.0, ListMap.empty)
 
   /** Headline set: engine flagship, the pruned/full contrast pair, a
     * large join, a wide aggregate, a window, the temporal joins, the
@@ -246,7 +302,7 @@ object Bench {
     * Label note: p01 is an end-to-end ELT pipeline and s07 a streaming
     * ingest — each rep times write + re-read by design, not a read-only
     * query. x03/x18 reps read their lake-checkpointed artifacts (built
-    * on the untimed prewarm pass) — the amortized repeat-invocation
+    * on their untimed warm rep) — the amortized repeat-invocation
     * path a warm engine serves.
     */
   private val headline = Seq(
@@ -409,7 +465,7 @@ object Bench {
     // candidate-volume shapes above
     "x147_isotropy",
     // KN shares x46's one-big-shuffle doc⋈model shape with a larger
-    // (4-table) model build — x46's instrumented volume covers both
+    // (4-table) model build on top
     "x148_kneser_ney",
     // TextRank: the co-occurrence EDGE SET is the scaling question —
     // it grows with distinct bigrams (vocabulary-shaped, sublinear)
@@ -417,8 +473,7 @@ object Bench {
     // term dominates
     "x164_textrank",
     // the inverted-index pair join: candidate volume Σ df² under the
-    // df cap — the lexical twin of x03's banding question, with its
-    // own instrumentation field
+    // df cap — the lexical twin of x03's banding question
     "x199_sparse_cosine_pairs",
     // round-15 additions (VERDICT r14 #5): the remaining non-trivial
     // headline shapes without decade evidence — the frequent-pair
@@ -482,7 +537,7 @@ object Bench {
     "x129_hits",
     // the edge-iterator triangle shape: the re-keyed scaled lake
     // grows the graph as disjoint copies, so wedge volume (and the
-    // instrumentation field) should read exactly linear — the clean
+    // wedge join's plan_shape rows) should read exactly linear — the clean
     // big-point check that the intersect form stays volume-bound
     "x132_adamic_adar",
     // the join-free linear control: its big ratio should sit at ≈ the
@@ -493,7 +548,7 @@ object Bench {
     "x148_kneser_ney",
     // VERDICT r13 #3: the inverted-index pair join's Σ df·(df−1)/2
     // candidate volume is quadratic in df below the [2,100] gate —
-    // the big point (with the instrumented candidate field) is the
+    // the big point (with the pair join's plan_shape rows) is the
     // evidence class that closed x03/x92 for this lexical twin
     "x199_sparse_cosine_pairs",
     // VERDICT r13 #5: decade evidence for the three heavy shapes that
@@ -507,15 +562,14 @@ object Bench {
     "x248_energy_distance", "x259_chrf_pairs",
     // VERDICT r14 #1: x164's scaling-mid point owned the recorded
     // max_ratio with no big bound — the vocabulary-shaped edge set
-    // (instrumented as x164_edges) is the term the big ratio reads
+    // is the term the big ratio reads
     "x164_textrank",
     // VERDICT r14 #5: the banded edit-distance join is the heaviest
     // of the four new scaling shapes — candidate-bounded like x03
     "x91_edit_distance_dedup",
     // VERDICT r15 #5: big-point coverage for the remaining heavies —
-    // the recall-side pair grading (candidate-bounded, instrumented
-    // as x285_verified_pairs), the frequent-pair lattice (basket-
-    // bounded, instrumented as x127_basket_pairs), the sample-bounded
+    // the recall-side pair grading (candidate-bounded), the
+    // frequent-pair lattice (basket-bounded), the sample-bounded
     // kNN graph (should read ≈ flat), and the cell-lattice
     // clustering (scan-bound, ≤256 cells after the reduce)
     "x285_rouge_pairs", "x127_association_rules",
@@ -530,31 +584,6 @@ object Bench {
     "c106_tpch_q5", "c120_rollup_window_topk",
     "c122_rollup_lochierarchy", "x220_katz_centrality")
 
-  /** Heavy shapes that get ONE untimed per-query warm rep immediately
-    * before their timed reps, in every timed phase (VERDICT r14 #2):
-    * the global prewarm leaves their artifacts warm, but by the time
-    * their own reps run (up to ~70 queries later) page-cache/JIT state
-    * has decayed and the recorded median sits 1.5-3× above steady
-    * state. The set is declared (and stamped in the artifact as
-    * `heavy_warm`) so the protocol difference is auditable.
-    */
-  private val heavyWarm = Set(
-    "x132_adamic_adar", "x144_personalized_pagerank",
-    "x173_bfs_diameter", "x92_span_dedup", "x69_pagerank",
-    "p01_pipeline_topk", "x129_hits", "x164_textrank",
-    "x31_passage_dedup", "x03_dedup_minhash", "x148_kneser_ney",
-    "x150_record_linkage", "x91_edit_distance_dedup",
-    // r15 session-2: the three iterative shapes whose first timed
-    // rep pays plan codegen visibly (x220 raw [3.02, 1.46, 1.16]
-    // under an idle post-rep sentinel — decay, not load)
-    "x220_katz_centrality", "x127_association_rules",
-    "x121_bpe_train_steps",
-    // r17: the two temporal joins show the same decay signature in
-    // the r17 probe's gated headline (c31 raw [4.17, 1.62, 0.54],
-    // c32 [4.59, 2.41, 1.32], post-rep sentinels 0.27/0.11 — idle,
-    // so decay, not load)
-    "c31_asof_join", "c32_range_join")
-
   def main(args: Array[String]): Unit = {
     val tStart = System.nanoTime()
     def elapsedSec: Double = (System.nanoTime() - tStart) / 1e9
@@ -568,46 +597,25 @@ object Bench {
       }).getOrElse(default)
 
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    // 3 reps at every point: with 2, the recorded "median" is a mean
+    // of two, and a single contended rep moves a ratio by half its
+    // spike (x31's r12 big_raw [4.51, 1.78] read as 7.7× when its
+    // clean band is ~2×)
     val reps = envInt("SPARK_GRAFT_REPS", 3)
-    // 3 big reps by default: with 2, the recorded "median" is a mean
-    // of two, and a single contended rep moves the official big/mid
-    // ratio by half its spike (x31's r12 big_raw [4.51, 1.78] read as
-    // 7.7× when its clean band is ~2×)
-    val bigReps = envInt("SPARK_GRAFT_REPS_BIG", 3)
     val bigFactor = envInt("SPARK_GRAFT_SCALE_BIG", 10)
     val budgetSec = envInt("SPARK_GRAFT_BENCH_BUDGET_SEC", 1500)
     def remainingSec: Double = budgetSec - elapsedSec
 
     val spark = graft.engine.Tuning.session()
 
-    def fmt(d: Double) = f"$d%.4f"
-
     // ---- checkpointed artifact state ---------------------------------
-    // Ordered (key -> rendered JSON value) for the FULL record; the
-    // record is rewritten to the artifact files after every phase, so
-    // a kill at any point leaves the last complete phase parseable.
-    val fields = scala.collection.mutable.LinkedHashMap[String, String](
-      "metric" -> "\"total\"", "value" -> "0.0", "unit" -> "\"sec\"",
-      "queries" -> "{}", "sf" -> s""""$sfDir"""", "reps" -> reps.toString)
-    val phasesDone = scala.collection.mutable.ArrayBuffer[String]()
-    // stdout keys: the driver contract fields plus small headline
-    // extras — kept under ~2 KB so a tail-only log capture still holds
-    // one complete line.
-    val compactKeys = Seq("metric", "value", "unit", "queries",
-      "queries_n", "sf",
-      "reps", "probe_ok", "pruned_vs_full", "full_scan_files",
-      "pruned_scan_files", "http", "scaling_summary", "load_sentinel",
-      "errors_compact", "phases_complete", "elapsed_sec", "detail")
-    // The compact stdout line substitutes the TRIMMED query map
-    // (baseline-comparable shapes only): the full 49-entry map pushed
-    // the cumulative line past the driver's tail-capture window, so
-    // the r11 record had rc 0 but parsed:null (VERDICT r11 §2). The
-    // full map lives only in the `detail` artifact.
-    def render(keys: Iterable[String],
-        overrides: Map[String, String] = Map.empty): String =
-      keys.flatMap(k => overrides.get(k).orElse(fields.get(k))
-        .map(v => s""""$k":$v"""))
-        .mkString("{", ",", "}")
+    // The FULL record, in key order; it is rewritten to the artifact
+    // files after every phase, so a kill at any point leaves the last
+    // complete phase parseable.
+    val fields = mutable.LinkedHashMap[String, Any](
+      "metric" -> "total", "value" -> 0.0, "unit" -> "sec",
+      "queries" -> ListMap.empty, "sf" -> sfDir, "reps" -> reps)
+    val phasesDone = mutable.ArrayBuffer[String]()
     val outs = Seq(
       sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench/bench_latest.json"),
       "/tmp/graft-bench.json")
@@ -618,22 +626,20 @@ object Bench {
     // — e.g. the x132 adjacency at first touch of the scaled lake —
     // is exactly the hypothesis the r17 big-point inflations left
     // open). Not on the compact stdout line (2 KB budget).
-    val ledgerMarks = scala.collection.mutable.LinkedHashMap[String, Int]()
+    val ledgerMarks = mutable.LinkedHashMap[String, Int]()
     def stampLedger(phase: String): Unit = {
-      val led = graft.sources.Lake.buildLedgerSnapshot()
+      val led = Lake.buildLedgerSnapshot()
       ledgerMarks(phase) = led.size
-      fields("derived_builds") = led.map { case (n, s) =>
-        s""""${jsonEscape(n)}":${fmt(s)}""" }.mkString("{", ",", "}")
+      fields("derived_builds") = ListMap.from(led.map { case (n, s) => n -> r4(s) })
       fields("derived_builds_phase_marks") = ledgerMarks
-        .map { case (p, n) => s""""$p":$n""" }.mkString("{", ",", "}")
     }
     def checkpoint(phase: String): Unit = {
       phasesDone += phase
       stampLedger(phase)
-      fields("phases_complete") = "\"" + phasesDone.mkString(",") + "\""
-      fields("elapsed_sec") = fmt(elapsedSec)
-      fields("detail") = s""""${outs.head}""""
-      val full = render(fields.keys)
+      fields("phases_complete") = phasesDone.mkString(",")
+      fields("elapsed_sec") = r4(elapsedSec)
+      fields("detail") = outs.head
+      val full = json(fields)
       outs.foreach { out =>
         try {
           val p = java.nio.file.Paths.get(out)
@@ -643,10 +649,8 @@ object Bench {
           System.err.println(s"[bench] file write $out: ${e.getMessage}") }
       }
       // cumulative compact line; the LAST printed line is always the
-      // most complete record. Must stay well under the driver's
-      // tail-capture window (~2 KB) — hence the trimmed query map.
-      println(render(compactKeys,
-        fields.get("queries_stdout").map("queries" -> _).toMap))
+      // most complete record
+      println(compactLine(fields))
     }
 
     // ---- phase 0: sentinel, probe, structural pruning evidence -------
@@ -667,7 +671,7 @@ object Bench {
     // the warm-up, `start` is a clean load reading comparable to the
     // per-phase ones.
     sentinel()
-    val sentinelStart = sentinel()
+    val sentinelStart = r4(sentinel())
 
     // Materialize the partitioned copy once so rep 1 of the pruned/full
     // pair times the query, not the one-off write (benchmark.py times
@@ -675,10 +679,7 @@ object Bench {
     Lake.ensurePartitionedEvents(spark, sfDir)
 
     // A13 probe: the pruned-path count and the full-scan count of one
-    // probe key must agree across modes (benchmark.py:41,:116). Also
-    // serves as the session warm-up (codegen/JIT, file listing) so the
-    // timed reps measure queries, not first-query initialization — the
-    // reference benchmarks a warm Lambda the same way.
+    // probe key must agree across modes (benchmark.py:41,:116).
     val probeKey = "signup"
     val viaFull = Lake.table(spark, sfDir, "events")
       .filter(col("event_type") === probeKey).count()
@@ -690,76 +691,56 @@ object Bench {
     // count a pruned scan touches vs the full glob (README.md:164-174
     // contrast; at 100 TB this ratio, not latency on 100k rows, is
     // what pruning buys).
-    val fullFiles = scanFileCount(
+    def filesRead(df: DataFrame): Long = countWithShape(df)._2.files
+    fields("probe_ok") = probeOk
+    fields("full_scan_files") = filesRead(
       Lake.partitionedEvents(spark, sfDir).select(col("event_id")))
-    val prunedFiles = scanFileCount(
+    fields("pruned_scan_files") = filesRead(
       Lake.partitionedEvents(spark, sfDir)
         .filter(col("date") === lit("2024-01-05"))
         .select(col("event_id")))
-    fields("probe_ok") = probeOk.toString
-    fields("full_scan_files") = fullFiles.toString
-    fields("pruned_scan_files") = prunedFiles.toString
-    fields("load_sentinel") = s"""{"start":${fmt(sentinelStart)}}"""
+    fields("load_sentinel") = ListMap("start" -> sentinelStart)
     checkpoint("setup")
 
     // ---- phase 1: headline timings at sfDir --------------------------
-    // One protocol for every timed number: global prewarm over the
-    // query set at that dir (plan codegen, JIT, file listing,
-    // lake-artifact builds — observed: the flagship timed first in a
-    // fresh JVM records ~2× its steady state), then timed reps with no
-    // per-query warm rep. The reference's published numbers are
-    // warm-Lambda runs (its cold/warm flag exists to tell them apart).
-    def prewarm(queryNames: Seq[String], dir: String): Unit =
-      queryNames.foreach { n =>
-        try runQuery(spark, n, dir)
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] $n prewarm@$dir: ${e.getMessage}") }
-      }
-    // Post-hoc contention stamp (VERDICT r14 #1): the per-point
-    // sentinel is read BEFORE the prewarm pass, so machine load during
-    // a specific query's timed reps — minutes later — was unmeasured,
-    // and an anomalous triple (x164-mid [29.7, 40.9, 15.6] under an
-    // "idle" point sentinel) could not be attributed in-artifact. Any
-    // non-trivial query whose rep spread exceeds 2.5× now gets a
-    // sentinel read IMMEDIATELY after its reps, stamped per
+    // Post-hoc contention stamp (VERDICT r14 #1): a point's sentinel
+    // says nothing about machine load during one query's timed reps
+    // minutes later, so an anomalous triple (x164-mid [29.7, 40.9,
+    // 15.6] under an "idle" point sentinel) could not be attributed
+    // in-artifact. Any non-trivial query whose rep spread exceeds 2.5×
+    // gets a sentinel read IMMEDIATELY after its reps, stamped per
     // query@point, so load during the anomalous window is recorded
     // rather than inferred.
-    val spreadSentinels =
-      scala.collection.mutable.LinkedHashMap[String, String]()
-    def timeQuery(name: String, dir: String, n: Int): QueryStats = {
-      val s = measure(name, n, warmFirst = heavyWarm(name))(
-        () => { runQuery(spark, name, dir); () })
+    val spreadSentinels = mutable.LinkedHashMap[String, Double]()
+    // The single timing rule (see object scaladoc): warm rep, then
+    // `n` timed reps; the plan shape is the last successful rep's.
+    def timeQuery(name: String, dir: String, n: Int): (QueryStats, Option[PlanShape]) = {
+      var shape: Option[PlanShape] = None
+      val s = measureArms(name, n)(Seq(() => shape = Some(runQuery(spark, name, dir)._2)))
+        .head._2
       if (s.okReps > 1 && s.raw.min > 0.5 &&
           s.raw.max / s.raw.min > 2.5) {
         val sent = sentinel()
-        spreadSentinels(s"$name@${dir.split('/').last}") = fmt(sent)
+        spreadSentinels(s"$name@${dir.split('/').last}") = r4(sent)
         System.err.println(f"[bench] $name@$dir rep spread ${
-          s.raw.max / s.raw.min}%.1fx (raw ${s.raw.map(fmt).mkString(",")
+          s.raw.max / s.raw.min}%.1fx (raw ${s.raw.map(t => f"$t%.4f").mkString(",")
           }), post-rep sentinel $sent%.2f")
         fields("spread_sentinels") = spreadSentinels
-          .map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
       }
-      s
+      (s, shape)
     }
-    fields("heavy_warm") =
-      heavyWarm.toSeq.sorted.mkString("[\"", "\",\"", "\"]")
+    // Checkpoint warm-path evidence (VERDICT r8 #1, extended r15 to
+    // x164 per VERDICT r14 #1): read after a point's reps, these lake
+    // checkpoints must be built, so the timed reps measured checkpoint
+    // reads, not rebuilds — a slow point with ckpt_warm=true DISPROVES
+    // the rebuild-inside-timed-reps hypothesis in the artifact itself.
+    def ckptWarm(dir: String): ListMap[String, Boolean] =
+      ListMap.from(Seq("x31" -> "x31_passages", "x164" -> "textrank_edges_v1")
+        .map { case (k, n) =>
+          k -> (try Lake.isBuilt(spark, dir, n) catch { case _: Throwable => false })
+        })
 
     val names = headline.filter(SparkEntry.queries.contains)
-    prewarm(names, sfDir)
-    // Checkpoint warm-path evidence (VERDICT r8 #1, extended r15 to
-    // x164 per VERDICT r14 #1): the prewarm pass must have left these
-    // lake checkpoints built, so the timed reps below measure
-    // checkpoint reads, not rebuilds — recorded per point as a JSON
-    // object so a slow point with ckpt_warm=true DISPROVES the
-    // rebuild-inside-timed-reps hypothesis in the artifact itself.
-    def ckptWarm(dir: String): String =
-      Seq("x31" -> "x31_passages", "x164" -> "textrank_edges_v1")
-        .map { case (k, n) =>
-          val b = try Lake.isBuilt(spark, dir, n)
-            catch { case _: Throwable => false }
-          s""""$k":$b"""
-        }.mkString("{", ",", "}")
-    def x31Warm(dir: String): String = ckptWarm(dir)
 
     // HEADLINE SENTINEL GATE (VERDICT r13 #1/#2): the headline phase
     // writes the driver's ≤2× contract number, and three rounds
@@ -788,50 +769,16 @@ object Bench {
       Thread.sleep(20000L)
       headlineSent = sentinel()
     }
-    val headlineContended = headlineSent > sentinelIdleMax
-    def sentinelJson(extra: String = ""): String =
-      s"""{"start":${fmt(sentinelStart)},"headline":${fmt(headlineSent)},""" +
-        s""""headline_gate_attempts":$gateAttempts,""" +
-        s""""headline_contended":$headlineContended$extra}"""
-    fields("load_sentinel") = sentinelJson()
+    val loadSentinel = ListMap[String, Any]("start" -> sentinelStart,
+      "headline" -> r4(headlineSent),
+      "headline_gate_attempts" -> gateAttempts,
+      "headline_contended" -> (headlineSent > sentinelIdleMax))
+    fields("load_sentinel") = loadSentinel
 
-    val stats = names.map(timeQuery(_, sfDir, reps))
-
-    val usable = stats.filter(_.okReps > 0)
-    def statMap(f: QueryStats => Double): String =
-      usable.map(s => s""""${s.name}":${fmt(f(s))}""").mkString("{", ",", "}")
-    fields("queries") = statMap(_.mean)
-    fields("queries_n") = usable.size.toString
-    // stdout variant: only the shapes BASELINE.md compares directly
-    // (full map → detail artifact; see compactKeys note)
-    val stdoutSet = Set("flagship", "b02_glob_scan", "b03_pruned_scan",
-      "b09_partial_final", "c02_join_large", "c07_agg_tpch_q1",
-      "c32_range_join", "x03_dedup_minhash", "x31_passage_dedup",
-      "x46_bigram_logprob", "x69_pagerank", "x92_span_dedup")
-    fields("queries_stdout") = usable.filter(s => stdoutSet(s.name))
-      .map(s => s""""${s.name}":${fmt(s.mean)}""").mkString("{", ",", "}")
-    fields("std") = statMap(_.std)
-    fields("median") = statMap(_.median)
-    fields("raw") = usable.map(s =>
-      s""""${s.name}":[${s.raw.map(fmt).mkString(",")}]""")
-      .mkString("{", ",", "}")
-    fields("errors") = errorsJson(stats)
-    // compact-line variant: a mass-failure round would blow the ~2 KB
-    // stdout budget if the full error map rode the compact line (the
-    // on-disk artifact keeps it); count + first example suffice there
-    val failed = stats.filter(_.err.isDefined)
-    fields("errors_compact") =
-      if (failed.isEmpty) "{}"
-      else s"""{"n":${failed.size},"first":"${jsonEscape(
-        s"${failed.head.name}: ${failed.head.err.get.take(120)}")}"}"""
-    fields("value") = fmt(usable.map(_.mean).sum)
-    // Median-based: one spiked rep must not move the artifact's
-    // headline pruning ratio (see object scaladoc).
-    fields("pruned_vs_full") = fmt((for {
-      full <- usable.find(_.name == "b02_glob_scan")
-      pruned <- usable.find(_.name == "b03_pruned_scan")
-      if pruned.median > 0
-    } yield full.median / pruned.median).getOrElse(0.0))
+    val timed = names.map(timeQuery(_, sfDir, reps))
+    fields ++= headlineFields(timed.map(_._1))
+    fields("plan_shape") = ListMap.from(
+      timed.collect { case (s, Some(shape)) => s.name -> shape })
     checkpoint("headline")
 
     // ---- phase 2: HTTP serving latency -------------------------------
@@ -843,21 +790,19 @@ object Bench {
     // envelope), so the serving path has a tracked number like every
     // query does.
     fields("http") =
-      if (remainingSec < 60) """{"skipped":"budget"}"""
+      if (remainingSec < 60) ListMap("skipped" -> "budget")
       else try {
         // the serving phase carries its own window's load reading too
         // (r13's http p50/p99 were headline-window contaminated and
         // unprovably so — every timed phase now stamps its sentinel)
         val httpSent = sentinel()
         val engine = new graft.engine.SparkEngine(() => spark)
-        val server = graft.server.HttpFront.start(engine, spark, sfDir, port = 0)
+        val server = HttpFront.start(engine, spark, sfDir, port = 0)
         try {
           val port = server.getAddress.getPort
           val url = java.net.URI.create(s"http://127.0.0.1:$port/query").toURL
-          val sqlEsc = graft.queries.Core.flagshipSql
-            .replace("\\", "\\\\").replace("\"", "\\\"")
-            .replace("\n", " ").replace("\r", " ")
-          val body = s"""{"q":"$sqlEsc","limit":20}""".getBytes("UTF-8")
+          val body = json(ListMap("q" -> graft.queries.Core.flagshipSql, "limit" -> 20))
+            .getBytes("UTF-8")
           def fire(): Double = {
             val t0 = System.nanoTime()
             val c = url.openConnection().asInstanceOf[java.net.HttpURLConnection]
@@ -903,278 +848,90 @@ object Bench {
           val cs = cTimes.toArray(Array.empty[java.lang.Double])
             .map(_.doubleValue).sorted
           val concurrent =
-            if (cs.isEmpty) s"""{"err":"all $clients-client requests failed"}"""
-            else s"""{"clients":$clients,"n":${cs.length},"errors":${cErrs.get()},"p50":${
-              fmt(cs(cs.length / 2))},"p99":${fmt(cs(((cs.length - 1) * 99) / 100))},"qps":${
-              fmt(cs.length / cWall)}}"""
-          s"""{"n":100,"p50":${fmt(times(49))},"p99":${fmt(times(98))},"query":"flagship","sentinel":${fmt(httpSent)},"concurrent":$concurrent}"""
-        } finally graft.server.HttpFront.stop(server)
+            if (cs.isEmpty) ListMap("err" -> s"all $clients-client requests failed")
+            else ListMap("clients" -> clients, "n" -> cs.length,
+              "errors" -> cErrs.get(), "p50" -> r4(cs(cs.length / 2)),
+              "p99" -> r4(cs(((cs.length - 1) * 99) / 100)),
+              "qps" -> r4(cs.length / cWall))
+          ListMap("n" -> 100, "p50" -> r4(times(49)), "p99" -> r4(times(98)),
+            "query" -> "flagship", "sentinel" -> r4(httpSent),
+            "concurrent" -> concurrent)
+        } finally HttpFront.stop(server)
       } catch { case e: Throwable =>
-        s"""{"err":"${jsonEscape(String.valueOf(e.getMessage))}"}""" }
+        ListMap("err" -> clip(String.valueOf(e.getMessage))) }
     checkpoint("http")
 
     // ---- phases 3+4: scaling curve -----------------------------------
     // Scaling-curve evidence: the same queries at THREE scale factors
-    // in ONE run — sf0.01 ("small"), the driver's sfDir ("mid", the
-    // already-timed headline stats), and a derived ~10×-sfDir lake
-    // ("big", Lake.ensureScaledDir — re-keyed unions, never touching
-    // the read-only testdata; trimmed to [[scalingBig]] at `bigReps`).
-    // Two decades with the same sublinear slope is the direct "would
-    // it survive 100×" evidence next to the structural file-count
-    // metric, and the big point exercises constants that hide at 600k
-    // rows. Per-query ratios at-or-below the data ratio are the pass
-    // band; superlinear growth is a shuffle/skew/driver-bottleneck
-    // smell. All compared numbers are medians; means/raw ride along
-    // in the full record.
-    //
-    // Per-point instrumentation (VERDICT r9 #3 / r10 #3,#4):
-    //   - x03 candidate-pair volume and x31 passage-duplication volume
-    //     — the direct evidence that the hot-bucket cap bounds the
-    //     banding join's output as duplicate density rises;
-    //   - c02's executed join strategy — which side of the
-    //     broadcast→SMJ cliff the fact/fact join actually ran on.
+    // in ONE run — sf0.01 ("small"), the driver's sfDir ("mid",
+    // re-timed in this phase), and a derived ~10×-sfDir lake ("big",
+    // Lake.ensureScaledDir — re-keyed unions, never touching the
+    // read-only testdata; trimmed to [[scalingBig]]). Two decades with
+    // the same sublinear slope is the direct "would it survive 100×"
+    // evidence next to the structural file-count metric, and the big
+    // point exercises constants that hide at 600k rows. Per-query
+    // ratios at-or-below the data ratio are the pass band; superlinear
+    // growth is a shuffle/skew/driver-bottleneck smell. All compared
+    // numbers are medians; raw reps and each point's per-query
+    // plan_shape (candidate volumes are join output rows; c02/c105
+    // show which side of the broadcast→SMJ cliff they ran on) ride
+    // along in the full record.
     val scalingNames = scalingAll.filter(names.contains)
     def sfOf(dir: String): Double =
       "sf([0-9.]+)".r.findFirstMatchIn(dir).map(_.group(1).toDouble).getOrElse(0.0)
 
-    def instrumentation(dir: String, forNames: Seq[String]): String = {
-      val parts = scala.collection.mutable.ArrayBuffer[String]()
-      if (forNames.contains("x03_dedup_minhash")) try {
-        // identical artifact chain to x03 itself, so after its prewarm
-        // these are cheap reads + the one candidate count
-        val d = Lake.table(spark, dir, "documents")
-        val nh = graft.ext.Dedup.MinhashNumHashes
-        val nb = graft.ext.Dedup.MinhashBandCount
-        val sigs = Lake.materialize(spark, dir, s"minhash_sigs_$nh")(
-          graft.ext.Dedup.minhashSignatures(d, nh))
-        val bands = Lake.materialize(spark, dir, s"minhash_bands_${nh}_$nb")(
-          graft.ext.Dedup.minhashBands(sigs, nh, nb))
-        parts += s""""x03_candidate_pairs":${graft.ext.Dedup.minhashCandidates(bands).count()}"""
-      } catch { case e: Throwable =>
-        parts += s""""x03_candidate_pairs_err":"${jsonEscape(e.getMessage)}"""" }
-      if (forNames.contains("x92_span_dedup")) try {
-        // the stride-1 gram join's pre-island hit volume — what the
-        // hot-gram cap must bound as duplicate density rises
-        val d = Lake.table(spark, dir, "documents")
-          .select(col("doc_id"), col("text"))
-        parts += s""""x92_candidate_hits":${graft.ext.Dedup.spanCandidatePairs(d, cap = 64L).count()}"""
-        // the density-adaptive cap actually applied — rises with the
-        // corpus's mean gram multiplicity (VERDICT r11 §3: the fixed
-        // cap silenced the operator at 100× dup density)
-        parts += s""""x92_cap_effective":${graft.ext.Dedup.spanCapEffective(d, cap = 64L)}"""
-      } catch { case e: Throwable =>
-        parts += s""""x92_candidate_hits_err":"${jsonEscape(e.getMessage)}"""" }
-      if (forNames.contains("x31_passage_dedup")) try {
-        val d = Lake.table(spark, dir, "documents")
-        val ps = Lake.materialize(spark, dir, "x31_passages")(
-          graft.ext.Dedup.passageTable(d))
-        val occ = ps.groupBy(col("passage")).agg(count(lit(1)).as("n"))
-        parts += s""""x31_passages":${ps.count()}"""
-        parts += s""""x31_dup_passages":${occ.filter(col("n") > 1).count()}"""
-      } catch { case e: Throwable =>
-        parts += s""""x31_passages_err":"${jsonEscape(e.getMessage)}"""" }
-      if (forNames.contains("x46_bigram_logprob")) try {
-        // the doc-grain bigram table: the one shuffled side of x46's
-        // model join. Its row count is what the ratio should track —
-        // a big-point wall ratio far above this volume ratio is run
-        // noise, not a plan problem (the r11 run 17↔18 3.4×↔6.0×
-        // spread prompted exactly this field).
-        parts += s""""x46_bigram_rows":${
-          graft.ext.TextAnalysis.bigramTable(spark, dir).count()}"""
-      } catch { case e: Throwable =>
-        parts += s""""x46_bigram_rows_err":"${jsonEscape(e.getMessage)}"""" }
-      if (forNames.contains("x150_record_linkage")) try {
-        // the canonical-grain Σ df·(df−1)/2 the capped shingle index
-        // shuffles after the exact-text collapse — the volume the
-        // r14 collapse fix bounds (pre-collapse, the cap ∝ corpus
-        // size admitted k× the df at k× replication: 22× wall at
-        // 10× data in the first r14 official run)
-        val d = Lake.table(spark, dir, "documents")
-        val sh = Lake.materialize(spark, dir, "x05_shingles")(
-          graft.ext.Dedup.shingleTable(d))
-        parts += s""""x150_candidate_pairs":${graft.ext.Dedup
-          .jaccardCandidateVolume(d, sh, Lake.rowCount(spark, dir, "documents"))}"""
-      } catch { case e: Throwable =>
-        parts += s""""x150_candidate_pairs_err":"${jsonEscape(e.getMessage)}"""" }
-      if (forNames.contains("x199_sparse_cosine_pairs")) try {
-        // the inverted-index join's candidate volume Σ df·(df−1)/2
-        // over the [2,100]-gated shingles — the quantity the df cap
-        // bounds, computed from the df aggregate alone (no join)
-        val sh = Lake.materialize(spark, dir, "x05_shingles")(
-          graft.ext.Dedup.shingleTable(Lake.table(spark, dir, "documents")))
-        parts += s""""x199_candidate_pairs":${sh
-          .groupBy(col("shingle")).agg(count(lit(1)).as("df"))
-          .filter(col("df") >= 2 && col("df") <= 100)
-          .agg(coalesce(sum(expr("df * (df - 1) DIV 2")), lit(0L)))
-          .head().getLong(0)}"""
-      } catch { case e: Throwable =>
-        parts += s""""x199_candidate_pairs_err":"${jsonEscape(e.getMessage)}"""" }
-      if (forNames.contains("x91_edit_distance_dedup")) try {
-        // Σ C(block,2) over the capped (len, prefix) blocks AFTER the
-        // exact-text collapse — replication-invariant (the r15 fix:
-        // pre-collapse, k× replicated copies grew candidates ~k² and
-        // the big point read 15.4× at 10× data)
-        parts += s""""x91_candidate_pairs":${graft.ext.Dedup
-          .editCandidateVolume(graft.ext.Dedup.editDistanceInput(spark, dir),
-            maxBlock = 64L)}"""
-      } catch { case e: Throwable =>
-        parts += s""""x91_candidate_pairs_err":"${jsonEscape(e.getMessage)}"""" }
-      if (forNames.contains("x164_textrank")) try {
-        // the symmetric content-word co-occurrence edge set x164's
-        // fixed-point iteration is linear in — vocabulary-shaped
-        // (distinct long-token bigrams), so its growth should flatten
-        // as the corpus outgrows its vocabulary; the wall ratio reads
-        // against THIS field, not the corpus ratio
-        parts += s""""x164_edges":${Lake.materialize(spark, dir,
-          "textrank_edges_v1")(graft.ext.TextAnalysis.textrankEdges(
-            graft.ext.TextAnalysis.bigramTable(spark, dir))).count()}"""
-      } catch { case e: Throwable =>
-        parts += s""""x164_edges_err":"${jsonEscape(e.getMessage)}"""" }
-      if (forNames.contains("x285_rouge_pairs")) try {
-        // the VERIFIED pair count x285's grading joins are bounded by
-        // (same x05 shingle artifact chain as the query — prewarmed)
-        val d = Lake.table(spark, dir, "documents")
-        parts += s""""x285_verified_pairs":${graft.ext.Dedup
-          .ngramJaccardPairs(d, threshold = 0.5,
-            checkpoint = graft.ext.Dedup.lakeCheckpoint(spark, dir),
-            nDocs = Lake.rowCount(spark, dir, "documents")).count()}"""
-      } catch { case e: Throwable =>
-        parts += s""""x285_verified_pairs_err":"${jsonEscape(e.getMessage)}"""" }
-      if (forNames.contains("x127_association_rules")) try {
-        // Σ C(basket, 2) — the pair-expansion volume x127's lattice
-        // join materializes before the ≥3 support prune; computed
-        // from the basket-size aggregate alone (no join)
-        parts += s""""x127_basket_pairs":${Lake.table(spark, dir, "lineitem")
-          .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-          .distinct()
-          .groupBy(col("ok")).agg(count(lit(1)).as("c"))
-          .agg(coalesce(sum(expr("c * (c - 1) DIV 2")), lit(0L)))
-          .head().getLong(0)}"""
-      } catch { case e: Throwable =>
-        parts += s""""x127_basket_pairs_err":"${jsonEscape(e.getMessage)}"""" }
-      if (forNames.contains("x137_knn_graph")) try {
-        // LSH collision candidates within x137's vec_id<300 sample —
-        // the quantity the sample cut bounds: FLAT across decades by
-        // design (the control reading beside x288's)
-        val e = Lake.table(spark, dir, "embeddings")
-          .filter(col("vec_id") < 300)
-          .withColumn("vec", expr(
-            "transform(embedding, x -> CAST(x AS DOUBLE))"))
-        val buckets = e.select(col("vec_id"),
-          posexplode(array((0 until 2).map(t =>
-            graft.ext.Similarity.intPlaneSignature("vec", 8, t)): _*))
-            .as(Seq("tbl", "sig")))
-        parts += s""""x137_candidates":${
-          graft.ext.Similarity.candidatesFromBuckets(buckets).count()}"""
-      } catch { case e: Throwable =>
-        parts += s""""x137_candidates_err":"${jsonEscape(e.getMessage)}"""" }
-      if (forNames.contains("x166_grid_cluster")) try {
-        // occupied 16×16 cells — the frame every propagation round
-        // joins on; bounded at 256 regardless of corpus size, so the
-        // wall ratio must read the one reduce scan, nothing else
-        val e = Lake.table(spark, dir, "embeddings")
-        val b = e.agg(
-          min(expr("array_min(transform(embedding, x -> CAST(x AS DOUBLE)))")).as("mn"),
-          max(expr("array_max(transform(embedding, x -> CAST(x AS DOUBLE)))")).as("mx"))
-        parts += s""""x166_cells":${e.crossJoin(broadcast(b))
-          .select(
-            round((expr("CAST(element_at(embedding, 1) AS DOUBLE)") - col("mn")) /
-              (col("mx") - col("mn")) * 15, 0).cast("long").as("cx"),
-            round((expr("CAST(element_at(embedding, 2) AS DOUBLE)") - col("mn")) /
-              (col("mx") - col("mn")) * 15, 0).cast("long").as("cy"))
-          .distinct().count()}"""
-      } catch { case e: Throwable =>
-        parts += s""""x166_cells_err":"${jsonEscape(e.getMessage)}"""" }
-      if (forNames.contains("c02_join_large")) try {
-        parts += s""""c02_join_strategy":"${joinStrategy(
-          SparkEntry.queries("c02_join_large")(spark, dir))}""""
-      } catch { case e: Throwable =>
-        parts += s""""c02_join_strategy_err":"${jsonEscape(e.getMessage)}"""" }
-      if (forNames.contains("c105_tpch_q3")) try {
-        // which side of the broadcast→SMJ cliff the published 3-way
-        // join runs on at this decade (the c02 evidence class for
-        // the TPC-H shapes)
-        parts += s""""c105_join_strategy":"${joinStrategy(
-          SparkEntry.queries("c105_tpch_q3")(spark, dir))}""""
-      } catch { case e: Throwable =>
-        parts += s""""c105_join_strategy_err":"${jsonEscape(e.getMessage)}"""" }
-      if (forNames.contains("x69_pagerank")) try {
-        // distinct directed edge count: the quantity x69's per-
-        // iteration cost is linear in. Since the v2 scaled lake
-        // re-keys l_partkey/l_suppkey per copy (VERDICT r11 §4 — the
-        // v1 lake saturated this at the source's edge count, so graph
-        // ratios were measured on a flat graph), the field should now
-        // grow ~linearly with the factor, making the big-point ratio
-        // a real edges-vs-wall reading.
-        parts += s""""x69_edges":${Lake.materialize(spark, dir,
-          "pr_adjacency_v2")(graft.ext.Graph.adjacencyFor(spark, dir)).count()}"""
-      } catch { case e: Throwable =>
-        parts += s""""x69_edges_err":"${jsonEscape(e.getMessage)}"""" }
-      if (forNames.contains("x132_adamic_adar")) try {
-        // the ORIENTED wedge volume Σ od·(od−1) — the stream the
-        // triangle-based rewrite actually generates (the naive
-        // all-arcs Σ deg² stream measured 147.8 M rows at sf0.1 and
-        // 13.4 s median; the orientation bound is what retired it).
-        // Computed from the degree aggregate alone — no join.
-        // read the SAME adjacency artifact the query's form gate reads
-        // (shared-constant discipline — the counted stats can never
-        // silently diverge from the gated ones)
-        val (maxOd, wedges) = graft.ext.Graph.adjWedgeStats(
-          graft.ext.Graph.orientedAdjListFor(spark, dir))
-        parts += s""""x132_wedges":$wedges"""
-        // which enumeration form the r16 measured gate picks at this
-        // decade (arrays = fast path; join = the memory-flat wedge
-        // stream the 100x graph degrades to at the 32g default heap)
-        parts += s""""x132_max_od":$maxOd"""
-        parts += s""""x132_enum_form":"${
-          if (maxOd <= graft.ext.Graph.TriangleMaxArrayDegree &&
-            wedges <= graft.ext.Graph.TriangleMaxArrayWedges) "arrays"
-          else "join"}""""
-      } catch { case e: Throwable =>
-        parts += s""""x132_wedges_err":"${jsonEscape(e.getMessage)}"""" }
-      parts.mkString("{", ",", "}")
-    }
-
-    // One protocol per point: partitioned-events copy ensured, global
-    // prewarm over the point's query set (builds every lake checkpoint
-    // untimed), then timed reps. Identical to the headline protocol.
     def timePoint(dir: String, pointNames: Seq[String],
-        repsFor: String => Int,
-        perShapeSentinel: Boolean = false):
-        (Map[String, QueryStats], String, String, Double, String) = {
+        perShapeSentinel: Boolean = false): Point = {
       // per-point load sentinel: every compared point carries the
       // machine-load reading of ITS OWN measurement window, so a
       // cross-point ratio taken under asymmetric load is visible in
       // the artifact instead of masquerading as a scaling verdict
       val sent = sentinel()
       Lake.ensurePartitionedEvents(spark, dir)
-      prewarm(pointNames, dir)
-      val warm = x31Warm(dir)
-      val inst = instrumentation(dir, pointNames)
       // per-SHAPE sentinels (VERDICT r17 #1): at the big point a
       // 30-shape phase can drift from idle to contended between its
       // single point sentinel and a given query's reps minutes later
       // — the x199/x132 big inflations were unattributable for
       // exactly this reason. One fixed-work reading immediately
       // before each shape's reps stamps the load of THAT window.
-      val shapeSents = scala.collection.mutable.LinkedHashMap[String, Double]()
-      val stats = pointNames.map { n =>
-        if (perShapeSentinel) shapeSents(n) = sentinel()
-        n -> timeQuery(n, dir, repsFor(n))
-      }.toMap
-      val shapeJson = shapeSents
-        .map { case (k, v) => s""""$k":${fmt(v)}""" }.mkString("{", ",", "}")
-      (stats, warm, inst, sent, shapeJson)
+      val shapeSents = mutable.LinkedHashMap[String, Double]()
+      val timed = pointNames.map { n =>
+        if (perShapeSentinel) shapeSents(n) = r4(sentinel())
+        timeQuery(n, dir, reps)
+      }
+      Point(timed.map { case (s, _) => s.name -> s }.toMap,
+        ListMap.from(timed.collect { case (s, Some(shape)) => s.name -> shape }),
+        ckptWarm(dir), r4(sent), ListMap.from(shapeSents))
     }
 
-    def med(m: Map[String, QueryStats], n: String): Option[Double] =
-      m.get(n).filter(s => s.okReps > 0 && s.median > 0).map(_.median)
+    def med(p: Point, n: String): Option[Double] =
+      p.stats.get(n).filter(s => s.okReps > 0 && s.median > 0).map(_.median)
     // per-rep raws for EVERY scaling point (VERDICT r13 #3: small/mid
     // recorded only medians, so a contended rep or cold-artifact
     // rebuild inside a timed rep — the x129 10.94 s mid anomaly —
     // could not be distinguished from a real regression)
-    def rawJson(m: Map[String, QueryStats], n: String): String =
-      m.get(n).map(_.raw.map(fmt).mkString("[", ",", "]")).getOrElse("[]")
+    def raws(p: Point, n: String): Seq[Double] =
+      p.stats.get(n).map(_.raw.map(r4)).getOrElse(Nil)
+    def entries(small: Point, mid: Point, big: Point): ListMap[String, Any] =
+      ListMap.from(scalingNames.map { name =>
+        name -> ((med(small, name), med(mid, name)) match {
+          case (Some(s), Some(m)) =>
+            val base = ListMap[String, Any]("small" -> r4(s), "mid" -> r4(m),
+              "ratio_mid_over_small" -> r4(m / s),
+              "small_raw" -> raws(small, name), "mid_raw" -> raws(mid, name))
+            med(big, name).fold(base)(b => base ++ ListMap(
+              "big" -> r4(b), "ratio_big_over_mid" -> r4(b / m),
+              "big_raw" -> raws(big, name)))
+          case _ =>
+            val why = Seq(small, mid, big).flatMap(_.stats.get(name))
+              .flatMap(_.err).headOption.getOrElse("unmeasured")
+            ListMap("err" -> clip(why))
+        })
+      })
+    def maxRatio(lo: Point, hi: Point, ns: Seq[String]): Double = {
+      val rs = for { n <- ns; l <- med(lo, n); h <- med(hi, n) } yield h / l
+      r4(if (rs.isEmpty) 0.0 else rs.max)
+    }
 
     // Derive the comparison dir from the PARSED sf token (not a literal
     // string match on "sf0.1") so a run at any scale factor still
@@ -1188,10 +945,11 @@ object Bench {
       scalingSkip = Some(s"missing_small_dir:$smallDir")
     else if (remainingSec < 180) scalingSkip = Some("budget")
 
-    val (smallStats, smallWarm, smallInst, smallSent, _) = scalingSkip match {
-      case None => timePoint(smallDir, scalingNames, _ => reps)
-      case Some(_) => (Map.empty[String, QueryStats], "{}", "{}", 0.0, "{}")
+    scalingSkip.foreach { why =>
+      fields("scaling") = ListMap("skipped" -> why)
+      fields("scaling_summary") = fields("scaling")
     }
+    val small = if (scalingSkip.isEmpty) timePoint(smallDir, scalingNames) else NoPoint
     // The mid point is RE-TIMED here, adjacent to the small point,
     // instead of reusing the headline-phase stats: the headline pass
     // runs first in the process (and, per the r12 record, in the most
@@ -1201,97 +959,57 @@ object Bench {
     // 21.4× vs a 3.6 s clean-session median). Adjacent same-protocol
     // points + the per-point sentinels make the compared windows
     // homogeneous and auditable.
-    val (midStats, midWarm, midInst, midSent, _) = scalingSkip match {
-      case None => timePoint(sfDir, scalingNames, _ => reps)
-      case Some(_) => (Map.empty[String, QueryStats], "{}", "{}", 0.0, "{}")
+    val mid = if (scalingSkip.isEmpty) timePoint(sfDir, scalingNames) else NoPoint
+    val dataRatioMid =
+      if (sfOf(smallDir) > 0) sfOf(sfDir) / sfOf(smallDir) else 0.0
+    // the scaling record and summary over small+mid, plus the big
+    // point (its dir, query set and results) once it has run
+    def recordScaling(big: Option[(String, Seq[String], Point)]): Unit = {
+      val points = ListMap("small" -> small, "mid" -> mid) ++ big.map("big" -> _._3)
+      def perPoint(f: Point => Any) = points.map { case (k, p) => k -> f(p) }
+      val rec = mutable.LinkedHashMap[String, Any](
+        "data_ratio_mid_over_small" -> r4(dataRatioMid),
+        "small_sf" -> smallDir, "mid_protocol" -> "retimed_in_phase")
+      big.foreach { case (dir, bigNames, _) =>
+        rec ++= Seq("big_dir" -> dir, "data_ratio_big_over_mid" -> bigFactor,
+          "big_reps" -> reps, "big_queries" -> bigNames.mkString(","))
+      }
+      rec("sentinel") = perPoint(_.sentinel)
+      big.foreach(b => rec("shape_sentinels") = ListMap("big" -> b._3.shapeSentinels))
+      rec ++= Seq("ckpt_warm" -> perPoint(_.ckptWarm),
+        "plan_shape" -> perPoint(_.shapes),
+        "queries" -> entries(small, mid, points.getOrElse("big", NoPoint)))
+      fields("scaling") = rec
+      val summary = mutable.LinkedHashMap[String, Any](
+        "n" -> scalingNames.size,
+        "max_ratio_mid_over_small" -> maxRatio(small, mid, scalingNames))
+      big.foreach { case (_, bigNames, b) =>
+        summary ++= Seq("big_n" -> bigNames.size,
+          "max_ratio_big_over_mid" -> maxRatio(mid, b, bigNames))
+      }
+      fields("scaling_summary") = summary
     }
-    if (scalingSkip.isEmpty) {
-      // small+mid two-point record first; the big point extends it
-      val entries = scalingNames.map { name =>
-        (med(smallStats, name), med(midStats, name)) match {
-          case (Some(s), Some(m)) =>
-            s""""$name":{"small":${fmt(s)},"mid":${fmt(m)},"ratio_mid_over_small":${fmt(m / s)},""" +
-              s""""small_raw":${rawJson(smallStats, name)},"mid_raw":${rawJson(midStats, name)}}"""
-          case _ =>
-            val why = Seq(smallStats.get(name), midStats.get(name))
-              .flatten.flatMap(_.err).headOption.getOrElse("unmeasured")
-            s""""$name":{"err":"${jsonEscape(why)}"}"""
-        }
-      }.mkString("{", ",", "}")
-      val dataRatioMid =
-        if (sfOf(smallDir) > 0) sfOf(sfDir) / sfOf(smallDir) else 0.0
-      fields("scaling") =
-        s"""{"data_ratio_mid_over_small":${fmt(dataRatioMid)},"small_sf":"$smallDir","mid_protocol":"retimed_in_phase","sentinel":{"small":${fmt(smallSent)},"mid":${fmt(midSent)}},"ckpt_warm":{"small":$smallWarm,"mid":$midWarm},"instrumentation":{"small":$smallInst,"mid":$midInst},"queries":$entries}"""
-      val maxMid = scalingNames.flatMap(n =>
-        for { s <- med(smallStats, n); m <- med(midStats, n) } yield m / s)
-      fields("scaling_summary") = s"""{"n":${scalingNames.size},"max_ratio_mid_over_small":${
-        fmt(if (maxMid.isEmpty) 0.0 else maxMid.max)}}"""
-    } else {
-      fields("scaling") = s"""{"skipped":"${jsonEscape(scalingSkip.get)}"}"""
-      fields("scaling_summary") = fields("scaling")
-    }
+    // small+mid two-point record first; the big point extends it
+    if (scalingSkip.isEmpty) recordScaling(None)
     checkpoint("scaling_small")
 
     if (scalingSkip.isEmpty && bigFactor > 1) {
-      // big point: derived scaled lake, trimmed set, fewer reps; a
-      // build/run failure (or an exhausted budget) degrades to the
-      // two-point curve with the reason in the artifact — never a
-      // crashed bench.
+      // big point: derived scaled lake, trimmed set; a build/run
+      // failure (or an exhausted budget) degrades to an empty big
+      // point with the reason in the artifact — never a crashed bench.
       val bigNames = scalingBig.filter(scalingNames.contains)
-      // Volume-bound joins get >= 3 reps at the big point so the
-      // recorded ratio is a real median — one contended rep defined
-      // the whole r11 scaling verdict for x46 (official 12.77× vs a
-      // 3.2-6.2× in-session band and exactly-linear instrumented join
-      // volume; VERDICT r11 §1). Raw per-rep times ride in the
-      // artifact so an outlier rep is visible rather than decisive.
-      val volumeBound = Set("x46_bigram_logprob", "x03_dedup_minhash",
-        "x92_span_dedup", "c02_join_large", "x148_kneser_ney",
-        "x199_sparse_cosine_pairs")
-      def bigRepsFor(n: String): Int =
-        if (volumeBound(n)) math.max(bigReps, 3) else bigReps
-      val (bigDirDesc, bigStats, bigWarm, bigInst, bigSent, bigShapeSents) =
-        if (remainingSec < 420)
-          ("skipped:budget", Map.empty[String, QueryStats], "{}", "{}", 0.0, "{}")
+      val (bigDirDesc, big) =
+        if (remainingSec < 420) ("skipped:budget", NoPoint)
         else try {
           val d = Lake.ensureScaledDir(spark, sfDir, bigFactor)
-          val (bs, bw, bi, bsent, bshape) =
-            timePoint(d, bigNames, bigRepsFor, perShapeSentinel = true)
-          (d, bs, bw, bi, bsent, bshape)
+          (d, timePoint(d, bigNames, perShapeSentinel = true))
         } catch { case e: Throwable =>
           System.err.println(s"[bench] scaled lake: ${e.getMessage}")
-          (s"FAILED: ${clip(e.getMessage)}", Map.empty[String, QueryStats],
-            "{}", "{}", 0.0, "{}")
+          (s"FAILED: ${clip(e.getMessage)}", NoPoint)
         }
-      val entries = scalingNames.map { name =>
-        (med(smallStats, name), med(midStats, name), med(bigStats, name)) match {
-          case (Some(s), Some(m), b) =>
-            val base = s""""small":${fmt(s)},"mid":${fmt(m)},"ratio_mid_over_small":${fmt(m / s)},""" +
-              s""""small_raw":${rawJson(smallStats, name)},"mid_raw":${rawJson(midStats, name)}"""
-            val bigPart = b.map { t =>
-              s""","big":${fmt(t)},"ratio_big_over_mid":${fmt(t / m)}""" +
-                s""","big_raw":${rawJson(bigStats, name)}"""
-            }.getOrElse("")
-            s""""$name":{$base$bigPart}"""
-          case _ =>
-            val why = Seq(smallStats.get(name), midStats.get(name), bigStats.get(name))
-              .flatten.flatMap(_.err).headOption.getOrElse("unmeasured")
-            s""""$name":{"err":"${jsonEscape(why)}"}"""
-        }
-      }.mkString("{", ",", "}")
-      val dataRatioMid =
-        if (sfOf(smallDir) > 0) sfOf(sfDir) / sfOf(smallDir) else 0.0
-      fields("scaling") =
-        s"""{"data_ratio_mid_over_small":${fmt(dataRatioMid)},"small_sf":"$smallDir","mid_protocol":"retimed_in_phase","big_dir":"${jsonEscape(bigDirDesc)}","data_ratio_big_over_mid":$bigFactor,"big_reps":$bigReps,"big_queries":"${bigNames.mkString(",")}","sentinel":{"small":${fmt(smallSent)},"mid":${fmt(midSent)},"big":${fmt(bigSent)}},"shape_sentinels":{"big":$bigShapeSents},"ckpt_warm":{"small":$smallWarm,"mid":$midWarm,"big":$bigWarm},"instrumentation":{"small":$smallInst,"mid":$midInst,"big":$bigInst},"queries":$entries}"""
-      val maxMid = scalingNames.flatMap(n =>
-        for { s <- med(smallStats, n); m <- med(midStats, n) } yield m / s)
-      val maxBig = bigNames.flatMap(n =>
-        for { m <- med(midStats, n); b <- med(bigStats, n) } yield b / m)
-      fields("scaling_summary") =
-        s"""{"n":${scalingNames.size},"max_ratio_mid_over_small":${
-          fmt(if (maxMid.isEmpty) 0.0 else maxMid.max)},"big_n":${bigNames.size},"max_ratio_big_over_mid":${
-          fmt(if (maxBig.isEmpty) 0.0 else maxBig.max)}}"""
+      recordScaling(Some((bigDirDesc, bigNames, big)))
     }
-    fields("load_sentinel") = sentinelJson(s""","end":${fmt(sentinel())}""")
+    fields("load_sentinel") = loadSentinel + ("end" -> r4(sentinel()))
     checkpoint("scaling_big")
 
     spark.stop()

@@ -47,10 +47,7 @@ object Dedup {
       when(size(tokens) >= k, grams).otherwise(array().cast("array<string>")))
   }
 
-  /** x03's index shape, shared with Bench's candidate-volume
-    * instrumentation so the benchmarked index and the counted index
-    * can never silently diverge: 32 hashes in 8 bands of 4 rows.
-    */
+  /** x03's index shape: 32 hashes in 8 bands of 4 rows. */
   val MinhashNumHashes = 32
   val MinhashBandCount = 8
 
@@ -516,25 +513,6 @@ object Dedup {
             round(lit(5.0) * pr * rc / (lit(4.0) * pr + rc), 6))
             .otherwise(lit(0.0))))
       .orderBy(col("doc_a"), col("doc_b"))
-  }
-
-  /** Canonical-grain candidate volume Σ df·(df−1)/2 of the capped
-    * shingle index — the row count [[ngramJaccardPairs]]'s pair join
-    * actually shuffles after the exact-text collapse. Bench
-    * instrumentation (x150's scaling block): computed from the df
-    * aggregate alone, no join.
-    */
-  def jaccardCandidateVolume(df: DataFrame, sh0: DataFrame,
-      nDocs: Long): Long = {
-    val cap = math.max(50L, nDocs / 100L)
-    val hot = sh0.groupBy(col("shingle")).agg(count(lit(1)).as("df_c"))
-      .filter(col("df_c") > cap).select(col("shingle"))
-    sh0.join(hot, Seq("shingle"), "left_anti")
-      .join(canonicalMap(df).filter(col("doc_id") === col("canon"))
-        .select(col("doc_id")), "doc_id")
-      .groupBy(col("shingle")).agg(count(lit(1)).as("dfc"))
-      .agg(coalesce(sum(expr("dfc * (dfc - 1) DIV 2")), lit(0L)))
-      .head().getLong(0)
   }
 
   /** doc_id → canonical (min doc_id sharing the exact text) — the
@@ -1094,7 +1072,12 @@ object Dedup {
     * pre-collapse semantics.
     */
   def editDistancePairs(df: DataFrame, threshold: Int, maxBlock: Long): DataFrame = {
-    val keyed = editBlockKeyed(df)
+    val keyed = df.groupBy(md5(col("text")).as("_k"))
+      .agg(min(col("doc_id")).as("doc_id"), min(col("text")).as("text"))
+      .filter(length(col("text")) >= 8)
+      .select(col("doc_id"), col("text"),
+        length(col("text")).as("blk_len"),
+        substring(col("text"), 1, 4).as("blk_pre"))
     val keep = keyed.groupBy(col("blk_len"), col("blk_pre"))
       .agg(count(lit(1)).as("bc"))
       .filter(col("bc") <= maxBlock)
@@ -1111,37 +1094,8 @@ object Dedup {
       .select(col("id_a"), col("id_b"), col("dist"))
   }
 
-  /** x91's collapsed, block-keyed frame (exact-text reps → (length,
-    * 4-char prefix) keys) — split out so [[editCandidateVolume]]
-    * counts exactly what [[editDistancePairs]] joins.
-    */
-  private def editBlockKeyed(df: DataFrame): DataFrame =
-    df.groupBy(md5(col("text")).as("_k"))
-      .agg(min(col("doc_id")).as("doc_id"), min(col("text")).as("text"))
-      .filter(length(col("text")) >= 8)
-      .select(col("doc_id"), col("text"),
-        length(col("text")).as("blk_len"),
-        substring(col("text"), 1, 4).as("blk_pre"))
-
-  /** Candidate volume Σ C(block, 2) over x91's capped blocks after
-    * the exact-text collapse — the bench's per-decade scaling field
-    * (x199's pattern): replication-invariant by construction, so a
-    * wall ratio far above this volume ratio is run noise, not plan
-    * growth. Computed from the block-size aggregate alone — no join.
-    */
-  private[graft] def editCandidateVolume(df: DataFrame, maxBlock: Long): Long =
-    editBlockKeyed(df)
-      .groupBy(col("blk_len"), col("blk_pre"))
-      .agg(count(lit(1)).as("bc"))
-      .filter(col("bc") <= maxBlock)
-      .agg(coalesce(sum(expr("bc * (bc - 1) DIV 2")), lit(0L)))
-      .head().getLong(0)
-
-  /** The (base ∪ substituted-twin) frame x91 runs on — package-
-    * visible so the bench instrumentation measures the SAME union
-    * the registered query dedups.
-    */
-  private[graft] def editDistanceInput(spark: SparkSession, sfDir: String): DataFrame = {
+  /** The (base ∪ substituted-twin) frame x91 runs on. */
+  private def editDistanceInput(spark: SparkSession, sfDir: String): DataFrame = {
     val d = docs(spark, sfDir).select(col("doc_id"), col("text"))
       .filter(length(col("text")) >= 8)
     val twins = d.select((col("doc_id") + 3000000L).as("doc_id"),
@@ -1252,9 +1206,8 @@ object Dedup {
   }
 
   /** The effective hot-gram cap [[spanCandidatePairs]] would apply to
-    * `df` — instrumentation for the bench's per-decade scaling block
-    * (a rising capEff is the visible evidence that the operator is
-    * adapting to duplicate density instead of silencing). 1-row
+    * `df` (a rising capEff is the visible evidence that the operator
+    * is adapting to duplicate density instead of silencing). 1-row
     * aggregate collect — a scalar, not a driver loop.
     */
   def spanCapEffective(df: DataFrame, cap: Long): Long = {

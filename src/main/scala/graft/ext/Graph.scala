@@ -252,11 +252,7 @@ object Graph {
       .select(col("s").as("supplier"), col("a2").as("auth_fp"))
   }
 
-  /** The frame the x69 materialization persists — package-visible so
-    * the bench's edge-count instrumentation counts the SAME artifact
-    * the query runs on (x03's shared-constant discipline: the counted
-    * index can never silently diverge from the benchmarked one).
-    */
+  /** The frame the x69 materialization persists. */
   private[graft] def adjacencyFor(spark: SparkSession, sfDir: String): DataFrame =
     adjacency(bipartiteEdges(spark, sfDir))
 

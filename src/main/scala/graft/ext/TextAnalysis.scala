@@ -388,9 +388,8 @@ object TextAnalysis {
     * MULTIPLICITY rides the integer `bf`, so the double work is one
     * log per DISTINCT (doc, bigram), not per token.
     */
-  /** x46's lake-checkpointed doc-grain bigram table — also read by
-    * the bench's scaling instrumentation (its row count is the
-    * shuffled volume x46's wall ratio should track).
+  /** x46's lake-checkpointed doc-grain bigram table (its row count is
+    * the shuffled volume x46's wall ratio should track).
     */
   def bigramTable(spark: SparkSession, sfDir: String): DataFrame =
     Lake.materialize(spark, sfDir, "x46_bigrams") {

@@ -611,7 +611,7 @@ object Views {
         .agg(count(lit(1)).as("x")))),
 
     // BENFORD FIRST-DIGIT AUDIT — the classic synthetic-data /
-    // fraud / instrumentation-bug screen beside p12's rule gates:
+    // fraud / logging-bug screen beside p12's rule gates:
     // organically-generated magnitudes follow p_d = log₁₀(1 + 1/d);
     // a uniform or hand-capped value distribution (like this
     // corpus's) fails loudly, and that verdict IS the operator's

@@ -3,6 +3,7 @@ package graft.server
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
 
+import com.fasterxml.jackson.core.JsonProcessingException
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.module.scala.DefaultScalaModule
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
@@ -41,7 +42,9 @@ import graft.sources.Lake
   */
 object HttpFront {
 
-  /** The process's JSON codec (also writes Verify's oracle_sql.json). */
+  /** The process's JSON codec (also writes Verify's oracle_sql.json
+    * and the bench artifact).
+    */
   private[graft] val mapper = new ObjectMapper().registerModule(DefaultScalaModule)
 
   def start(engine: SparkEngine, spark: SparkSession, sfDir: String,
@@ -105,25 +108,25 @@ object HttpFront {
           respond(ex, 400, Map("errorMessage" -> "request body must be JSON"))
           return
       }
-    try {
-      val resp = engine.execute(req)
-      respond(ex, 200, Map(
-        "metadata" -> Map(
-          "timeMs" -> resp.metadata.timeMs,
-          "epochMs" -> resp.metadata.epochMs,
-          "eventId" -> resp.metadata.eventId,
-          "query" -> resp.metadata.query,
-          "warm" -> resp.metadata.warm),
-        "records" -> resp.records,
-        "columns" -> resp.columns))
-    } catch {
+    try respond(ex, 200, engine.execute(req))
+    catch {
       // in-band error surface, matching the reference's payload shape
       case EngineException(msg) => respond(ex, 200, Map("errorMessage" -> msg))
     }
   }
 
+  /** Encode `payload` BEFORE any header is sent, so a value the codec
+    * cannot write (a TIMESTAMP_NTZ or interval result) comes back
+    * in-band as an `errorMessage` with the same status instead of a
+    * closed connection with no response.
+    */
   private def respond(ex: HttpExchange, status: Int, payload: Any): Unit = {
-    val bytes = mapper.writeValueAsBytes(payload)
+    val bytes =
+      try mapper.writeValueAsBytes(payload)
+      catch { case e: JsonProcessingException =>
+        mapper.writeValueAsBytes(Map(
+          "errorMessage" -> s"result encoding failed: ${e.getOriginalMessage}"))
+      }
     ex.getResponseHeaders.set("Content-Type", "application/json")
     ex.sendResponseHeaders(status, bytes.length.toLong)
     val os = ex.getResponseBody

@@ -256,7 +256,7 @@ object Lake {
   /** Derived-build ledger (VERDICT r17 #5): every build this process
     * actually RAN, target basename -> build seconds, in completion
     * order. The bench emits it per phase so materialization-shifted
-    * work (an artifact built inside a prewarm or — worse — inside a
+    * work (an artifact built inside a warm rep or — worse — inside a
     * timed rep) is stamped in the artifact instead of inferred. A
     * basename carries the sfDir slug + fingerprint, so the ledger also
     * says WHICH scale point paid the build. Never used for gating —

@@ -4,9 +4,9 @@ import graft.{Bench, SparkEntry}
 import graft.engine.Tuning
 
 /** Targeted wall-clock probe for individual registered queries — the
-  * iterate-on-one-operator loop Bench is too heavy for (Bench prewarm
-  * runs the whole headline set; this warms and times only what you
-  * name, on the shared [[Tuning.session]] shape).
+  * iterate-on-one-operator loop Bench is too heavy for (Bench times
+  * the whole headline set; this warms and times only what you name,
+  * on the shared [[Tuning.session]] shape).
   *
   * With a `confKey=v1,v2,…` argument each value is one ARM: the
   * runtime SQL conf is set to that value before every rep of the arm,
@@ -64,7 +64,7 @@ object Time {
           val rows = Array.fill(arms.size)(0L)
           val results = Bench.measureArms(name, reps)(arms.indices.map(i => () => {
             arms(i).foreach { case (k, v) => spark.conf.set(k, v) }
-            rows(i) = Bench.runQuery(spark, name, sfDir)
+            rows(i) = Bench.runQuery(spark, name, sfDir)._1
           }))
           arms.indices.foreach { i =>
             val (warm, s) = results(i)

@@ -18,8 +18,8 @@ class PlanSpec extends SparkSpec {
     val pruned = full.filter(col("date") === lit("2024-01-05"))
     // post-pruning file counts from the executed plan's numFiles metric
     // (DataFrame.inputFiles would report the pre-pruning listing)
-    val fullFiles = Bench.scanFileCount(full.select(col("event_id")))
-    val prunedFiles = Bench.scanFileCount(pruned.select(col("event_id")))
+    val fullFiles = Bench.countWithShape(full.select(col("event_id")))._2.files
+    val prunedFiles = Bench.countWithShape(pruned.select(col("event_id")))._2.files
     assert(fullFiles > 1)
     assert(prunedFiles < fullFiles,
       s"pruning read $prunedFiles of $fullFiles files — expected strictly fewer")
@@ -204,8 +204,7 @@ class PlanSpec extends SparkSpec {
     val prev = spark.conf.getOption(key)
     spark.conf.set(key, "-1")
     try {
-      val df = q(spark, SfDir)
-      val strategy = Bench.joinStrategy(df)
+      val strategy = joinStrategy(q(spark, SfDir))
       assert(strategy.contains("SortMergeJoin") || strategy.contains("ShuffledHashJoin"),
         s"expected a shuffle join with broadcast disabled, got '$strategy'")
       assert(q(spark, SfDir).collect().toSeq == expected,
@@ -216,7 +215,36 @@ class PlanSpec extends SparkSpec {
     }
     // and the default plan at this scale is the broadcast side of the
     // cliff, so the two assertions really bracket both strategies
-    assert(Bench.joinStrategy(q(spark, SfDir)).contains("BroadcastHashJoin"))
+    assert(joinStrategy(q(spark, SfDir)).contains("BroadcastHashJoin"))
+  }
+
+  /** Join operators of `df`'s executed count plan, '+'-joined. */
+  private def joinStrategy(df: org.apache.spark.sql.DataFrame): String =
+    Bench.countWithShape(df)._2.joins.map(_.name).distinct.sorted.mkString("+")
+
+  test("planShape: a plain inner join's output rows equal count(), and scans inside AQE query stages count") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    val joined = Lake.table(spark, SfDir, "orders")
+      .join(Lake.table(spark, SfDir, "customer"), col("o_custkey") === col("c_custkey"))
+    val (rows, shape) = Bench.countWithShape(joined)
+    assert(rows == joined.count())
+    assert(shape.joins.size == 1, s"expected one join in $shape")
+    assert(shape.joins.head.rows == rows,
+      s"join numOutputRows ${shape.joins.head.rows} != count() $rows")
+    assert(shape.scans == 2 && shape.files >= 2, s"both sides' scans: $shape")
+    // a shuffle puts the scan inside a finalized query stage, a LEAF of
+    // the final adaptive plan: only the stage's `plan` reaches it
+    val counted = Lake.table(spark, SfDir, "lineitem")
+      .groupBy(col("l_returnflag")).count().groupBy().count()
+    counted.collect()
+    val finalPlan = counted.queryExecution.executedPlan
+      .asInstanceOf[AdaptiveSparkPlanExec].executedPlan
+    assert(finalPlan.collect { case q: QueryStageExec => q }.nonEmpty, finalPlan.toString)
+    assert(finalPlan.collect { case f: FileSourceScanExec => f }.isEmpty, finalPlan.toString)
+    val aggShape = Bench.planShape(counted.queryExecution)
+    assert(aggShape.scans == 1 && aggShape.files >= 1 && aggShape.exchanges >= 1,
+      s"scan under the query stage not counted: $aggShape")
   }
 
   test("AQE splits a planted skewed join partition and matches the plain join (c43's modern path)") {
@@ -241,7 +269,7 @@ class PlanSpec extends SparkSpec {
       case other                    => other.children.flatMap(joins)
     }
     // plan compilation is lazy — execute and inspect the SAME
-    // QueryExecution inside the conf scope (Bench.scanFileCount's
+    // QueryExecution inside the conf scope (Bench.countWithShape's
     // pattern), or the restored confs would re-plan a broadcast join
     val skewFlags = Lake.withConf(spark,
       "spark.sql.adaptive.enabled" -> "true",

@@ -55,6 +55,20 @@ class ServerSpec extends SparkSpec {
     }
   }
 
+  test("a result the codec cannot encode comes back in-band and the server keeps serving") {
+    withServer { port =>
+      for (q <- Seq("SELECT TIMESTAMP_NTZ '2024-01-05 10:00:00' AS t",
+          "SELECT make_dt_interval(3) AS age")) {
+        val (status, body) = post(port, s"""{"q": "$q"}""")
+        assert(status == 200, s"$q got $status")
+        assert(mapper.readTree(body).get("errorMessage").asText.nonEmpty, s"$q: $body")
+      }
+      val (status, body) = post(port, """{"q": "SELECT 1 AS one"}""")
+      assert(status == 200)
+      assert(mapper.readTree(body).get("records").get(0).get("one").asInt == 1)
+    }
+  }
+
   test("transport errors are HTTP-level: bad JSON 400, GET 405, oversize 413") {
     withServer { port =>
       assert(post(port, "this is not json")._1 == 400)
