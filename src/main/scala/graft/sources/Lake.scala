@@ -52,18 +52,45 @@ object Lake {
   private val NanosKey = "spark.sql.legacy.parquet.nanosAsLong"
   private val OutTsKey = "spark.sql.parquet.outputTimestampType"
 
+  /** Open [[withConf]] scopes per (session, conf key): the value the
+    * key had before the first scope opened, and how many are open.
+    */
+  private val confScopes =
+    scala.collection.mutable.HashMap.empty[(String, String), (Option[String], Int)]
+
   /** Run `body` with the given session confs set, restoring the previous
     * values (or unsetting) afterwards — derived-table builds must not
     * leave session-global side effects (a later unrelated write would
-    * silently inherit TIMESTAMP_MICROS).
+    * silently inherit TIMESTAMP_MICROS). Builds of different targets
+    * run concurrently ([[ensureBuilt]]), so scopes on one session can
+    * overlap without nesting: the key is restored only when the LAST
+    * open scope on it closes, to the value it had before the first
+    * opened. Overlapping scopes that set different values for one key
+    * see the latest set; every caller in this object sets the same
+    * value for a given key.
     */
   def withConf[T](spark: SparkSession, kvs: (String, String)*)(body: => T): T = {
-    val prev = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+    val keys = kvs.map { case (k, _) => (sessionId(spark), k) }
+    confScopes.synchronized {
+      kvs.zip(keys).foreach { case ((k, v), key) =>
+        val (orig, open) = confScopes.getOrElse(key, (spark.conf.getOption(k), 0))
+        confScopes(key) = (orig, open + 1)
+        spark.conf.set(k, v)
+      }
+    }
     try body
-    finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
+    finally confScopes.synchronized {
+      keys.foreach { key =>
+        confScopes(key) match {
+          case (orig, 1) =>
+            confScopes.remove(key)
+            orig match {
+              case Some(v) => spark.conf.set(key._2, v)
+              case None    => spark.conf.unset(key._2)
+            }
+          case (orig, open) => confScopes(key) = (orig, open - 1)
+        }
+      }
     }
   }
 
@@ -287,6 +314,14 @@ object Lake {
   private val ParallelismFirstKey =
     "spark.sql.adaptive.coalescePartitions.parallelismFirst"
 
+  /** One monitor per build target. A build holds only its own
+    * target's lock (plus, re-entrantly, those of the inputs it builds
+    * on the way), so a slow build never blocks an unrelated one; an
+    * input never builds its consumer, so no lock-order cycle arises.
+    */
+  private val buildLocks =
+    new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
+
   /** Build `target` once, gated on its _SUCCESS marker, holding the
     * given scoped confs during the build; idempotent and side-effect
     * free on session conf. Builds that actually run are timed into
@@ -295,7 +330,7 @@ object Lake {
   private def ensureBuilt(spark: SparkSession, target: String,
       confs: Seq[(String, String)])(build: => Unit): String = {
     if (!doneTargets.contains(target)) {
-      this.synchronized {
+      buildLocks.computeIfAbsent(target, _ => new AnyRef).synchronized {
         val (fs, marker) = hadoopFs(spark, s"$target/_SUCCESS")
         if (!fs.exists(marker)) {
           val t0 = System.nanoTime()
@@ -391,12 +426,16 @@ object Lake {
   /** B13 / dbt-`ref` analog: name -> temp view over the physical path,
     * so `spark.sql` can address tables by name like the oracle does.
     * Idempotent per (session, sfDir): views are (re)created only when
-    * the session hasn't seen this sfDir yet.
+    * the session hasn't seen this sfDir yet. The tables (and any build
+    * they need, under that build's own lock) resolve first; only the
+    * view swap holds the registration lock, so the views a session
+    * holds always come from one sfDir.
     */
   def registerAll(spark: SparkSession, sfDir: String): Unit =
-    this.synchronized {
-      if (registeredFor.get(spark) != sfDir) {
-        tableNames.foreach(n => table(spark, sfDir, n).createOrReplaceTempView(n))
+    if (registeredFor.synchronized(registeredFor.get(spark)) != sfDir) {
+      val views = tableNames.map(n => n -> table(spark, sfDir, n))
+      registeredFor.synchronized {
+        views.foreach { case (n, df) => df.createOrReplaceTempView(n) }
         registeredFor.put(spark, sfDir)
       }
     }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -14,7 +14,8 @@ import graft.sources.Lake
   * every query drives the stream to completion over the static events
   * table, so results are deterministic and oracle-checkable against
   * the equivalent batch query — the semantics Structured Streaming
-  * guarantees. Every registered query runs through ONE sink harness,
+  * guarantees. The windowed and stateful-operator queries (s01-s06,
+  * s08, s09) run through ONE sink harness,
   * [[runToParquetSink]]: append mode into a checkpointed parquet file
   * sink with Trigger.AvailableNow — the production shape (exactly-once,
   * resumable, no driver-side state); AvailableNow processes everything
@@ -23,7 +24,10 @@ import graft.sources.Lake
   * watermark has closed, so each query reports a fixed event-time
   * range fully inside watermark reach (events span Jan 1-30 at every
   * provisioned scale factor; final watermark ≈ max ts − delay) and its
-  * oracle states the same range.
+  * oracle states the same range. The foreachBatch maintainers
+  * (s10-s69) instead fold each microbatch into generation dirs of
+  * parquet state through [[Streams.foldBatches]] and read the last
+  * generation out.
   */
 /** Open-session accumulator for s08's custom state: epoch-millis
   * bounds + event count. Top-level so Spark can derive an Encoder.
@@ -73,23 +77,139 @@ object Streams {
     * the RUN-FROM-SCRATCH contract: a registered query must be a pure
     * function of the source dataset (the oracle compare depends on
     * it), so cross-invocation resume is deliberately not supported.
-    * Accordingly the foreachBatch maintainers set NO explicit
-    * checkpointLocation (Spark gives the foreach sink a temp one):
-    * an on-disk checkpoint under the wiped base was vestigial and
-    * implied a resume path that the in-memory `latest` cursor — which
-    * restarts as None — never actually honored. WITHIN a run,
-    * at-least-once redelivery is still handled by the per-generation
-    * `_SUCCESS` markers (a replayed batchId short-circuits to its
-    * already-committed generation). The two real FILE-sink paths
-    * (the s07 partitioned ingest and the shared runToParquetSink
-    * helper) keep explicit checkpoints — the parquet sink requires
-    * one — and wipe both sink and checkpoint per invocation under
-    * the same contract.
+    * The two FILE-sink paths (the s07 partitioned ingest and
+    * [[runToParquetSink]]) keep explicit checkpoints — the parquet
+    * sink requires one — and wipe both sink and checkpoint per
+    * invocation under the same contract; the foreachBatch maintainers
+    * fold through [[foldBatches]], whose [[Generations]] is the one
+    * owner of their state layout and replay guard.
     */
   private def rmDir(spark: SparkSession, dir: String): Unit = {
     val p = new org.apache.hadoop.fs.Path(dir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(p)) fs.delete(p, true)
+  }
+
+  private def write(df: DataFrame, dir: String): Unit =
+    df.write.mode("overwrite").parquet(dir)
+
+  /** The generation-commit protocol of the foreachBatch maintainers.
+    * Batch `b` writes its state as one generation — the dir
+    * `$base/<table>_b` for each table name, written in the order
+    * named — so a merge never overwrites the parquet it reads. The
+    * LAST-named table's `_SUCCESS` marker commits the generation.
+    * foreachBatch is at-least-once: it can redeliver a batch id after
+    * a write whose checkpoint commit failed. A redelivered batch whose
+    * generation is committed reuses it instead of merging again (which
+    * would double-count the delta); a torn generation (marker missing)
+    * is recomputed over the previous committed one. Within a run this
+    * is the whole recovery story: [[foldBatches]] wipes `base` first
+    * and sets no checkpointLocation (Spark gives the foreach sink a
+    * temp one), because the in-memory `latest` pointer restarts empty
+    * and so could never honour a resume.
+    */
+  private[graft] final class Generations(spark: SparkSession, id: String,
+      base: String, tables: Seq[String]) {
+    @volatile private var latest: Option[Seq[String]] = None
+
+    /** Commit batch `batchId`: unless its generation is already
+      * committed, run `step(batch, previous generation's tables, this
+      * generation's dirs)`, which writes every dir in order.
+      */
+    def commit(batch: DataFrame, batchId: Long)(
+        step: (DataFrame, Option[Seq[DataFrame]], Seq[String]) => Unit): Unit = {
+      val next = tables.map(t => s"$base/${t}_$batchId")
+      val marker = new org.apache.hadoop.fs.Path(s"${next.last}/_SUCCESS")
+      val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      if (!fs.exists(marker))
+        step(batch, latest.map(_.map(spark.read.parquet(_))), next)
+      latest = Some(next)
+    }
+
+    /** The latest committed generation's tables, in the order named. */
+    def read(): Seq[DataFrame] =
+      latest.getOrElse(sys.error(s"$id: stream produced no batches"))
+        .map(spark.read.parquet(_))
+  }
+
+  private def stateDir(id: String, sfDir: String): String =
+    s"/tmp/graft-stream/${id}_${tag(sfDir)}"
+
+  /** Run maintainer `id` over `sfDir`: wipe its [[stateDir]], build
+    * `source` (after the wipe, so a source may stage files under the
+    * state dir), drive it to completion with Trigger.AvailableNow,
+    * commit every microbatch through [[Generations]], and return the
+    * latest generation's tables.
+    */
+  private[graft] def foldBatches(spark: SparkSession, id: String,
+      sfDir: String, source: => DataFrame, tables: String*)(
+      step: (DataFrame, Option[Seq[DataFrame]], Seq[String]) => Unit): Seq[DataFrame] = {
+    val base = stateDir(id, sfDir)
+    rmDir(spark, base)
+    val gens = new Generations(spark, id, base, tables)
+    source.writeStream
+      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
+        gens.commit(batch, batchId)(step)
+      }
+      .trigger(Trigger.AvailableNow())
+      .start()
+      .awaitTermination()
+    gens.read()
+  }
+
+  /** [[foldBatches]] for a maintainer whose state is one table:
+    * `merge` maps (batch, previous state) to the next state.
+    */
+  private def foldTable(spark: SparkSession, id: String, sfDir: String,
+      source: => DataFrame, table: String)(
+      merge: (DataFrame, Option[DataFrame]) => DataFrame): DataFrame =
+    foldBatches(spark, id, sfDir, source, table) { (batch, prev, next) =>
+      write(merge(batch, prev.map(_.head)), next.head)
+    }.head
+
+  /** The additive merge: full-outer join `delta` into the previous
+    * state on `keys` and coalesce-sum each measure (state and delta
+    * name their columns alike); with no previous state the delta is
+    * the state.
+    */
+  private def sumMerge(prev: Option[DataFrame], delta: DataFrame,
+      keys: Seq[String], measures: String*): DataFrame = {
+    val state = delta.select((keys ++ measures).map(col): _*)
+    prev match {
+      case None => state
+      case Some(p) =>
+        p.join(state.select(keys.map(col) ++
+            measures.map(m => col(m).as(s"d_$m")): _*), keys, "full_outer")
+          .select(keys.map(col) ++ measures.map(m =>
+            (coalesce(col(m), lit(0L)) +
+              coalesce(col(s"d_$m"), lit(0L))).as(m)): _*)
+    }
+  }
+
+  /** Microbatch source over a parquet dir, one file per trigger, so a
+    * run decomposes into several batches and the merge path really
+    * runs (the micros events copy and the documents splits are ≥4
+    * files at every provisioned sf).
+    */
+  private def batchesOf(spark: SparkSession, path: String): DataFrame =
+    spark.readStream
+      .schema(spark.read.parquet(path).schema)
+      .option("maxFilesPerTrigger", "1")
+      .parquet(path)
+
+  private def eventBatches(spark: SparkSession, sfDir: String): DataFrame =
+    batchesOf(spark, Lake.ensureMicrosEvents(spark, sfDir))
+
+  /** A 4-file copy of `documents` cut to `cols`, materialized once as
+    * `name`, streamed through [[batchesOf]].
+    */
+  private def docBatches(spark: SparkSession, sfDir: String, name: String,
+      cols: String*): DataFrame = {
+    Lake.materialize(spark, sfDir, name) {
+      Lake.table(spark, sfDir, "documents")
+        .select(cols.map(col): _*).repartition(4)
+    }
+    batchesOf(spark, Lake.materializedPath(spark, sfDir, name))
   }
 
   /** Raw-file event stream: explicit on-disk schema (ts as stored —
@@ -401,72 +521,36 @@ object Streams {
     * unmatched insert). A generation directory per batch keeps the
     * merge atomic — a batch never overwrites the parquet it is
     * reading (p05's staged-write guard, made structural). Guarantee
-    * scope: ONE invocation (rmDir wipes state at entry; a restarted
+    * scope: ONE invocation (state is wiped at entry; a restarted
     * invocation recomputes from scratch, it does not resume). WITHIN
-    * an invocation the merge is retry-idempotent: foreachBatch can
-    * redeliver a batch id after a successful write whose checkpoint
-    * commit failed, and a completed gen_<batchId> (its _SUCCESS
-    * marker exists) is then reused, not merged again — without the
-    * guard the redelivery would double-count the delta AND read and
-    * overwrite the same parquet directory. The merged metrics are a
-    * count and a max, both exact under ANY batch decomposition, so
-    * the final state must equal the batch-global aggregate — which is
+    * an invocation the merge is retry-idempotent through
+    * [[Generations]]' replay guard. The merged metrics are a count
+    * and a max, both exact under ANY batch decomposition, so the
+    * final state must equal the batch-global aggregate — which is
     * exactly what the oracle states.
-    * maxFilesPerTrigger=1 forces a multi-batch run (the micros copy
-    * is ≥4 files at every provisioned sf), so the merge path is
-    * genuinely exercised, not skipped via a single trivial batch.
     * Scale shape: per batch, one delta-sized aggregation plus one
     * full-outer join against the state table on its key — the same
     * plan MERGE INTO executes under a table format.
     */
-  def foreachBatchUpsert(spark: SparkSession, sfDir: String): DataFrame = {
-    val base = s"/tmp/graft-stream/s10_${tag(sfDir)}"
-    rmDir(spark, base)
-    val micros = Lake.ensureMicrosEvents(spark, sfDir)
-    val stream = spark.readStream
-      .schema(spark.read.parquet(micros).schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(micros)
-      .filter(col("event_type") === "purchase")
-    @volatile var latest: Option[String] = None
-    val q = stream.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val gen = s"$base/gen_$batchId"
-        // Retry guard (see scaladoc): a redelivered batch whose gen
-        // already completed must reuse it — merging again would
-        // double-count the delta and overwrite the dir being read.
-        val marker = new org.apache.hadoop.fs.Path(s"$gen/_SUCCESS")
-        val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (fs.exists(marker)) {
-          latest = Some(gen)
-        } else {
-          val agg = batch.groupBy(col("user_id"))
-            .agg(count(lit(1)).as("d_n"), max(col("ts")).as("d_last_ts"))
-          val merged = latest match {
-            case None => agg.select(col("user_id"),
-              col("d_n").as("n_purchases"), col("d_last_ts").as("last_ts"))
-            case Some(prev) =>
-              spark.read.parquet(prev)
-                .join(agg, Seq("user_id"), "full_outer")
-                .select(col("user_id"),
-                  (coalesce(col("n_purchases"), lit(0L)) +
-                    coalesce(col("d_n"), lit(0L))).as("n_purchases"),
-                  greatest(
-                    coalesce(col("last_ts"), col("d_last_ts")),
-                    coalesce(col("d_last_ts"), col("last_ts"))).as("last_ts"))
-          }
-          merged.write.mode("overwrite").parquet(gen)
-          latest = Some(gen)
-        }
-        ()
+  def foreachBatchUpsert(spark: SparkSession, sfDir: String): DataFrame =
+    foldTable(spark, "s10", sfDir,
+        eventBatches(spark, sfDir).filter(col("event_type") === "purchase"),
+        "gen") { (batch, prev) =>
+      val agg = batch.groupBy(col("user_id"))
+        .agg(count(lit(1)).as("d_n"), max(col("ts")).as("d_last_ts"))
+      prev match {
+        case None => agg.select(col("user_id"),
+          col("d_n").as("n_purchases"), col("d_last_ts").as("last_ts"))
+        case Some(p) =>
+          p.join(agg, Seq("user_id"), "full_outer")
+            .select(col("user_id"),
+              (coalesce(col("n_purchases"), lit(0L)) +
+                coalesce(col("d_n"), lit(0L))).as("n_purchases"),
+              greatest(
+                coalesce(col("last_ts"), col("d_last_ts")),
+                coalesce(col("d_last_ts"), col("last_ts"))).as("last_ts"))
       }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.read.parquet(latest.getOrElse(
-      sys.error("s10: stream produced no batches")))
-      .orderBy(col("user_id"))
-  }
+    }.orderBy(col("user_id"))
 
   /** s12: streaming maintenance of x70's mergeable-histogram partials
     * — the persist-the-partial architecture kept fresh incrementally.
@@ -478,48 +562,15 @@ object Streams {
     * partials up through the SAME [[graft.ext.Sampling.histRollup]]
     * the batch build uses, so the oracle (x70's own SQL) asserts
     * literal streamed-state ≡ batch-rollup equality — the IVM
-    * contract. Generation dirs + the s10 retry guard make redelivered
-    * batches idempotent.
+    * contract.
     */
-  def foreachBatchHistogram(spark: SparkSession, sfDir: String): DataFrame = {
-    val base = s"/tmp/graft-stream/s12_${tag(sfDir)}"
-    rmDir(spark, base)
-    val micros = Lake.ensureMicrosEvents(spark, sfDir)
-    val stream = spark.readStream
-      .schema(spark.read.parquet(micros).schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(micros)
-    @volatile var latest: Option[String] = None
-    val q = stream.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val gen = s"$base/gen_$batchId"
-        val marker = new org.apache.hadoop.fs.Path(s"$gen/_SUCCESS")
-        val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (fs.exists(marker)) {
-          latest = Some(gen)
-        } else {
-          val delta = graft.ext.Sampling.histDaily(batch.toDF())
-            .withColumnRenamed("n", "d_n")
-          val merged = latest match {
-            case None => delta.select(col("day"), col("bin"), col("d_n").as("n"))
-            case Some(prev) =>
-              spark.read.parquet(prev)
-                .join(delta, Seq("day", "bin"), "full_outer")
-                .select(col("day"), col("bin"),
-                  (coalesce(col("n"), lit(0L)) +
-                    coalesce(col("d_n"), lit(0L))).as("n"))
-          }
-          merged.write.mode("overwrite").parquet(gen)
-          latest = Some(gen)
-        }
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    graft.ext.Sampling.histRollup(spark.read.parquet(latest.getOrElse(
-      sys.error("s12: stream produced no batches"))))
-  }
+  def foreachBatchHistogram(spark: SparkSession, sfDir: String): DataFrame =
+    graft.ext.Sampling.histRollup(
+      foldTable(spark, "s12", sfDir, eventBatches(spark, sfDir), "gen") {
+        (batch, prev) =>
+          sumMerge(prev, graft.ext.Sampling.histDaily(batch),
+            Seq("day", "bin"), "n")
+      })
 
   /** s32: x186's exact ROC-AUC with the (event_type, fold) label-count
     * cells maintained incrementally — IVM for a RANK metric beside
@@ -533,51 +584,10 @@ object Streams {
     * construction — the scorer's ranking quality tracked live as
     * events arrive, with state that never grows with the corpus.
     */
-  def foreachBatchAuc(spark: SparkSession, sfDir: String): DataFrame = {
-    val base = s"/tmp/graft-stream/s32_${tag(sfDir)}"
-    rmDir(spark, base)
-    val micros = Lake.ensureMicrosEvents(spark, sfDir)
-    val stream = spark.readStream
-      .schema(spark.read.parquet(micros).schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(micros)
-    @volatile var latest: Option[String] = None
-    val q = stream.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val gen = s"$base/cells_$batchId"
-        val marker = new org.apache.hadoop.fs.Path(s"$gen/_SUCCESS")
-        val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (fs.exists(marker)) {
-          latest = Some(gen)
-        } else {
-          val delta = graft.ext.Sampling.rawScoreCellsOf(batch.toDF())
-            .withColumnRenamed("n", "d_n")
-            .withColumnRenamed("n_pos", "d_pos")
-          val merged = latest match {
-            case None => delta.select(col("event_type"), col("fold"),
-              col("d_n").as("n"), col("d_pos").as("n_pos"))
-            case Some(prev) =>
-              spark.read.parquet(prev)
-                .join(delta, Seq("event_type", "fold"), "full_outer")
-                .select(col("event_type"), col("fold"),
-                  (coalesce(col("n"), lit(0L)) +
-                    coalesce(col("d_n"), lit(0L))).as("n"),
-                  (coalesce(col("n_pos"), lit(0L)) +
-                    coalesce(col("d_pos"), lit(0L))).as("n_pos"))
-          }
-          merged.write.mode("overwrite").parquet(gen)
-          latest = Some(gen)
-        }
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+  def foreachBatchAuc(spark: SparkSession, sfDir: String): DataFrame =
     graft.ext.Sampling.aucFromScoreCells(
       graft.ext.Sampling.scoreCellsFrom(
-        spark.read.parquet(latest.getOrElse(
-          sys.error("s32: stream produced no batches")))))
-  }
+        maintainedScoreCells(spark, sfDir, "s32")))
 
   /** s39: x214's split-conformal readout over s32's SAME maintained
     * (event_type, fold) label-count cell state — conformal coverage
@@ -592,51 +602,21 @@ object Streams {
     * batch by construction, with state that never grows with the
     * corpus.
     */
-  def foreachBatchConformal(spark: SparkSession, sfDir: String): DataFrame = {
-    val base = s"/tmp/graft-stream/s39_${tag(sfDir)}"
-    rmDir(spark, base)
-    val micros = Lake.ensureMicrosEvents(spark, sfDir)
-    val stream = spark.readStream
-      .schema(spark.read.parquet(micros).schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(micros)
-    @volatile var latest: Option[String] = None
-    val q = stream.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val gen = s"$base/cells_$batchId"
-        val marker = new org.apache.hadoop.fs.Path(s"$gen/_SUCCESS")
-        val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (fs.exists(marker)) {
-          latest = Some(gen)
-        } else {
-          val delta = graft.ext.Sampling.rawScoreCellsOf(batch.toDF())
-            .withColumnRenamed("n", "d_n")
-            .withColumnRenamed("n_pos", "d_pos")
-          val merged = latest match {
-            case None => delta.select(col("event_type"), col("fold"),
-              col("d_n").as("n"), col("d_pos").as("n_pos"))
-            case Some(prev) =>
-              spark.read.parquet(prev)
-                .join(delta, Seq("event_type", "fold"), "full_outer")
-                .select(col("event_type"), col("fold"),
-                  (coalesce(col("n"), lit(0L)) +
-                    coalesce(col("d_n"), lit(0L))).as("n"),
-                  (coalesce(col("n_pos"), lit(0L)) +
-                    coalesce(col("d_pos"), lit(0L))).as("n_pos"))
-          }
-          merged.write.mode("overwrite").parquet(gen)
-          latest = Some(gen)
-        }
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+  def foreachBatchConformal(spark: SparkSession, sfDir: String): DataFrame =
     graft.ext.Sampling.conformalFromFoldCells(
       graft.ext.Sampling.foldScoreCellsFrom(
-        spark.read.parquet(latest.getOrElse(
-          sys.error("s39: stream produced no batches")))))
-  }
+        maintainedScoreCells(spark, sfDir, "s39")))
+
+  /** The s32/s39 shared maintainer: the (event_type, fold, n, n_pos)
+    * label-count cells, merged additively per microbatch.
+    */
+  private def maintainedScoreCells(spark: SparkSession, sfDir: String,
+      name: String): DataFrame =
+    foldTable(spark, name, sfDir, eventBatches(spark, sfDir), "cells") {
+      (batch, prev) =>
+        sumMerge(prev, graft.ext.Sampling.rawScoreCellsOf(batch),
+          Seq("event_type", "fold"), "n", "n_pos")
+    }
 
   /** s33: c95's diff-in-differences with the 2×2 (grp, period) cells
     * maintained incrementally — the textbook additive IVM (four
@@ -646,50 +626,13 @@ object Streams {
     * [[graft.queries.Surface.didFromCells]] stage, so streamed ≡
     * batch c95 by construction. State is 4 rows forever.
     */
-  def foreachBatchDid(spark: SparkSession, sfDir: String): DataFrame = {
-    val base = s"/tmp/graft-stream/s33_${tag(sfDir)}"
-    rmDir(spark, base)
-    val micros = Lake.ensureMicrosEvents(spark, sfDir)
-    val stream = spark.readStream
-      .schema(spark.read.parquet(micros).schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(micros)
-    @volatile var latest: Option[String] = None
-    val q = stream.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val gen = s"$base/cells_$batchId"
-        val marker = new org.apache.hadoop.fs.Path(s"$gen/_SUCCESS")
-        val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (fs.exists(marker)) {
-          latest = Some(gen)
-        } else {
-          val delta = graft.queries.Surface.didCellsOf(batch.toDF())
-            .withColumnRenamed("n", "d_n")
-            .withColumnRenamed("sum_cents", "d_sum")
-          val merged = latest match {
-            case None => delta.select(col("grp"), col("period"),
-              col("d_n").as("n"), col("d_sum").as("sum_cents"))
-            case Some(prev) =>
-              spark.read.parquet(prev)
-                .join(delta, Seq("grp", "period"), "full_outer")
-                .select(col("grp"), col("period"),
-                  (coalesce(col("n"), lit(0L)) +
-                    coalesce(col("d_n"), lit(0L))).as("n"),
-                  (coalesce(col("sum_cents"), lit(0L)) +
-                    coalesce(col("d_sum"), lit(0L))).as("sum_cents"))
-          }
-          merged.write.mode("overwrite").parquet(gen)
-          latest = Some(gen)
-        }
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+  def foreachBatchDid(spark: SparkSession, sfDir: String): DataFrame =
     graft.queries.Surface.didFromCells(
-      spark.read.parquet(latest.getOrElse(
-        sys.error("s33: stream produced no batches"))))
-  }
+      foldTable(spark, "s33", sfDir, eventBatches(spark, sfDir), "cells") {
+        (batch, prev) =>
+          sumMerge(prev, graft.queries.Surface.didCellsOf(batch),
+            Seq("grp", "period"), "n", "sum_cents")
+      })
 
   /** s34: x196's OLS fit with the ten normal-equation sums maintained
     * incrementally — the purest IVM in the registry: the sufficient
@@ -701,45 +644,21 @@ object Streams {
     * additions.
     */
   def foreachBatchOls(spark: SparkSession, sfDir: String): DataFrame = {
-    val base = s"/tmp/graft-stream/s34_${tag(sfDir)}"
-    rmDir(spark, base)
-    val micros = Lake.ensureMicrosEvents(spark, sfDir)
-    val stream = spark.readStream
-      .schema(spark.read.parquet(micros).schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(micros)
     val sumCols = Seq("n", "s1", "s2", "sy", "s11", "s12", "s22",
       "s1y", "s2y", "syy")
-    @volatile var latest: Option[String] = None
-    val q = stream.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val gen = s"$base/sums_$batchId"
-        val marker = new org.apache.hadoop.fs.Path(s"$gen/_SUCCESS")
-        val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (fs.exists(marker)) {
-          latest = Some(gen)
-        } else {
-          val delta = graft.ext.Sampling.olsSumsOf(batch.toDF())
-          val merged = latest match {
+    graft.ext.Sampling.olsFromSums(
+      foldTable(spark, "s34", sfDir, eventBatches(spark, sfDir), "sums") {
+        (batch, prev) =>
+          val delta = graft.ext.Sampling.olsSumsOf(batch)
+          prev match {
             case None => delta
-            case Some(prev) =>
-              val p = spark.read.parquet(prev)
+            case Some(p) =>
               p.crossJoin(delta.select(
                 sumCols.map(c => col(c).as(s"d_$c")): _*))
                 .select(sumCols.map(c =>
                   (col(c) + col(s"d_$c")).as(c)): _*)
           }
-          merged.write.mode("overwrite").parquet(gen)
-          latest = Some(gen)
-        }
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    graft.ext.Sampling.olsFromSums(
-      spark.read.parquet(latest.getOrElse(
-        sys.error("s34: stream produced no batches"))))
+      })
   }
 
   /** s35: x197's G² collocation ranking with the bigram-count model
@@ -752,51 +671,14 @@ object Streams {
     * batch x197 by construction. State is distinct-bigram-sized
     * (vocabulary-shaped, sublinear in the corpus).
     */
-  def foreachBatchG2(spark: SparkSession, sfDir: String): DataFrame = {
-    val base = s"/tmp/graft-stream/s35_${tag(sfDir)}"
-    rmDir(spark, base)
-    Lake.materialize(spark, sfDir, "docs_split_text_v1") {
-      Lake.table(spark, sfDir, "documents")
-        .select(col("doc_id"), col("text")).repartition(4)
-    }
-    val srcPath = Lake.materializedPath(spark, sfDir, "docs_split_text_v1")
-    val stream = spark.readStream
-      .schema(spark.read.parquet(srcPath).schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(srcPath)
-    @volatile var latest: Option[String] = None
-    val q = stream.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val gen = s"$base/cbg_$batchId"
-        val marker = new org.apache.hadoop.fs.Path(s"$gen/_SUCCESS")
-        val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (fs.exists(marker)) {
-          latest = Some(gen)
-        } else {
-          val delta = graft.ext.TextAnalysis.bigramCountsOf(batch.toDF())
-            .withColumnRenamed("cnt", "d_cnt")
-          val merged = latest match {
-            case None => delta.select(col("w1"), col("w2"),
-              col("d_cnt").as("cnt"))
-            case Some(prev) =>
-              spark.read.parquet(prev)
-                .join(delta, Seq("w1", "w2"), "full_outer")
-                .select(col("w1"), col("w2"),
-                  (coalesce(col("cnt"), lit(0L)) +
-                    coalesce(col("d_cnt"), lit(0L))).as("cnt"))
-          }
-          merged.write.mode("overwrite").parquet(gen)
-          latest = Some(gen)
-        }
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+  def foreachBatchG2(spark: SparkSession, sfDir: String): DataFrame =
     graft.ext.TextAnalysis.g2FromBigramCounts(
-      spark.read.parquet(latest.getOrElse(
-        sys.error("s35: stream produced no batches"))))
-  }
+      foldTable(spark, "s35", sfDir,
+          docBatches(spark, sfDir, "docs_split_text_v1", "doc_id", "text"),
+          "cbg") { (batch, prev) =>
+        sumMerge(prev, graft.ext.TextAnalysis.bigramCountsOf(batch),
+          Seq("w1", "w2"), "cnt")
+      })
 
   /** s36: x205's Spearman ρ with the joint (n_chars, n_toks) value-
     * pair frequency table maintained incrementally — rank-statistic
@@ -828,54 +710,17 @@ object Streams {
     * delta, and full-outer-merge into the running value-pair frequency
     * table (additive — the one sufficient statistic both rank
     * statistics re-derive from). Run-from-scratch per invocation (the
-    * rmDir wipes prior generations — the explicit contract; resuming
-    * across JVMs would re-read generation files from disk instead).
+    * state dir is wiped — the explicit contract; resuming across JVMs
+    * would re-read generation files from disk instead).
     */
   private def maintainDocJoint(spark: SparkSession, sfDir: String,
-      name: String): DataFrame = {
-    val base = s"/tmp/graft-stream/${name}_${tag(sfDir)}"
-    rmDir(spark, base)
-    Lake.materialize(spark, sfDir, "docs_split_lentext_v1") {
-      Lake.table(spark, sfDir, "documents")
-        .select(col("n_chars"), col("text")).repartition(4)
+      name: String): DataFrame =
+    foldTable(spark, name, sfDir,
+        docBatches(spark, sfDir, "docs_split_lentext_v1", "n_chars", "text"),
+        "joint") { (batch, prev) =>
+      sumMerge(prev, graft.ext.Sampling.spearmanJointOf(batch),
+        Seq("n_chars", "n_toks"), "f")
     }
-    val srcPath = Lake.materializedPath(spark, sfDir, "docs_split_lentext_v1")
-    val stream = spark.readStream
-      .schema(spark.read.parquet(srcPath).schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(srcPath)
-    @volatile var latest: Option[String] = None
-    val q = stream.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val gen = s"$base/joint_$batchId"
-        val marker = new org.apache.hadoop.fs.Path(s"$gen/_SUCCESS")
-        val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (fs.exists(marker)) {
-          latest = Some(gen)
-        } else {
-          val delta = graft.ext.Sampling.spearmanJointOf(batch.toDF())
-            .withColumnRenamed("f", "d_f")
-          val merged = latest match {
-            case None => delta.select(col("n_chars"), col("n_toks"),
-              col("d_f").as("f"))
-            case Some(prev) =>
-              spark.read.parquet(prev)
-                .join(delta, Seq("n_chars", "n_toks"), "full_outer")
-                .select(col("n_chars"), col("n_toks"),
-                  (coalesce(col("f"), lit(0L)) +
-                    coalesce(col("d_f"), lit(0L))).as("f"))
-          }
-          merged.write.mode("overwrite").parquet(gen)
-          latest = Some(gen)
-        }
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.read.parquet(latest.getOrElse(
-      sys.error(s"$name: stream produced no batches")))
-  }
 
   /** s37: c84's Kaplan–Meier curve with the SUBJECT TABLE maintained
     * incrementally — survival-analysis IVM: the per-user sufficient
@@ -889,56 +734,32 @@ object Streams {
     * until a conversion arrives).
     */
   def foreachBatchSurvival(spark: SparkSession, sfDir: String): DataFrame = {
-    val base = s"/tmp/graft-stream/s37_${tag(sfDir)}"
-    rmDir(spark, base)
-    val micros = Lake.ensureMicrosEvents(spark, sfDir)
-    val stream = spark.readStream
-      .schema(spark.read.parquet(micros).schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(micros)
-    @volatile var latest: Option[String] = None
-    val q = stream.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val gen = s"$base/subj_$batchId"
-        val marker = new org.apache.hadoop.fs.Path(s"$gen/_SUCCESS")
-        val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (fs.exists(marker)) {
-          latest = Some(gen)
-        } else {
-          val b = batch.toDF()
-            .select(col("user_id"), col("event_type"), col("value"),
-              expr("datediff(to_date(ts), date'2024-01-01')").as("d"))
-          val delta = b.groupBy(col("user_id"))
-            .agg(min(col("d")).as("d0"), max(col("d")).as("dl"),
-              min(when(col("event_type") === "purchase" &&
-                col("value") > 90, col("d"))).as("dp"))
-          val merged = latest match {
-            case None => delta
-            case Some(prev) =>
-              val p = spark.read.parquet(prev)
-                .withColumnRenamed("d0", "p_d0")
-                .withColumnRenamed("dl", "p_dl")
-                .withColumnRenamed("dp", "p_dp")
-              p.join(delta, Seq("user_id"), "full_outer")
-                .select(col("user_id"),
-                  least(coalesce(col("p_d0"), col("d0")),
-                    coalesce(col("d0"), col("p_d0"))).as("d0"),
-                  greatest(coalesce(col("p_dl"), col("dl")),
-                    coalesce(col("dl"), col("p_dl"))).as("dl"),
-                  least(coalesce(col("p_dp"), col("dp")),
-                    coalesce(col("dp"), col("p_dp"))).as("dp"))
-          }
-          merged.write.mode("overwrite").parquet(gen)
-          latest = Some(gen)
-        }
-        ()
+    val subj = foldTable(spark, "s37", sfDir, eventBatches(spark, sfDir),
+        "subj") { (batch, prev) =>
+      val b = batch
+        .select(col("user_id"), col("event_type"), col("value"),
+          expr("datediff(to_date(ts), date'2024-01-01')").as("d"))
+      val delta = b.groupBy(col("user_id"))
+        .agg(min(col("d")).as("d0"), max(col("d")).as("dl"),
+          min(when(col("event_type") === "purchase" &&
+            col("value") > 90, col("d"))).as("dp"))
+      prev match {
+        case None => delta
+        case Some(prevState) =>
+          val p = prevState
+            .withColumnRenamed("d0", "p_d0")
+            .withColumnRenamed("dl", "p_dl")
+            .withColumnRenamed("dp", "p_dp")
+          p.join(delta, Seq("user_id"), "full_outer")
+            .select(col("user_id"),
+              least(coalesce(col("p_d0"), col("d0")),
+                coalesce(col("d0"), col("p_d0"))).as("d0"),
+              greatest(coalesce(col("p_dl"), col("dl")),
+                coalesce(col("dl"), col("p_dl"))).as("dl"),
+              least(coalesce(col("p_dp"), col("dp")),
+                coalesce(col("dp"), col("p_dp"))).as("dp"))
       }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val subj = spark.read.parquet(latest.getOrElse(
-        sys.error("s37: stream produced no batches")))
-      .select(
+    }.select(
         when(col("dp").isNotNull, col("dp") - col("d0"))
           .otherwise(col("dl") - col("d0")).as("t_day"),
         col("dp").isNotNull.as("died"))
@@ -955,50 +776,13 @@ object Streams {
     * every batch from the maintained sums — the screen's definition
     * of "outlier" tracks the corpus as it grows.
     */
-  def foreachBatchMahalanobis(spark: SparkSession, sfDir: String): DataFrame = {
-    val base = s"/tmp/graft-stream/s38_${tag(sfDir)}"
-    rmDir(spark, base)
-    val micros = Lake.ensureMicrosEvents(spark, sfDir)
-    val stream = spark.readStream
-      .schema(spark.read.parquet(micros).schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(micros)
-    @volatile var latest: Option[String] = None
-    val q = stream.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val gen = s"$base/users_$batchId"
-        val marker = new org.apache.hadoop.fs.Path(s"$gen/_SUCCESS")
-        val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (fs.exists(marker)) {
-          latest = Some(gen)
-        } else {
-          val delta = graft.ext.Sampling.mahalanobisUsersOf(batch.toDF())
-            .withColumnRenamed("f", "d_f")
-            .withColumnRenamed("m", "d_m")
-          val merged = latest match {
-            case None => delta.select(col("user_id"),
-              col("d_f").as("f"), col("d_m").as("m"))
-            case Some(prev) =>
-              spark.read.parquet(prev)
-                .join(delta, Seq("user_id"), "full_outer")
-                .select(col("user_id"),
-                  (coalesce(col("f"), lit(0L)) +
-                    coalesce(col("d_f"), lit(0L))).as("f"),
-                  (coalesce(col("m"), lit(0L)) +
-                    coalesce(col("d_m"), lit(0L))).as("m"))
-          }
-          merged.write.mode("overwrite").parquet(gen)
-          latest = Some(gen)
-        }
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+  def foreachBatchMahalanobis(spark: SparkSession, sfDir: String): DataFrame =
     graft.ext.Sampling.mahalanobisFromUsers(
-      spark.read.parquet(latest.getOrElse(
-        sys.error("s38: stream produced no batches"))))
-  }
+      foldTable(spark, "s38", sfDir, eventBatches(spark, sfDir), "users") {
+        (batch, prev) =>
+          sumMerge(prev, graft.ext.Sampling.mahalanobisUsersOf(batch),
+            Seq("user_id"), "f", "m")
+      })
 
   /** s41: x218's Count-Min counter grid maintained incrementally —
     * sketch-state IVM: the d×w grid is LINEAR in its input (Σ c per
@@ -1011,51 +795,18 @@ object Streams {
     * shared [[graft.ext.Sampling.cmsReadout]] stage, so streamed ≡
     * batch x218 by construction and the oracle is reused verbatim.
     */
-  def foreachBatchCms(spark: SparkSession, sfDir: String): DataFrame = {
-    val base = s"/tmp/graft-stream/s41_${tag(sfDir)}"
-    rmDir(spark, base)
-    val micros = Lake.ensureMicrosEvents(spark, sfDir)
-    val stream = spark.readStream
-      .schema(spark.read.parquet(micros).schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(micros)
-    @volatile var latest: Option[String] = None
-    val q = stream.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val gen = s"$base/grid_$batchId"
-        val marker = new org.apache.hadoop.fs.Path(s"$gen/_SUCCESS")
-        val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (fs.exists(marker)) {
-          latest = Some(gen)
-        } else {
-          val delta = graft.ext.Sampling.cmsGridOf(
-            batch.toDF().groupBy(col("user_id").as("k"))
-              .agg(count(lit(1)).as("c")))
-            .withColumnRenamed("counter", "d_counter")
-          val merged = latest match {
-            case None => delta.select(col("r"), col("slot"),
-              col("d_counter").as("counter"))
-            case Some(prev) =>
-              spark.read.parquet(prev)
-                .join(delta, Seq("r", "slot"), "full_outer")
-                .select(col("r"), col("slot"),
-                  (coalesce(col("counter"), lit(0L)) +
-                    coalesce(col("d_counter"), lit(0L))).as("counter"))
-          }
-          merged.write.mode("overwrite").parquet(gen)
-          latest = Some(gen)
-        }
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+  def foreachBatchCms(spark: SparkSession, sfDir: String): DataFrame =
     graft.ext.Sampling.cmsReadout(
-      spark.read.parquet(latest.getOrElse(
-        sys.error("s41: stream produced no batches"))),
+      foldTable(spark, "s41", sfDir, eventBatches(spark, sfDir), "grid") {
+        (batch, prev) =>
+          sumMerge(prev,
+            graft.ext.Sampling.cmsGridOf(
+              batch.groupBy(col("user_id").as("k"))
+                .agg(count(lit(1)).as("c"))),
+            Seq("r", "slot"), "counter")
+      },
       Lake.table(spark, sfDir, "events")
         .groupBy(col("user_id").as("k")).agg(count(lit(1)).as("c")))
-  }
 
   /** s42: x219's KMV min-hash slates maintained incrementally — the
     * MIN-UNION merge discipline (the third in the suite: s41 merges
@@ -1069,48 +820,22 @@ object Streams {
     * [[graft.ext.Sampling.kmvReadout]] stage, so streamed ≡ batch
     * x219 by construction and the oracle is reused verbatim.
     */
-  def foreachBatchKmv(spark: SparkSession, sfDir: String): DataFrame = {
-    val base = s"/tmp/graft-stream/s42_${tag(sfDir)}"
-    rmDir(spark, base)
-    val micros = Lake.ensureMicrosEvents(spark, sfDir)
-    val stream = spark.readStream
-      .schema(spark.read.parquet(micros).schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(micros)
-    @volatile var latest: Option[String] = None
-    val q = stream.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val gen = s"$base/slate_$batchId"
-        val marker = new org.apache.hadoop.fs.Path(s"$gen/_SUCCESS")
-        val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (fs.exists(marker)) {
-          latest = Some(gen)
-        } else {
-          val delta = graft.ext.Sampling.kmvMinHashesOf(
-            batch.toDF().select(col("event_type").as("grp"),
-              col("user_id").as("k")))
-          val merged = latest match {
-            case None => delta
-            case Some(prev) =>
-              graft.ext.Sampling.kmvTrim(
-                spark.read.parquet(prev).unionAll(delta))
-          }
-          merged.write.mode("overwrite").parquet(gen)
-          latest = Some(gen)
-        }
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+  def foreachBatchKmv(spark: SparkSession, sfDir: String): DataFrame =
     graft.ext.Sampling.kmvReadout(
-      spark.read.parquet(latest.getOrElse(
-        sys.error("s42: stream produced no batches"))),
+      foldTable(spark, "s42", sfDir, eventBatches(spark, sfDir), "slate") {
+        (batch, prev) =>
+          val delta = graft.ext.Sampling.kmvMinHashesOf(
+            batch.select(col("event_type").as("grp"),
+              col("user_id").as("k")))
+          prev match {
+            case None => delta
+            case Some(p) => graft.ext.Sampling.kmvTrim(p.unionAll(delta))
+          }
+      },
       Lake.table(spark, sfDir, "events")
         .select(col("event_type").as("grp"), col("user_id").as("k"))
         .distinct().groupBy(col("grp"))
         .agg(count(lit(1)).as("exact_distinct")))
-  }
 
   /** s44: x230's HyperLogLog registers maintained incrementally — the
     * MAX-UNION merge discipline, the fourth in the suite (s41 merges
@@ -1124,53 +849,28 @@ object Streams {
     * [[graft.ext.Sampling.hllReadout]] stage, so streamed ≡ batch
     * x230 by construction and the oracle is reused verbatim.
     */
-  def foreachBatchHll(spark: SparkSession, sfDir: String): DataFrame = {
-    val base = s"/tmp/graft-stream/s44_${tag(sfDir)}"
-    rmDir(spark, base)
-    val micros = Lake.ensureMicrosEvents(spark, sfDir)
-    val stream = spark.readStream
-      .schema(spark.read.parquet(micros).schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(micros)
-    @volatile var latest: Option[String] = None
-    val q = stream.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val gen = s"$base/regs_$batchId"
-        val marker = new org.apache.hadoop.fs.Path(s"$gen/_SUCCESS")
-        val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (fs.exists(marker)) {
-          latest = Some(gen)
-        } else {
+  def foreachBatchHll(spark: SparkSession, sfDir: String): DataFrame =
+    graft.ext.Sampling.hllReadout(
+      foldTable(spark, "s44", sfDir, eventBatches(spark, sfDir), "regs") {
+        (batch, prev) =>
           val delta = graft.ext.Sampling.hllRegistersOf(
-            batch.toDF().select(col("event_type").as("grp"),
+            batch.select(col("event_type").as("grp"),
               col("user_id").as("k")))
             .withColumnRenamed("m_j", "d_m_j")
-          val merged = latest match {
+          prev match {
             case None => delta.select(col("grp"), col("j"),
               col("d_m_j").as("m_j"))
-            case Some(prev) =>
-              spark.read.parquet(prev)
-                .join(delta, Seq("grp", "j"), "full_outer")
+            case Some(p) =>
+              p.join(delta, Seq("grp", "j"), "full_outer")
                 .select(col("grp"), col("j"),
                   greatest(coalesce(col("m_j"), lit(0L)),
                     coalesce(col("d_m_j"), lit(0L))).as("m_j"))
           }
-          merged.write.mode("overwrite").parquet(gen)
-          latest = Some(gen)
-        }
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    graft.ext.Sampling.hllReadout(
-      spark.read.parquet(latest.getOrElse(
-        sys.error("s44: stream produced no batches"))),
+      },
       Lake.table(spark, sfDir, "events")
         .select(col("event_type").as("grp"), col("user_id").as("k"))
         .distinct().groupBy(col("grp"))
         .agg(count(lit(1)).as("exact_distinct")))
-  }
 
   /** s45: x231's AMS signed sums maintained incrementally — additive
     * sketch-state IVM like s41's counters, but the linearity is
@@ -1183,56 +883,23 @@ object Streams {
     * the shared [[graft.ext.Sampling.amsReadout]] stage, so streamed
     * ≡ batch x231 by construction and the oracle is reused verbatim.
     */
-  def foreachBatchAms(spark: SparkSession, sfDir: String): DataFrame = {
-    val base = s"/tmp/graft-stream/s45_${tag(sfDir)}"
-    rmDir(spark, base)
-    val micros = Lake.ensureMicrosEvents(spark, sfDir)
-    val stream = spark.readStream
-      .schema(spark.read.parquet(micros).schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(micros)
-    @volatile var latest: Option[String] = None
-    val q = stream.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val gen = s"$base/sums_$batchId"
-        val marker = new org.apache.hadoop.fs.Path(s"$gen/_SUCCESS")
-        val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (fs.exists(marker)) {
-          latest = Some(gen)
-        } else {
-          val delta = graft.ext.Sampling.amsSumsOf(
-            batch.toDF()
-              .groupBy(col("event_type").as("grp"), col("user_id").as("k"))
-              .agg(count(lit(1)).as("c")))
-            .withColumnRenamed("z", "d_z")
-          val merged = latest match {
-            case None => delta.select(col("grp"), col("r"),
-              col("d_z").as("z"))
-            case Some(prev) =>
-              spark.read.parquet(prev)
-                .join(delta, Seq("grp", "r"), "full_outer")
-                .select(col("grp"), col("r"),
-                  (coalesce(col("z"), lit(0L)) +
-                    coalesce(col("d_z"), lit(0L))).as("z"))
-          }
-          merged.write.mode("overwrite").parquet(gen)
-          latest = Some(gen)
-        }
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+  def foreachBatchAms(spark: SparkSession, sfDir: String): DataFrame =
     graft.ext.Sampling.amsReadout(
-      spark.read.parquet(latest.getOrElse(
-        sys.error("s45: stream produced no batches"))),
+      foldTable(spark, "s45", sfDir, eventBatches(spark, sfDir), "sums") {
+        (batch, prev) =>
+          sumMerge(prev,
+            graft.ext.Sampling.amsSumsOf(
+              batch
+                .groupBy(col("event_type").as("grp"), col("user_id").as("k"))
+                .agg(count(lit(1)).as("c"))),
+            Seq("grp", "r"), "z")
+      },
       Lake.table(spark, sfDir, "events")
         .groupBy(col("event_type").as("grp"), col("user_id").as("k"))
         .agg(count(lit(1)).as("c"))
         .groupBy(col("grp"))
         .agg(count(lit(1)).as("n_keys"),
           sum(col("c") * col("c")).as("f2_exact")))
-  }
 
   /** s46: x234's per-group ANOVA moments (n_g, Σv, Σv²) maintained
     * incrementally — the textbook sufficient-statistic IVM (the
@@ -1260,57 +927,17 @@ object Streams {
     * 3 BIGINTs, the smallest per-group artifact in the suite.
     */
   private def maintainedGroupMoments(spark: SparkSession, sfDir: String,
-      name: String): DataFrame = {
-    val base = s"/tmp/graft-stream/${name}_${tag(sfDir)}"
-    rmDir(spark, base)
-    Lake.materialize(spark, sfDir, "docs_split_len_v1") {
-      Lake.table(spark, sfDir, "documents")
-        .select(col("source"), col("n_chars")).repartition(4)
+      name: String): DataFrame =
+    foldTable(spark, name, sfDir,
+        docBatches(spark, sfDir, "docs_split_len_v1", "source", "n_chars"),
+        "moments") { (batch, prev) =>
+      sumMerge(prev,
+        batch.select(col("source").as("grp"), col("n_chars").as("v"))
+          .groupBy(col("grp"))
+          .agg(count(lit(1)).as("n_g"), sum(col("v")).as("s"),
+            sum(col("v") * col("v")).as("ss")),
+        Seq("grp"), "n_g", "s", "ss")
     }
-    val srcPath = Lake.materializedPath(spark, sfDir, "docs_split_len_v1")
-    val stream = spark.readStream
-      .schema(spark.read.parquet(srcPath).schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(srcPath)
-    @volatile var latest: Option[String] = None
-    val q = stream.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val gen = s"$base/moments_$batchId"
-        val marker = new org.apache.hadoop.fs.Path(s"$gen/_SUCCESS")
-        val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (fs.exists(marker)) {
-          latest = Some(gen)
-        } else {
-          val delta = batch.toDF()
-            .select(col("source").as("grp"), col("n_chars").as("v"))
-            .groupBy(col("grp"))
-            .agg(count(lit(1)).as("d_n"), sum(col("v")).as("d_s"),
-              sum(col("v") * col("v")).as("d_ss"))
-          val merged = latest match {
-            case None => delta.select(col("grp"), col("d_n").as("n_g"),
-              col("d_s").as("s"), col("d_ss").as("ss"))
-            case Some(prev) =>
-              spark.read.parquet(prev)
-                .join(delta, Seq("grp"), "full_outer")
-                .select(col("grp"),
-                  (coalesce(col("n_g"), lit(0L)) +
-                    coalesce(col("d_n"), lit(0L))).as("n_g"),
-                  (coalesce(col("s"), lit(0L)) +
-                    coalesce(col("d_s"), lit(0L))).as("s"),
-                  (coalesce(col("ss"), lit(0L)) +
-                    coalesce(col("d_ss"), lit(0L))).as("ss"))
-          }
-          merged.write.mode("overwrite").parquet(gen)
-          latest = Some(gen)
-        }
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.read.parquet(latest.getOrElse(
-      sys.error(s"$name: stream produced no batches")))
-  }
 
   /** s43: x228's Theil U with the (source, lang) contingency cell
     * table maintained incrementally — s21 already streams the same
@@ -1322,51 +949,15 @@ object Streams {
     * streamed ≡ batch x228 by construction and the oracle is reused
     * verbatim. State is R×C-sized.
     */
-  def foreachBatchTheilU(spark: SparkSession, sfDir: String): DataFrame = {
-    val base = s"/tmp/graft-stream/s43_${tag(sfDir)}"
-    rmDir(spark, base)
-    Lake.materialize(spark, sfDir, "docs_split_meta_v1") {
-      Lake.table(spark, sfDir, "documents")
-        .select(col("source"), col("lang")).repartition(4)
-    }
-    val srcPath = Lake.materializedPath(spark, sfDir, "docs_split_meta_v1")
-    val stream = spark.readStream
-      .schema(spark.read.parquet(srcPath).schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(srcPath)
-    @volatile var latest: Option[String] = None
-    val q = stream.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val gen = s"$base/cells_$batchId"
-        val marker = new org.apache.hadoop.fs.Path(s"$gen/_SUCCESS")
-        val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (fs.exists(marker)) {
-          latest = Some(gen)
-        } else {
-          val delta = batch.toDF().groupBy(col("source"), col("lang"))
-            .agg(count(lit(1)).as("d_c"))
-          val merged = latest match {
-            case None => delta.select(col("source"), col("lang"),
-              col("d_c").as("c"))
-            case Some(prev) =>
-              spark.read.parquet(prev)
-                .join(delta, Seq("source", "lang"), "full_outer")
-                .select(col("source"), col("lang"),
-                  (coalesce(col("c"), lit(0L)) +
-                    coalesce(col("d_c"), lit(0L))).as("c"))
-          }
-          merged.write.mode("overwrite").parquet(gen)
-          latest = Some(gen)
-        }
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+  def foreachBatchTheilU(spark: SparkSession, sfDir: String): DataFrame =
     graft.ext.TextAnalysis.theilUFromCells(
-      spark.read.parquet(latest.getOrElse(
-        sys.error("s43: stream produced no batches"))))
-  }
+      foldTable(spark, "s43", sfDir,
+          docBatches(spark, sfDir, "docs_split_meta_v1", "source", "lang"),
+          "cells") { (batch, prev) =>
+        sumMerge(prev,
+          batch.groupBy(col("source"), col("lang")).agg(count(lit(1)).as("c")),
+          Seq("source", "lang"), "c")
+      })
 
   /** s13: streaming maintenance of a distinct-edge interaction graph
     * — SET-semantics IVM next to s12's additive partials: each
@@ -1381,66 +972,23 @@ object Streams {
     * incrementally. Per batch at scale: one anti-join of the batch's
     * distinct edges against the (key-bucketed) edge set, a delta
     * sized by novelty only, one full-outer merge over the user-sized
-    * degree table. Same per-batch generation dirs + _SUCCESS-marker
-    * replay skip as s11 (idempotent under retry).
+    * degree table. Idempotent under retry through [[Generations]].
     */
   def foreachBatchDegrees(spark: SparkSession, sfDir: String): DataFrame = {
-    val base = s"/tmp/graft-stream/s13_${tag(sfDir)}"
-    rmDir(spark, base)
-    val micros = Lake.ensureMicrosEvents(spark, sfDir)
-    val stream = spark.readStream
-      .schema(spark.read.parquet(micros).schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(micros)
-    @volatile var latest: Option[(String, String)] = None
-    val q = stream.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val genE = s"$base/edges_$batchId"
-        val genD = s"$base/deg_$batchId"
-        // degrees are written LAST, so their marker implies both gens
-        val marker = new org.apache.hadoop.fs.Path(s"$genD/_SUCCESS")
-        val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (fs.exists(marker)) {
-          latest = Some((genE, genD))
-        } else {
-          val edges = batch.toDF()
-            .select(col("user_id"), col("event_type")).distinct()
-          val novel = latest match {
-            case None => edges
-            case Some((prevE, _)) =>
-              val seen = spark.read.parquet(prevE)
-              edges.join(seen,
-                edges("user_id") <=> seen("user_id") &&
-                  edges("event_type") <=> seen("event_type"), "left_anti")
-          }
-          val edgesNext = latest match {
-            case None => novel
-            case Some((prevE, _)) =>
-              spark.read.parquet(prevE).unionByName(novel)
-          }
-          edgesNext.write.mode("overwrite").parquet(genE)
-          val delta = novel.groupBy(col("user_id")).agg(count(lit(1)).as("d"))
-          val degNext = latest match {
-            case None => delta.select(col("user_id"), col("d").as("deg"))
-            case Some((_, prevD)) =>
-              spark.read.parquet(prevD)
-                .join(delta, Seq("user_id"), "full_outer")
-                .select(col("user_id"),
-                  (coalesce(col("deg"), lit(0L)) +
-                    coalesce(col("d"), lit(0L))).as("deg"))
-          }
-          degNext.write.mode("overwrite").parquet(genD)
-          latest = Some((genE, genD))
-        }
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.read.parquet(latest.getOrElse(
-      sys.error("s13: stream produced no batches"))._2)
-      .select(col("user_id"), col("deg"))
-      .orderBy(col("user_id"))
+    // degrees are written LAST, so their marker commits both tables
+    val Seq(_, deg) = foldBatches(spark, "s13", sfDir,
+        eventBatches(spark, sfDir), "edges", "deg") { (batch, prev, next) =>
+      val edges = batch.select(col("user_id"), col("event_type")).distinct()
+      val novel = prev.map(_(0)).fold(edges)(seen =>
+        edges.join(seen,
+          edges("user_id") <=> seen("user_id") &&
+            edges("event_type") <=> seen("event_type"), "left_anti"))
+      write(prev.fold(novel)(_.head.unionByName(novel)), next(0))
+      write(sumMerge(prev.map(_(1)),
+        novel.groupBy(col("user_id")).agg(count(lit(1)).as("deg")),
+        Seq("user_id"), "deg"), next(1))
+    }
+    deg.select(col("user_id"), col("deg")).orderBy(col("user_id"))
   }
 
   /** s18: incrementally-maintained BM25 search index — the streaming
@@ -1462,75 +1010,35 @@ object Streams {
     * merge's vocab-bound full-outer join.
     */
   def foreachBatchBm25(spark: SparkSession, sfDir: String): DataFrame = {
-    val base = s"/tmp/graft-stream/s18_${tag(sfDir)}"
-    rmDir(spark, base)
-    // a 4-file docs copy so AvailableNow yields multiple microbatches
-    Lake.materialize(spark, sfDir, "docs_split_v1") {
-      Lake.table(spark, sfDir, "documents")
-        .select(col("doc_id"), col("text")).repartition(4)
-    }
-    val srcPath = Lake.materializedPath(spark, sfDir, "docs_split_v1")
-    val stream = spark.readStream
-      .schema(spark.read.parquet(srcPath).schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(srcPath)
-    @volatile var latest: Option[(String, String, String, String)] = None
-    @volatile var batches = 0
-    val q = stream.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val genT = s"$base/tf_$batchId"
-        val genL = s"$base/len_$batchId"
-        val genD = s"$base/df_$batchId"
-        val genG = s"$base/g_$batchId"
-        // counters are written LAST, so their marker implies all four
-        val marker = new org.apache.hadoop.fs.Path(s"$genG/_SUCCESS")
-        val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (fs.exists(marker)) {
-          latest = Some((genT, genL, genD, genG))
-        } else {
-          val tfB = batch.toDF()
-            .select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
-            .groupBy(col("doc_id"), col("term"))
-            .agg(count(lit(1)).as("tf"))
-          tfB.cache()
-          val lenB = tfB.groupBy(col("doc_id")).agg(sum(col("tf")).as("len"))
-          val dfB = tfB.groupBy(col("term")).agg(count(lit(1)).as("df"))
-          val gB = lenB.agg(count(lit(1)).as("n"), sum(col("len")).as("l"))
-          val (tfNext, lenNext, dfNext, gNext) = latest match {
-            case None => (tfB, lenB, dfB, gB)
-            case Some((pt, pl, pd, pg)) =>
-              (spark.read.parquet(pt).unionByName(tfB),
-                spark.read.parquet(pl).unionByName(lenB),
-                spark.read.parquet(pd)
-                  .withColumnRenamed("df", "df0")
-                  .join(dfB.withColumnRenamed("df", "df1"), Seq("term"), "full_outer")
-                  .select(col("term"),
-                    (coalesce(col("df0"), lit(0L)) +
-                      coalesce(col("df1"), lit(0L))).as("df")),
-                spark.read.parquet(pg)
-                  .withColumnRenamed("n", "n0").withColumnRenamed("l", "l0")
-                  .crossJoin(gB)
-                  .select((col("n0") + col("n")).as("n"),
-                    (col("l0") + col("l")).as("l")))
-          }
-          tfNext.write.mode("overwrite").parquet(genT)
-          lenNext.write.mode("overwrite").parquet(genL)
-          dfNext.write.mode("overwrite").parquet(genD)
-          gNext.write.mode("overwrite").parquet(genG)
-          tfB.unpersist()
-          latest = Some((genT, genL, genD, genG))
-        }
-        batches += 1
-        ()
+    // counters are written LAST, so their marker commits all four
+    val Seq(t, l, d, g) = foldBatches(spark, "s18", sfDir,
+        docBatches(spark, sfDir, "docs_split_v1", "doc_id", "text"),
+        "tf", "len", "df", "g") { (batch, prev, next) =>
+      val tfB = batch
+        .select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
+        .groupBy(col("doc_id"), col("term"))
+        .agg(count(lit(1)).as("tf"))
+      tfB.cache()
+      val lenB = tfB.groupBy(col("doc_id")).agg(sum(col("tf")).as("len"))
+      val dfB = tfB.groupBy(col("term")).agg(count(lit(1)).as("df"))
+      val gB = lenB.agg(count(lit(1)).as("n"), sum(col("len")).as("l"))
+      val (tfNext, lenNext, gNext) = prev match {
+        case None => (tfB, lenB, gB)
+        case Some(p) =>
+          (p(0).unionByName(tfB), p(1).unionByName(lenB),
+            p(3).withColumnRenamed("n", "n0").withColumnRenamed("l", "l0")
+              .crossJoin(gB)
+              .select((col("n0") + col("n")).as("n"),
+                (col("l0") + col("l")).as("l")))
       }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val (t, l, d, g) = latest.getOrElse(
-      sys.error("s18: stream produced no batches"))
-    graft.ext.TextAnalysis.bm25FromParts(
-      spark.read.parquet(t), spark.read.parquet(d), spark.read.parquet(l),
-      spark.read.parquet(g), Seq("join", "filter", "vector"))
+      write(tfNext, next(0))
+      write(lenNext, next(1))
+      write(sumMerge(prev.map(_(2)), dfB, Seq("term"), "df"), next(2))
+      write(gNext, next(3))
+      tfB.unpersist()
+    }
+    graft.ext.TextAnalysis.bm25FromParts(t, d, l, g,
+        Seq("join", "filter", "vector"))
       .orderBy(desc("bm25"), col("doc_id"))
       .limit(10)
   }
@@ -1549,24 +1057,11 @@ object Streams {
     * one user-grain aggregate of the batch + a user-frame full-outer
     * merge; the percentile pass only ever sees users, not events.
     */
-  def foreachBatchRfm(spark: SparkSession, sfDir: String): DataFrame = {
-    val base = s"/tmp/graft-stream/s19_${tag(sfDir)}"
-    rmDir(spark, base)
-    val micros = Lake.ensureMicrosEvents(spark, sfDir)
-    val stream = spark.readStream
-      .schema(spark.read.parquet(micros).schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(micros)
-    @volatile var latest: Option[String] = None
-    val q = stream.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val gen = s"$base/users_$batchId"
-        val marker = new org.apache.hadoop.fs.Path(s"$gen/_SUCCESS")
-        val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (fs.exists(marker)) {
-          latest = Some(gen)
-        } else {
-          val ev = batch.toDF()
+  def foreachBatchRfm(spark: SparkSession, sfDir: String): DataFrame =
+    graft.queries.Surface.rfmSegments(
+      foldTable(spark, "s19", sfDir, eventBatches(spark, sfDir), "users") {
+        (batch, prev) =>
+          val ev = batch
             .select(col("user_id"),
               expr("datediff(to_date(ts), date'2024-01-01')").as("d"),
               col("event_type"), col("value"))
@@ -1575,11 +1070,10 @@ object Streams {
               sum(when(col("event_type") === "purchase",
                 floor(col("value") * 100).cast("long")).otherwise(0L))
                 .as("m_cents"))
-          val next = latest match {
+          prev match {
             case None => delta
-            case Some(prev) =>
-              spark.read.parquet(prev)
-                .withColumnRenamed("f", "f0")
+            case Some(p) =>
+              p.withColumnRenamed("f", "f0")
                 .withColumnRenamed("last_d", "d0")
                 .withColumnRenamed("m_cents", "m0")
                 .join(delta, Seq("user_id"), "full_outer")
@@ -1591,19 +1085,7 @@ object Streams {
                   (coalesce(col("m0"), lit(0L)) +
                     coalesce(col("m_cents"), lit(0L))).as("m_cents"))
           }
-          next.write.mode("overwrite").parquet(gen)
-          latest = Some(gen)
-        }
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    graft.queries.Surface.rfmSegments(
-      spark.read.parquet(latest.getOrElse(
-        sys.error("s19: stream produced no batches"))))
-      .orderBy(col("segment"))
-  }
+      }).orderBy(col("segment"))
 
   /** s14: streaming maintenance of the p12 data-quality report — the
     * DQ gate run CONTINUOUSLY at ingest instead of before publish.
@@ -1626,81 +1108,47 @@ object Streams {
     * one anti-join against the (key-bucketed) id set, a 7-row merge.
     */
   def foreachBatchDq(spark: SparkSession, sfDir: String): DataFrame = {
-    val base = s"/tmp/graft-stream/s14_${tag(sfDir)}"
-    rmDir(spark, base)
-    val micros = Lake.ensureMicrosEvents(spark, sfDir)
-    val stream = spark.readStream
-      .schema(spark.read.parquet(micros).schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(micros)
-    @volatile var latest: Option[(String, String)] = None
-    val q = stream.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val genI = s"$base/ids_$batchId"
-        val genC = s"$base/ctr_$batchId"
-        // counters are written LAST, so their marker implies both gens
-        val marker = new org.apache.hadoop.fs.Path(s"$genC/_SUCCESS")
-        val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (fs.exists(marker)) {
-          latest = Some((genI, genC))
-        } else {
-          val b = batch.toDF()
-          // NULL ids stay OUT of the novelty set: SQL's
-          // COUNT(*) − COUNT(DISTINCT event_id) counts every NULL row
-          // in n but never in the distinct, so a NULL id is always a
-          // uniqueness violation — keeping NULL as one set member
-          // would under-count by exactly 1 the moment one exists
-          // (c1's not-null check is where NULLs are reported).
-          val ids = b.select(col("event_id"))
-            .filter(col("event_id").isNotNull).distinct()
-          val novel = latest match {
-            case None => ids
-            case Some((prevI, _)) =>
-              val seen = spark.read.parquet(prevI)
-              ids.join(seen,
-                ids("event_id") === seen("event_id"), "left_anti")
-          }
-          val idsNext = latest match {
-            case None => novel
-            case Some((prevI, _)) =>
-              spark.read.parquet(prevI).unionByName(novel)
-          }
-          idsNext.write.mode("overwrite").parquet(genI)
-          // one aggregate pass over the batch; uniqueness delta =
-          // batch rows − novel ids (telescopes to n − countDistinct)
-          val delta = graft.pipeline.Views.eventCheckCounters(b)
-            .crossJoin(broadcast(novel.agg(count(lit(1)).as("novel"))))
-            .selectExpr(
-              "stack(7, 'event_id_not_null', c1, " +
-                "'event_id_unique', n_rows - novel, 'ts_in_2024', c3, " +
-                "'event_type_in_domain', c4, 'value_positive', c5, " +
-                "'value_le_400', c6, 'props_has_k', c7) " +
-                "AS (check_name, v)", "n_rows")
-          val ctrNext = latest match {
-            case None =>
-              delta.select(col("check_name"),
-                coalesce(col("v"), lit(0L)).as("violations"),
-                col("n_rows"))
-            case Some((_, prevC)) =>
-              val prev = spark.read.parquet(prevC)
-              prev.join(delta, Seq("check_name"), "full_outer")
-                .select(col("check_name"),
-                  (coalesce(col("violations"), lit(0L)) +
-                    coalesce(col("v"), lit(0L))).as("violations"),
-                  (coalesce(prev("n_rows"), lit(0L)) +
-                    coalesce(delta("n_rows"), lit(0L))).as("n_rows"))
-          }
-          ctrNext.write.mode("overwrite").parquet(genC)
-          latest = Some((genI, genC))
-        }
-        ()
+    // counters are written LAST, so their marker commits both tables
+    val Seq(_, ctr) = foldBatches(spark, "s14", sfDir,
+        eventBatches(spark, sfDir), "ids", "ctr") { (b, prev, next) =>
+      // NULL ids stay OUT of the novelty set: SQL's
+      // COUNT(*) − COUNT(DISTINCT event_id) counts every NULL row
+      // in n but never in the distinct, so a NULL id is always a
+      // uniqueness violation — keeping NULL as one set member
+      // would under-count by exactly 1 the moment one exists
+      // (c1's not-null check is where NULLs are reported).
+      val ids = b.select(col("event_id"))
+        .filter(col("event_id").isNotNull).distinct()
+      val novel = prev.map(_(0)).fold(ids)(seen =>
+        ids.join(seen, ids("event_id") === seen("event_id"), "left_anti"))
+      write(prev.fold(novel)(_.head.unionByName(novel)), next(0))
+      // one aggregate pass over the batch; uniqueness delta =
+      // batch rows − novel ids (telescopes to n − countDistinct)
+      val delta = graft.pipeline.Views.eventCheckCounters(b)
+        .crossJoin(broadcast(novel.agg(count(lit(1)).as("novel"))))
+        .selectExpr(
+          "stack(7, 'event_id_not_null', c1, " +
+            "'event_id_unique', n_rows - novel, 'ts_in_2024', c3, " +
+            "'event_type_in_domain', c4, 'value_positive', c5, " +
+            "'value_le_400', c6, 'props_has_k', c7) " +
+            "AS (check_name, v)", "n_rows")
+      val ctrNext = prev match {
+        case None =>
+          delta.select(col("check_name"),
+            coalesce(col("v"), lit(0L)).as("violations"),
+            col("n_rows"))
+        case Some(g) =>
+          val p = g(1)
+          p.join(delta, Seq("check_name"), "full_outer")
+            .select(col("check_name"),
+              (coalesce(col("violations"), lit(0L)) +
+                coalesce(col("v"), lit(0L))).as("violations"),
+              (coalesce(p("n_rows"), lit(0L)) +
+                coalesce(delta("n_rows"), lit(0L))).as("n_rows"))
       }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.read.parquet(latest.getOrElse(
-      sys.error("s14: stream produced no batches"))._2)
-      .select(lit("events").as("table_name"), col("check_name"),
+      write(ctrNext, next(1))
+    }
+    ctr.select(lit("events").as("table_name"), col("check_name"),
         col("violations"), col("n_rows"),
         (col("violations") === 0L).as("passed"))
       .orderBy(col("check_name"))
@@ -1723,45 +1171,12 @@ object Streams {
     * full-outer merge over the histogram-sized state.
     */
   def foreachBatchPsi(spark: SparkSession, sfDir: String): DataFrame = {
-    val base = s"/tmp/graft-stream/s15_${tag(sfDir)}"
-    rmDir(spark, base)
-    val micros = Lake.ensureMicrosEvents(spark, sfDir)
-    val stream = spark.readStream
-      .schema(spark.read.parquet(micros).schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(micros)
-    @volatile var latest: Option[String] = None
-    val q = stream.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val gen = s"$base/hist_$batchId"
-        val marker = new org.apache.hadoop.fs.Path(s"$gen/_SUCCESS")
-        val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (fs.exists(marker)) {
-          latest = Some(gen)
-        } else {
-          val delta = graft.pipeline.Views.psiHalfCounts(batch.toDF())
-            .filter(col("half") === "cur")
-            .select(col("event_type"), col("bucket"), col("c"))
-          val next = latest match {
-            case None => delta
-            case Some(prev) =>
-              val p = spark.read.parquet(prev)
-              p.join(delta, Seq("event_type", "bucket"), "full_outer")
-                .select(col("event_type"), col("bucket"),
-                  (coalesce(p("c"), lit(0L)) +
-                    coalesce(delta("c"), lit(0L))).as("c"))
-          }
-          next.write.mode("overwrite").parquet(gen)
-          latest = Some(gen)
-        }
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val cur = spark.read.parquet(latest.getOrElse(
-      sys.error("s15: stream produced no batches")))
-      .withColumn("half", lit("cur"))
+    val cur = foldTable(spark, "s15", sfDir, eventBatches(spark, sfDir),
+        "hist") { (batch, prev) =>
+      sumMerge(prev,
+        graft.pipeline.Views.psiHalfCounts(batch).filter(col("half") === "cur"),
+        Seq("event_type", "bucket"), "c")
+    }.withColumn("half", lit("cur"))
     val ref = graft.pipeline.Views
       .psiHalfCounts(Lake.table(spark, sfDir, "events"))
       .filter(col("half") === "ref")
@@ -1790,8 +1205,8 @@ object Streams {
 
   /** The drift family's shared maintenance loop (s20/s23/s24): stream
     * the events, maintain the CURRENT window's (event_type, bucket)
-    * counts additively per microbatch (generation-marker idempotence:
-    * a replayed batch whose generation already committed is skipped),
+    * counts additively per microbatch (a replayed batch reuses its
+    * committed generation, see [[Generations]]),
     * and return the maintained cur frame unioned with the frozen
     * batch-derived ref half — the (event_type, half, bucket, c)
     * input every family readout stage consumes. One maintained
@@ -1800,45 +1215,12 @@ object Streams {
     */
   private def maintainedHalfCounts(spark: SparkSession, sfDir: String,
       name: String): DataFrame = {
-    val base = s"/tmp/graft-stream/${name}_${tag(sfDir)}"
-    rmDir(spark, base)
-    val micros = Lake.ensureMicrosEvents(spark, sfDir)
-    val stream = spark.readStream
-      .schema(spark.read.parquet(micros).schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(micros)
-    @volatile var latest: Option[String] = None
-    val q = stream.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val gen = s"$base/hist_$batchId"
-        val marker = new org.apache.hadoop.fs.Path(s"$gen/_SUCCESS")
-        val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (fs.exists(marker)) {
-          latest = Some(gen)
-        } else {
-          val delta = graft.pipeline.Views.ksHalfCounts(batch.toDF())
-            .filter(col("half") === "cur")
-            .select(col("event_type"), col("bucket"), col("c"))
-          val next = latest match {
-            case None => delta
-            case Some(prev) =>
-              val p = spark.read.parquet(prev)
-              p.join(delta, Seq("event_type", "bucket"), "full_outer")
-                .select(col("event_type"), col("bucket"),
-                  (coalesce(p("c"), lit(0L)) +
-                    coalesce(delta("c"), lit(0L))).as("c"))
-          }
-          next.write.mode("overwrite").parquet(gen)
-          latest = Some(gen)
-        }
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val cur = spark.read.parquet(latest.getOrElse(
-      sys.error(s"$name: stream produced no batches")))
-      .withColumn("half", lit("cur"))
+    val cur = foldTable(spark, name, sfDir, eventBatches(spark, sfDir),
+        "hist") { (batch, prev) =>
+      sumMerge(prev,
+        graft.pipeline.Views.ksHalfCounts(batch).filter(col("half") === "cur"),
+        Seq("event_type", "bucket"), "c")
+    }.withColumn("half", lit("cur"))
     val ref = graft.pipeline.Views
       .ksHalfCounts(Lake.table(spark, sfDir, "events"))
       .filter(col("half") === "ref")
@@ -1868,16 +1250,6 @@ object Streams {
         maintainedHalfCounts(spark, sfDir, "s29"))
       .orderBy(col("rank"))
 
-  /** s21: x136's Simpson diversity with the (source, lang) cell table
-    * maintained incrementally — the IVM pattern applied to a
-    * DIVERSITY statistic: per-microbatch cell counts merge additively
-    * (s12's case; the index is |source|·|lang|-bounded at any corpus
-    * size), and the report reads out through the shared
-    * [[graft.ext.TextAnalysis.simpsonFromCells]] stage, so streamed ≡
-    * batch x136 by construction. The dataset-card diversity readout
-    * stays current as a crawl ingests without ever re-scanning the
-    * corpus.
-    */
   /** s23: x146's Mann–Whitney/AUC drift report with the current
     * window's (event_type, bucket) counts maintained incrementally —
     * the SAME maintained state as s20 (both statistics are functions
@@ -2014,55 +1386,23 @@ object Streams {
 
   /** The time-series family's shared maintenance loop (s22/s25/s26):
     * stream the events and maintain the (event_type, day) daily-count
-    * table additively per microbatch (the generation-marker
-    * idempotence of [[maintainedHalfCounts]]). One |types|·|days|-
+    * table additively per microbatch (replay-idempotent through
+    * [[Generations]]). One |types|·|days|-
     * bounded maintained artifact serves CUSUM, the EWMA smoother AND
     * the Mann–Kendall trend test — every readout is a pure function
     * of the day frame, so streamed ≡ batch by construction for all
     * three.
     */
   private def maintainedDayCounts(spark: SparkSession, sfDir: String,
-      name: String): DataFrame = {
-    val base = s"/tmp/graft-stream/${name}_${tag(sfDir)}"
-    rmDir(spark, base)
-    val micros = Lake.ensureMicrosEvents(spark, sfDir)
-    val stream = spark.readStream
-      .schema(spark.read.parquet(micros).schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(micros)
-    @volatile var latest: Option[String] = None
-    val q = stream.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val gen = s"$base/days_$batchId"
-        val marker = new org.apache.hadoop.fs.Path(s"$gen/_SUCCESS")
-        val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (fs.exists(marker)) {
-          latest = Some(gen)
-        } else {
-          val delta = batch.toDF()
-            .groupBy(col("event_type"),
+      name: String): DataFrame =
+    foldTable(spark, name, sfDir, eventBatches(spark, sfDir), "days") {
+      (batch, prev) =>
+        sumMerge(prev,
+          batch.groupBy(col("event_type"),
               expr("datediff(to_date(ts), date'2024-01-01')").as("day"))
-            .agg(count(lit(1)).as("x"))
-          val next = latest match {
-            case None => delta
-            case Some(prev) =>
-              val p = spark.read.parquet(prev)
-              p.join(delta, Seq("event_type", "day"), "full_outer")
-                .select(col("event_type"), col("day"),
-                  (coalesce(p("x"), lit(0L)) +
-                    coalesce(delta("x"), lit(0L))).as("x"))
-          }
-          next.write.mode("overwrite").parquet(gen)
-          latest = Some(gen)
-        }
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.read.parquet(latest.getOrElse(
-      sys.error(s"$name: stream produced no batches")))
-  }
+            .agg(count(lit(1)).as("x")),
+          Seq("event_type", "day"), "x")
+    }
 
   /** s25: x165's EWMA smoother off the maintained day frame — the
     * truncated 8-lag window is exactly what makes EWMA maintainable
@@ -2180,54 +1520,25 @@ object Streams {
         maintainedDayCounts(spark, sfDir, "s58"))
       .orderBy(col("event_type"))
 
-  def foreachBatchSimpson(spark: SparkSession, sfDir: String): DataFrame = {
-    val base = s"/tmp/graft-stream/s21_${tag(sfDir)}"
-    rmDir(spark, base)
-    // a 4-file (source, lang) docs copy so AvailableNow yields
-    // multiple microbatches (s18's split pattern, metadata columns)
-    Lake.materialize(spark, sfDir, "docs_split_meta_v1") {
-      Lake.table(spark, sfDir, "documents")
-        .select(col("source"), col("lang")).repartition(4)
-    }
-    val srcPath = Lake.materializedPath(spark, sfDir, "docs_split_meta_v1")
-    val stream = spark.readStream
-      .schema(spark.read.parquet(srcPath).schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(srcPath)
-    @volatile var latest: Option[String] = None
-    val q = stream.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val gen = s"$base/cells_$batchId"
-        val marker = new org.apache.hadoop.fs.Path(s"$gen/_SUCCESS")
-        val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (fs.exists(marker)) {
-          latest = Some(gen)
-        } else {
-          val delta = batch.toDF()
-            .groupBy(col("source"), col("lang"))
-            .agg(count(lit(1)).as("n"))
-          val next = latest match {
-            case None => delta
-            case Some(prev) =>
-              val p = spark.read.parquet(prev)
-              p.join(delta, Seq("source", "lang"), "full_outer")
-                .select(col("source"), col("lang"),
-                  (coalesce(p("n"), lit(0L)) +
-                    coalesce(delta("n"), lit(0L))).as("n"))
-          }
-          next.write.mode("overwrite").parquet(gen)
-          latest = Some(gen)
-        }
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+  /** s21: x136's Simpson diversity with the (source, lang) cell table
+    * maintained incrementally — the IVM pattern applied to a
+    * DIVERSITY statistic: per-microbatch cell counts merge additively
+    * (s12's case; the index is |source|·|lang|-bounded at any corpus
+    * size), and the report reads out through the shared
+    * [[graft.ext.TextAnalysis.simpsonFromCells]] stage, so streamed ≡
+    * batch x136 by construction. The dataset-card diversity readout
+    * stays current as a crawl ingests without ever re-scanning the
+    * corpus.
+    */
+  def foreachBatchSimpson(spark: SparkSession, sfDir: String): DataFrame =
     graft.ext.TextAnalysis.simpsonFromCells(
-        spark.read.parquet(latest.getOrElse(
-          sys.error("s21: stream produced no batches"))))
-      .orderBy(col("source"))
-  }
+      foldTable(spark, "s21", sfDir,
+          docBatches(spark, sfDir, "docs_split_meta_v1", "source", "lang"),
+          "cells") { (batch, prev) =>
+        sumMerge(prev,
+          batch.groupBy(col("source"), col("lang")).agg(count(lit(1)).as("n")),
+          Seq("source", "lang"), "n")
+      }).orderBy(col("source"))
 
   /** s27: x159's Gini length-concentration report with the
     * (source, v) VALUE-FREQUENCY table maintained incrementally —
@@ -2240,52 +1551,16 @@ object Streams {
     * batch x159 by construction. State is length-support-sized at
     * any corpus size.
     */
-  def foreachBatchGini(spark: SparkSession, sfDir: String): DataFrame = {
-    val base = s"/tmp/graft-stream/s27_${tag(sfDir)}"
-    rmDir(spark, base)
-    Lake.materialize(spark, sfDir, "docs_split_len_v1") {
-      Lake.table(spark, sfDir, "documents")
-        .select(col("source"), col("n_chars")).repartition(4)
-    }
-    val srcPath = Lake.materializedPath(spark, sfDir, "docs_split_len_v1")
-    val stream = spark.readStream
-      .schema(spark.read.parquet(srcPath).schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(srcPath)
-    @volatile var latest: Option[String] = None
-    val q = stream.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val gen = s"$base/freq_$batchId"
-        val marker = new org.apache.hadoop.fs.Path(s"$gen/_SUCCESS")
-        val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (fs.exists(marker)) {
-          latest = Some(gen)
-        } else {
-          val delta = batch.toDF()
-            .groupBy(col("source"), col("n_chars").as("v"))
-            .agg(count(lit(1)).as("f"))
-          val next = latest match {
-            case None => delta
-            case Some(prev) =>
-              val p = spark.read.parquet(prev)
-              p.join(delta, Seq("source", "v"), "full_outer")
-                .select(col("source"), col("v"),
-                  (coalesce(p("f"), lit(0L)) +
-                    coalesce(delta("f"), lit(0L))).as("f"))
-          }
-          next.write.mode("overwrite").parquet(gen)
-          latest = Some(gen)
-        }
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+  def foreachBatchGini(spark: SparkSession, sfDir: String): DataFrame =
     graft.ext.TextAnalysis.giniFromFreq(
-        spark.read.parquet(latest.getOrElse(
-          sys.error("s27: stream produced no batches"))))
-      .orderBy(col("source"))
-  }
+      foldTable(spark, "s27", sfDir,
+          docBatches(spark, sfDir, "docs_split_len_v1", "source", "n_chars"),
+          "freq") { (batch, prev) =>
+        sumMerge(prev,
+          batch.groupBy(col("source"), col("n_chars").as("v"))
+            .agg(count(lit(1)).as("f")),
+          Seq("source", "v"), "f")
+      }).orderBy(col("source"))
 
   /** s30: x183's hapax-share report with the (source, w) WORD-
     * FREQUENCY table maintained incrementally — s27's rank-statistic
@@ -2327,52 +1602,16 @@ object Streams {
     * statistic every frequency-tail readout shares.
     */
   private def maintainedWordFreq(spark: SparkSession, sfDir: String,
-      name: String): DataFrame = {
-    val base = s"/tmp/graft-stream/${name}_${tag(sfDir)}"
-    rmDir(spark, base)
-    Lake.materialize(spark, sfDir, "docs_split_text_v1") {
-      Lake.table(spark, sfDir, "documents")
-        .select(col("source"), col("text")).repartition(4)
+      name: String): DataFrame =
+    foldTable(spark, name, sfDir,
+        docBatches(spark, sfDir, "docs_split_text_v1", "source", "text"),
+        "freq") { (batch, prev) =>
+      sumMerge(prev,
+        batch.select(col("source"), explode(split(col("text"), " ")).as("w"))
+          .groupBy(col("source"), col("w"))
+          .agg(count(lit(1)).as("freq")),
+        Seq("source", "w"), "freq")
     }
-    val srcPath = Lake.materializedPath(spark, sfDir, "docs_split_text_v1")
-    val stream = spark.readStream
-      .schema(spark.read.parquet(srcPath).schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(srcPath)
-    @volatile var latest: Option[String] = None
-    val q = stream.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val gen = s"$base/freq_$batchId"
-        val marker = new org.apache.hadoop.fs.Path(s"$gen/_SUCCESS")
-        val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (fs.exists(marker)) {
-          latest = Some(gen)
-        } else {
-          val delta = batch.toDF()
-            .select(col("source"),
-              explode(split(col("text"), " ")).as("w"))
-            .groupBy(col("source"), col("w"))
-            .agg(count(lit(1)).as("freq"))
-          val next = latest match {
-            case None => delta
-            case Some(prev) =>
-              val p = spark.read.parquet(prev)
-              p.join(delta, Seq("source", "w"), "full_outer")
-                .select(col("source"), col("w"),
-                  (coalesce(p("freq"), lit(0L)) +
-                    coalesce(delta("freq"), lit(0L))).as("freq"))
-          }
-          next.write.mode("overwrite").parquet(gen)
-          latest = Some(gen)
-        }
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.read.parquet(latest.getOrElse(
-      sys.error(s"$name: stream produced no batches")))
-  }
 
   /** s31: c92's type-affinity matrix with the DISTINCT (user_id,
     * event_type) set table maintained incrementally — s13's
@@ -2383,43 +1622,13 @@ object Streams {
     * streamed ≡ batch c92. State is (users × observed types)-sized —
     * the same bound the batch distinct pays.
     */
-  def foreachBatchTypeAffinity(spark: SparkSession, sfDir: String): DataFrame = {
-    val base = s"/tmp/graft-stream/s31_${tag(sfDir)}"
-    rmDir(spark, base)
-    val micros = Lake.ensureMicrosEvents(spark, sfDir)
-    val stream = spark.readStream
-      .schema(spark.read.parquet(micros).schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(micros)
-    @volatile var latest: Option[String] = None
-    val q = stream.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val gen = s"$base/set_$batchId"
-        val marker = new org.apache.hadoop.fs.Path(s"$gen/_SUCCESS")
-        val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (fs.exists(marker)) {
-          latest = Some(gen)
-        } else {
-          val delta = batch.toDF()
-            .select(col("user_id"), col("event_type")).distinct()
-          val next = latest match {
-            case None => delta
-            case Some(prev) =>
-              spark.read.parquet(prev).unionByName(delta).distinct()
-          }
-          next.write.mode("overwrite").parquet(gen)
-          latest = Some(gen)
-        }
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+  def foreachBatchTypeAffinity(spark: SparkSession, sfDir: String): DataFrame =
     graft.queries.Surface.typeAffinityFromPairs(
-        spark.read.parquet(latest.getOrElse(
-          sys.error("s31: stream produced no batches"))))
-      .orderBy(col("type_a"), col("type_b"))
-  }
+      foldTable(spark, "s31", sfDir, eventBatches(spark, sfDir), "set") {
+        (batch, prev) =>
+          val delta = batch.select(col("user_id"), col("event_type")).distinct()
+          prev.fold(delta)(_.unionByName(delta).distinct())
+      }).orderBy(col("type_a"), col("type_b"))
 
   /** s16: streaming maintenance of a JOIN view — the IVM case s12
     * (additive agg) and s13 (set semantics) don't cover: BOTH join
@@ -2439,50 +1648,19 @@ object Streams {
     * key-sized merges; readout one inner join of the degree tables.
     */
   def foreachBatchJoinView(spark: SparkSession, sfDir: String): DataFrame = {
-    val base = s"/tmp/graft-stream/s16_${tag(sfDir)}"
-    rmDir(spark, base)
-    val micros = Lake.ensureMicrosEvents(spark, sfDir)
-    val stream = spark.readStream
-      .schema(spark.read.parquet(micros).schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(micros)
-    @volatile var latest: Option[(String, String)] = None
     def sideDelta(b: DataFrame, t: String): DataFrame =
       b.filter(col("event_type") === t)
         .groupBy(col("user_id"), to_date(col("ts")).as("d"))
         .agg(count(lit(1)).as("c"))
-    def merge(prev: Option[DataFrame], delta: DataFrame): DataFrame =
-      prev match {
-        case None => delta
-        case Some(p) =>
-          p.join(delta, Seq("user_id", "d"), "full_outer")
-            .select(col("user_id"), col("d"),
-              (coalesce(p("c"), lit(0L)) + coalesce(delta("c"), lit(0L))).as("c"))
-      }
-    val q = stream.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val genA = s"$base/clicks_$batchId"
-        val genB = s"$base/purch_$batchId"
-        val marker = new org.apache.hadoop.fs.Path(s"$genB/_SUCCESS")
-        val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (fs.exists(marker)) {
-          latest = Some((genA, genB))
-        } else {
-          val b = batch.toDF()
-          val pa = latest.map(l => spark.read.parquet(l._1))
-          val pb = latest.map(l => spark.read.parquet(l._2))
-          merge(pa, sideDelta(b, "click")).write.mode("overwrite").parquet(genA)
-          merge(pb, sideDelta(b, "purchase")).write.mode("overwrite").parquet(genB)
-          latest = Some((genA, genB))
-        }
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val (ga, gb) = latest.getOrElse(sys.error("s16: stream produced no batches"))
-    val ca = spark.read.parquet(ga).select(col("user_id"), col("d"), col("c").as("nc"))
-    val cb = spark.read.parquet(gb).select(col("user_id"), col("d"), col("c").as("np"))
+    val Seq(clicks, purchases) = foldBatches(spark, "s16", sfDir,
+        eventBatches(spark, sfDir), "clicks", "purch") { (b, prev, next) =>
+      write(sumMerge(prev.map(_(0)), sideDelta(b, "click"),
+        Seq("user_id", "d"), "c"), next(0))
+      write(sumMerge(prev.map(_(1)), sideDelta(b, "purchase"),
+        Seq("user_id", "d"), "c"), next(1))
+    }
+    val ca = clicks.select(col("user_id"), col("d"), col("c").as("nc"))
+    val cb = purchases.select(col("user_id"), col("d"), col("c").as("np"))
     ca.join(cb, Seq("user_id", "d"))
       .select(col("user_id"),
         date_format(col("d"), "yyyy-MM-dd").as("day"),
@@ -2504,71 +1682,42 @@ object Streams {
     * decomposes into batches.
     */
   def foreachBatchCdc(spark: SparkSession, sfDir: String): DataFrame = {
-    val base = s"/tmp/graft-stream/s17_${tag(sfDir)}"
-    rmDir(spark, base)
-    val staged = s"$base/docs_staged"
-    Lake.table(spark, sfDir, "documents")
-      .select(col("doc_id"), col("text"))
-      .repartition(8)
-      .write.mode("overwrite").parquet(staged)
-    val stream = spark.readStream
-      .schema(spark.read.parquet(staged).schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(staged)
-    @volatile var latest: Option[(String, String)] = None
-    val q = stream.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val genS = s"$base/store_$batchId"
-        val genC = s"$base/ctr_$batchId"
-        val marker = new org.apache.hadoop.fs.Path(s"$genC/_SUCCESS")
-        val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (fs.exists(marker)) {
-          latest = Some((genS, genC))
-        } else {
-          val chunks = graft.ext.TextAnalysis.cdcChunkTable(batch.toDF())
-          // within-batch dedup first, then novelty vs the store
-          val batchDistinct = chunks.groupBy(col("ck"))
-            .agg(min(col("n_tokens")).as("n_tokens"))
-          val novel = latest match {
-            case None => batchDistinct
-            case Some((prevS, _)) =>
-              val seen = spark.read.parquet(prevS)
-              batchDistinct.join(seen,
-                batchDistinct("ck") <=> seen("ck"), "left_anti")
-          }
-          val storeNext = latest match {
-            case None => novel
-            case Some((prevS, _)) =>
-              spark.read.parquet(prevS).unionByName(novel)
-          }
-          storeNext.write.mode("overwrite").parquet(genS)
-          val delta = chunks.agg(
-            count(lit(1)).as("d_inst"),
-            sum(col("n_tokens")).as("d_tok"))
-          val ctrNext = latest match {
-            case None =>
-              delta.select(col("d_inst").as("n_instances"),
-                col("d_tok").as("tokens_total"))
-            case Some((_, prevC)) =>
-              val prev = spark.read.parquet(prevC)
-              prev.crossJoin(delta)
-                .select((col("n_instances") + col("d_inst")).as("n_instances"),
-                  (col("tokens_total") + col("d_tok")).as("tokens_total"))
-          }
-          ctrNext.write.mode("overwrite").parquet(genC)
-          latest = Some((genS, genC))
-        }
-        ()
+    val staged = s"${stateDir("s17", sfDir)}/docs_staged"
+    // staged under the state dir, so built only after foldBatches
+    // has wiped it
+    def source: DataFrame = {
+      write(Lake.table(spark, sfDir, "documents")
+        .select(col("doc_id"), col("text")).repartition(8), staged)
+      batchesOf(spark, staged)
+    }
+    val Seq(store, ctr) = foldBatches(spark, "s17", sfDir, source,
+        "store", "ctr") { (batch, prev, next) =>
+      val chunks = graft.ext.TextAnalysis.cdcChunkTable(batch)
+      // within-batch dedup first, then novelty vs the store
+      val batchDistinct = chunks.groupBy(col("ck"))
+        .agg(min(col("n_tokens")).as("n_tokens"))
+      val novel = prev.map(_(0)).fold(batchDistinct)(seen =>
+        batchDistinct.join(seen,
+          batchDistinct("ck") <=> seen("ck"), "left_anti"))
+      write(prev.fold(novel)(_.head.unionByName(novel)), next(0))
+      val delta = chunks.agg(
+        count(lit(1)).as("d_inst"),
+        sum(col("n_tokens")).as("d_tok"))
+      val ctrNext = prev match {
+        case None =>
+          delta.select(col("d_inst").as("n_instances"),
+            col("d_tok").as("tokens_total"))
+        case Some(g) =>
+          g(1).crossJoin(delta)
+            .select((col("n_instances") + col("d_inst")).as("n_instances"),
+              (col("tokens_total") + col("d_tok")).as("tokens_total"))
       }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val (store, ctr) = latest.getOrElse(
-      sys.error("s17: stream produced no batches"))
-    val dist = spark.read.parquet(store)
+      write(ctrNext, next(1))
+    }
+    val dist = store
       .agg(count(lit(1)).as("n_distinct"),
         sum(col("n_tokens")).as("tokens_distinct"))
-    spark.read.parquet(ctr).crossJoin(dist)
+    ctr.crossJoin(dist)
       .select(col("n_instances"), col("n_distinct"),
         col("tokens_total"), col("tokens_distinct"),
         round(lit(100.0) * (lit(1.0) -
@@ -2614,9 +1763,10 @@ object Streams {
     * incrementally correct under batch-at-a-time arrival via
     * KEY-SCOPED RECOMPUTE: each microbatch (1) lands its raw slice in
     * an append-only bronze staging area (idempotent per-batch dirs,
-    * s10's retry guard), (2) rebuilds the FULL SCD2 history for ONLY
-    * the user_ids present in the batch — per-key history is bounded,
-    * so the recompute is delta-keyed work, not a table scan — and
+    * the generation's first table), (2) rebuilds the FULL SCD2
+    * history for ONLY the user_ids present in the batch — per-key
+    * history is bounded, so the recompute is delta-keyed work, not a
+    * table scan — and
     * (3) swaps those users' rows into the state table (anti-join the
     * previous generation + union the rebuilt keys, written to a fresh
     * generation dir so the merge never overwrites what it reads).
@@ -2635,60 +1785,36 @@ object Streams {
     * anti-join against the state table.
     */
   def foreachBatchScd2(spark: SparkSession, sfDir: String): DataFrame = {
-    val base = s"/tmp/graft-stream/s11_${tag(sfDir)}"
-    rmDir(spark, base)
-    val micros = Lake.ensureMicrosEvents(spark, sfDir)
-    val stream = spark.readStream
-      .schema(spark.read.parquet(micros).schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(micros)
-    @volatile var latest: Option[String] = None
-    val q = stream.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val bronzeSlice = s"$base/bronze/b_$batchId"
-        val gen = s"$base/gen_$batchId"
-        val marker = new org.apache.hadoop.fs.Path(s"$gen/_SUCCESS")
-        val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (fs.exists(marker)) {
-          latest = Some(gen)
-        } else {
-          batch.select(col("user_id"), col("event_id"), col("ts"),
-              col("event_type"))
-            .write.mode("overwrite").parquet(bronzeSlice)
-          // bronze slices live in per-batch subdirs (idempotent
-          // overwrite targets), not hive partitions — recurse
-          val bronze = spark.read
-            .option("recursiveFileLookup", "true")
-            .parquet(s"$base/bronze")
-          val affectedKeys = spark.read.parquet(bronzeSlice)
-            .select(col("user_id").as("_ak")).distinct()
-          // NULL-SAFE key joins (<=>): scd2History's window partitions
-          // NULL user_id as a real group, so the rebuild/swap joins
-          // must match it too — a plain equi-join drops NULL keys and
-          // the streamed state would silently diverge from batch p08
-          // the first time the source grows a NULL user_id
-          val rebuilt = graft.pipeline.Views.scd2History(
-            bronze.join(affectedKeys, col("user_id") <=> col("_ak"),
-              "left_semi"))
-          val merged = latest match {
-            case None => rebuilt
-            case Some(prev) =>
-              spark.read.parquet(prev)
-                .join(affectedKeys, col("user_id") <=> col("_ak"),
-                  "left_anti")
-                .unionByName(rebuilt)
-          }
-          merged.write.mode("overwrite").parquet(gen)
-          latest = Some(gen)
-        }
-        ()
+    val bronzeDir = s"${stateDir("s11", sfDir)}/bronze"
+    // the batch's bronze slice is the generation's first table
+    // (bronze/b_<batchId>), the state table its last
+    foldBatches(spark, "s11", sfDir, eventBatches(spark, sfDir),
+        "bronze/b", "gen") { (batch, prev, next) =>
+      write(batch.select(col("user_id"), col("event_id"), col("ts"),
+        col("event_type")), next(0))
+      // bronze slices live in per-batch subdirs (idempotent
+      // overwrite targets), not hive partitions — recurse
+      val bronze = spark.read
+        .option("recursiveFileLookup", "true")
+        .parquet(bronzeDir)
+      val affectedKeys = spark.read.parquet(next(0))
+        .select(col("user_id").as("_ak")).distinct()
+      // NULL-SAFE key joins (<=>): scd2History's window partitions
+      // NULL user_id as a real group, so the rebuild/swap joins
+      // must match it too — a plain equi-join drops NULL keys and
+      // the streamed state would silently diverge from batch p08
+      // the first time the source grows a NULL user_id
+      val rebuilt = graft.pipeline.Views.scd2History(
+        bronze.join(affectedKeys, col("user_id") <=> col("_ak"),
+          "left_semi"))
+      val merged = prev match {
+        case None => rebuilt
+        case Some(g) =>
+          g(1).join(affectedKeys, col("user_id") <=> col("_ak"), "left_anti")
+            .unionByName(rebuilt)
       }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.read.parquet(latest.getOrElse(
-      sys.error("s11: stream produced no batches")))
-      .orderBy(col("user_id"), col("valid_from"))
+      write(merged, next(1))
+    }.last.orderBy(col("user_id"), col("valid_from"))
   }
 
   val queries: Map[String, Q] = Map(

@@ -123,6 +123,88 @@ class LakeSpec extends SparkSpec {
     }
   }
 
+  test("a slow build of one artifact does not block another artifact's build") {
+    // A's build body waits until B's build has finished. Under one
+    // process-wide build lock B cannot start before A returns, so A's
+    // wait times out; with per-target locks B builds meanwhile.
+    import java.util.concurrent.{Callable, CountDownLatch, Executors, TimeUnit}
+    val id = java.util.UUID.randomUUID().toString.take(8)
+    val aBuilding = new CountDownLatch(1)
+    val bBuilt = new CountDownLatch(1)
+    val pool = Executors.newFixedThreadPool(2)
+    try {
+      val a = pool.submit(new Callable[Boolean] {
+        def call(): Boolean = {
+          var sawB = false
+          Lake.materialize(spark, SfDir, s"testlka_$id") {
+            aBuilding.countDown()
+            sawB = bBuilt.await(30, TimeUnit.SECONDS)
+            Lake.table(spark, SfDir, "region")
+          }
+          sawB
+        }
+      })
+      assert(aBuilding.await(30, TimeUnit.SECONDS), "A's build never started")
+      val b = pool.submit(new Callable[Long] {
+        def call(): Long = {
+          val n = Lake.materialize(spark, SfDir, s"testlkb_$id") {
+            Lake.table(spark, SfDir, "nation")
+          }.count()
+          bBuilt.countDown()
+          n
+        }
+      })
+      assert(a.get(), "B's build waited for A's: different targets serialized")
+      assert(b.get() == Lake.table(spark, SfDir, "nation").count())
+    } finally {
+      pool.shutdown()
+      pool.awaitTermination(60, TimeUnit.SECONDS)
+    }
+  }
+
+  test("overlapping withConf scopes on one session keep the value until the last closes") {
+    // Concurrent builds of different targets open conf scopes that
+    // overlap without nesting: A opens, B opens, A closes, B closes.
+    // B must keep its value after A closes, and the value from before
+    // both must come back after B closes.
+    import java.util.concurrent.{Callable, CountDownLatch, Executors, TimeUnit}
+    val k = "spark.graft.test.overlappingScopes"
+    spark.conf.set(k, "orig")
+    val aOpen = new CountDownLatch(1)
+    val bOpen = new CountDownLatch(1)
+    val aClosed = new CountDownLatch(1)
+    val pool = Executors.newFixedThreadPool(2)
+    try {
+      val a = pool.submit(new Callable[Boolean] {
+        def call(): Boolean = {
+          val sawB = Lake.withConf(spark, k -> "scoped") {
+            aOpen.countDown()
+            bOpen.await(30, TimeUnit.SECONDS)
+          }
+          aClosed.countDown()
+          sawB
+        }
+      })
+      val b = pool.submit(new Callable[String] {
+        def call(): String = {
+          aOpen.await(30, TimeUnit.SECONDS)
+          Lake.withConf(spark, k -> "scoped") {
+            bOpen.countDown()
+            aClosed.await(30, TimeUnit.SECONDS)
+            spark.conf.get(k)
+          }
+        }
+      })
+      assert(a.get() && b.get() == "scoped",
+        "closing A's scope undid the conf B's scope still holds")
+      assert(spark.conf.get(k) == "orig", "the session kept a scoped value")
+    } finally {
+      spark.conf.unset(k)
+      pool.shutdown()
+      pool.awaitTermination(60, TimeUnit.SECONDS)
+    }
+  }
+
   test("ensureScaledDir multiplies facts with disjoint re-keyed ids, passes dims through") {
     val dir = Lake.ensureScaledDir(spark, SfDir, factor = 3)
     // facts: 3× rows, and keys disjoint across copies so distinct

@@ -957,4 +957,58 @@ class StreamingStateSpec extends SparkSpec {
       .select(countDistinct(col("user_id"))).collect()(0).getLong(0)
     assert(streamed.map(_._5).sum == users)
   }
+
+  test("generation commit: a redelivered batch reuses its committed generation, a torn one is recomputed, no batches fails") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions._
+    import graft.streaming.Streams
+    import spark.implicits._
+    val base = "/tmp/graft-stream/test_generations"
+    val fs = new org.apache.hadoop.fs.Path(base)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.delete(new org.apache.hadoop.fs.Path(base), true)
+    val gens = new Streams.Generations(spark, "test", base, Seq("rows", "counts"))
+    var merges = 0
+    // table "rows" keeps every row seen, table "counts" the per-key
+    // count — the last-named table, so its marker commits the batch
+    def step(batch: DataFrame, prev: Option[Seq[DataFrame]],
+        next: Seq[String]): Unit = {
+      merges += 1
+      prev.fold(batch)(_.head.unionByName(batch))
+        .write.mode("overwrite").parquet(next(0))
+      val delta = batch.groupBy(col("k")).agg(count(lit(1)).as("d"))
+      prev.fold(delta.withColumnRenamed("d", "n"))(p =>
+        p(1).join(delta, Seq("k"), "full_outer")
+          .select(col("k"),
+            (coalesce(col("n"), lit(0L)) + coalesce(col("d"), lit(0L))).as("n")))
+        .write.mode("overwrite").parquet(next(1))
+    }
+    def counts: Map[Int, Long] =
+      gens.read().last.as[(Int, Long)].collect().toMap
+
+    gens.commit(Seq(1, 1, 2).toDF("k"), 0)(step)
+    gens.commit(Seq(2, 3).toDF("k"), 1)(step)
+    assert(merges == 2 && counts == Map(1 -> 2L, 2 -> 2L, 3 -> 1L))
+    // redelivery of a committed batch: reused, not merged again
+    gens.commit(Seq(2, 3).toDF("k"), 1)(step)
+    assert(merges == 2, "a committed generation was merged again")
+    assert(counts == Map(1 -> 2L, 2 -> 2L, 3 -> 1L))
+    // torn generation: the first table landed, the last one has data
+    // but no _SUCCESS marker (a crash mid-write) — recomputed
+    Seq(7).toDF("k").write.parquet(s"$base/rows_2")
+    Seq((99, 99L)).toDF("k", "n").write.parquet(s"$base/counts_2")
+    fs.delete(new org.apache.hadoop.fs.Path(s"$base/counts_2/_SUCCESS"), false)
+    gens.commit(Seq(3).toDF("k"), 2)(step)
+    assert(merges == 3, "a torn generation was taken as committed")
+    assert(counts == Map(1 -> 2L, 2 -> 2L, 3 -> 2L))
+    assert(spark.read.parquet(s"$base/rows_2").count() == 6)
+    // a stream that runs no batch has no generation to read
+    val empty = s"$base/empty_src"
+    fs.mkdirs(new org.apache.hadoop.fs.Path(empty))
+    val err = intercept[RuntimeException] {
+      Streams.foldBatches(spark, "test_none", SfDir,
+        spark.readStream.schema("k INT").parquet(empty), "t")((_, _, _) => ())
+    }
+    assert(err.getMessage == "test_none: stream produced no batches")
+  }
 }

@@ -27,6 +27,24 @@ class ToolsSpec extends AnyFunSuite {
       Seq("graft/engine/Tuning.scala" -> 1), s"builder sites: $hits")
   }
 
+  test("foreachBatch and maxFilesPerTrigger occur once each, only in streaming/Streams.scala") {
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"run from the repository root: $root")
+    val sources = {
+      val walk = Files.walk(root)
+      try walk.iterator.asScala.filter(_.toString.endsWith(".scala")).toSeq
+        .map(p => root.relativize(p).toString -> Files.readString(p))
+      finally walk.close()
+    }
+    Seq(".foreachBatch {", "\"maxFilesPerTrigger\"").foreach { s =>
+      val hits = sources
+        .map { case (p, text) =>
+          p -> java.util.regex.Pattern.quote(s).r.findAllIn(text).size }
+        .filter(_._2 > 0)
+      assert(hits == Seq("graft/streaming/Streams.scala" -> 1), s"$s sites: $hits")
+    }
+  }
+
   test("Time parses the single-arm and the conf-arm forms") {
     assert(Time.parseArgs(Seq("/sf", "flagship", "c02_join_large")) ==
       Right(Time.Args("/sf", None, Seq("flagship", "c02_join_large"))))
