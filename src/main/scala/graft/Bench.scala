@@ -735,9 +735,10 @@ object Bench {
     // reads, not rebuilds — a slow point with ckpt_warm=true DISPROVES
     // the rebuild-inside-timed-reps hypothesis in the artifact itself.
     def ckptWarm(dir: String): ListMap[String, Boolean] =
-      ListMap.from(Seq("x31" -> "x31_passages", "x164" -> "textrank_edges_v1")
-        .map { case (k, n) =>
-          k -> (try Lake.isBuilt(spark, dir, n) catch { case _: Throwable => false })
+      ListMap.from(Seq("x31" -> graft.ext.Dedup.X31Passages,
+          "x164" -> graft.ext.TextAnalysis.TextrankEdges)
+        .map { case (k, d) =>
+          k -> (try Lake.isBuilt(spark, dir, d) catch { case _: Throwable => false })
         })
 
     val names = headline.filter(SparkEntry.queries.contains)

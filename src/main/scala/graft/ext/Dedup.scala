@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.sources.Lake
+import graft.sources.Lake.Derived
 
 /** Deduplication operators for a large-scale training-data pipeline,
   * over the `documents` table (doc_id, text, lang, source, n_chars).
@@ -82,6 +83,19 @@ object Dedup {
         .as(Seq("band", "bsig")))
   }
 
+  /** x03's signature table feeds three plan branches (banding + both
+    * verify sides) and its band table both candidate-join sides, so
+    * both land in the lake once per dataset (the 100 TB shape) instead
+    * of persist(): no executor-memory cache pinned for the session
+    * lifetime, and every branch reads one compact parquet table.
+    */
+  val MinhashSigs: Derived = Derived(s"minhash_sigs_$MinhashNumHashes")((spark, sfDir) =>
+    minhashSignatures(docs(spark, sfDir), MinhashNumHashes))
+
+  val MinhashBands: Derived = Derived(s"minhash_bands_${MinhashNumHashes}_$MinhashBandCount")(
+    (spark, sfDir) => minhashBands(Lake.materialize(spark, sfDir, MinhashSigs),
+      MinhashNumHashes, bands = MinhashBandCount))
+
   /** Candidate pairs from band collisions: equi-join on (band, bsig),
     * deduplicated. The join key is the bucket — this is the shuffle
     * that replaces the n² comparison.
@@ -151,6 +165,12 @@ object Dedup {
       .select(col("doc_id"), fingerprint.as("simhash"))
   }
 
+  /** x04's fingerprint table feeds THREE plan branches (the hot-bucket
+    * guard plus both candidate-join sides), so it is a lake table.
+    */
+  val X04Simhash: Derived = Derived("x04_simhash")((spark, sfDir) =>
+    simhashTable(docs(spark, sfDir)))
+
   /** SimHash near-dup pairs: band the 64 bits into 4 16-bit chunks,
     * bucket-join on any equal chunk, then verify by Hamming distance.
     * Same hot-bucket guard as [[minhashCandidates]] — a degenerate
@@ -182,7 +202,7 @@ object Dedup {
 
   /** The exploded (doc_id, distinct 3-gram) table — the shared lake
     * artifact behind x05's exact Jaccard, x30's compose, and x50's
-    * novelty scoring (all materialize it under the same name, so the
+    * novelty scoring (all read [[X05Shingles]], so the
     * tokenize+explode scan runs once per corpus fingerprint no matter
     * which consumer touches it first). Docs shorter than 3 tokens
     * contribute no rows (empty shingle array explodes to nothing).
@@ -190,16 +210,60 @@ object Dedup {
   def shingleTable(df: DataFrame): DataFrame =
     df.select(col("doc_id"), explode(shingles(3)).as("shingle"))
 
-  /** The lake materializer that lake callers of the x05 pair family
-    * ([[ngramJaccardPairs]], [[containmentPairs]]) pass as
-    * `checkpoint`. It also retires `x05_shingles_gated_v1`, the gated
-    * table's name before the cap joined it (r17), so an existing lake
-    * root does not carry that orphan forever.
+  /** The two stages the x05 pair family ([[ngramJaccardPairs]],
+    * [[containmentPairs]]) reads: the exact-text canonical map
+    * (doc_id, canon) and the GATED shingle table (hot-cap anti-join +
+    * canonical collapse over [[shingleTable]]). Each feeds several plan
+    * branches, so lake callers read them as lake tables
+    * ([[lakeStages]]) and every reference is one compact parquet scan.
     */
-  private[graft] def lakeCheckpoint(spark: SparkSession,
-      sfDir: String): (String, DataFrame) => DataFrame = {
+  private[graft] final case class ShingleStages(canon: DataFrame, gated: DataFrame)
+
+  /** A shingle in more than max(50, nDocs/100) documents is hot. */
+  private def hotCap(nDocs: Long): Long = math.max(50L, nDocs / 100L)
+
+  /** Hot shingles anti-joined away (AQE broadcasts the tiny hot list),
+    * canonical documents only.
+    */
+  private def gatedShingles(sh0: DataFrame, canonMap: DataFrame,
+      cap: Long): DataFrame = {
+    val hot = sh0.groupBy(col("shingle")).agg(count(lit(1)).as("df_c"))
+      .filter(col("df_c") > cap).select(col("shingle"))
+    sh0.join(hot, Seq("shingle"), "left_anti")
+      .join(canonMap.filter(col("doc_id") === col("canon"))
+        .select(col("doc_id")), "doc_id")
+  }
+
+  /** The stages over an in-memory corpus, nothing checkpointed. */
+  private def stagesOf(df: DataFrame): ShingleStages = {
+    val canonMap = canonicalMap(df)
+    ShingleStages(canonMap, gatedShingles(shingleTable(df), canonMap, hotCap(df.count())))
+  }
+
+  val X05Shingles: Derived = Derived("x05_shingles")((spark, sfDir) =>
+    shingleTable(docs(spark, sfDir)))
+
+  val X05Canon: Derived = Derived("x05_canon_v1")((spark, sfDir) =>
+    canonicalMap(docs(spark, sfDir)))
+
+  /** The gated table's CONTENT depends on the cap, so the cap keys its
+    * name (ADVICE r17): a resized corpus never reuses a wrong one.
+    */
+  val X05Gated: Long => Derived =
+    Derived.keyed("x05_shingles_gated_cap", (cap: Long) => s"${cap}_v1")((cap, spark, sfDir) =>
+      gatedShingles(Lake.materialize(spark, sfDir, X05Shingles),
+        Lake.materialize(spark, sfDir, X05Canon), cap))
+
+  /** The corpus's stages as lake tables, the cap from footer metadata
+    * (no count() job per invocation). It retires
+    * `x05_shingles_gated_v1`, the gated table's name before the cap
+    * joined it (r17), so a lake root does not carry that orphan.
+    */
+  private[graft] def lakeStages(spark: SparkSession, sfDir: String): ShingleStages = {
     Lake.retireDerived(spark, sfDir, "x05_shingles_gated_v1")
-    (n, f) => Lake.materialize(spark, sfDir, n)(f)
+    ShingleStages(Lake.materialize(spark, sfDir, X05Canon),
+      Lake.materialize(spark, sfDir,
+        X05Gated(hotCap(Lake.rowCount(spark, sfDir, "documents")))))
   }
 
   /** Exact n-gram Jaccard via inverted-index join: explode distinct
@@ -227,42 +291,18 @@ object Dedup {
     * exactly 1 whenever its gated set is non-empty (and is absent,
     * matching the doc-grain 0/0 behavior, when the set is empty).
     */
-  def ngramJaccardPairs(df: DataFrame, threshold: Double,
-      checkpoint: (String, DataFrame) => DataFrame = (_, f) => f,
-      nDocs: Long = -1L): DataFrame = {
-    // The exploded shingle table feeds four plan branches (hot-list
-    // agg, anti-join probe, sizes, both intersection sides) — callers
-    // with a lake pass a NAMED materializer so each derived stage
-    // lands in the lake once per dataset and every reference is one
-    // compact parquet scan. Three stages checkpoint (r17): the raw
-    // shingles, the canonical map (its md5 window otherwise re-runs
-    // per reference — it feeds the collapse filter, both cross-
-    // expansion sides and the within-group join), and the GATED table
-    // (hot-cap anti-join + canonical collapse), which three plan
-    // branches consume; all are corpus-deterministic (the cap derives
-    // from nDocs), so the artifacts are fingerprint-stable. The gated
-    // table's CONTENT also depends on the cap value, so the cap is
-    // folded into its artifact name (ADVICE r17): a future caller
-    // passing a mismatched nDocs resolves to a different artifact
-    // instead of silently reusing a wrong gated table.
-    val sh0 = checkpoint("x05_shingles", shingleTable(df))
-    // The cap is a literal in the plan, not a single-row join arm.
-    // Callers with a lake pass nDocs from footer metadata (Lake.rowCount)
-    // so no count() job runs per invocation; in-memory callers fall back.
-    val cap = math.max(50L, (if (nDocs >= 0L) nDocs else df.count()) / 100L)
-    val canonMap = checkpoint("x05_canon_v1", canonicalMap(df))
-    val shC = checkpoint(s"x05_shingles_gated_cap${cap}_v1", {
-      val hot = sh0.groupBy(col("shingle")).agg(count(lit(1)).as("df_c"))
-        .filter(col("df_c") > cap)
-        .select(col("shingle"))
-      // anti-join against the (tiny) hot list — AQE broadcasts it
-      sh0.join(hot, Seq("shingle"), "left_anti")
-        .join(canonMap.filter(col("doc_id") === col("canon"))
-          .select(col("doc_id")), "doc_id")
-    })
-    val sizes = shC.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-    val inter = shC.select(col("doc_id").as("ca"), col("shingle"))
-      .join(shC.select(col("doc_id").as("cb"), col("shingle")), "shingle")
+  def ngramJaccardPairs(df: DataFrame, threshold: Double): DataFrame =
+    ngramJaccardPairs(stagesOf(df), threshold)
+
+  /** [[ngramJaccardPairs]] over prebuilt stages ([[lakeStages]] for
+    * lake callers). The canonical map feeds the collapse filter, both
+    * cross-expansion sides and the within-group join; the gated table
+    * feeds three plan branches.
+    */
+  def ngramJaccardPairs(st: ShingleStages, threshold: Double): DataFrame = {
+    val sizes = st.gated.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
+    val inter = st.gated.select(col("doc_id").as("ca"), col("shingle"))
+      .join(st.gated.select(col("doc_id").as("cb"), col("shingle")), "shingle")
       .filter(col("ca") < col("cb"))
       .groupBy(col("ca"), col("cb"))
       .agg(count(lit(1)).as("c"))
@@ -279,13 +319,13 @@ object Dedup {
     // replica-of-cb); member ids interleave across groups, so the
     // pair reorders by id
     val cross = jacC
-      .join(canonMap.select(col("canon").as("ca"), col("doc_id").as("ida")), "ca")
-      .join(canonMap.select(col("canon").as("cb"), col("doc_id").as("idb")), "cb")
+      .join(st.canon.select(col("canon").as("ca"), col("doc_id").as("ida")), "ca")
+      .join(st.canon.select(col("canon").as("cb"), col("doc_id").as("idb")), "cb")
       .select(least(col("ida"), col("idb")).as("doc_a"),
         greatest(col("ida"), col("idb")).as("doc_b"), col("jaccard"))
     // within-group: every replica pair of a canonical whose gated set
     // is non-empty is an exact duplicate → jaccard 1
-    val members = canonMap
+    val members = st.canon
       .join(sizes.select(col("doc_id").as("canon")), "canon")
     val within = members.select(col("canon"), col("doc_id").as("doc_a"))
       .join(members.select(col("canon"), col("doc_id").as("doc_b")), "canon")
@@ -536,30 +576,18 @@ object Dedup {
     * unordered pair are tested, so the output is (inner_id, outer_id)
     * ordered pairs with the inner's coverage fraction.
     */
-  def containmentPairs(df: DataFrame, threshold: Double,
-      checkpoint: (String, DataFrame) => DataFrame = (_, f) => f,
-      nDocs: Long = -1L): DataFrame = {
-    // same named-checkpoint stages as [[ngramJaccardPairs]] — the cap
-    // rule and collapse are identical, so lake callers SHARE the
-    // three artifacts with the whole x05 family
-    val sh0 = checkpoint("x05_shingles", shingleTable(df))
-    val cap = math.max(50L, (if (nDocs >= 0L) nDocs else df.count()) / 100L)
-    // same exact-text pre-collapse as [[ngramJaccardPairs]]:
-    // containment is canonical-pair-constant (c, na, nb all depend
-    // only on the gated shingle SETS), roles expand group-to-group,
-    // and within-group replica pairs are containment 1 both ways
-    // whenever the gated set is non-empty
-    val canonMap = checkpoint("x05_canon_v1", canonicalMap(df))
-    val shC = checkpoint(s"x05_shingles_gated_cap${cap}_v1", {
-      val hot = sh0.groupBy(col("shingle")).agg(count(lit(1)).as("df_c"))
-        .filter(col("df_c") > cap).select(col("shingle"))
-      sh0.join(hot, Seq("shingle"), "left_anti")
-        .join(canonMap.filter(col("doc_id") === col("canon"))
-          .select(col("doc_id")), "doc_id")
-    })
-    val sizes = shC.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-    val inter = shC.select(col("doc_id").as("ca"), col("shingle"))
-      .join(shC.select(col("doc_id").as("cb"), col("shingle")), "shingle")
+  def containmentPairs(df: DataFrame, threshold: Double): DataFrame =
+    containmentPairs(stagesOf(df), threshold)
+
+  /** [[containmentPairs]] over the x05 family's stages (same cap rule
+    * and exact-text pre-collapse: containment is canonical-pair-
+    * constant, roles expand group-to-group, and within-group replica
+    * pairs are containment 1 both ways when the gated set is non-empty).
+    */
+  def containmentPairs(st: ShingleStages, threshold: Double): DataFrame = {
+    val sizes = st.gated.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
+    val inter = st.gated.select(col("doc_id").as("ca"), col("shingle"))
+      .join(st.gated.select(col("doc_id").as("cb"), col("shingle")), "shingle")
       .filter(col("ca") < col("cb"))
       .groupBy(col("ca"), col("cb")).agg(count(lit(1)).as("c"))
     val cont = inter
@@ -572,10 +600,10 @@ object Dedup {
       .select(col("cb").as("ci"), col("ca").as("co"),
         round(col("c").cast("double") / col("nb"), 4).as("containment"))
     val cross = aInB.unionByName(bInA)
-      .join(canonMap.select(col("canon").as("ci"), col("doc_id").as("inner_id")), "ci")
-      .join(canonMap.select(col("canon").as("co"), col("doc_id").as("outer_id")), "co")
+      .join(st.canon.select(col("canon").as("ci"), col("doc_id").as("inner_id")), "ci")
+      .join(st.canon.select(col("canon").as("co"), col("doc_id").as("outer_id")), "co")
       .select(col("inner_id"), col("outer_id"), col("containment"))
-    val members = canonMap
+    val members = st.canon
       .join(sizes.select(col("doc_id").as("canon")), "canon")
     val within = members.select(col("canon"), col("doc_id").as("inner_id"))
       .join(members.select(col("canon"), col("doc_id").as("outer_id")), "canon")
@@ -599,9 +627,8 @@ object Dedup {
     * x18 component table; emits only real clusters (size ≥ 2).
     */
   def clusterMedoids(spark: SparkSession, sfDir: String): DataFrame = {
-    val d = docs(spark, sfDir)
-    val cap = math.max(50L, Lake.rowCount(spark, sfDir, "documents") / 100)
-    val sh0 = Lake.materialize(spark, sfDir, "x05_shingles")(shingleTable(d))
+    val cap = hotCap(Lake.rowCount(spark, sfDir, "documents"))
+    val sh0 = Lake.materialize(spark, sfDir, X05Shingles)
     val hot = sh0.groupBy(col("shingle")).agg(count(lit(1)).as("df_c"))
       .filter(col("df_c") > cap).select(col("shingle"))
     val sh = sh0.join(hot, Seq("shingle"), "left_anti")
@@ -816,6 +843,11 @@ object Dedup {
   def bloomContaminationBenchShingles(bench: DataFrame, n: Int): DataFrame =
     shingleRows(bench, n).select(col("doc_id").as("b_id"), col("g").as("bg"))
 
+  /** x32/x36's bench 8-gram shingles (bench = doc_id % 20 == 0). */
+  val X32BenchShingles: Derived = Derived("x32_bench_shingles8")((spark, sfDir) =>
+    bloomContaminationBenchShingles(docs(spark, sfDir)
+      .filter(col("doc_id") % 20 === 0).select(col("doc_id"), col("text")), n = 8))
+
   /** Core of [[bloomContaminationScreen]] over a pre-built
     * (b_id, bg) bench shingle table. The bench shingles feed TWO
     * consumers (the bloom aggregate and the verify join), so the
@@ -951,47 +983,34 @@ object Dedup {
     result
   }
 
+  /** The canonical near-dup Jaccard threshold is part of the pair
+    * definition, so it keys both x18 table names.
+    */
+  private val NearDupThreshold = 0.5
+  private val NearDupKey = s"t${(NearDupThreshold * 100).toInt}"
+
+  /** The near-dup pairs (doc_a, doc_b) x18's components and x104 share. */
+  val X18Pairs: Derived = Derived(s"x18_ngram_pairs_$NearDupKey")((spark, sfDir) =>
+    ngramJaccardPairs(lakeStages(spark, sfDir), threshold = NearDupThreshold)
+      .select(col("doc_a"), col("doc_b")))
+
+  /** The converged labels (v, label) go straight from the persisted
+    * (lineage-backed, hence executor-loss-recomputable) label table to
+    * the lake, no localCheckpoint; [[Lake.materialize]] releases it
+    * after the write. The EAGER loop runs inside the build's
+    * per-target lock, so N contending cold-start queries run it once.
+    */
+  val X18Components: Derived = Derived(s"x18_components_$NearDupKey")((spark, sfDir) =>
+    connectedComponents(Lake.materialize(spark, sfDir, X18Pairs), checkpoint = identity))
+
   /** The lake-checkpointed near-dup component table (v, label) at the
     * canonical threshold — shared by x18's component listing and x19's
     * curation survivor filter, so both read the same two parquet
     * artifacts and the iterative computation runs once per corpus
     * fingerprint.
     */
-  def componentTable(spark: SparkSession, sfDir: String): DataFrame = {
-    val threshold = 0.5
-    // the Jaccard threshold is part of the pair definition, so it is
-    // part of the materialization key — changing it must not reuse a
-    // stale pair/component table for the same source fingerprint
-    val tkey = s"t${(threshold * 100).toInt}"
-    val pairs = Lake.materialize(spark, sfDir, s"x18_ngram_pairs_$tkey") {
-      ngramJaccardPairs(docs(spark, sfDir), threshold = threshold,
-        checkpoint = lakeCheckpoint(spark, sfDir),
-        nDocs = Lake.rowCount(spark, sfDir, "documents"))
-        .select(col("doc_a"), col("doc_b"))
-    }
-    // The converged labels go straight from the persisted (lineage-
-    // backed, hence executor-loss-recomputable) label table to the lake
-    // — no localCheckpoint anywhere on this registered path. The
-    // isBuilt probe keeps the warm path an O(1) marker check + parquet
-    // read; the cold build is serialized under a dedicated lock (with
-    // a second isBuilt check inside) so N contending cold-start
-    // queries run the iterative loop ONCE, not N times — the loop is
-    // EAGER (it runs jobs while constructing the frame), so
-    // Lake.materialize's by-name laziness alone cannot protect it.
-    val cname = s"x18_components_$tkey"
-    if (!Lake.isBuilt(spark, sfDir, cname)) buildLock.synchronized {
-      if (!Lake.isBuilt(spark, sfDir, cname)) {
-        val labels = connectedComponents(pairs, checkpoint = identity)
-        try Lake.materialize(spark, sfDir, cname)(labels)
-        finally labels.unpersist()
-      }
-    }
-    Lake.materialize(spark, sfDir, cname)(
-      sys.error(s"$cname built above or by a concurrent query"))
-  }
-
-  /** Serializes eager component-table builds across threads. */
-  private val buildLock = new Object
+  def componentTable(spark: SparkSession, sfDir: String): DataFrame =
+    Lake.materialize(spark, sfDir, X18Components)
 
   /** Curated-corpus stats shared by x19 and the x30 composition:
     * quality gates (stopword density, minimum length) then the
@@ -1444,26 +1463,9 @@ object Dedup {
     // verify at 0.5. Banding join only — no crossJoin anywhere in the
     // plan (the acceptance criterion, VERDICT round-1 §LLM).
     "x03_dedup_minhash" -> ((spark, sfDir) => {
-      val d = docs(spark, sfDir)
-      val numHashes = MinhashNumHashes
-      // The signature table feeds three plan branches (banding + both
-      // verify sides) — checkpoint it to the lake once per dataset
-      // (the 100 TB shape) instead of persist(): no executor-memory
-      // cache pinned for the session lifetime, no re-persist churn on
-      // repeated invocations, and the three branches all read one
-      // compact parquet table.
-      val sigs = Lake.materialize(spark, sfDir, s"minhash_sigs_$numHashes") {
-        minhashSignatures(d, numHashes)
-      }
-      // the band table feeds BOTH candidate-join sides (like x08's LSH
-      // buckets) — checkpoint it so each side is a parquet scan instead
-      // of recomputing the slice-hash aggregation per plan branch
-      val bands = Lake.materialize(spark, sfDir,
-          s"minhash_bands_${numHashes}_$MinhashBandCount") {
-        minhashBands(sigs, numHashes, bands = MinhashBandCount)
-      }
-      val cands = minhashCandidates(bands)
-      minhashVerify(cands, sigs, numHashes, threshold = 0.5)
+      val sigs = Lake.materialize(spark, sfDir, MinhashSigs)
+      val cands = minhashCandidates(Lake.materialize(spark, sfDir, MinhashBands))
+      minhashVerify(cands, sigs, MinhashNumHashes, threshold = 0.5)
         .select(col("doc_a"), col("doc_b"), round(col("est_jaccard"), 4).as("est_jaccard"))
         .orderBy(col("doc_a"), col("doc_b"))
     }),
@@ -1500,17 +1502,9 @@ object Dedup {
     }),
 
     // SimHash near-dup: 64-bit fingerprints, 4×16-bit banding,
-    // Hamming ≤ 8.
-    // The fingerprint table is lake-checkpointed like x03's band
-    // table: it feeds THREE plan branches (the hot-bucket guard plus
-    // both candidate-join sides), so without the checkpoint the full
-    // fingerprint aggregation would run three times per invocation.
+    // Hamming ≤ 8, over the lake-checkpointed [[X04Simhash]] table.
     "x04_dedup_simhash" -> ((spark, sfDir) =>
-      simhashPairs(
-        Lake.materialize(spark, sfDir, "x04_simhash") {
-          simhashTable(docs(spark, sfDir))
-        },
-        maxHamming = 8)
+      simhashPairs(Lake.materialize(spark, sfDir, X04Simhash), maxHamming = 8)
         .orderBy(col("doc_a"), col("doc_b"))),
 
     // Exact 3-gram Jaccard near-dup via inverted-index join (the
@@ -1561,9 +1555,7 @@ object Dedup {
         .orderBy(col("doc_id"))),
 
     "x05_dedup_ngram_jaccard" -> ((spark, sfDir) =>
-      ngramJaccardPairs(docs(spark, sfDir), threshold = 0.5,
-        checkpoint = lakeCheckpoint(spark, sfDir),
-        nDocs = Lake.rowCount(spark, sfDir, "documents"))
+      ngramJaccardPairs(lakeStages(spark, sfDir), threshold = 0.5)
         .orderBy(col("doc_a"), col("doc_b"))),
 
     // BLEU-2 PAIR GRADING — score the x05 verified near-dup pairs by
@@ -1574,9 +1566,7 @@ object Dedup {
     // artifact through the same candidate call.
     "x239_bleu_pairs" -> ((spark, sfDir) => {
       val d = docs(spark, sfDir)
-      bleuOnPairs(d, ngramJaccardPairs(d, threshold = 0.5,
-        checkpoint = lakeCheckpoint(spark, sfDir),
-        nDocs = Lake.rowCount(spark, sfDir, "documents")),
+      bleuOnPairs(d, ngramJaccardPairs(lakeStages(spark, sfDir), threshold = 0.5),
         nDocs = Lake.rowCount(spark, sfDir, "documents"))
     }),
 
@@ -1620,9 +1610,7 @@ object Dedup {
     // [[rougeOnPairs]].
     "x285_rouge_pairs" -> ((spark, sfDir) => {
       val d = docs(spark, sfDir)
-      rougeOnPairs(d, ngramJaccardPairs(d, threshold = 0.5,
-        checkpoint = lakeCheckpoint(spark, sfDir),
-        nDocs = Lake.rowCount(spark, sfDir, "documents")),
+      rougeOnPairs(d, ngramJaccardPairs(lakeStages(spark, sfDir), threshold = 0.5),
         nDocs = Lake.rowCount(spark, sfDir, "documents"))
     }),
 
@@ -1632,9 +1620,7 @@ object Dedup {
     // classic whitespace-corruption signature) — see [[chrfOnPairs]].
     "x259_chrf_pairs" -> ((spark, sfDir) => {
       val d = docs(spark, sfDir)
-      chrfOnPairs(d, ngramJaccardPairs(d, threshold = 0.5,
-        checkpoint = lakeCheckpoint(spark, sfDir),
-        nDocs = Lake.rowCount(spark, sfDir, "documents")),
+      chrfOnPairs(d, ngramJaccardPairs(lakeStages(spark, sfDir), threshold = 0.5),
         nDocs = Lake.rowCount(spark, sfDir, "documents"))
     }),
 
@@ -1729,9 +1715,7 @@ object Dedup {
       val d = docs(spark, sfDir)
       val meta = d.select(col("doc_id"), col("lang"), col("source"),
         expr("n_chars DIV 50").as("len_b"))
-      val cand = ngramJaccardPairs(d, threshold = 0.3,
-        checkpoint = lakeCheckpoint(spark, sfDir),
-        nDocs = Lake.rowCount(spark, sfDir, "documents"))
+      val cand = ngramJaccardPairs(lakeStages(spark, sfDir), threshold = 0.3)
       fellegiSunter(cand, meta)
         .orderBy(desc("score_fp"), col("doc_a"), col("doc_b"))
         .limit(20)
@@ -1745,9 +1729,7 @@ object Dedup {
     // carries natural containment pairs (x74's truncation family is
     // the prefix-positioned subset), so no injection is needed.
     "x97_containment_dedup" -> ((spark, sfDir) =>
-      containmentPairs(docs(spark, sfDir), threshold = 0.9,
-        checkpoint = lakeCheckpoint(spark, sfDir),
-        nDocs = Lake.rowCount(spark, sfDir, "documents"))
+      containmentPairs(lakeStages(spark, sfDir), threshold = 0.9)
         .orderBy(col("inner_id"), col("outer_id"))),
 
     // FULL-PIPELINE COMPOSITION — the capstone: curation (quality
@@ -1812,17 +1794,9 @@ object Dedup {
     // any shuffle, the shape that survives a bench set too large to
     // broadcast.
     "x32_bloom_contamination" -> ((spark, sfDir) => {
-      val d = docs(spark, sfDir)
-      // bench shingles feed the bloom aggregate AND the verify join —
-      // checkpoint once per dataset (x03's pattern) so both read a
-      // compact parquet table with honest stats
-      val bench = Lake.materialize(spark, sfDir, "x32_bench_shingles8") {
-        bloomContaminationBenchShingles(
-          d.filter(col("doc_id") % 20 === 0).select(col("doc_id"), col("text")),
-          n = 8)
-      }
       bloomContaminationScreenFrom(
-        d.select(col("doc_id"), col("text")), bench, n = 8)
+        docs(spark, sfDir).select(col("doc_id"), col("text")),
+        Lake.materialize(spark, sfDir, X32BenchShingles), n = 8)
         .orderBy(col("doc_id"))
     }),
 
@@ -1875,13 +1849,9 @@ object Dedup {
     // second full shuffle.
     "x36_decontaminate" -> ((spark, sfDir) => {
       val d = docs(spark, sfDir)
-      val bench = Lake.materialize(spark, sfDir, "x32_bench_shingles8") {
-        bloomContaminationBenchShingles(
-          d.filter(col("doc_id") % 20 === 0).select(col("doc_id"), col("text")),
-          n = 8)
-      }
       val flagged = bloomContaminationScreenFrom(
-        d.select(col("doc_id"), col("text")), bench, n = 8)
+        d.select(col("doc_id"), col("text")),
+        Lake.materialize(spark, sfDir, X32BenchShingles), n = 8)
         .filter(col("contaminated"))
         .select(col("doc_id"))
       d.join(flagged, Seq("doc_id"), "left_anti")
@@ -1896,19 +1866,15 @@ object Dedup {
     // lake-checkpointed like x05's shingle table — each branch reads
     // one compact parquet table instead of re-tokenizing the corpus.
     "x31_passage_dedup" -> ((spark, sfDir) =>
-      passageDupStats(docs(spark, sfDir),
-        checkpoint = ps => Lake.materialize(spark, sfDir, "x31_passages")(ps))
+      passageDupStatsFrom(Lake.materialize(spark, sfDir, X31Passages))
         .orderBy(col("doc_id"))),
 
     // Cross-source passage-overlap matrix (dataset-card provenance
     // report). Shares x31's lake-checkpointed passage table — repeat
     // invocations of either query read one parquet artifact.
     "x43_source_overlap" -> ((spark, sfDir) => {
-      val d = docs(spark, sfDir)
-      val passages = Lake.materialize(spark, sfDir, "x31_passages") {
-        passageTable(d)
-      }
-      sourceOverlap(passages, d.select(col("doc_id"), col("source")))
+      sourceOverlap(Lake.materialize(spark, sfDir, X31Passages),
+        docs(spark, sfDir).select(col("doc_id"), col("source")))
         .orderBy(col("source_a"), col("source_b"))
     }),
 
@@ -1934,13 +1900,7 @@ object Dedup {
     // IS-DISTINCT-FROM keeps it eligible).
     "x104_contrastive_triplets" -> ((spark, sfDir) => {
       import org.apache.spark.sql.expressions.Window
-      val tkey = "t50"
-      val pairs = Lake.materialize(spark, sfDir, s"x18_ngram_pairs_$tkey") {
-        ngramJaccardPairs(docs(spark, sfDir), threshold = 0.5,
-          checkpoint = lakeCheckpoint(spark, sfDir),
-          nDocs = Lake.rowCount(spark, sfDir, "documents"))
-          .select(col("doc_a"), col("doc_b"))
-      }
+      val pairs = Lake.materialize(spark, sfDir, X18Pairs)
       val comps = componentTable(spark, sfDir)
         .select(col("v"), col("label"))
       val ev = Lake.table(spark, sfDir, "embeddings")
@@ -2035,9 +1995,7 @@ object Dedup {
     // curve means true duplicates. Per-threshold affected-doc counts
     // are exact distinct counts over the (small) pair table.
     "x109_threshold_curve" -> ((spark, sfDir) => {
-      val wp = ngramJaccardPairs(docs(spark, sfDir), threshold = 0.5,
-        checkpoint = lakeCheckpoint(spark, sfDir),
-        nDocs = Lake.rowCount(spark, sfDir, "documents"))
+      val wp = ngramJaccardPairs(lakeStages(spark, sfDir), threshold = 0.5)
       Seq(0.5, 0.7, 0.9).map { t =>
         val f = wp.filter(col("jaccard") >= t)
         val members = f.select(col("doc_a").as("d"))
@@ -2089,13 +2047,16 @@ object Dedup {
     * builds passages with transform+slice on the token array (no
     * per-word explode, no collect_list ordering hazard). A trailing
     * short chunk (< p words) is a passage too, so every word is
-    * accounted for. `checkpoint` (registered query: a lake
-    * materialization) snapshots the passage table once for its two
-    * consumers.
+    * accounted for.
     */
-  def passageDupStats(df: DataFrame, p: Int = 8,
-      checkpoint: DataFrame => DataFrame = identity): DataFrame = {
-    val passages = checkpoint(passageTable(df, p))
+  def passageDupStats(df: DataFrame, p: Int = 8): DataFrame =
+    passageDupStatsFrom(passageTable(df, p))
+
+  /** [[passageDupStats]] over a prebuilt passage table — the registered
+    * query reads [[X31Passages]], so its two consumers scan one
+    * parquet table.
+    */
+  def passageDupStatsFrom(passages: DataFrame): DataFrame = {
     val occ = passages.groupBy(col("passage"))
       .agg(count(lit(1)).as("n_occ"))
     passages.join(occ, "passage")
@@ -2119,6 +2080,10 @@ object Dedup {
           s"transform(sequence(0, (size(_toks) - 1) DIV $p), " +
             s"i -> array_join(slice(_toks, i * $p + 1, $p), ' '))"))
           .as("passage"))
+
+  /** The 8-word passage table x31 and x43 share. */
+  val X31Passages: Derived = Derived("x31_passages")((spark, sfDir) =>
+    passageTable(docs(spark, sfDir)))
 
   /** Cross-source passage-overlap matrix — the provenance half of a
     * dataset card: for every source pair, how many distinct `p`-word

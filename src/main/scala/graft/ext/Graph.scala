@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.sources.Lake
+import graft.sources.Lake.Derived
 
 /** Graph analytics over lake-derived entity graphs — the curation
   * step that needs *global* structure rather than per-row features
@@ -198,6 +199,11 @@ object Graph {
     }
   }
 
+  /** The distinct directed (part p, supplier s) pairs x129/x145 read. */
+  val HitsPairs: Derived = Derived("hits_pairs_v1")((spark, sfDir) =>
+    Lake.table(spark, sfDir, "lineitem")
+      .select(col("l_partkey").as("p"), col("l_suppkey").as("s")).distinct())
+
   /** x129's two HITS rounds over a distinct (p, s) directed pair
     * frame → (supplier, auth_fp). Exposed so property tests can drive
     * planted bipartite graphs through the exact Spark machinery.
@@ -252,9 +258,13 @@ object Graph {
       .select(col("s").as("supplier"), col("a2").as("auth_fp"))
   }
 
-  /** The frame the x69 materialization persists. */
-  private[graft] def adjacencyFor(spark: SparkSession, sfDir: String): DataFrame =
-    adjacency(bipartiteEdges(spark, sfDir))
+  /** The persisted part↔supplier adjacency x69/x80/x145 iterate over. */
+  val PrAdjacency: Derived = Derived("pr_adjacency_v2")((spark, sfDir) =>
+    adjacency(bipartiteEdges(spark, sfDir)))
+
+  /** x69's loop meta frame over [[PrAdjacency]]. */
+  val PrNodes: Derived = Derived("pr_nodes_v2")((spark, sfDir) =>
+    nodeMeta(Lake.materialize(spark, sfDir, PrAdjacency)))
 
   /** Part co-purchase graph: an undirected edge (u < v, one row) per
     * pair of parts sharing an order. Basket size is bounded (TPC-H ≤7
@@ -263,22 +273,28 @@ object Graph {
     * distinct.
     */
   private[graft] def coPurchaseEdges(spark: SparkSession, sfDir: String): DataFrame =
-    // x69's adjacency discipline: the pair-expansion + distinct over
-    // the fact table runs ONCE per dataset and lands in the lake; the
-    // four consumers (x81/x85/x86/x87) — and the multiple references
-    // within each (degrees + triangles both read it) — scan a compact
-    // two-column parquet instead of re-deriving from lineitem per
-    // plan branch.
-    Lake.materialize(spark, sfDir, "copurchase_edges_v1") {
-      val items = Lake.table(spark, sfDir, "lineitem")
-        .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-        .distinct()
-      items.as("x")
-        .join(items.as("y"), col("x.ok") === col("y.ok") &&
-          col("x.pk") < col("y.pk"))
-        .select(col("x.pk").as("u"), col("y.pk").as("v"))
-        .distinct()
-    }
+    Lake.materialize(spark, sfDir, CopurchaseEdges)
+
+  /** The distinct (order ok, part pk) basket frame off `lineitem`. */
+  private def basket(spark: SparkSession, sfDir: String): DataFrame =
+    Lake.table(spark, sfDir, "lineitem")
+      .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk")).distinct()
+
+  /** Part pairs sharing an order (u < v), one row per shared order. */
+  private def basketPairs(items: DataFrame): DataFrame =
+    items.as("x").join(items.as("y"), col("x.ok") === col("y.ok") &&
+      col("x.pk") < col("y.pk"))
+
+  /** x69's adjacency discipline: the pair-expansion + distinct over
+    * the fact table runs ONCE per dataset and lands in the lake; the
+    * four consumers (x81/x85/x86/x87) — and the multiple references
+    * within each (degrees + triangles both read it) — scan a compact
+    * two-column parquet instead of re-deriving from lineitem per
+    * plan branch.
+    */
+  val CopurchaseEdges: Derived = Derived("copurchase_edges_v1")((spark, sfDir) =>
+    basketPairs(basket(spark, sfDir))
+      .select(col("x.pk").as("u"), col("y.pk").as("v")).distinct())
 
   /** The degree-oriented arc frame of the co-purchase graph as a lake
     * artifact: x81/x85/x87/x132 each reference it on THREE join
@@ -288,15 +304,17 @@ object Graph {
     * pr_adjacency_v2.
     */
   private[graft] def orientedArcsFor(spark: SparkSession, sfDir: String): DataFrame =
-    Lake.materialize(spark, sfDir, "copurchase_arcs_v1") {
-      orientByDegree(coPurchaseEdges(spark, sfDir))
-    }
+    Lake.materialize(spark, sfDir, CopurchaseArcs)
+
+  val CopurchaseArcs: Derived = Derived("copurchase_arcs_v1")((spark, sfDir) =>
+    orientByDegree(coPurchaseEdges(spark, sfDir)))
 
   /** Node degrees of the co-purchase graph (node-sized artifact). */
   private[graft] def copurchaseDegFor(spark: SparkSession, sfDir: String): DataFrame =
-    Lake.materialize(spark, sfDir, "copurchase_deg_v1") {
-      degrees(coPurchaseEdges(spark, sfDir))
-    }
+    Lake.materialize(spark, sfDir, CopurchaseDeg)
+
+  val CopurchaseDeg: Derived = Derived("copurchase_deg_v1")((spark, sfDir) =>
+    degrees(coPurchaseEdges(spark, sfDir)))
 
   /** The SORTED adjacency of the oriented co-purchase arcs as a lake
     * artifact (r17): the five triangle-family consumers each re-ran
@@ -309,10 +327,11 @@ object Graph {
     * reads its array lengths instead of re-aggregating the arcs.
     */
   private[graft] def orientedAdjListFor(spark: SparkSession, sfDir: String): DataFrame =
-    Lake.materialize(spark, sfDir, "copurchase_adjlist_v1") {
-      orientedArcsFor(spark, sfDir).groupBy(col("s"))
-        .agg(sort_array(collect_list(col("t").cast("long"))).as("nbrs"))
-    }
+    Lake.materialize(spark, sfDir, CopurchaseAdjList)
+
+  val CopurchaseAdjList: Derived = Derived("copurchase_adjlist_v1")((spark, sfDir) =>
+    orientedArcsFor(spark, sfDir).groupBy(col("s"))
+      .agg(sort_array(collect_list(col("t").cast("long"))).as("nbrs")))
 
   /** The part↔supplier adjacency from `lineitem`, both directions. */
   private def bipartiteEdges(spark: SparkSession, sfDir: String): DataFrame = {
@@ -640,24 +659,29 @@ object Graph {
     * would gate on a driver-side count per round, which the bounded
     * form avoids — and the orientation stays valid on every subset
     * because it is a fixed total order). The report is the per-round
-    * (edges_in, edges_kept) contraction; `checkpoint` materializes
-    * the round-1 survivor set so the second round's lineage doesn't
+    * (edges_in, edges_kept) contraction.
+    */
+  def trussRounds(arcs0: DataFrame, k: Int): DataFrame =
+    trussRoundsFrom(arcs0, trussKept(arcs0, k), k)
+
+  /** One truss round: the arcs supported by at least k−2 triangles. */
+  private def trussKept(arcs: DataFrame, k: Int): DataFrame = {
+    val tri = triangleEnum(arcs)
+    val sup = tri.select(col("a").as("s"), col("b").as("t"))
+      .unionAll(tri.select(col("a").as("s"), col("c").as("t")))
+      .unionAll(tri.select(col("b").as("s"), col("c").as("t")))
+      .groupBy(col("s"), col("t")).agg(count(lit(1)).as("sup"))
+    arcs.join(sup, Seq("s", "t"), "left")
+      .filter(coalesce(col("sup"), lit(0L)) >= k - 2)
+      .select(col("s"), col("t"))
+  }
+
+  /** [[trussRounds]] over a prebuilt round-1 survivor set `a1` — x240
+    * reads [[TrussR1Arcs]], so the second round's lineage doesn't
     * re-run the first enumeration per count branch.
     */
-  def trussRounds(arcs0: DataFrame, k: Int,
-      checkpoint: DataFrame => DataFrame = identity): DataFrame = {
-    def kept(arcs: DataFrame): DataFrame = {
-      val tri = triangleEnum(arcs)
-      val sup = tri.select(col("a").as("s"), col("b").as("t"))
-        .unionAll(tri.select(col("a").as("s"), col("c").as("t")))
-        .unionAll(tri.select(col("b").as("s"), col("c").as("t")))
-        .groupBy(col("s"), col("t")).agg(count(lit(1)).as("sup"))
-      arcs.join(sup, Seq("s", "t"), "left")
-        .filter(coalesce(col("sup"), lit(0L)) >= k - 2)
-        .select(col("s"), col("t"))
-    }
-    val a1 = checkpoint(kept(arcs0))
-    val a2 = kept(a1)
+  def trussRoundsFrom(arcs0: DataFrame, a1: DataFrame, k: Int): DataFrame = {
+    val a2 = trussKept(a1, k)
     def row(r: Int, in: DataFrame, out: DataFrame) =
       in.agg(count(lit(1)).as("edges_in"))
         .crossJoin(out.agg(count(lit(1)).as("edges_kept")))
@@ -665,6 +689,13 @@ object Graph {
           col("edges_in"), col("edges_kept"))
     row(1, arcs0, a1).unionByName(row(2, a1, a2)).orderBy(col("round"))
   }
+
+  /** x240's truss order. */
+  private val TrussK = 4
+
+  /** x240's round-1 survivors over the oriented co-purchase arcs. */
+  val TrussR1Arcs: Derived = Derived("truss_r1_arcs_v1")((spark, sfDir) =>
+    trussKept(orientedArcsFor(spark, sfDir), TrussK))
 
   /** (node, deg, tri, cc) for every node of degree ≥ 2: cc = 2·tri /
     * (deg·(deg−1)), the one double division over exact integers
@@ -987,6 +1018,24 @@ object Graph {
         coalesce(col("_has_out"), lit(false)).as("has_out"),
         col("n_nodes"))
   }
+  /** x144's symmetric co-purchase adjacency. */
+  val PprAdjacency: Derived = Derived("ppr_adjacency_v1") { (spark, sfDir) =>
+    val e = coPurchaseEdges(spark, sfDir)
+    adjacency(e.select(col("u").as("src"), col("v").as("dst"))
+      .unionAll(e.select(col("v").as("src"), col("u").as("dst"))))
+  }
+
+  /** x144's meta frame, a lake table exactly as x69's [[PrNodes]]
+    * (its seed, one driver-collected scalar off the node-sized degree
+    * table as in x140, is deterministic per dataset).
+    */
+  val PprNodes: Derived = Derived("ppr_nodes_v1") { (spark, sfDir) =>
+    val seed = copurchaseDegFor(spark, sfDir)
+      .orderBy(desc("deg"), col("n")).limit(1)
+      .head().getLong(0)
+    pprMeta(Lake.materialize(spark, sfDir, PprAdjacency), seed)
+  }
+
 
   /** x144's personalized PageRank over (u < v) undirected edges:
     * `iters` rounds of the integer recurrence with the teleport
@@ -1065,9 +1114,7 @@ object Graph {
     * partition whose quality modularity scores).
     */
   private[graft] def labelPropRound2(spark: SparkSession, sfDir: String): DataFrame = {
-    val adj = Lake.materialize(spark, sfDir, "pr_adjacency_v2") {
-      adjacencyFor(spark, sfDir)
-    }
+    val adj = Lake.materialize(spark, sfDir, PrAdjacency)
     val seeds = nationSeeds(spark, sfDir)
     val parts1 = voteRound(adj, seeds).select(col("node"), col("label"))
     voteRound(adj, seeds.unionByName(parts1))
@@ -1116,6 +1163,17 @@ object Graph {
       .limit(20)
   }
 
+  /** x200's weighted co-purchase edges (u < v, w = orders sharing the
+    * pair) — its own table, since [[CopurchaseEdges]] deliberately
+    * drops multiplicity.
+    */
+  val CopurchaseWedges: Derived = Derived("copurchase_wedges_v1")((spark, sfDir) =>
+    basketPairs(basket(spark, sfDir))
+      .groupBy(col("x.pk").as("u"), col("y.pk").as("v")).agg(count(lit(1)).as("w")))
+
+  /** x127's distinct (order, part) basket frame. */
+  val BasketItems: Derived = Derived("basket_items_v1")(basket)
+
   val queries: Map[String, Q] = Map(
     // TRUNCATED KATZ CENTRALITY — the walk-count complement of x69's
     // PageRank over the same co-purchase graph (PageRank conserves a
@@ -1150,9 +1208,8 @@ object Graph {
     // triangles support it, two bounded rounds over the SAME
     // materialized oriented arcs as x81/x132 — see [[trussRounds]].
     "x240_ktruss" -> ((spark, sfDir) =>
-      trussRounds(orientedArcsFor(spark, sfDir), k = 4,
-        checkpoint = a1 =>
-          Lake.materialize(spark, sfDir, "truss_r1_arcs_v1")(a1))),
+      trussRoundsFrom(orientedArcsFor(spark, sfDir),
+        Lake.materialize(spark, sfDir, TrussR1Arcs), k = TrussK)),
 
     // LOCAL CLUSTERING COEFFICIENT — cc = 2·tri / (deg·(deg−1)): how
     // much of a node's neighborhood interlinks (1.0 = clique corner).
@@ -1309,24 +1366,8 @@ object Graph {
     // Top-20 readout: the seed's damped neighborhood, which is the
     // answer a serving layer caches.
     "x144_personalized_pagerank" -> ((spark, sfDir) => {
-      val adj = Lake.materialize(spark, sfDir, "ppr_adjacency_v1") {
-        val e = coPurchaseEdges(spark, sfDir)
-        adjacency(e.select(col("u").as("src"), col("v").as("dst"))
-          .unionAll(e.select(col("v").as("src"), col("u").as("dst"))))
-      }
-      // one driver-collected scalar off the node-sized degree
-      // artifact (the A3-class contract edge, same as x140's seed)
-      val seed = copurchaseDegFor(spark, sfDir)
-        .orderBy(desc("deg"), col("n")).limit(1)
-        .head().getLong(0)
-      // the meta frame is a lake artifact exactly as x69's pr_nodes_v2
-      // is (seed is deterministic per dataset, so the artifact is
-      // too): in-plan, the loop's per-iteration references re-derived
-      // the src∪dst distinct from the edge artifact every round
-      val meta = Lake.materialize(spark, sfDir, "ppr_nodes_v1") {
-        pprMeta(adj, seed)
-      }
-      iterate(adj, meta, iters = 3)
+      iterate(Lake.materialize(spark, sfDir, PprAdjacency),
+        Lake.materialize(spark, sfDir, PprNodes), iters = 3)
         .orderBy(desc("rank_fp"), col("node"))
         .limit(20)
     }),
@@ -1355,12 +1396,9 @@ object Graph {
     "x145_modularity" -> ((spark, sfDir) => {
       val labels = labelPropRound2(spark, sfDir)
         .select(col("node"), col("label"))
-      val edges = Lake.materialize(spark, sfDir, "hits_pairs_v1") {
-        Lake.table(spark, sfDir, "lineitem")
-          .select(col("l_partkey").as("p"), col("l_suppkey").as("s"))
-          .distinct()
-      }.select(concat(lit("P"), col("p").cast("string")).as("u"),
-        concat(lit("S"), col("s").cast("string")).as("v"))
+      val edges = Lake.materialize(spark, sfDir, HitsPairs)
+        .select(concat(lit("P"), col("p").cast("string")).as("u"),
+          concat(lit("S"), col("s").cast("string")).as("v"))
       modularityReport(edges, labels).orderBy(col("label"))
     }),
 
@@ -1395,13 +1433,8 @@ object Graph {
       // compact parquet tables — no degree/count recompute per round
       // (the v1 artifact stored bare edges and re-aggregated the
       // degree inside every iteration: 10x the shuffled volume)
-      val adj = Lake.materialize(spark, sfDir, "pr_adjacency_v2") {
-        adjacencyFor(spark, sfDir)
-      }
-      val meta = Lake.materialize(spark, sfDir, "pr_nodes_v2") {
-        nodeMeta(adj)
-      }
-      iterate(adj, meta, iters = 3)
+      iterate(Lake.materialize(spark, sfDir, PrAdjacency),
+        Lake.materialize(spark, sfDir, PrNodes), iters = 3)
         .orderBy(desc("rank_fp"), col("node"))
         .limit(20)
     }),
@@ -1416,16 +1449,7 @@ object Graph {
     // symmetric arc frame makes every node a src — no dangling mass
     // by construction. Top-20 by (rank desc, node).
     "x200_weighted_pagerank" -> ((spark, sfDir) => {
-      val ew = Lake.materialize(spark, sfDir, "copurchase_wedges_v1") {
-        val items = Lake.table(spark, sfDir, "lineitem")
-          .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-          .distinct()
-        items.as("x")
-          .join(items.as("y"), col("x.ok") === col("y.ok") &&
-            col("x.pk") < col("y.pk"))
-          .groupBy(col("x.pk").as("u"), col("y.pk").as("v"))
-          .agg(count(lit(1)).as("w"))
-      }
+      val ew = Lake.materialize(spark, sfDir, CopurchaseWedges)
       val arcs = ew.select(col("u").as("src"), col("v").as("dst"), col("w"))
         .unionAll(ew.select(col("v").as("src"), col("u").as("dst"), col("w")))
       weightedPageRankFp(arcs, iters = 3)
@@ -1449,11 +1473,7 @@ object Graph {
     // partial-aggregatable integer sum + a 1-row broadcast total —
     // x69's per-iteration scale shape exactly.
     "x129_hits" -> ((spark, sfDir) =>
-      hitsTwoRounds(Lake.materialize(spark, sfDir, "hits_pairs_v1") {
-        Lake.table(spark, sfDir, "lineitem")
-          .select(col("l_partkey").as("p"), col("l_suppkey").as("s"))
-          .distinct()
-      })
+      hitsTwoRounds(Lake.materialize(spark, sfDir, HitsPairs))
         .orderBy(desc("auth_fp"), col("supplier"))
         .limit(20)),
 
@@ -1476,17 +1496,11 @@ object Graph {
       // parquet instead of its own fact-table scan + distinct shuffle
       // (x03's shared-artifact discipline, applied to the basket
       // lattice)
-      val items = Lake.materialize(spark, sfDir, "basket_items_v1") {
-        Lake.table(spark, sfDir, "lineitem")
-          .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-          .distinct()
-      }
+      val items = Lake.materialize(spark, sfDir, BasketItems)
       val nOrders = broadcast(items.select(col("ok")).distinct()
         .agg(count(lit(1)).as("n_orders")))
       val itemN = items.groupBy(col("pk")).agg(count(lit(1)).as("n_i"))
-      val pairN = items.as("x")
-        .join(items.as("y"), col("x.ok") === col("y.ok") &&
-          col("x.pk") < col("y.pk"))
+      val pairN = basketPairs(items)
         .groupBy(col("x.pk").as("a"), col("y.pk").as("b"))
         .agg(count(lit(1)).as("n_ab"))
         .filter(col("n_ab") >= 3)

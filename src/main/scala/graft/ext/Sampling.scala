@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.sources.Lake
+import graft.sources.Lake.Derived
 
 /** Corpus-composition operators for a training-data pipeline, over
   * `documents`: deterministic stratified sampling (language
@@ -56,6 +57,10 @@ object Sampling {
       floor(col("value") / lit(25.0)).cast("int").as("bin"))
       .agg(count(lit(1)).as("n"))
 
+  /** The (day, bin, n) partial x70/x106 share. */
+  val ValueHistDaily: Derived = Derived("value_hist_daily_v1")((spark, sfDir) =>
+    histDaily(Lake.table(spark, sfDir, "events")))
+
   /** x70's rollup readout over a (day, bin, n) partial table: per-bin
     * totals, cumulative counts, and share — the window runs over the
     * rolled-up ≤ ~20-row frame, never the data. Shared with s12 so
@@ -95,16 +100,15 @@ object Sampling {
     * streaming maintainer (s32) merges per microbatch.
     */
   private[graft] def rawScoreCells(spark: SparkSession, sfDir: String): DataFrame =
-    // lake-checkpointed: encodeCells fans the cells into FOUR plan
-    // branches (cells + type/fold/global marginals), and an
-    // unmaterialized cell build re-scans the fact table once per
-    // branch — the r13 PlanSpec pin caught exactly that (4 events
-    // scans). The artifact makes "one fact pass" physically true:
-    // the build runs once per corpus fingerprint, every branch reads
-    // a ≤|types|·K-row parquet.
-    Lake.materialize(spark, sfDir, "score_cells_v1") {
-      rawScoreCellsOf(Lake.table(spark, sfDir, "events"))
-    }
+    Lake.materialize(spark, sfDir, ScoreCells)
+
+  /** encodeCells fans the cells into FOUR plan branches, and an
+    * unmaterialized build re-scans the fact table per branch (the r13
+    * PlanSpec pin caught 4 events scans); as a lake table every branch
+    * reads a ≤|types|·K-row parquet.
+    */
+  val ScoreCells: Derived = Derived("score_cells_v1")((spark, sfDir) =>
+    rawScoreCellsOf(Lake.table(spark, sfDir, "events")))
 
   /** [[rawScoreCells]] over an explicit events frame — the per-batch
     * delta shape s32 aggregates before its additive merge.
@@ -2984,10 +2988,7 @@ object Sampling {
     }),
 
     "x70_hist_rollup" -> ((spark, sfDir) => {
-      val daily = Lake.materialize(spark, sfDir, "value_hist_daily_v1") {
-        histDaily(Lake.table(spark, sfDir, "events"))
-      }
-      histRollup(daily)
+      histRollup(Lake.materialize(spark, sfDir, ValueHistDaily))
     }),
 
     // HISTOGRAM QUANTILES — per-day p50/p90/p99 read from x70's
@@ -3002,9 +3003,7 @@ object Sampling {
     // artifact with x70/s12 — three consumers, one build.
     "x106_hist_quantiles" -> ((spark, sfDir) => {
       import org.apache.spark.sql.expressions.Window
-      val daily = Lake.materialize(spark, sfDir, "value_hist_daily_v1") {
-        histDaily(Lake.table(spark, sfDir, "events"))
-      }
+      val daily = Lake.materialize(spark, sfDir, ValueHistDaily)
       val byDay = Window.partitionBy(col("day")).orderBy(col("bin"))
       val c = daily
         .withColumn("cum", sum(col("n")).over(

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.sources.Lake
+import graft.sources.Lake.Derived
 
 /** Similarity search over the `embeddings` table
   * (vec_id, embedding: array<float>, label).
@@ -255,16 +256,27 @@ object Similarity {
     * Scale shape: the rank is one window over the label partition;
     * neighbor pairing is a pure equi-join on (label, rank) against
     * the exploded forward window — no range-predicate join, no
-    * quadratic label-group blowup. `checkpoint` snapshots the ranked
-    * table once for both join sides.
+    * quadratic label-group blowup.
     */
-  def snmNeardup(df: DataFrame, window: Int, threshold: Double,
-      checkpoint: DataFrame => DataFrame = identity): DataFrame = {
+  def snmNeardup(df: DataFrame, window: Int, threshold: Double): DataFrame =
+    snmNeardupFrom(snmRanked(df), window, threshold)
+
+  /** The ranked (vec_id, label, embedding, rk) table: rank by first
+    * embedding component within each label.
+    */
+  private def snmRanked(df: DataFrame): DataFrame = {
     val byKey = Window.partitionBy(col("label"))
       .orderBy(element_at(col("embedding"), 1), col("vec_id"))
-    val ranked = checkpoint(df
-      .select(col("vec_id"), col("label"), col("embedding"),
-        row_number().over(byKey).as("rk")))
+    df.select(col("vec_id"), col("label"), col("embedding"),
+      row_number().over(byKey).as("rk"))
+  }
+
+  /** x45's ranked table, read by both join sides. */
+  val SnmRanked: Derived = Derived("x45_snm_ranked")((spark, sfDir) =>
+    snmRanked(emb(spark, sfDir)))
+
+  /** [[snmNeardup]] over a prebuilt ranked table. */
+  def snmNeardupFrom(ranked: DataFrame, window: Int, threshold: Double): DataFrame = {
     val probes = ranked.select(col("label"), col("vec_id").as("_va"),
       col("embedding").as("_ea"),
       explode(sequence(col("rk") + 1, col("rk") + window)).as("_rk2"))
@@ -317,9 +329,9 @@ object Similarity {
     * @param df corpus with `vec_id` and array<double> `vec`
     */
   /** INDEX BUILD (the amortized step): seeded k-means cell assignment
-    * of the corpus — (vec_id, vec, cell). Registered queries checkpoint
-    * this via Lake.materialize so the ML fit runs once per (corpus
-    * fingerprint, k), never per query invocation.
+    * of the corpus — (vec_id, vec, cell). Registered queries read it
+    * as the [[IvfCells]] lake table, so the ML fit runs once per
+    * corpus fingerprint, never per query invocation.
     */
   def ivfFit(df: DataFrame, k: Int): DataFrame = {
     import org.apache.spark.ml.clustering.KMeans
@@ -490,6 +502,70 @@ object Similarity {
     */
   private val pqSubDimCache =
     new java.util.concurrent.ConcurrentHashMap[String, Integer]()
+
+  /** The random-hyperplane bucket table x08/x09/x54 share, keyed by
+    * its corpus-sized signature width.
+    */
+  val LshBuckets: Int => Derived =
+    Derived.keyed("lsh_buckets_", (bits: Int) => s"${bits}_$DefaultTables")((bits, spark, sfDir) =>
+      lshBuckets(vecTable(spark, sfDir), bits, DefaultTables))
+
+  /** The corpus's bucket table (it feeds both candidate-join sides): n
+    * from parquet footer metadata, so sizing costs no corpus scan.
+    */
+  private def lshBucketsFor(spark: SparkSession, sfDir: String): DataFrame =
+    Lake.materialize(spark, sfDir,
+      LshBuckets(chooseBits(Lake.rowCount(spark, sfDir, "embeddings"))))
+
+  /** The IVF (16 k-means cells) and PQ (4 subspaces × 16 codes)
+    * indexes x16/x55 and x29/x56 share are lake tables: each fit runs
+    * once per corpus fingerprint, and repeat invocations load parquet
+    * tables — no ML training job on the query path.
+    */
+  private val IvfK = 16
+  private val PqM = 4
+  private val PqKsub = 16
+
+  val IvfCells: Derived = Derived(s"ivf_cells_$IvfK")((spark, sfDir) =>
+    ivfFit(vecTable(spark, sfDir), IvfK))
+
+  val IvfCentroids: Derived = Derived(s"ivf_centroids_$IvfK")((spark, sfDir) =>
+    ivfCentroidsOf(Lake.materialize(spark, sfDir, IvfCells)))
+
+  val PqCodebooks: Derived = Derived(s"pq_codebooks_${PqM}_$PqKsub")((spark, sfDir) =>
+    pqFit(vecTable(spark, sfDir), PqM, PqKsub))
+
+  val PqCodes: Derived = Derived(s"pq_codes_${PqM}_$PqKsub")((spark, sfDir) =>
+    pqEncode(vecTable(spark, sfDir), Lake.materialize(spark, sfDir, PqCodebooks),
+      PqM, pqSubDim(spark, sfDir)))
+
+  /** The codebooks' subspace width — a constant of the (corpus, m)
+    * pair, probed once per process, not with a driver job per warm
+    * invocation.
+    */
+  private def pqSubDim(spark: SparkSession, sfDir: String): Int =
+    pqSubDimCache.computeIfAbsent(s"$sfDir/$PqM/$PqKsub",
+      _ => Lake.materialize(spark, sfDir, PqCodebooks)
+        .select(size(col("centroid"))).head().getInt(0))
+
+  /** IVF top-k for the 5-query batch (vec_id < 5), probing the 4
+    * nearest cells — ~1/4 of the corpus scanned per query.
+    */
+  private def ivfAnn(spark: SparkSession, sfDir: String, topK: Int): DataFrame =
+    ivfTopKFrom(Lake.materialize(spark, sfDir, IvfCells),
+      Lake.materialize(spark, sfDir, IvfCentroids), annQueries(spark, sfDir),
+      nprobe = 4, topK = topK)
+
+  /** PQ (ADC) top-k for the 5-query batch over the lake codes. */
+  private def pqAnn(spark: SparkSession, sfDir: String, topK: Int): DataFrame =
+    pqTopKFrom(Lake.materialize(spark, sfDir, PqCodes),
+      Lake.materialize(spark, sfDir, PqCodebooks), annQueries(spark, sfDir),
+      PqM, pqSubDim(spark, sfDir), topK)
+
+  /** The ANN paths' 5-query batch (query_id, qvec). */
+  private def annQueries(spark: SparkSession, sfDir: String): DataFrame =
+    vecTable(spark, sfDir).filter(col("vec_id") < 5)
+      .select(col("vec_id").as("query_id"), col("vec").as("qvec"))
 
   /** LSH ANN top-k per query from a (materialized) bucket table:
     * candidates are bucket collisions in any hash table, deduplicated,
@@ -1067,13 +1143,7 @@ object Similarity {
     // corpus size; the report is the top-10 with both leg ranks
     // exposed (0 = not retrieved by that leg).
     "x122_hybrid_rrf" -> ((spark, sfDir) => {
-      val tf = Lake.materialize(spark, sfDir, "tfidf_tf") {
-        Lake.table(spark, sfDir, "documents")
-          .select(col("doc_id"),
-            explode(split(col("text"), " ")).as("term"))
-          .groupBy(col("doc_id"), col("term"))
-          .agg(count(lit(1)).as("tf"))
-      }
+      val tf = Lake.materialize(spark, sfDir, graft.ext.TextAnalysis.TfidfTf)
       val lex = graft.ext.TextAnalysis
         .bm25FromTf(tf, Seq("join", "filter", "vector"))
         .filter(col("doc_id") >= 3)
@@ -1268,18 +1338,8 @@ object Similarity {
     // join candidates through the narrow bucket rows, then rank by
     // exact cosine within the deduplicated candidates — top-3 each.
     "x08_ann_lsh" -> ((spark, sfDir) => {
-      val e = emb(spark, sfDir).withColumn("vec", toDouble(col("embedding")))
-      // n from parquet footer metadata (cached) — sizing the signature
-      // must not cost a full corpus scan per query invocation.
-      val bits = chooseBits(Lake.rowCount(spark, sfDir, "embeddings"))
-      // the bucket table feeds both candidate-join sides: checkpoint it
-      // to the lake once per dataset instead of recomputing the
-      // signature aggregation per plan branch
-      val buckets = Lake.materialize(spark, sfDir,
-        s"lsh_buckets_${bits}_$DefaultTables") {
-        lshBuckets(e, bits, DefaultTables)
-      }
-      lshTopKFrom(buckets, e, col("vec_id") < 5, topK = 3)
+      lshTopKFrom(lshBucketsFor(spark, sfDir), vecTable(spark, sfDir),
+        col("vec_id") < 5, topK = 3)
     }),
 
     // SEMANTIC DEDUP (SemDeDup): drop vectors with a lower-id
@@ -1297,13 +1357,8 @@ object Similarity {
     // sides the full corpus — candidates are bucket collisions only,
     // verified by exact cosine ≥ threshold.
     "x09_embed_neardup" -> ((spark, sfDir) => {
-      val e = emb(spark, sfDir).withColumn("vec", toDouble(col("embedding")))
-      val bits = chooseBits(Lake.rowCount(spark, sfDir, "embeddings"))
-      val buckets = Lake.materialize(spark, sfDir,
-        s"lsh_buckets_${bits}_$DefaultTables") {
-        lshBuckets(e, bits, DefaultTables)
-      }
-      neardupPairsFrom(buckets, e, threshold = 0.2)
+      neardupPairsFrom(lshBucketsFor(spark, sfDir), vecTable(spark, sfDir),
+        threshold = 0.2)
         .orderBy(desc("cos"), col("vec_a"), col("vec_b"))
         .limit(100)
     }),
@@ -1440,8 +1495,8 @@ object Similarity {
     // full DuckDB oracle. The ranked table is lake-checkpointed for
     // its two join sides.
     "x45_snm_neardup" -> ((spark, sfDir) =>
-      snmNeardup(emb(spark, sfDir), window = 10, threshold = 0.2,
-        checkpoint = r => Lake.materialize(spark, sfDir, "x45_snm_ranked")(r))
+      snmNeardupFrom(Lake.materialize(spark, sfDir, SnmRanked), window = 10,
+        threshold = 0.2)
         .orderBy(col("vec_a"), col("vec_b"))),
 
     // LINEAR CKA — does quantization preserve the embedding GEOMETRY?
@@ -1526,23 +1581,9 @@ object Similarity {
     // ANN via IVF coarse quantization: 16 k-means cells, probe the 4
     // nearest per query — ~1/4 of the corpus scanned per query instead
     // of all of it, top-3 by exact cosine within the probed cells.
-    // Index (assignments + centroids) is lake-checkpointed: the k-means
-    // fit runs once per corpus fingerprint, and repeat invocations load
-    // two parquet tables — no ML training job on the query path.
-    "x16_ann_ivf" -> ((spark, sfDir) => {
-      val k = 16
-      val assigned = Lake.materialize(spark, sfDir, s"ivf_cells_$k") {
-        val e = emb(spark, sfDir).withColumn("vec", toDouble(col("embedding")))
-        ivfFit(e, k)
-      }
-      val centroids = Lake.materialize(spark, sfDir, s"ivf_centroids_$k") {
-        ivfCentroidsOf(assigned)
-      }
-      val queries = emb(spark, sfDir).filter(col("vec_id") < 5)
-        .select(col("vec_id").as("query_id"),
-          toDouble(col("embedding")).as("qvec"))
-      ivfTopKFrom(assigned, centroids, queries, nprobe = 4, topK = 3)
-    }),
+    // Index (assignments + centroids) is lake-checkpointed: see
+    // [[IvfCells]].
+    "x16_ann_ivf" -> ((spark, sfDir) => ivfAnn(spark, sfDir, topK = 3)),
 
     // ANN via product quantization: 4 subspaces × 16 codes over the
     // 64-dim embeddings = 4 codes/vector (64× smaller than the raw
@@ -1550,24 +1591,7 @@ object Similarity {
     // corpus fingerprint, search is the ADC code scan. Sketch-based
     // (k-means codebooks) — rows-only check + planted-cluster and
     // recall unit tests, like x16.
-    "x29_ann_pq" -> ((spark, sfDir) => {
-      val (m, ksub) = (4, 16)
-      val codebooks = Lake.materialize(spark, sfDir, s"pq_codebooks_${m}_$ksub") {
-        pqFit(emb(spark, sfDir).withColumn("vec", toDouble(col("embedding"))), m, ksub)
-      }
-      // subDim is a constant of the (corpus, m) pair — probe it once
-      // per process, not with a driver job per warm invocation
-      val sd = pqSubDimCache.computeIfAbsent(s"$sfDir/$m/$ksub",
-        _ => codebooks.select(size(col("centroid"))).head().getInt(0))
-      val codes = Lake.materialize(spark, sfDir, s"pq_codes_${m}_$ksub") {
-        pqEncode(emb(spark, sfDir).withColumn("vec", toDouble(col("embedding"))),
-          codebooks, m, sd)
-      }
-      val queries = emb(spark, sfDir).filter(col("vec_id") < 5)
-        .select(col("vec_id").as("query_id"),
-          toDouble(col("embedding")).as("qvec"))
-      pqTopKFrom(codes, codebooks, queries, m, sd, topK = 3)
-    }),
+    "x29_ann_pq" -> ((spark, sfDir) => pqAnn(spark, sfDir, topK = 3)),
 
     // IVF PROBE MECHANICS, EXACT TWIN (VERDICT r13 #6) — x16's
     // probe-then-rerank machinery promoted from rows-only to a full
@@ -1678,7 +1702,7 @@ object Similarity {
     // RECALL@10 REPORTS for the three ANN paths — the quality side of
     // the speed/quality trade each index makes, tracked per round in
     // the driver's artifact. Each reuses the SAME materialized index
-    // as its top-k query (identical Lake.materialize name), so the
+    // as its top-k query (the same declared Derived table), so the
     // recall row never triggers a second fit. Ground truth is the
     // brute-force exact-cosine top-10 (x07's shape over the 5-query
     // batch). ORACLED against committed id-set fixtures
@@ -2045,45 +2069,15 @@ object Similarity {
   private[graft] def recallTruth10(spark: SparkSession, sfDir: String): DataFrame =
     bruteTopK(vecTable(spark, sfDir), col("vec_id") < 5, 10)
 
-  private[graft] def lshAnn10(spark: SparkSession, sfDir: String): DataFrame = {
-    val e = vecTable(spark, sfDir)
-    val bits = chooseBits(Lake.rowCount(spark, sfDir, "embeddings"))
-    val buckets = Lake.materialize(spark, sfDir,
-      s"lsh_buckets_${bits}_$DefaultTables") {
-      lshBuckets(e, bits, DefaultTables)
-    }
-    lshTopKFrom(buckets, e, col("vec_id") < 5, topK = 10)
-  }
+  private[graft] def lshAnn10(spark: SparkSession, sfDir: String): DataFrame =
+    lshTopKFrom(lshBucketsFor(spark, sfDir), vecTable(spark, sfDir),
+      col("vec_id") < 5, topK = 10)
 
-  private[graft] def ivfAnn10(spark: SparkSession, sfDir: String): DataFrame = {
-    val k = 16
-    val e = vecTable(spark, sfDir)
-    val assigned = Lake.materialize(spark, sfDir, s"ivf_cells_$k") {
-      ivfFit(e, k)
-    }
-    val centroids = Lake.materialize(spark, sfDir, s"ivf_centroids_$k") {
-      ivfCentroidsOf(assigned)
-    }
-    val queries = e.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("query_id"), col("vec").as("qvec"))
-    ivfTopKFrom(assigned, centroids, queries, nprobe = 4, topK = 10)
-  }
+  private[graft] def ivfAnn10(spark: SparkSession, sfDir: String): DataFrame =
+    ivfAnn(spark, sfDir, topK = 10)
 
-  private[graft] def pqAnn10(spark: SparkSession, sfDir: String): DataFrame = {
-    val (m, ksub) = (4, 16)
-    val e = vecTable(spark, sfDir)
-    val codebooks = Lake.materialize(spark, sfDir, s"pq_codebooks_${m}_$ksub") {
-      pqFit(e, m, ksub)
-    }
-    val sd = pqSubDimCache.computeIfAbsent(s"$sfDir/$m/$ksub",
-      _ => codebooks.select(size(col("centroid"))).head().getInt(0))
-    val codes = Lake.materialize(spark, sfDir, s"pq_codes_${m}_$ksub") {
-      pqEncode(e, codebooks, m, sd)
-    }
-    val queries = e.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("query_id"), col("vec").as("qvec"))
-    pqTopKFrom(codes, codebooks, queries, m, sd, topK = 10)
-  }
+  private[graft] def pqAnn10(spark: SparkSession, sfDir: String): DataFrame =
+    pqAnn(spark, sfDir, topK = 10)
 
   /** x224's per-feature marginal sums (exact BIGINTs) — factored so
     * the unit test can drive planted feature frames through the same

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.sources.Lake
+import graft.sources.Lake.Derived
 
 /** Text-analysis operators for the training-data pipeline, over
   * `documents`: quality/length stats, language ID (stopword n-gram
@@ -214,6 +215,14 @@ object TextAnalysis {
           .as("snippet"))
   }
 
+  /** The (doc_id, term, tf) term-frequency table the TF-IDF, BM25,
+    * query-likelihood, language-model and token-MI readers share: one
+    * tokenize+aggregate scan per dataset, whichever reader runs first.
+    */
+  val TfidfTf: Derived = Derived("tfidf_tf")((spark, sfDir) =>
+    docs(spark, sfDir).select(col("doc_id"), explode(tokens).as("term"))
+      .groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf")))
+
   /** Per-doc mean unigram log-probability (x34's score), shared with
     * the x38 ensemble gate: the corpus's own unigram model over the
     * lake-checkpointed tf table (one artifact, three consumers with
@@ -222,12 +231,7 @@ object TextAnalysis {
     * compare on.
     */
   def unigramLogProb(spark: SparkSession, sfDir: String): DataFrame = {
-    val tf = Lake.materialize(spark, sfDir, "tfidf_tf") {
-      docs(spark, sfDir)
-        .select(col("doc_id"), explode(tokens).as("term"))
-        .groupBy(col("doc_id"), col("term"))
-        .agg(count(lit(1)).as("tf"))
-    }
+    val tf = Lake.materialize(spark, sfDir, TfidfTf)
     val ctf = tf.groupBy(col("term")).agg(sum(col("tf")).as("ctf"))
     val tot = tf.agg(sum(col("tf")).cast("double").as("n_total"))
     tf.join(ctf, "term").crossJoin(broadcast(tot))
@@ -392,21 +396,37 @@ object TextAnalysis {
     * the shuffled volume x46's wall ratio should track).
     */
   def bigramTable(spark: SparkSession, sfDir: String): DataFrame =
-    Lake.materialize(spark, sfDir, "x46_bigrams") {
-      docs(spark, sfDir)
-        .withColumn("_toks", tokens)
-        // single-token docs have no transitions; dropping them BEFORE
-        // the transform keeps sequence() ascending (a descending
-        // sequence(1, 0) would index past the array under ANSI mode)
-        .filter(size(col("_toks")) >= 2)
-        .select(col("doc_id"), explode(expr(
-          "transform(sequence(1, size(_toks) - 1), " +
-            "i -> struct(element_at(_toks, i) AS w1, " +
-            "element_at(_toks, i + 1) AS w2))")).as("_bg"))
-        .select(col("doc_id"), col("_bg.w1"), col("_bg.w2"))
-        .groupBy(col("doc_id"), col("w1"), col("w2"))
-        .agg(count(lit(1)).as("bf"))
-    }
+    Lake.materialize(spark, sfDir, X46Bigrams)
+
+  val X46Bigrams: Derived = Derived("x46_bigrams") { (spark, sfDir) =>
+    docs(spark, sfDir)
+      .withColumn("_toks", tokens)
+      // single-token docs have no transitions; dropping them BEFORE
+      // the transform keeps sequence() ascending (a descending
+      // sequence(1, 0) would index past the array under ANSI mode)
+      .filter(size(col("_toks")) >= 2)
+      .select(col("doc_id"), explode(expr(
+        "transform(sequence(1, size(_toks) - 1), " +
+          "i -> struct(element_at(_toks, i) AS w1, " +
+          "element_at(_toks, i + 1) AS w2))")).as("_bg"))
+      .select(col("doc_id"), col("_bg.w1"), col("_bg.w2"))
+      .groupBy(col("doc_id"), col("w1"), col("w2"))
+      .agg(count(lit(1)).as("bf"))
+  }
+
+  /** x164's keyword edges over [[X46Bigrams]], and x69's artifact
+    * discipline over them: in-plan, the degree join and the src∪dst
+    * distinct re-derived inside every iteration reference; as lake
+    * tables each loop reference is one scan of a compact parquet.
+    */
+  val TextrankEdges: Derived = Derived("textrank_edges_v1")((spark, sfDir) =>
+    textrankEdges(bigramTable(spark, sfDir)))
+
+  val TextrankAdj: Derived = Derived("textrank_adj_v1")((spark, sfDir) =>
+    Graph.adjacency(Lake.materialize(spark, sfDir, TextrankEdges)))
+
+  val TextrankNodes: Derived = Derived("textrank_nodes_v1")((spark, sfDir) =>
+    Graph.nodeMeta(Lake.materialize(spark, sfDir, TextrankAdj)))
 
   /** x290's report stage over a per-term total-count frame (one row
     * per term, column `r`) — split out so s59 can serve the SAME
@@ -666,12 +686,8 @@ object TextAnalysis {
       .agg(sum(col("bf")).as("cbg"))
     val cw1 = bfd.groupBy(col("w1")).agg(sum(col("bf")).as("cw1"))
     // vocab size off the shared tf table (the x15/x34 artifact)
-    val v = Lake.materialize(spark, sfDir, "tfidf_tf") {
-      docs(spark, sfDir)
-        .select(col("doc_id"), explode(tokens).as("term"))
-        .groupBy(col("doc_id"), col("term"))
-        .agg(count(lit(1)).as("tf"))
-    }.select(col("term")).distinct().agg(count(lit(1)).as("v"))
+    val v = Lake.materialize(spark, sfDir, TfidfTf)
+      .select(col("term")).distinct().agg(count(lit(1)).as("v"))
     // Pre-join the two model tables into ONE (w1, w2, cbg, cw1) table:
     // both sides are model-sized (distinct bigrams / distinct first
     // words — corpus-vocabulary scale, not doc scale), so this join is
@@ -835,9 +851,7 @@ object TextAnalysis {
     * artifact, windows over the bucket frame only.
     */
   private def shingleGrowthCurve(spark: SparkSession, sfDir: String): DataFrame = {
-    val sh = Lake.materialize(spark, sfDir, "x05_shingles") {
-      Dedup.shingleTable(docs(spark, sfDir))
-    }
+    val sh = Lake.materialize(spark, sfDir, Dedup.X05Shingles)
     val newTypes = sh.groupBy(col("shingle"))
       .agg(min(col("doc_id")).as("first_doc"))
       .groupBy(expr("first_doc DIV 50").as("bucket"))
@@ -960,9 +974,7 @@ object TextAnalysis {
     // half-corpus hash aggs is ≤20 rows.
     "x210_rbo_drift" -> ((spark, sfDir) => {
       import org.apache.spark.sql.expressions.Window
-      val sh = Lake.materialize(spark, sfDir, "x05_shingles") {
-        Dedup.shingleTable(docs(spark, sfDir))
-      }
+      val sh = Lake.materialize(spark, sfDir, Dedup.X05Shingles)
       def top(par: Int): DataFrame = {
         val w = Window.orderBy(desc("cnt"), col("shingle"))
         sh.filter(col("doc_id") % 2 === par)
@@ -1786,18 +1798,13 @@ object TextAnalysis {
     // gets a full oracle; scores are ROUNDed identically on both sides
     // and the rounded value is the sort key.
     "x15_tfidf" -> ((spark, sfDir) => {
-      val d = docs(spark, sfDir)
       // idf's N is a plan literal, resolved from parquet footer counts
       // (cached) — not a full-table count() job per invocation.
       val nDocs = Lake.rowCount(spark, sfDir, "documents")
       // tf feeds two consumers (the join probe and the df aggregation);
       // checkpoint it to the lake so the tokenize+aggregate scan runs
       // once per dataset, not once per plan branch.
-      val tf = graft.sources.Lake.materialize(spark, sfDir, "tfidf_tf") {
-        d.select(col("doc_id"), explode(tokens).as("term"))
-          .groupBy(col("doc_id"), col("term"))
-          .agg(count(lit(1)).as("tf"))
-      }
+      val tf = Lake.materialize(spark, sfDir, TfidfTf)
       val dfreq = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
       tf.join(dfreq, "term")
         .select(col("doc_id"), col("term"),
@@ -1915,12 +1922,7 @@ object TextAnalysis {
     // vocabulary×|sources|-sized (model-shaped, not corpus-shaped).
     // Top-20 by (mi desc, token).
     "x174_token_mi" -> ((spark, sfDir) => {
-      val tf = Lake.materialize(spark, sfDir, "tfidf_tf") {
-        docs(spark, sfDir)
-          .select(col("doc_id"), explode(tokens).as("term"))
-          .groupBy(col("doc_id"), col("term"))
-          .agg(count(lit(1)).as("tf"))
-      }
+      val tf = Lake.materialize(spark, sfDir, TfidfTf)
       tokenMiReport(tf.select(col("doc_id"), col("term")),
         docs(spark, sfDir).select(col("doc_id"), col("source")))
         .orderBy(desc("mi"), col("term"))
@@ -1941,21 +1943,8 @@ object TextAnalysis {
     // agg'able BIGINT sum; dangling mass provably zero on symmetric
     // edges). Top-20 by (rank desc, word).
     "x164_textrank" -> ((spark, sfDir) => {
-      val edges = Lake.materialize(spark, sfDir, "textrank_edges_v1") {
-        textrankEdges(bigramTable(spark, sfDir))
-      }
-      // x69's artifact discipline applied here too: in-plan (the old
-      // pageRankFp call), the degree join and the src∪dst distinct
-      // re-derived from the edge artifact inside every iteration
-      // reference; as lake artifacts each loop reference is one scan
-      // of a compact parquet
-      val adj = Lake.materialize(spark, sfDir, "textrank_adj_v1") {
-        Graph.adjacency(edges)
-      }
-      val meta = Lake.materialize(spark, sfDir, "textrank_nodes_v1") {
-        Graph.nodeMeta(adj)
-      }
-      Graph.iterate(adj, meta, iters = 3)
+      Graph.iterate(Lake.materialize(spark, sfDir, TextrankAdj),
+        Lake.materialize(spark, sfDir, TextrankNodes), iters = 3)
         .orderBy(desc("rank_fp"), col("node"))
         .limit(20)
         .select(col("node").as("keyword"), col("rank_fp"))
@@ -2006,12 +1995,8 @@ object TextAnalysis {
     // frames.
     "x290_good_turing" -> ((spark, sfDir) =>
       goodTuringFromTermCounts(
-        Lake.materialize(spark, sfDir, "tfidf_tf") {
-          docs(spark, sfDir)
-            .select(col("doc_id"), explode(tokens).as("term"))
-            .groupBy(col("doc_id"), col("term"))
-            .agg(count(lit(1)).as("tf"))
-        }.groupBy(col("term")).agg(sum(col("tf")).as("r")))),
+        Lake.materialize(spark, sfDir, TfidfTf)
+          .groupBy(col("term")).agg(sum(col("tf")).as("r")))),
 
     // Cross-source domain-affinity matrix (see domainAffinity
     // scaladoc): S² rows of pairwise LM cross-entropy.
@@ -2243,12 +2228,7 @@ object TextAnalysis {
     // lake-checkpointed tf artifact, and the top-10 is
     // TakeOrderedAndProject, not a global sort.
     "x119_bm25_topk" -> ((spark, sfDir) => {
-      val tf = Lake.materialize(spark, sfDir, "tfidf_tf") {
-        docs(spark, sfDir)
-          .select(col("doc_id"), explode(tokens).as("term"))
-          .groupBy(col("doc_id"), col("term"))
-          .agg(count(lit(1)).as("tf"))
-      }
+      val tf = Lake.materialize(spark, sfDir, TfidfTf)
       bm25FromTf(tf, Seq("join", "filter", "vector"))
         .orderBy(desc("bm25"), col("doc_id"))
         .limit(10)
@@ -2268,12 +2248,7 @@ object TextAnalysis {
     // model's corpus statistic — the distinction between the two
     // rankers' index requirements.
     "x124_query_likelihood" -> ((spark, sfDir) => {
-      val tf = Lake.materialize(spark, sfDir, "tfidf_tf") {
-        docs(spark, sfDir)
-          .select(col("doc_id"), explode(tokens).as("term"))
-          .groupBy(col("doc_id"), col("term"))
-          .agg(count(lit(1)).as("tf"))
-      }
+      val tf = Lake.materialize(spark, sfDir, TfidfTf)
       qlFromTf(tf, Seq("join", "filter", "vector"))
         .orderBy(desc("ql"), col("doc_id"))
         .limit(10)
@@ -2294,12 +2269,7 @@ object TextAnalysis {
     // corpus text.
     "x125_prf_expansion" -> ((spark, sfDir) => {
       val q0 = Seq("join", "filter", "vector")
-      val tf = Lake.materialize(spark, sfDir, "tfidf_tf") {
-        docs(spark, sfDir)
-          .select(col("doc_id"), explode(tokens).as("term"))
-          .groupBy(col("doc_id"), col("term"))
-          .agg(count(lit(1)).as("tf"))
-      }
+      val tf = Lake.materialize(spark, sfDir, TfidfTf)
       val top3 = bm25FromTf(tf, q0)
         .orderBy(desc("bm25"), col("doc_id")).limit(3)
         .select(col("doc_id"))
@@ -2329,12 +2299,7 @@ object TextAnalysis {
     // shared (x111's adversarial-oracle rule).
     "x126_snippets" -> ((spark, sfDir) => {
       val q0 = Seq("join", "filter", "vector")
-      val tf = Lake.materialize(spark, sfDir, "tfidf_tf") {
-        docs(spark, sfDir)
-          .select(col("doc_id"), explode(tokens).as("term"))
-          .groupBy(col("doc_id"), col("term"))
-          .agg(count(lit(1)).as("tf"))
-      }
+      val tf = Lake.materialize(spark, sfDir, TfidfTf)
       val top5 = bm25FromTf(tf, q0)
         .orderBy(desc("bm25"), col("doc_id")).limit(5)
         .select(col("doc_id"))
@@ -2588,9 +2553,7 @@ object TextAnalysis {
     // sides. Nothing corpus-sized is ever shuffled twice. All counts
     // exact integers, one division.
     "x50_novelty" -> ((spark, sfDir) => {
-      val sh = Lake.materialize(spark, sfDir, "x05_shingles") {
-        Dedup.shingleTable(docs(spark, sfDir))
-      }
+      val sh = Lake.materialize(spark, sfDir, Dedup.X05Shingles)
       val perDoc = sh.groupBy(col("doc_id"))
         .agg(count(lit(1)).as("n_shingles"))
       val novel = sh.groupBy(col("shingle"))
@@ -2723,9 +2686,7 @@ object TextAnalysis {
     // feature space (standard stopword-filtered cosine). Top-20 by
     // (4 dp cosine desc, ids).
     "x199_sparse_cosine_pairs" -> ((spark, sfDir) => {
-      val sh = Lake.materialize(spark, sfDir, "x05_shingles") {
-        Dedup.shingleTable(docs(spark, sfDir))
-      }
+      val sh = Lake.materialize(spark, sfDir, Dedup.X05Shingles)
       val nDocs = broadcast(docs(spark, sfDir).agg(count(lit(1)).as("nd")))
       val w = sh.groupBy(col("shingle")).agg(count(lit(1)).as("df"))
         .filter(col("df") >= 2 && col("df") <= 100).crossJoin(nDocs)

@@ -1,5 +1,6 @@
 package graft.sources
 
+import org.apache.hadoop.fs.{FileAlreadyExistsException, FileContext, Options, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -95,7 +96,7 @@ object Lake {
   }
 
   private def hadoopFs(spark: SparkSession, path: String) = {
-    val p = new org.apache.hadoop.fs.Path(path)
+    val p = new Path(path)
     (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
   }
 
@@ -111,7 +112,7 @@ object Lake {
     fpCache.computeIfAbsent(sfDir, _ => {
       val (fs, _) = hadoopFs(spark, sfDir)
       val h = tableNames.foldLeft(17L) { (acc, n) =>
-        val p = new org.apache.hadoop.fs.Path(s"$sfDir/$n.parquet")
+        val p = new Path(s"$sfDir/$n.parquet")
         val x =
           if (fs.exists(p)) {
             val st = fs.getFileStatus(p)
@@ -195,15 +196,15 @@ object Lake {
     * re-derives against the new fingerprint.
     */
   def dropCachesFor(sfDir: String): Unit = {
-    val slug = sfDir.replaceAll("[^A-Za-z0-9.]", "_")
+    val tag = "_" + slug(sfDir) + "_"
     fpCache.remove(sfDir)
     countCache.keySet.removeIf(_.startsWith(sfDir + "/"))
-    doneTargets.removeIf(_.contains("_" + slug + "_"))
+    doneTargets.removeIf(_.contains(tag))
     // iterating a synchronizedMap view requires holding its monitor
     dfCache.synchronized {
       dfCache.keySet.removeIf { k =>
         val path = k.substring(k.indexOf('|') + 1)
-        path.startsWith(sfDir + "/") || path.contains("_" + slug + "_")
+        path.startsWith(sfDir + "/") || path.contains(tag)
       }
     }
   }
@@ -323,20 +324,43 @@ object Lake {
     new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
 
   /** Build `target` once, gated on its _SUCCESS marker, holding the
-    * given scoped confs during the build; idempotent and side-effect
-    * free on session conf. Builds that actually run are timed into
-    * [[buildLedgerSnapshot]].
+    * given scoped confs; side-effect free on session conf. `build`
+    * writes a sibling `<target>._tmp-<uuid>` (Spark's _SUCCESS lands
+    * inside it), which is renamed onto `target`, so no reader finds a
+    * half-written table behind a marker. The rename refuses an
+    * existing target: a process that loses a race deletes its temp dir
+    * and reads the winner's table; a build that throws deletes its
+    * temp dir. Atomic where directory rename is (local FS, HDFS); on
+    * an object store such as S3A a rename is a copy. Builds that run
+    * are timed into [[buildLedgerSnapshot]] under the target's name.
     */
   private def ensureBuilt(spark: SparkSession, target: String,
-      confs: Seq[(String, String)])(build: => Unit): String = {
+      confs: Seq[(String, String)])(build: String => Unit): String = {
     if (!doneTargets.contains(target)) {
       buildLocks.computeIfAbsent(target, _ => new AnyRef).synchronized {
-        val (fs, marker) = hadoopFs(spark, s"$target/_SUCCESS")
+        val (fs, dst) = hadoopFs(spark, target)
+        val marker = new Path(dst, "_SUCCESS")
         if (!fs.exists(marker)) {
           val t0 = System.nanoTime()
-          withConf(spark, confs :+ (ParallelismFirstKey -> "true"): _*)(build)
-          buildLedger.add(
-            (new java.io.File(target).getName, (System.nanoTime() - t0) / 1e9))
+          val tmp = new Path(s"$target._tmp-${java.util.UUID.randomUUID()}")
+          try {
+            withConf(spark, confs :+ (ParallelismFirstKey -> "true"): _*)(
+              build(tmp.toString))
+            val fc = FileContext.getFileContext(fs.getUri,
+              spark.sparkContext.hadoopConfiguration)
+            def commit(): Unit = fc.rename(tmp, dst, Options.Rename.NONE)
+            try commit()
+            catch {
+              // a table without a marker is a torn write left by a
+              // writer that wrote in place: replace it
+              case _: FileAlreadyExistsException if !fs.exists(marker) =>
+                fs.delete(dst, true)
+                commit()
+              // another process committed first: its table stands
+              case _: FileAlreadyExistsException => ()
+            }
+          } finally fs.delete(tmp, true)
+          buildLedger.add((dst.getName, (System.nanoTime() - t0) / 1e9))
         }
       }
       doneTargets.add(target)
@@ -344,12 +368,15 @@ object Lake {
     target
   }
 
-  private def derivedPath(spark: SparkSession, sfDir: String,
-      name: String, targetRoot: String = "/tmp/graft-lake"): String = {
-    val slug = sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-    val fp = fingerprint(spark, sfDir)
-    s"$targetRoot/${name}_${slug}_$fp"
-  }
+  /** The one root every derived table resolves under; point it at an
+    * object-store prefix on a cluster.
+    */
+  private val LakeRoot = "/tmp/graft-lake"
+
+  private def slug(sfDir: String): String = sfDir.replaceAll("[^A-Za-z0-9.]", "_")
+
+  private def derivedPath(spark: SparkSession, sfDir: String, name: String): String =
+    s"$LakeRoot/${name}_${slug(sfDir)}_${fingerprint(spark, sfDir)}"
 
   /** Best-effort delete of a retired derived-copy generation (e.g. the
     * pre-clustering `events_micros` once `events_micros_v2` exists) —
@@ -359,8 +386,8 @@ object Lake {
     * only wasted disk.
     */
   private[graft] def retireDerived(spark: SparkSession, sfDir: String,
-      retiredName: String, targetRoot: String = "/tmp/graft-lake"): Unit = {
-    val old = derivedPath(spark, sfDir, retiredName, targetRoot)
+      retiredName: String): Unit = {
+    val old = derivedPath(spark, sfDir, retiredName)
     if (doneTargets.add(s"retired:$old"))
       try {
         val (fs, p) = hadoopFs(spark, old)
@@ -384,21 +411,19 @@ object Lake {
     * carry TIMESTAMP_NTZ in their own footers, so the source-level
     * cast alone cannot heal an existing lake root).
     */
-  def ensureMicrosEvents(
-      spark: SparkSession, sfDir: String,
-      targetRoot: String = "/tmp/graft-lake"): String = {
-    val target = derivedPath(spark, sfDir, "events_micros_v3", targetRoot)
-    retireDerived(spark, sfDir, "events_micros", targetRoot)
-    retireDerived(spark, sfDir, "events_micros_v2", targetRoot)
+  def ensureMicrosEvents(spark: SparkSession, sfDir: String): String = {
+    val target = derivedPath(spark, sfDir, "events_micros_v3")
+    retireDerived(spark, sfDir, "events_micros")
+    retireDerived(spark, sfDir, "events_micros_v2")
     // MICROS (not INT96): INT96 timestamps don't support parquet
     // predicate pushdown, which is the whole point of this copy.
     ensureBuilt(spark, target,
-      Seq(NanosKey -> "true", OutTsKey -> "TIMESTAMP_MICROS")) {
+      Seq(NanosKey -> "true", OutTsKey -> "TIMESTAMP_MICROS")) { tmp =>
       rawEvents(spark, sfDir)
         .repartitionByRange(spark.sessionState.conf.numShufflePartitions,
           col("ts"))
         .sortWithinPartitions(col("ts"))
-        .write.mode("overwrite").parquet(target)
+        .write.parquet(tmp)
     }
   }
 
@@ -452,15 +477,13 @@ object Lake {
     * are phrased against the unpartitioned source so this choice is
     * invisible to the correctness gate.
     */
-  def ensurePartitionedEvents(
-      spark: SparkSession, sfDir: String,
-      targetRoot: String = "/tmp/graft-lake"): String = {
-    val target = derivedPath(spark, sfDir, "events_by_date_v3", targetRoot)
-    retireDerived(spark, sfDir, "events_by_date", targetRoot)
-    retireDerived(spark, sfDir, "events_by_date_v2", targetRoot)
+  def ensurePartitionedEvents(spark: SparkSession, sfDir: String): String = {
+    val target = derivedPath(spark, sfDir, "events_by_date_v3")
+    retireDerived(spark, sfDir, "events_by_date")
+    retireDerived(spark, sfDir, "events_by_date_v2")
     // Same MICROS rule as ensureMicrosEvents: keep `ts` pushdown-capable
     // in the partitioned copy too.
-    ensureBuilt(spark, target, Seq(OutTsKey -> "TIMESTAMP_MICROS")) {
+    ensureBuilt(spark, target, Seq(OutTsKey -> "TIMESTAMP_MICROS")) { tmp =>
       table(spark, sfDir, "events")
         .withColumn("date", to_date(col("ts")))
         // Bounded shuffle: hash dates into a fixed number of tasks
@@ -471,50 +494,84 @@ object Lake {
         // row-group min/max stats on top of the partition pruning.
         .repartition(32, col("date"))
         .sortWithinPartitions(col("date"), col("ts"))
-        .write.mode("overwrite")
+        .write
         .option("maxRecordsPerFile", 5000000)
-        .partitionBy("date").parquet(target)
+        .partitionBy("date").parquet(tmp)
     }
   }
 
-  /** True when the derived target `name` is already built for this
-    * source fingerprint (process-local marker cache, falling back to
-    * one _SUCCESS existence probe). Lets callers whose build is
-    * EAGER (e.g. an iterative loop that runs jobs while constructing
-    * the frame) skip construction entirely on the warm path —
-    * [[materialize]]'s by-name laziness only helps when building the
-    * frame is itself lazy.
+  /** A derived lake table: its name bound to its one build, declared
+    * once as a `val` in the module that owns it, so no name can have
+    * two bodies. A table keyed by a parameter is a [[Derived.keyed]]
+    * family whose name is computed from the key. Declaring a name, or
+    * a keyed prefix that could produce it, twice throws while the
+    * owning object initializes.
     */
-  def isBuilt(spark: SparkSession, sfDir: String, name: String): Boolean = {
-    val target = derivedPath(spark, sfDir, name)
+  final class Derived private (val name: String,
+      private[Lake] val build: (SparkSession, String) => DataFrame)
+
+  object Derived {
+    /** (name or keyed prefix, keyed?), in declaration order. */
+    private val declared = scala.collection.mutable.ArrayBuffer.empty[(String, Boolean)]
+
+    private def declare(name: String, keyed: Boolean): Unit = declared.synchronized {
+      val clash = declared.collectFirst {
+        case (n, k) if n == name || (k && name.startsWith(n)) ||
+          (keyed && n.startsWith(name)) => n
+      }
+      require(clash.isEmpty, s"derived table $name is already declared as ${clash.get}")
+      declared += (name -> keyed)
+    }
+
+    def apply(name: String)(build: (SparkSession, String) => DataFrame): Derived = {
+      declare(name, keyed = false)
+      new Derived(name, build)
+    }
+
+    /** A family sharing one build: the table for `key` is named
+      * `prefix + suffix(key)`.
+      */
+    def keyed[K](prefix: String, suffix: K => String)(
+        build: (K, SparkSession, String) => DataFrame): K => Derived = {
+      declare(prefix, keyed = true)
+      key => new Derived(prefix + suffix(key), build(key, _, _))
+    }
+  }
+
+  /** True when `d` is already built for this source fingerprint
+    * (process-local marker cache, falling back to one _SUCCESS probe).
+    */
+  def isBuilt(spark: SparkSession, sfDir: String, d: Derived): Boolean = {
+    val target = derivedPath(spark, sfDir, d.name)
     doneTargets.contains(target) || {
       val (fs, marker) = hadoopFs(spark, s"$target/_SUCCESS")
       fs.exists(marker)
     }
   }
 
-  /** Materialize a derived table to the lake once per (source
-    * fingerprint, name), gated on _SUCCESS like the events copies, and
-    * read it back. This is the "checkpoint the expensive intermediate
-    * to the lake" step a 100 TB pipeline uses instead of
-    * executor-memory caching: durable, shared across sessions, no cache
-    * entries pinned for the session's lifetime.
+  /** Materialize `d` to the lake once per source fingerprint and read
+    * it back: the "checkpoint the expensive intermediate to the lake"
+    * step a 100 TB pipeline uses instead of executor-memory caching.
+    * The build runs under [[ensureBuilt]]'s per-target lock, so an
+    * eager build (x18's label loop runs jobs while constructing its
+    * frame) also runs once per process; a persisted frame it hands
+    * back is released after the write.
     */
-  def materialize(spark: SparkSession, sfDir: String, name: String)(
-      build: => DataFrame): DataFrame = {
-    val target = derivedPath(spark, sfDir, name)
-    ensureBuilt(spark, target, Seq.empty) {
-      build.write.mode("overwrite").parquet(target)
+  def materialize(spark: SparkSession, sfDir: String, d: Derived): DataFrame = {
+    val target = derivedPath(spark, sfDir, d.name)
+    ensureBuilt(spark, target, Seq.empty) { tmp =>
+      val df = d.build(spark, sfDir)
+      try df.write.parquet(tmp)
+      finally if (df.storageLevel.isValid) df.unpersist()
     }
     cachedRead(spark, target)
   }
 
-  /** Directory a [[materialize]] call with the same name resolves to —
-    * for callers that operate on the files themselves (e.g. Layout's
-    * listing-driven compaction) rather than the frame.
+  /** Directory `d` materializes to, for callers that operate on the
+    * files themselves (e.g. Layout's listing-driven compaction).
     */
-  def materializedPath(spark: SparkSession, sfDir: String, name: String): String =
-    derivedPath(spark, sfDir, name)
+  def materializedPath(spark: SparkSession, sfDir: String, d: Derived): String =
+    derivedPath(spark, sfDir, d.name)
 
   /** B2/B3: scan of the hive-partitioned copy; a filter on `date`
     * becomes partition pruning (the reference's manual per-day path
@@ -569,19 +626,16 @@ object Lake {
     * — [[rawEvents]] accepts either). Idempotent per source
     * fingerprint via the same _SUCCESS gating as every derived copy.
     */
-  def ensureScaledDir(spark: SparkSession, srcSfDir: String, factor: Int,
-      targetRoot: String = "/tmp/graft-lake"): String = {
+  def ensureScaledDir(spark: SparkSession, srcSfDir: String, factor: Int): String = {
     require(factor >= 1, s"scale factor must be >= 1, got $factor")
-    val slug = srcSfDir.replaceAll("[^A-Za-z0-9.]", "_")
-    val fp = fingerprint(spark, srcSfDir)
     // v2: l_partkey/l_suppkey joined the re-key set — the version tag
     // retires stale pre-v2 scaled copies (same discipline as derived
     // artifact `_vN` bumps; the _SUCCESS gate would otherwise reuse a
     // flat-graph copy forever)
-    val dir = s"$targetRoot/scaled${factor}x_v2_${slug}_$fp"
+    val dir = s"$LakeRoot/scaled${factor}x_v2_${slug(srcSfDir)}_${fingerprint(spark, srcSfDir)}"
     tableNames.foreach { name =>
       val target = s"$dir/$name.parquet"
-      ensureBuilt(spark, target, Seq(OutTsKey -> "TIMESTAMP_MICROS")) {
+      ensureBuilt(spark, target, Seq(OutTsKey -> "TIMESTAMP_MICROS")) { tmp =>
         val src =
           if (name == "events") rawEvents(spark, srcSfDir)
           else spark.read.parquet(s"$srcSfDir/$name.parquet")
@@ -611,7 +665,7 @@ object Lake {
               }
             }.reduce(_ union _)
         }
-        out.write.mode("overwrite").parquet(target)
+        out.write.parquet(tmp)
       }
     }
     dir

@@ -127,11 +127,12 @@ object Layout {
     */
   private[graft] def fragmentedEvents(spark: SparkSession, sfDir: String): String = {
     Lake.retireDerived(spark, sfDir, "fragmented_events")
-    Lake.materialize(spark, sfDir, "fragmented_events_v2") {
-      Lake.table(spark, sfDir, "events").repartition(64)
-    }
-    Lake.materializedPath(spark, sfDir, "fragmented_events_v2")
+    Lake.materialize(spark, sfDir, FragmentedEvents)
+    Lake.materializedPath(spark, sfDir, FragmentedEvents)
   }
+
+  val FragmentedEvents: Lake.Derived = Lake.Derived("fragmented_events_v2")((spark, sfDir) =>
+    Lake.table(spark, sfDir, "events").repartition(64))
 
   /** Snapshot retention — the vacuum/GC half of lake maintenance
     * (p03 rewrites live data; this deletes dead generations): keep

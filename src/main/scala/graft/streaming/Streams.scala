@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.sources.Lake
+import graft.sources.Lake.Derived
 
 /** Structured Streaming surface (SURVEY §2.C streaming row; the
   * reference only wishes for streaming ingestion, README.md:192).
@@ -200,16 +201,25 @@ object Streams {
   private def eventBatches(spark: SparkSession, sfDir: String): DataFrame =
     batchesOf(spark, Lake.ensureMicrosEvents(spark, sfDir))
 
-  /** A 4-file copy of `documents` cut to `cols`, materialized once as
-    * `name`, streamed through [[batchesOf]].
+  /** A 4-file copy of `documents` keyed by its column list, so one
+    * column list is one table whichever maintainer reads it.
     */
-  private def docBatches(spark: SparkSession, sfDir: String, name: String,
+  val DocsSplit: Seq[String] => Derived =
+    Derived.keyed("docs_split_", (cols: Seq[String]) => cols.mkString("", "_", "_v1"))(
+      (cols, spark, sfDir) =>
+        Lake.table(spark, sfDir, "documents").select(cols.map(col): _*).repartition(4))
+
+  /** [[DocsSplit]] of `cols`, streamed through [[batchesOf]]; retires
+    * the splits' names from before the column list keyed them.
+    */
+  private def docBatches(spark: SparkSession, sfDir: String,
       cols: String*): DataFrame = {
-    Lake.materialize(spark, sfDir, name) {
-      Lake.table(spark, sfDir, "documents")
-        .select(cols.map(col): _*).repartition(4)
-    }
-    batchesOf(spark, Lake.materializedPath(spark, sfDir, name))
+    Seq("docs_split_v1", "docs_split_text_v1", "docs_split_lentext_v1",
+      "docs_split_len_v1", "docs_split_meta_v1")
+      .foreach(Lake.retireDerived(spark, sfDir, _))
+    val split = DocsSplit(cols)
+    Lake.materialize(spark, sfDir, split)
+    batchesOf(spark, Lake.materializedPath(spark, sfDir, split))
   }
 
   /** Raw-file event stream: explicit on-disk schema (ts as stored —
@@ -674,7 +684,7 @@ object Streams {
   def foreachBatchG2(spark: SparkSession, sfDir: String): DataFrame =
     graft.ext.TextAnalysis.g2FromBigramCounts(
       foldTable(spark, "s35", sfDir,
-          docBatches(spark, sfDir, "docs_split_text_v1", "doc_id", "text"),
+          docBatches(spark, sfDir, "doc_id", "text"),
           "cbg") { (batch, prev) =>
         sumMerge(prev, graft.ext.TextAnalysis.bigramCountsOf(batch),
           Seq("w1", "w2"), "cnt")
@@ -716,7 +726,7 @@ object Streams {
   private def maintainDocJoint(spark: SparkSession, sfDir: String,
       name: String): DataFrame =
     foldTable(spark, name, sfDir,
-        docBatches(spark, sfDir, "docs_split_lentext_v1", "n_chars", "text"),
+        docBatches(spark, sfDir, "n_chars", "text"),
         "joint") { (batch, prev) =>
       sumMerge(prev, graft.ext.Sampling.spearmanJointOf(batch),
         Seq("n_chars", "n_toks"), "f")
@@ -929,7 +939,7 @@ object Streams {
   private def maintainedGroupMoments(spark: SparkSession, sfDir: String,
       name: String): DataFrame =
     foldTable(spark, name, sfDir,
-        docBatches(spark, sfDir, "docs_split_len_v1", "source", "n_chars"),
+        docBatches(spark, sfDir, "source", "n_chars"),
         "moments") { (batch, prev) =>
       sumMerge(prev,
         batch.select(col("source").as("grp"), col("n_chars").as("v"))
@@ -952,7 +962,7 @@ object Streams {
   def foreachBatchTheilU(spark: SparkSession, sfDir: String): DataFrame =
     graft.ext.TextAnalysis.theilUFromCells(
       foldTable(spark, "s43", sfDir,
-          docBatches(spark, sfDir, "docs_split_meta_v1", "source", "lang"),
+          docBatches(spark, sfDir, "source", "lang"),
           "cells") { (batch, prev) =>
         sumMerge(prev,
           batch.groupBy(col("source"), col("lang")).agg(count(lit(1)).as("c")),
@@ -1012,7 +1022,7 @@ object Streams {
   def foreachBatchBm25(spark: SparkSession, sfDir: String): DataFrame = {
     // counters are written LAST, so their marker commits all four
     val Seq(t, l, d, g) = foldBatches(spark, "s18", sfDir,
-        docBatches(spark, sfDir, "docs_split_v1", "doc_id", "text"),
+        docBatches(spark, sfDir, "doc_id", "text"),
         "tf", "len", "df", "g") { (batch, prev, next) =>
       val tfB = batch
         .select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
@@ -1533,7 +1543,7 @@ object Streams {
   def foreachBatchSimpson(spark: SparkSession, sfDir: String): DataFrame =
     graft.ext.TextAnalysis.simpsonFromCells(
       foldTable(spark, "s21", sfDir,
-          docBatches(spark, sfDir, "docs_split_meta_v1", "source", "lang"),
+          docBatches(spark, sfDir, "source", "lang"),
           "cells") { (batch, prev) =>
         sumMerge(prev,
           batch.groupBy(col("source"), col("lang")).agg(count(lit(1)).as("n")),
@@ -1554,7 +1564,7 @@ object Streams {
   def foreachBatchGini(spark: SparkSession, sfDir: String): DataFrame =
     graft.ext.TextAnalysis.giniFromFreq(
       foldTable(spark, "s27", sfDir,
-          docBatches(spark, sfDir, "docs_split_len_v1", "source", "n_chars"),
+          docBatches(spark, sfDir, "source", "n_chars"),
           "freq") { (batch, prev) =>
         sumMerge(prev,
           batch.groupBy(col("source"), col("n_chars").as("v"))
@@ -1604,7 +1614,7 @@ object Streams {
   private def maintainedWordFreq(spark: SparkSession, sfDir: String,
       name: String): DataFrame =
     foldTable(spark, name, sfDir,
-        docBatches(spark, sfDir, "docs_split_text_v1", "source", "text"),
+        docBatches(spark, sfDir, "source", "text"),
         "freq") { (batch, prev) =>
       sumMerge(prev,
         batch.select(col("source"), explode(split(col("text"), " ")).as("w"))

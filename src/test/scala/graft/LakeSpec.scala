@@ -100,23 +100,24 @@ class LakeSpec extends SparkSpec {
     import java.util.concurrent.{Callable, Executors, TimeUnit}
     val builds = new java.util.concurrent.atomic.AtomicInteger(0)
     val name = s"testct_${java.util.UUID.randomUUID().toString.take(8)}"
+    val derived = Lake.Derived(name) { (_, _) =>
+      builds.incrementAndGet()
+      Thread.sleep(300)
+      Lake.table(spark, SfDir, "region")
+    }
     val expected = Lake.table(spark, SfDir, "region").count()
     val pool = Executors.newFixedThreadPool(4)
     try {
       val futures = (1 to 4).map { _ =>
         pool.submit(new Callable[Long] {
-          def call(): Long = Lake.materialize(spark, SfDir, name) {
-            builds.incrementAndGet()
-            Thread.sleep(300)
-            Lake.table(spark, SfDir, "region")
-          }.count()
+          def call(): Long = Lake.materialize(spark, SfDir, derived).count()
         })
       }
       futures.foreach(f =>
         assert(f.get() == expected, "a contended caller saw a wrong result"))
       assert(builds.get() == 1,
         s"build ran ${builds.get()} times under contention — must be exactly once")
-      assert(Lake.isBuilt(spark, SfDir, name), "isBuilt must see the built marker")
+      assert(Lake.isBuilt(spark, SfDir, derived), "isBuilt must see the built marker")
     } finally {
       pool.shutdown()
       pool.awaitTermination(30, TimeUnit.SECONDS)
@@ -131,25 +132,27 @@ class LakeSpec extends SparkSpec {
     val id = java.util.UUID.randomUUID().toString.take(8)
     val aBuilding = new CountDownLatch(1)
     val bBuilt = new CountDownLatch(1)
+    @volatile var sawB = false
+    val derivedA = Lake.Derived(s"testlka_$id") { (_, _) =>
+      aBuilding.countDown()
+      sawB = bBuilt.await(30, TimeUnit.SECONDS)
+      Lake.table(spark, SfDir, "region")
+    }
+    val derivedB = Lake.Derived(s"testlkb_$id") { (_, _) =>
+      Lake.table(spark, SfDir, "nation")
+    }
     val pool = Executors.newFixedThreadPool(2)
     try {
       val a = pool.submit(new Callable[Boolean] {
         def call(): Boolean = {
-          var sawB = false
-          Lake.materialize(spark, SfDir, s"testlka_$id") {
-            aBuilding.countDown()
-            sawB = bBuilt.await(30, TimeUnit.SECONDS)
-            Lake.table(spark, SfDir, "region")
-          }
+          Lake.materialize(spark, SfDir, derivedA)
           sawB
         }
       })
       assert(aBuilding.await(30, TimeUnit.SECONDS), "A's build never started")
       val b = pool.submit(new Callable[Long] {
         def call(): Long = {
-          val n = Lake.materialize(spark, SfDir, s"testlkb_$id") {
-            Lake.table(spark, SfDir, "nation")
-          }.count()
+          val n = Lake.materialize(spark, SfDir, derivedB).count()
           bBuilt.countDown()
           n
         }
@@ -159,6 +162,107 @@ class LakeSpec extends SparkSpec {
     } finally {
       pool.shutdown()
       pool.awaitTermination(60, TimeUnit.SECONDS)
+    }
+  }
+
+  private def rmTree(f: java.io.File): Unit = {
+    Option(f.listFiles()).foreach(_.foreach(rmTree))
+    f.delete()
+  }
+
+  /** Temp dirs a build left beside `target`. */
+  private def tempDirsOf(target: String): Seq[String] = {
+    val t = new java.io.File(target)
+    Option(t.getParentFile.listFiles()).toSeq.flatten.map(_.getName)
+      .filter(_.startsWith(t.getName + "._tmp-"))
+  }
+
+  test("a build that loses the commit race reads the winner's table and leaves no temp dir") {
+    // Another writer commits a complete table (nation, with _SUCCESS)
+    // at the target while this build runs; the build's own frame
+    // (region) must not overwrite it.
+    val name = s"testrace_${java.util.UUID.randomUUID().toString.take(8)}"
+    lazy val derived: Lake.Derived = Lake.Derived(name) { (s, dir) =>
+      Lake.table(s, dir, "nation").write
+        .parquet(Lake.materializedPath(s, dir, derived))
+      Lake.table(s, dir, "region")
+    }
+    val target = Lake.materializedPath(spark, SfDir, derived)
+    try {
+      val got = Lake.materialize(spark, SfDir, derived)
+      assert(got.columns.toSeq == Lake.table(spark, SfDir, "nation").columns.toSeq,
+        s"the loser overwrote the winner: ${got.columns.toSeq}")
+      assert(got.count() == Lake.table(spark, SfDir, "nation").count())
+      assert(tempDirsOf(target).isEmpty, s"temp dirs left: ${tempDirsOf(target)}")
+    } finally rmTree(new java.io.File(target))
+  }
+
+  test("a build whose job throws leaves no target and no temp dir; the next call builds") {
+    @volatile var fail = true
+    val name = s"testthrow_${java.util.UUID.randomUUID().toString.take(8)}"
+    val derived = Lake.Derived(name) { (s, dir) =>
+      val region = Lake.table(s, dir, "region")
+      if (fail) region.withColumn("boom",
+        when(col("r_regionkey") >= 0, raise_error(lit("planted build failure")))
+          .otherwise(lit(1)))
+      else region
+    }
+    val target = Lake.materializedPath(spark, SfDir, derived)
+    try {
+      intercept[Exception](Lake.materialize(spark, SfDir, derived))
+      assert(!new java.io.File(target).exists(), s"a failed build left $target")
+      assert(tempDirsOf(target).isEmpty, s"temp dirs left: ${tempDirsOf(target)}")
+      assert(!Lake.isBuilt(spark, SfDir, derived))
+      fail = false
+      assert(Lake.materialize(spark, SfDir, derived).count() ==
+        Lake.table(spark, SfDir, "region").count())
+      assert(Lake.isBuilt(spark, SfDir, derived))
+      assert(tempDirsOf(target).isEmpty, s"temp dirs left: ${tempDirsOf(target)}")
+    } finally rmTree(new java.io.File(target))
+  }
+
+  test("a torn table left at the target without _SUCCESS is replaced, not read") {
+    val name = s"testtorn_${java.util.UUID.randomUUID().toString.take(8)}"
+    val derived = Lake.Derived(name)((s, dir) => Lake.table(s, dir, "region"))
+    val target = Lake.materializedPath(spark, SfDir, derived)
+    try {
+      Lake.table(spark, SfDir, "nation").write.parquet(target)
+      assert(new java.io.File(target, "_SUCCESS").delete())
+      val got = Lake.materialize(spark, SfDir, derived)
+      assert(got.columns.toSeq == Lake.table(spark, SfDir, "region").columns.toSeq,
+        s"the torn table was read: ${got.columns.toSeq}")
+      assert(got.count() == Lake.table(spark, SfDir, "region").count())
+      assert(tempDirsOf(target).isEmpty, s"temp dirs left: ${tempDirsOf(target)}")
+    } finally rmTree(new java.io.File(target))
+  }
+
+  test("on a cold lake s35 then s30 both run: their documents splits are different tables") {
+    // A fresh copy of the source is a new slug, hence a cold lake.
+    import java.nio.file.{Files, Path, StandardCopyOption}
+    import scala.jdk.CollectionConverters._
+    val dir = Files.createTempDirectory("graft-coldlake").toString
+    def copyTree(src: Path, dst: Path): Unit = {
+      val walk = Files.walk(src)
+      try walk.iterator.asScala.foreach { p =>
+        val q = dst.resolve(src.relativize(p).toString)
+        if (Files.isDirectory(p)) Files.createDirectories(q)
+        else Files.copy(p, q, StandardCopyOption.COPY_ATTRIBUTES)
+      } finally walk.close()
+    }
+    copyTree(java.nio.file.Paths.get(SfDir), java.nio.file.Paths.get(dir))
+    val slug = dir.replaceAll("[^A-Za-z0-9.]", "_")
+    val streamTag = Integer.toHexString(dir.hashCode)
+    try {
+      Seq("s35_stream_g2_maintain", "s30_stream_hapax").foreach { q =>
+        SparkEntry.queries(q)(spark, dir).collect()
+      }
+    } finally {
+      Lake.dropCachesFor(dir)
+      Option(new java.io.File("/tmp/graft-lake").listFiles()).toSeq.flatten
+        .filter(_.getName.contains("_" + slug + "_")).foreach(rmTree)
+      Option(new java.io.File("/tmp/graft-stream").listFiles()).toSeq.flatten
+        .filter(_.getName.endsWith("_" + streamTag)).foreach(rmTree)
+      rmTree(new java.io.File(dir))
     }
   }
 

@@ -8,8 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.tools.Time
 
-/** One session factory, and a probe tool that rejects a bad command
-  * line with its usage text instead of a stack trace.
+/** One session factory, one declaration per lake table, and a probe
+  * tool that rejects a bad command line with its usage text instead
+  * of a stack trace.
   */
 class ToolsSpec extends AnyFunSuite {
 
@@ -43,6 +44,43 @@ class ToolsSpec extends AnyFunSuite {
         .filter(_._2 > 0)
       assert(hits == Seq("graft/streaming/Streams.scala" -> 1), s"$s sites: $hits")
     }
+  }
+
+  test("lake tables are declared once: no string names a table at a Lake call") {
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"run from the repository root: $root")
+    val sources = {
+      val walk = Files.walk(root)
+      try walk.iterator.asScala.filter(_.toString.endsWith(".scala")).toSeq
+        .map(p => root.relativize(p).toString -> Files.readString(p))
+      finally walk.close()
+    }
+    // the table is the third argument; the first two are the session
+    // and the source dir
+    val named = ("""Lake\.(materialize|isBuilt|materializedPath)\(""" +
+      """\s*[^,()]+,\s*[^,()]+,\s*s?"""").r
+    val hits = sources.flatMap { case (p, text) =>
+      named.findAllIn(text).map(m => s"$p: $m") }
+    assert(hits.isEmpty, s"string-named Lake calls: $hits")
+    val dedup = sources.collectFirst {
+      case (p, text) if p == "graft/ext/Dedup.scala" => text }.get
+    assert(!dedup.contains("buildLock"), "Dedup.buildLock is back")
+  }
+
+  test("after every query module loads, each lake table name and keyed prefix is declared once") {
+    // loading every module declares every table; a name or keyed prefix
+    // declared twice would throw here
+    graft.SparkEntry.queries
+    // a second body for a declared name, or for a name a keyed family
+    // computes, is refused
+    Seq("tfidf_tf", "x05_shingles", "x05_shingles_gated_cap50_v1", "x18_ngram_pairs_t50",
+      "fragmented_events_v2", "lsh_buckets_12_16", "docs_split_doc_id_text_v1",
+      "docs_split_").foreach { n =>
+      intercept[IllegalArgumentException](
+        graft.sources.Lake.Derived(n)((s, _) => s.emptyDataFrame))
+    }
+    intercept[IllegalArgumentException](graft.sources.Lake.Derived
+      .keyed("lsh_", (k: Int) => k.toString)((_, s, _) => s.emptyDataFrame))
   }
 
   test("Time parses the single-arm and the conf-arm forms") {
