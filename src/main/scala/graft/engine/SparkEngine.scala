@@ -54,12 +54,21 @@ class SparkEngine(provider: () => SparkSession) {
   /** Reference `warm` flag: was the engine already initialized? */
   def isWarm: Boolean = session.isDefined
 
+  /** The session, built by `provider` on first use. A session from
+    * [[Tuning.session]] (what [[SparkEngine.local]] uses) already has
+    * the [[graft.functions.GraftExtensions]]: the native functions and
+    * the [[ConstantRefs]] rule that lets a query differing from an
+    * earlier one only in a constant reuse its compiled code.
+    * `ensureRegistered` remains only for [[SparkEngine.wrap]]ped
+    * sessions the library did not build: they get the functions, but
+    * not the rule, which Spark takes only at session construction
+    * (through `withExtensions` or `spark.sql.extensions`).
+    */
   private def obtain(): SparkSession = this.synchronized {
     session.getOrElse {
       val s = provider()
-      // the engine's SQL dialect includes the library's native
-      // functions (cosine_sim) regardless of how the caller built the
-      // session — idempotent, so conf-driven registration composes
+      // idempotent, so a session that already has the extensions
+      // is left as it is
       graft.functions.GraftExtensions.ensureRegistered(s)
       session = Some(s)
       s

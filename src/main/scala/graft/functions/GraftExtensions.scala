@@ -4,23 +4,31 @@ import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-/** SQL-surface registration for the library's native expressions —
-  * the last rung of the custom-operator ladder (SURVEY §7.3): a
-  * `Column`-API expression becomes available to pure-SQL callers of
-  * the engine (reference app.py:44-51 accepts arbitrary SQL, so a
-  * user migrating a SQL workload needs the function IN the dialect,
-  * not only in Scala).
+/** The library's session extensions: SQL-surface registration for its
+  * native expressions — the last rung of the custom-operator ladder
+  * (SURVEY §7.3): a `Column`-API expression becomes available to
+  * pure-SQL callers of the engine (reference app.py:44-51 accepts
+  * arbitrary SQL, so a user migrating a SQL workload needs the function
+  * IN the dialect, not only in Scala) — plus the physical rule
+  * [[graft.engine.ConstantRefs]], which keeps primitive constants out of
+  * generated code so served queries that differ only in a constant
+  * reuse one compiled class.
   *
-  * Two entry points, same registry row:
+  * Entry points:
+  *  - `.withExtensions(new GraftExtensions)`: every session the library
+  *    builds ([[graft.engine.Tuning.session]]);
   *  - conf-driven: `spark.sql.extensions=graft.functions.GraftExtensions`
-  *    (or `.withExtensions(new GraftExtensions)`) for sessions the
-  *    library does not construct;
-  *  - imperative: [[GraftExtensions.ensureRegistered]] for an existing
-  *    session (idempotent) — what [[graft.engine.SparkEngine]] uses.
+  *    for sessions the library does not construct;
+  *  - imperative: [[GraftExtensions.ensureRegistered]] adds the functions
+  *    (not the rule, which Spark only takes at session construction) to
+  *    an existing session (idempotent) — what [[graft.engine.SparkEngine]]
+  *    uses for a session it was handed.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit =
+  override def apply(ext: SparkSessionExtensions): Unit = {
     GraftExtensions.entries.foreach(ext.injectFunction)
+    ext.injectColumnar(_ => graft.engine.ConstantRefs.Columnar)
+  }
 }
 
 object GraftExtensions {

@@ -127,6 +127,31 @@ class FunctionsSpec extends SparkSpec {
     }
   }
 
+  test("the constants rule is a columnar rule of both the conf-driven session and a Tuning.session one") {
+    // Tuning.session builds with .withExtensions(new GraftExtensions),
+    // the same extensions the suite's session takes from its conf; a
+    // fresh session over the shared context shows what the builder
+    // alone adds (the shared context's conf adds them too, so the
+    // fresh session must hold the rule at least once)
+    import org.apache.spark.sql.SparkSession
+    val rule = graft.engine.ConstantRefs.Columnar
+    assert(spark.sessionState.columnarRules.contains(rule))
+    val prior = spark
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    try {
+      val fresh = graft.engine.Tuning.session()
+      assert(fresh ne prior, "Tuning.session returned the old session")
+      assert(fresh.sessionState.columnarRules.contains(rule))
+      assert(fresh.sql("SELECT sq_l2_dist(array(1.0D), array(3.0D)) AS d")
+        .collect()(0).getDouble(0) == 4.0)
+    } finally {
+      SparkSession.setActiveSession(prior)
+      SparkSession.setDefaultSession(prior)
+      prior.sparkContext.setLogLevel("ERROR")
+    }
+  }
+
   test("native cosine rejects non-array inputs at analysis time") {
     val e = Lake.table(spark, SfDir, "embeddings")
     intercept[Exception] {

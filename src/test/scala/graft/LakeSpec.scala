@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import graft.SparkSpec.rmTree
 import graft.sources.Lake
 
 /** Lake-level contracts: conf hygiene, metadata row counts, and the
@@ -121,6 +122,7 @@ class LakeSpec extends SparkSpec {
     } finally {
       pool.shutdown()
       pool.awaitTermination(30, TimeUnit.SECONDS)
+      rmTree(new java.io.File(Lake.materializedPath(spark, SfDir, derived)))
     }
   }
 
@@ -162,12 +164,9 @@ class LakeSpec extends SparkSpec {
     } finally {
       pool.shutdown()
       pool.awaitTermination(60, TimeUnit.SECONDS)
+      Seq(derivedA, derivedB).foreach(d =>
+        rmTree(new java.io.File(Lake.materializedPath(spark, SfDir, d))))
     }
-  }
-
-  private def rmTree(f: java.io.File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(rmTree))
-    f.delete()
   }
 
   /** Temp dirs a build left beside `target`. */
@@ -250,20 +249,11 @@ class LakeSpec extends SparkSpec {
       } finally walk.close()
     }
     copyTree(java.nio.file.Paths.get(SfDir), java.nio.file.Paths.get(dir))
-    val slug = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val streamTag = Integer.toHexString(dir.hashCode)
     try {
       Seq("s35_stream_g2_maintain", "s30_stream_hapax").foreach { q =>
         SparkEntry.queries(q)(spark, dir).collect()
       }
-    } finally {
-      Lake.dropCachesFor(dir)
-      Option(new java.io.File("/tmp/graft-lake").listFiles()).toSeq.flatten
-        .filter(_.getName.contains("_" + slug + "_")).foreach(rmTree)
-      Option(new java.io.File("/tmp/graft-stream").listFiles()).toSeq.flatten
-        .filter(_.getName.endsWith("_" + streamTag)).foreach(rmTree)
-      rmTree(new java.io.File(dir))
-    }
+    } finally SparkSpec.dropCorpusCopy(dir)
   }
 
   test("overlapping withConf scopes on one session keep the value until the last closes") {
@@ -355,23 +345,25 @@ class LakeSpec extends SparkSpec {
     val base = Lake.rawEvents(spark, SfDir).select("event_id", "ts").limit(50)
     val expect = base.select(expr("unix_micros(ts)")).collect().map(_.getLong(0)).sorted
     val root = s"/tmp/graft-enc-${java.util.UUID.randomUUID().toString.take(8)}"
-    // µs-LTZ (our own derived-lake layout)
-    Lake.withConf(spark,
-      "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS") {
-      base.write.parquet(s"$root/ltz/events.parquet")
-    }
-    // µs-NTZ (the r10+ provisioned layout)
-    base.withColumn("ts", col("ts").cast(TimestampNTZType))
-      .write.parquet(s"$root/ntz/events.parquet")
-    // nanos-as-long: what the legacy reader yields for TIMESTAMP(NANOS)
-    base.withColumn("ts", expr("unix_micros(ts) * 1000L"))
-      .write.parquet(s"$root/nanos/events.parquet")
-    Seq("ltz", "ntz", "nanos").foreach { enc =>
-      val got = Lake.rawEvents(spark, s"$root/$enc")
-      assert(got.schema("ts").dataType == TimestampType, s"$enc dtype")
-      val vals = got.select(expr("unix_micros(ts)")).collect().map(_.getLong(0)).sorted
-      assert(vals.sameElements(expect), s"$enc values drifted")
-    }
+    try {
+      // µs-LTZ (our own derived-lake layout)
+      Lake.withConf(spark,
+        "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS") {
+        base.write.parquet(s"$root/ltz/events.parquet")
+      }
+      // µs-NTZ (the r10+ provisioned layout)
+      base.withColumn("ts", col("ts").cast(TimestampNTZType))
+        .write.parquet(s"$root/ntz/events.parquet")
+      // nanos-as-long: what the legacy reader yields for TIMESTAMP(NANOS)
+      base.withColumn("ts", expr("unix_micros(ts) * 1000L"))
+        .write.parquet(s"$root/nanos/events.parquet")
+      Seq("ltz", "ntz", "nanos").foreach { enc =>
+        val got = Lake.rawEvents(spark, s"$root/$enc")
+        assert(got.schema("ts").dataType == TimestampType, s"$enc dtype")
+        val vals = got.select(expr("unix_micros(ts)")).collect().map(_.getLong(0)).sorted
+        assert(vals.sameElements(expect), s"$enc values drifted")
+      }
+    } finally rmTree(new java.io.File(root))
   }
 
   test("c11 approx_count_distinct is within 5% of exact per event_type") {

@@ -154,7 +154,10 @@ class ServerSpec extends SparkSpec {
         assert(node.get("records").get(0).get("n").asLong == expected,
           s"cold-start result mismatch: $body")
       }
-    } finally HttpFront.stop(server)
+    } finally {
+      HttpFront.stop(server)
+      SparkSpec.dropCorpusCopy(dir)
+    }
   }
 
   test("health probe reports ok and the warm flag flips after first use") {

@@ -35,4 +35,24 @@ object SparkSpec {
     s.sparkContext.setLogLevel("ERROR")
     s
   }
+
+  def rmTree(f: java.io.File): Unit = {
+    Option(f.listFiles()).foreach(_.foreach(rmTree))
+    f.delete()
+  }
+
+  /** Deletes a copied corpus `dir` with the lake tables and stream
+    * outputs built from it (the lake names them by the path's slug,
+    * the stream outputs by its hash).
+    */
+  def dropCorpusCopy(dir: String): Unit = {
+    graft.sources.Lake.dropCachesFor(dir)
+    val slug = dir.replaceAll("[^A-Za-z0-9.]", "_")
+    val streamTag = Integer.toHexString(dir.hashCode)
+    Option(new java.io.File("/tmp/graft-lake").listFiles()).toSeq.flatten
+      .filter(_.getName.contains("_" + slug + "_")).foreach(rmTree)
+    Option(new java.io.File("/tmp/graft-stream").listFiles()).toSeq.flatten
+      .filter(_.getName.endsWith("_" + streamTag)).foreach(rmTree)
+    rmTree(new java.io.File(dir))
+  }
 }

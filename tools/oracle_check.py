@@ -7,7 +7,7 @@ match/mismatch so oracle drift is caught before the driver runs.
 
 Usage: python3 tools/oracle_check.py [sfDir] [verifyDir]
 """
-import json, os, sys, math
+import atexit, json, os, shutil, sys, math, tempfile
 import duckdb
 import pandas as pd
 
@@ -25,7 +25,12 @@ if _recorded and SF != _recorded:
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
 
-con = duckdb.connect()
+# Bounded memory with a private spill directory: DuckDB's defaults (80%
+# of RAM, spill to ./.tmp) ran the x239/x259/x285 oracles out of memory
+# and then out of spill space at sf0.1 on a 15 GB machine.
+SPILL = tempfile.mkdtemp(prefix="graft-oracle-spill-", dir="/tmp")
+atexit.register(shutil.rmtree, SPILL, ignore_errors=True)
+con = duckdb.connect(config={"memory_limit": "6GB", "temp_directory": SPILL})
 for t in TABLES:
     con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF}/{t}.parquet'")
 
