@@ -3,6 +3,7 @@ package graft.cli
 import org.apache.spark.sql.SparkSession
 
 import graft.engine.{EngineException, QueryRequest, SparkEngine}
+import graft.server.HttpFront
 import graft.sources.Lake
 
 /** CLI client — SURVEY §2.A A6-A9 (reference src/quack.py): `-q` for
@@ -32,7 +33,12 @@ object Quack {
     // parameter is public — 4 is the smallest width where "x..." fits
     val trunc = math.max(truncate, 4)
     def cell(v: Any): String = {
-      val s = v match { case null => "NULL"; case x => x.toString }
+      val s = v match {
+        case null => "NULL"
+        // a struct, array or map cell prints as the wire sends it
+        case x: Iterable[_] => HttpFront.mapper.writeValueAsString(x)
+        case x => x.toString
+      }
       if (s.length > trunc) s.substring(0, trunc - 3) + "..." else s
     }
     val rows = shown.map(r => columns.map(c => cell(r.getOrElse(c, null))))

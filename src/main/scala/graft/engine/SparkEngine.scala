@@ -1,8 +1,10 @@
 package graft.engine
 
+import java.time.{Instant, LocalDateTime, ZoneOffset}
 import java.time.format.DateTimeFormatter
-import java.time.ZoneOffset
 import java.util.UUID
+
+import scala.collection.immutable.VectorMap
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
@@ -135,32 +137,53 @@ object SparkEngine {
   /** quack.py:26 terminal cap, for the CLI renderer. */
   val MaxRowsInTerminal = 10
 
+  private val tsSeconds = DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss")
+  private val tsMicros = DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss.SSSSSS")
+
+  private def formatLocal(t: LocalDateTime): String =
+    (if (t.getNano == 0) tsSeconds else tsMicros).format(t)
+
   /** `str(datetime64)`-compatible format: no trailing zeros beyond
     * seconds unless sub-second precision exists (app.py:64-65 contract,
     * normalized per SURVEY §7.4.2). Session TZ is pinned UTC.
     */
-  private val tsSeconds = DateTimeFormatter
-    .ofPattern("yyyy-MM-dd HH:mm:ss").withZone(ZoneOffset.UTC)
-  private val tsMicros = DateTimeFormatter
-    .ofPattern("yyyy-MM-dd HH:mm:ss.SSSSSS").withZone(ZoneOffset.UTC)
+  def formatTimestamp(ts: java.sql.Timestamp): String =
+    formatLocal(LocalDateTime.ofInstant(ts.toInstant, ZoneOffset.UTC))
 
-  def formatTimestamp(ts: java.sql.Timestamp): String = {
-    val instant = ts.toInstant
-    if (instant.getNano == 0) tsSeconds.format(instant) else tsMicros.format(instant)
-  }
-
-  /** A4: row -> column->value map; timestamps become strings so the
-    * record is JSON-representable (app.py:61-67).
+  /** A4: row -> column->value record (app.py:61-67). The one place a
+    * Spark value becomes a wire value: it walks the schema, so a value
+    * gets the same form at any depth, and returns only what the JSON
+    * codec writes natively:
+    *  - TIMESTAMP (as UTC) and TIMESTAMP_NTZ (as its local date-time)
+    *    by [[formatTimestamp]]'s rule;
+    *  - DATE as `yyyy-MM-dd`; intervals in their ISO-8601 (`Duration`,
+    *    `Period`) or Spark string form; a VARIANT as its JSON text;
+    *  - a struct as a map in field order, an array as a sequence, a
+    *    map as an object keyed by each encoded key's string form;
+    *  - anything else as is (numbers, decimals, strings, booleans,
+    *    NaN/±Infinity, which Jackson writes as strings, and binary,
+    *    which it writes as base64).
     */
   def serializeRow(schema: StructType, row: Row): Map[String, Any] =
-    schema.fields.zipWithIndex.map { case (f, i) =>
-      val v = if (row.isNullAt(i)) null else f.dataType match {
-        case TimestampType => formatTimestamp(row.getTimestamp(i))
-        case DateType      => row.getDate(i).toString
-        case _             => row.get(i)
-      }
-      f.name -> v
-    }.toMap
+    VectorMap.from(schema.fields.iterator.zipWithIndex.map { case (f, i) =>
+      f.name -> encode(f.dataType, row.get(i))
+    })
+
+  private def encode(t: DataType, v: Any): Any = if (v == null) null else t match {
+    case TimestampType => v match {
+      case ts: java.sql.Timestamp => formatTimestamp(ts)
+      case i: Instant => formatLocal(LocalDateTime.ofInstant(i, ZoneOffset.UTC))
+    }
+    case TimestampNTZType => formatLocal(v.asInstanceOf[LocalDateTime])
+    case DateType | _: DayTimeIntervalType | _: YearMonthIntervalType |
+        CalendarIntervalType | VariantType => v.toString
+    case s: StructType => serializeRow(s, v.asInstanceOf[Row])
+    case ArrayType(et, _) => v.asInstanceOf[collection.Seq[Any]].map(encode(et, _))
+    case MapType(kt, vt, _) => v.asInstanceOf[collection.Map[Any, Any]].map {
+      case (k, x) => String.valueOf(encode(kt, k)) -> encode(vt, x)
+    }
+    case _ => v
+  }
 
   /** Default local engine: one long-lived session from the shared
     * factory, shuffle parallelism sized for local[32] (not the 200

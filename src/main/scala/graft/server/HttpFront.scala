@@ -115,10 +115,12 @@ object HttpFront {
     }
   }
 
-  /** Encode `payload` BEFORE any header is sent, so a value the codec
-    * cannot write (a TIMESTAMP_NTZ or interval result) comes back
-    * in-band as an `errorMessage` with the same status instead of a
-    * closed connection with no response.
+  /** Encode `payload` BEFORE any header is sent, so an encode that
+    * throws comes back in-band as an `errorMessage` with the same
+    * status instead of a closed connection with no response. Records
+    * hold only values the codec writes natively
+    * ([[SparkEngine.serializeRow]]), so this is the safety net, not a
+    * path any SQL type takes.
     */
   private def respond(ex: HttpExchange, status: Int, payload: Any): Unit = {
     val bytes =

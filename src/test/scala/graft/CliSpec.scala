@@ -30,6 +30,19 @@ class CliSpec extends SparkSpec {
     assert(err.toString("UTF-8").contains("errorMessage:"))
   }
 
+  test("runWith renders struct and array cells as the wire's JSON") {
+    val out = new java.io.ByteArrayOutputStream()
+    Console.withOut(new java.io.PrintStream(out, true, "UTF-8")) {
+      Quack.runWith(SparkEngine.wrap(spark), spark,
+        query = Some("SELECT 7 AS n, named_struct('a', 1, 'b', 'x') AS s, " +
+          "array(TIMESTAMP '2024-01-05 10:00:00.5') AS ts"),
+        limit = 10, debug = false, sfDir = SfDir)
+    }
+    val s = out.toString("UTF-8")
+    assert(s.contains("""|7|{"a":1,"b":"x"}|["2024-01-05 10:00:00.500000"]|"""),
+      s"cells not rendered as JSON in:\n$s")
+  }
+
   test("renderTable renders columns in schema order with a row cap") {
     val cols = Seq("b", "a")
     val recs = (1 to 12).map(i => Map[String, Any]("a" -> i, "b" -> s"v$i"))
