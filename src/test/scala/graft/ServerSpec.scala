@@ -5,7 +5,7 @@ import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 
 import com.fasterxml.jackson.databind.ObjectMapper
 
-import graft.engine.SparkEngine
+import graft.engine.{QueryMetadata, QueryRequest, QueryResponse, SparkEngine}
 import graft.server.HttpFront
 
 /** HTTP front wire contract: envelope fields, in-band error surface,
@@ -74,6 +74,30 @@ class ServerSpec extends SparkSpec {
       assert(status == 200)
       assert(mapper.readTree(body).get("records").get(0).get("one").asInt == 1)
     }
+  }
+
+  test("a result the codec cannot encode comes back in-band and the server keeps serving") {
+    // No SQL type reaches the codec unencodable any more (the case
+    // above), so an engine hands back a value it has no serializer for
+    // to exercise HttpFront's encode safety net.
+    val engine = new SparkEngine(() => spark) {
+      override def execute(req: QueryRequest): QueryResponse =
+        if (req.q == "unencodable")
+          QueryResponse(QueryMetadata(0L, 0L, "id", req.q, warm = true),
+            Seq(Map("v" -> new Object)), Seq("v"))
+        else super.execute(req)
+    }
+    val server = HttpFront.start(engine, spark, SfDir, port = 0)
+    try {
+      val port = server.getAddress.getPort
+      val (status, body) = post(port, """{"q": "unencodable"}""")
+      assert(status == 200)
+      assert(mapper.readTree(body).get("errorMessage").asText
+        .startsWith("result encoding failed"), body)
+      val (status2, body2) = post(port, """{"q": "SELECT 1 AS one"}""")
+      assert(status2 == 200)
+      assert(mapper.readTree(body2).get("records").get(0).get("one").asInt == 1)
+    } finally HttpFront.stop(server)
   }
 
   test("transport errors are HTTP-level: bad JSON 400, GET 405, oversize 413") {
