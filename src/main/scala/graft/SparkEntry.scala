@@ -33,7 +33,7 @@ import graft.sources.{Lake, Layout}
   *                        similarity/ANN + recall gates, text
   *                        analysis, TF-IDF, multimodal, curation/
   *                        composition, PII redaction, contamination
-  *                        screening incl. bloom-accelerated +
+  *                        screening +
   *                        removal, RAG chunking, training-order
   *                        shuffle, quality-gate ensemble, sampling/
   *                        mixing, k-means, BPE pair counting,

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.BloomExpressions
 import graft.sources.Lake
 import graft.sources.Lake.Derived
 
@@ -688,17 +689,7 @@ object Dedup {
     * contribute no shingles (and cannot be flagged).
     */
   def contaminationScreen(corpus: DataFrame, bench: DataFrame, n: Int): DataFrame = {
-    def sh(df: DataFrame) = df.select(col("doc_id"),
-      explode(when(size(tokens) >= n, shingles(n))
-        .otherwise(array().cast("array<string>"))).as("g"))
-    val c = sh(corpus).as("c")
-    val b = sh(bench)
-      .select(col("doc_id").as("b_id"), col("g").as("bg")).as("b")
-    val hits = c.join(broadcast(b),
-        col("c.g") === col("b.bg") && col("c.doc_id") =!= col("b.b_id"))
-      .select(col("c.doc_id").as("doc_id"), col("c.g").as("g"))
-      .distinct()
-      .groupBy(col("doc_id")).agg(count(lit(1)).as("n_shared"))
+    val hits = shingleHits(shingleRows(corpus, n), bench, n)
     corpus.select(col("doc_id"))
       .join(hits, Seq("doc_id"), "left")
       .select(col("doc_id"),
@@ -725,18 +716,9 @@ object Dedup {
     */
   def contaminationFraction(corpus: DataFrame, bench: DataFrame, n: Int,
       threshold: Double): DataFrame = {
-    def sh(df: DataFrame) = df.select(col("doc_id"),
-      explode(when(size(tokens) >= n, shingles(n))
-        .otherwise(array().cast("array<string>"))).as("g"))
-    val c = sh(corpus)
+    val c = shingleRows(corpus, n)
     val total = c.groupBy(col("doc_id")).agg(count(lit(1)).as("n_shingles"))
-    val b = sh(bench)
-      .select(col("doc_id").as("b_id"), col("g").as("bg"))
-    val hits = c.as("c").join(broadcast(b.as("b")),
-        col("c.g") === col("b.bg") && col("c.doc_id") =!= col("b.b_id"))
-      .select(col("c.doc_id").as("doc_id"), col("c.g").as("g"))
-      .distinct()
-      .groupBy(col("doc_id")).agg(count(lit(1)).as("n_shared"))
+    val hits = shingleHits(c, bench, n)
     val frac = coalesce(col("n_shared"), lit(0L)).cast("double") /
       greatest(coalesce(col("n_shingles"), lit(0L)), lit(1L))
     corpus.select(col("doc_id"))
@@ -749,131 +731,44 @@ object Dedup {
         (frac >= threshold).as("flagged"))
   }
 
-  // --- bloom-filter membership pruning ---------------------------------
-  // Spark's own runtime row-level filtering injects exactly this pair
-  // (BloomFilterAggregate + BloomFilterMightContain) around shuffle
-  // joins; here the same native expressions power EXPLICIT membership
-  // pre-filters for pipeline operators where the small side is known
-  // up front. The sketch is a bounded few-MB binary whatever the big
-  // side's size, so "aggregate once, embed as a literal, probe
-  // map-side" is the scale pattern: the big relation never shuffles
-  // rows the bloom already rules out, and since blooms have no false
-  // negatives an exact verify step downstream sees every true match —
-  // output stays EXACTLY equal to the unpruned operator, which is what
-  // keeps these queries oracle-able.
-
-  /** Optimal bloom bit count for `expectedItems` at false-positive
-    * rate `fpp` (the standard -n·ln p/ln²2). Kept under Spark's
-    * default runtime-filter creation cap (64M bits / 8 MB) for the
-    * registered defaults.
-    */
-  private[graft] def bloomBits(expectedItems: Long, fpp: Double): Long =
-    math.ceil(-expectedItems.toDouble * math.log(fpp) /
-      (math.log(2) * math.log(2))).toLong
-
-  /** Aggregate `c`'s values (xxhash64-hashed) into a serialized bloom
-    * filter. One map-side-combining aggregate over the frame, then a
-    * single bounded driver read of the ~MB sketch (the same sanctioned
-    * 1-row roundtrip as the engine's limit-bounded collect) — NOT a
-    * collect of the data. Returns null for an empty frame.
-    */
-  def bloomFilterBytes(df: DataFrame, c: Column,
-      expectedItems: Long, fpp: Double = 0.01): Array[Byte] = {
-    import org.apache.spark.sql.GraftExpressionBridge
-    import org.apache.spark.sql.catalyst.expressions.Literal
-    import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
-    val agg = new BloomFilterAggregate(
-      GraftExpressionBridge.expression(xxhash64(c)),
-      Literal(expectedItems), Literal(bloomBits(expectedItems, fpp)))
-    val row = df.agg(
-      GraftExpressionBridge.column(agg.toAggregateExpression()).as("bloom"))
-      .head()
-    if (row.isNullAt(0)) null else row.getAs[Array[Byte]](0)
-  }
-
-  /** Membership probe against a bloom built by [[bloomFilterBytes]]:
-    * true when `c` MIGHT be in the built set (false positives at the
-    * built fpp; never false negatives). The sketch rides the plan as a
-    * literal, so the probe is pure map work on the scan — no join, no
-    * shuffle. A null sketch (empty build side) contains nothing.
-    */
-  def bloomMightContain(bloomBytes: Array[Byte], c: Column): Column =
-    if (bloomBytes == null) lit(false)
-    else {
-      import org.apache.spark.sql.GraftExpressionBridge
-      import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
-      import org.apache.spark.sql.types.BinaryType
-      GraftExpressionBridge.column(new BloomFilterMightContain(
-        Literal(bloomBytes, BinaryType),
-        GraftExpressionBridge.expression(xxhash64(c))))
-    }
-
-  /** (doc_id, g) rows of `df`'s distinct word n-grams — the shared
-    * shape of both contamination screens' sides.
+  /** (doc_id, g) rows of `df`'s distinct word n-grams — both sides of every
+    * contamination screen.
     */
   private def shingleRows(df: DataFrame, n: Int): DataFrame =
     df.select(col("doc_id"),
       explode(when(size(tokens) >= n, shingles(n))
         .otherwise(array().cast("array<string>"))).as("g"))
 
-  /** [[contaminationScreen]] with a bloom pre-filter on the corpus
-    * side — same output EXACTLY (the bloom only admits false
-    * positives, and the exact verify join removes those; false
-    * negatives are impossible), different scale shape: the corpus's
-    * exploded shingle stream is cut to bloom survivors BEFORE any
-    * join or shuffle. That matters precisely when the benchmark side
-    * outgrows a broadcast (a full eval-suite union, not one dataset):
-    * the exact screen then degrades to a shuffled equi-join moving
-    * EVERY corpus shingle, while this variant shuffles only the
-    * ~contaminated + fpp fraction. The verify join is deliberately
-    * unhinted for that reason (Catalyst still auto-broadcasts it at
-    * small scale).
+  /** The one shingle-hit core of the contamination screens (x25, x32,
+    * x36, x60): (doc_id, n_shared) for every corpus doc sharing at
+    * least one distinct n-gram with a benchmark doc other than itself.
+    * `corpusShingles` is [[shingleRows]] of the corpus; the benchmark
+    * side is broadcast, so the corpus is probed against an in-memory
+    * hash set with no shuffle before the per-doc aggregation.
     */
-  def bloomContaminationScreen(corpus: DataFrame, bench: DataFrame,
-      n: Int, expectedBenchShingles: Long = 1L << 20,
-      fpp: Double = 0.01): DataFrame =
-    bloomContaminationScreenFrom(corpus,
-      bloomContaminationBenchShingles(bench, n),
-      n, expectedBenchShingles, fpp)
-
-  /** The (b_id, bg) bench shingle table both
-    * [[bloomContaminationScreenFrom]] consumers read — exposed so
-    * callers can lake-checkpoint it.
-    */
-  def bloomContaminationBenchShingles(bench: DataFrame, n: Int): DataFrame =
-    shingleRows(bench, n).select(col("doc_id").as("b_id"), col("g").as("bg"))
-
-  /** x32/x36's bench 8-gram shingles (bench = doc_id % 20 == 0). */
-  val X32BenchShingles: Derived = Derived("x32_bench_shingles8")((spark, sfDir) =>
-    bloomContaminationBenchShingles(docs(spark, sfDir)
-      .filter(col("doc_id") % 20 === 0).select(col("doc_id"), col("text")), n = 8))
-
-  /** Core of [[bloomContaminationScreen]] over a pre-built
-    * (b_id, bg) bench shingle table. The bench shingles feed TWO
-    * consumers (the bloom aggregate and the verify join), so the
-    * registered query lake-checkpoints them first — like x03's
-    * signature table — which also gives the verify join honest
-    * parquet statistics (auto-broadcast while the bench fits,
-    * shuffled equi-join of bloom survivors when it doesn't; a
-    * raw post-explode frame's inflated size estimate forces the
-    * shuffle path even when tiny).
-    */
-  def bloomContaminationScreenFrom(corpus: DataFrame, benchShingles: DataFrame,
-      n: Int, expectedBenchShingles: Long = 1L << 20,
-      fpp: Double = 0.01): DataFrame = {
-    val bloom = bloomFilterBytes(benchShingles, col("bg"),
-      expectedBenchShingles, fpp)
-    val cands = shingleRows(corpus, n).filter(bloomMightContain(bloom, col("g")))
-    val hits = cands.as("c").join(benchShingles.as("b"),
+  private def shingleHits(corpusShingles: DataFrame, bench: DataFrame,
+      n: Int): DataFrame = {
+    val b = shingleRows(bench, n)
+      .select(col("doc_id").as("b_id"), col("g").as("bg"))
+    corpusShingles.as("c").join(broadcast(b.as("b")),
         col("c.g") === col("b.bg") && col("c.doc_id") =!= col("b.b_id"))
       .select(col("c.doc_id").as("doc_id"), col("c.g").as("g"))
       .distinct()
       .groupBy(col("doc_id")).agg(count(lit(1)).as("n_shared"))
-    corpus.select(col("doc_id"))
-      .join(hits, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("n_shared"), lit(0L)).as("n_shared"),
-        (coalesce(col("n_shared"), lit(0L)) > 0).as("contaminated"))
+  }
+
+  /** x25's registered screen: every document against the
+    * deterministic 5% benchmark slice doc_id % 20 == 0, on 8-grams.
+    * x32 and x36 read it too. Retires `x32_bench_shingles8`, the lake
+    * table x32's former bloom-filtered variant of this screen read.
+    */
+  private def sliceScreen(spark: SparkSession, sfDir: String): DataFrame = {
+    Lake.retireDerived(spark, sfDir, "x32_bench_shingles8")
+    val d = docs(spark, sfDir)
+    contaminationScreen(
+      d.select(col("doc_id"), col("text")),
+      d.filter(col("doc_id") % 20 === 0).select(col("doc_id"), col("text")),
+      n = 8)
   }
 
   /** Incremental-ingest exact dedup: classify each `batch` document
@@ -889,15 +784,15 @@ object Dedup {
     * match a batch doc — bounded by |batch| + fpp·|corpus| — instead
     * of a full corpus shuffle per ingest. The batch itself shuffles
     * once on the normalized key (the in-batch dedup window + the
-    * verify join share it). Exact by the no-false-negative argument
-    * above: the distinct-candidate join confirms every bloom hit.
+    * verify join share it). Exact because a bloom has no false
+    * negatives: the distinct-candidate join confirms every bloom hit.
     */
-  def incrementalDedup(corpus: DataFrame, batch: DataFrame,
-      expectedBatchDocs: Long = 1L << 20, fpp: Double = 0.01): DataFrame = {
+  def incrementalDedup(corpus: DataFrame, batch: DataFrame): DataFrame = {
     val bNorm = batch.select(col("doc_id"), normText.as("norm"))
-    val bloom = bloomFilterBytes(bNorm, col("norm"), expectedBatchDocs, fpp)
+    val bloom = BloomExpressions.build("incrementalDedup", bNorm, col("norm"),
+      expectedItems = 1L << 20)
     val corpusCand = corpus.select(normText.as("norm"))
-      .filter(bloomMightContain(bloom, col("norm")))
+      .filter(BloomExpressions.mightContain(bloom, col("norm")))
       .distinct()
       .withColumn("in_corpus", lit(true))
     val w = Window.partitionBy(col("norm")).orderBy(col("doc_id"))
@@ -1764,14 +1659,8 @@ object Dedup {
     // deterministic 5% slice doc_id % 20 == 0 (standing in for an
     // external eval set), so the overlap semantics are fully
     // SQL-expressible and the oracle is exact.
-    "x25_contamination_screen" -> ((spark, sfDir) => {
-      val d = docs(spark, sfDir)
-      contaminationScreen(
-        d.select(col("doc_id"), col("text")),
-        d.filter(col("doc_id") % 20 === 0).select(col("doc_id"), col("text")),
-        n = 8)
-        .orderBy(col("doc_id"))
-    }),
+    "x25_contamination_screen" -> ((spark, sfDir) =>
+      sliceScreen(spark, sfDir).orderBy(col("doc_id"))),
 
     // CONTAMINATION FRACTION — x25's metric form: the per-doc share of
     // 8-gram shingles overlapping the benchmark sample, thresholded at
@@ -1786,19 +1675,11 @@ object Dedup {
         .orderBy(col("doc_id"))
     }),
 
-    // BLOOM-ACCELERATED contamination screen: identical semantics and
-    // output to x25 (the bloom is a pre-filter with no false
-    // negatives; the exact join removes its false positives), so it
-    // shares x25's oracle verbatim — the point of the variant is the
-    // plan, not the answer: corpus shingles are cut map-side before
-    // any shuffle, the shape that survives a bench set too large to
-    // broadcast.
-    "x32_bloom_contamination" -> ((spark, sfDir) => {
-      bloomContaminationScreenFrom(
-        docs(spark, sfDir).select(col("doc_id"), col("text")),
-        Lake.materialize(spark, sfDir, X32BenchShingles), n = 8)
-        .orderBy(col("doc_id"))
-    }),
+    // x25's screen under its former bloom-variant name: a bloom
+    // pre-filter in front of a broadcast hash probe only added work,
+    // so both names run the one screen and share one oracle.
+    "x32_bloom_contamination" -> ((spark, sfDir) =>
+      sliceScreen(spark, sfDir).orderBy(col("doc_id"))),
 
     // INCREMENTAL-INGEST dedup: the 10% slice doc_id % 10 == 9 stands
     // in for a newly-arrived batch, the rest for the standing corpus;
@@ -1842,16 +1723,13 @@ object Dedup {
 
     // DECONTAMINATION — the removal step the screen (x25/x32) feeds:
     // the clean corpus with every flagged document dropped. Scale
-    // shape: the bloom-pruned screen (x32's plan, same checkpointed
-    // bench-shingle artifact) yields the small flagged set; the
+    // shape: x25's broadcast screen yields the small flagged set; the
     // removal is ONE left-anti join against it (AQE broadcasts it),
     // so the corpus passes through a single scan + screen, never a
     // second full shuffle.
     "x36_decontaminate" -> ((spark, sfDir) => {
       val d = docs(spark, sfDir)
-      val flagged = bloomContaminationScreenFrom(
-        d.select(col("doc_id"), col("text")),
-        Lake.materialize(spark, sfDir, X32BenchShingles), n = 8)
+      val flagged = sliceScreen(spark, sfDir)
         .filter(col("contaminated"))
         .select(col("doc_id"))
       d.join(flagged, Seq("doc_id"), "left_anti")
@@ -2112,6 +1990,22 @@ object Dedup {
         round(col("n_shared").cast("double") /
           (col("_na") + col("_nb") - col("n_shared")), 4).as("jaccard"))
   }
+
+  /** [[sliceScreen]]'s oracle (x25, and x32 under its alias): 8-gram
+    * overlap against the deterministic benchmark slice, mirroring
+    * contaminationScreen exactly (distinct shingles per doc,
+    * self-pairs excluded, zero-filled left join).
+    */
+  private val sliceScreenOracle =
+    "WITH tok AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents), " +
+      "idx AS (SELECT doc_id, w, unnest(range(1, len(w) - 6)) AS i FROM tok), " +
+      "sh AS (SELECT DISTINCT doc_id, list_reduce(w[i:i+7], (a, b) -> a || ' ' || b) AS g FROM idx), " +
+      "bench AS (SELECT doc_id AS b_id, g FROM sh WHERE doc_id % 20 = 0), " +
+      "hits AS (SELECT sh.doc_id, COUNT(DISTINCT sh.g) AS n_shared FROM sh " +
+      "JOIN bench ON sh.g = bench.g AND sh.doc_id != bench.b_id GROUP BY 1) " +
+      "SELECT d.doc_id, COALESCE(h.n_shared, 0) AS n_shared, " +
+      "COALESCE(h.n_shared, 0) > 0 AS contaminated " +
+      "FROM documents d LEFT JOIN hits h ON d.doc_id = h.doc_id ORDER BY d.doc_id"
 
   val oracles: Map[String, String] = Map(
     // the x05 shingle/cap chain at the 0.3 blocking threshold (the
@@ -2452,19 +2346,7 @@ object Dedup {
         "SELECT doc_a, doc_b, ROUND(CAST(c AS DOUBLE) / (sa.n + sb.n - c), 4) AS jaccard " +
         "FROM inter JOIN sz sa ON sa.doc_id = doc_a JOIN sz sb ON sb.doc_id = doc_b " +
         "WHERE CAST(c AS DOUBLE) / (sa.n + sb.n - c) >= 0.5 ORDER BY doc_a, doc_b"),
-    // 8-gram overlap against the deterministic benchmark slice,
-    // mirroring contaminationScreen exactly (distinct shingles per
-    // doc, self-pairs excluded, zero-filled left join)
-    "x25_contamination_screen" ->
-      ("WITH tok AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents), " +
-        "idx AS (SELECT doc_id, w, unnest(range(1, len(w) - 6)) AS i FROM tok), " +
-        "sh AS (SELECT DISTINCT doc_id, list_reduce(w[i:i+7], (a, b) -> a || ' ' || b) AS g FROM idx), " +
-        "bench AS (SELECT doc_id AS b_id, g FROM sh WHERE doc_id % 20 = 0), " +
-        "hits AS (SELECT sh.doc_id, COUNT(DISTINCT sh.g) AS n_shared FROM sh " +
-        "JOIN bench ON sh.g = bench.g AND sh.doc_id != bench.b_id GROUP BY 1) " +
-        "SELECT d.doc_id, COALESCE(h.n_shared, 0) AS n_shared, " +
-        "COALESCE(h.n_shared, 0) > 0 AS contaminated " +
-        "FROM documents d LEFT JOIN hits h ON d.doc_id = h.doc_id ORDER BY d.doc_id"),
+    "x25_contamination_screen" -> sliceScreenOracle,
     // x25's shingle CTEs plus the per-doc denominator; the fraction is
     // one exact-integer division and the flag compares the unrounded
     // quotient (bit-identical on both engines) against the threshold
@@ -2484,19 +2366,7 @@ object Dedup {
         "GREATEST(COALESCE(t.n_shingles, 0), 1) >= 0.2 AS flagged " +
         "FROM documents d LEFT JOIN tot t ON d.doc_id = t.doc_id " +
         "LEFT JOIN hits h ON d.doc_id = h.doc_id ORDER BY d.doc_id"),
-    // x32 is semantically x25 — the bloom only prunes the plan — so
-    // the oracle is x25's SQL verbatim (exactness through the bloom is
-    // ALSO pinned by ExtSpec's frame-equality test against x25).
-    "x32_bloom_contamination" ->
-      ("WITH tok AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents), " +
-        "idx AS (SELECT doc_id, w, unnest(range(1, len(w) - 6)) AS i FROM tok), " +
-        "sh AS (SELECT DISTINCT doc_id, list_reduce(w[i:i+7], (a, b) -> a || ' ' || b) AS g FROM idx), " +
-        "bench AS (SELECT doc_id AS b_id, g FROM sh WHERE doc_id % 20 = 0), " +
-        "hits AS (SELECT sh.doc_id, COUNT(DISTINCT sh.g) AS n_shared FROM sh " +
-        "JOIN bench ON sh.g = bench.g AND sh.doc_id != bench.b_id GROUP BY 1) " +
-        "SELECT d.doc_id, COALESCE(h.n_shared, 0) AS n_shared, " +
-        "COALESCE(h.n_shared, 0) > 0 AS contaminated " +
-        "FROM documents d LEFT JOIN hits h ON d.doc_id = h.doc_id ORDER BY d.doc_id"),
+    "x32_bloom_contamination" -> sliceScreenOracle,
     // batch (doc_id % 10 = 9) classified against the standing corpus
     // on the normalized text; in-batch dups by first-doc_id window
     "x33_incremental_dedup" ->

@@ -3,6 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.functions.BloomExpressions
 import graft.sources.Lake
 import graft.sources.Lake.Derived
 
@@ -505,11 +506,11 @@ object Graph {
     * c ∈ N⁺(a) ∩ N⁺(b) set, generated by an equi-join fan-out and
     * closed in TWO steps whose order is the whole design:
     *
-    *  1. a BLOOM of the arc-key set (x32's native
-    *     BloomFilterAggregate, 1% fpp, an explicit literal in the
-    *     plan) probes every wedge MAP-SIDE, inside the stage that
-    *     generates it — the O(Σ od²) stream is pipelined through the
-    *     filter and NEVER materializes to a shuffle. This is the
+    *  1. a BLOOM of the arc-key set
+    *     ([[graft.functions.BloomExpressions]], 1% fpp, sized for
+    *     the real arc count) probes every wedge MAP-SIDE, inside the
+    *     stage that generates it — the O(Σ od²) stream is pipelined
+    *     through the filter and NEVER materializes to a shuffle. This is the
     *     step the naive semi-join-only form gets fatally wrong: at
     *     the 100× lake the 8.22 B-row wedge shuffle/sort needs
     *     ~200 GB of spill and died on disk exactly there (r16 first
@@ -529,86 +530,13 @@ object Graph {
     * and disk-flat where the array form needed a 64 g heap. Output
     * identical: each triangle once, c as long.
     */
-  /** Bloom over the arc-key pairs, sized for the REAL arc count.
-    * The native aggregate CLAMPS (Math.min, silently — no error)
-    * both its numBits and estimatedNumItems against the
-    * runtime-filter conf caps (64 M bits / 4 M items); this bloom is
-    * an explicit literal, not a runtime filter, so both caps are
-    * raised to what the arc set needs before building. Raising only
-    * the bit cap is a trap this code fell into once: with items
-    * clamped to 4 M the optimal-k computation picks ~m/4M·ln2 ≈ 196
-    * hash functions, 118 M real insertions saturate every bit, and
-    * the "filter" passes ~100% of the 8.22 B-row wedge stream — the
-    * exact disk blow-up it exists to prevent (r16 second probe
-    * attempt: 70 GB of survivor shuffle before the disk died).
-    */
-  private[graft] def arcBloom(arcs: DataFrame, nArcs: Long,
-      fpp: Double): Array[Byte] = {
-    val spark = arcs.sparkSession
-    val need = graft.ext.Dedup.bloomBits(nArcs, fpp)
-    val bitsKey = "spark.sql.optimizer.runtime.bloomFilter.maxNumBits"
-    val itemsKey = "spark.sql.optimizer.runtime.bloomFilter.maxNumItems"
-    if (need > spark.conf.get(bitsKey, "67108864").toLong)
-      spark.conf.set(bitsKey, need.toString)
-    if (nArcs > spark.conf.get(itemsKey, "4000000").toLong)
-      spark.conf.set(itemsKey, nArcs.toString)
-    // EVERY partial-aggregation task holds a full bitmap plus its
-    // serialize copy (~3× the bitmap bytes peak), so the build's
-    // parallelism must shrink as the bloom grows: 32 concurrent
-    // 141 MB bitmaps OOM'd a 32 g heap on the r16 third probe
-    // attempt. Coalesce the build scan so all in-flight bitmaps stay
-    // inside a ~4 GB budget; inserting 118 M keys is cheap enough
-    // that a handful of tasks keep the build in seconds.
-    val bitmapBytes = math.max(1L, need / 8L)
-    val parts = math.max(1L,
-      math.min(32L, 4000000000L / (3L * bitmapBytes))).toInt
-    graft.ext.Dedup.bloomFilterBytes(
-      arcs.coalesce(parts), struct(col("s"), col("t")), nArcs, fpp)
-  }
-
-  /** The live arc-bloom broadcast, one per JVM. Each
-    * [[triangleEnumJoin]] call broadcasts a fresh ~1.2 B·E bitmap and
-    * nothing else frees the old one: the executor-side LRU in
-    * [[graft.functions.BloomExpressions]] only bounds DESERIALIZED
-    * copies, while the serialized blocks sit in every block manager
-    * until the driver GCs the handle — a warm-rep bench would
-    * accumulate ~141 MB per invocation at the fifth decade. The
-    * previous handle is destroyed when a new one is created; every
-    * consuming action runs to completion before the next plan is
-    * built, so the retired broadcast has no in-flight reader.
-    */
-  private var liveArcBloomBc: Option[org.apache.spark.broadcast.Broadcast[Array[Byte]]] = None
-
-  private def trackArcBloom(
-      bc: org.apache.spark.broadcast.Broadcast[Array[Byte]])
-      : org.apache.spark.broadcast.Broadcast[Array[Byte]] = synchronized {
-    liveArcBloomBc.filter(_.id != bc.id).foreach { prev =>
-      try prev.destroy() catch { case scala.util.control.NonFatal(_) => () }
-    }
-    liveArcBloomBc = Some(bc)
-    bc
-  }
-
   private[graft] def triangleEnumJoin(arcs: DataFrame): DataFrame = {
     val nArcs = math.max(arcs.count(), 1L)
-    val bloom = arcBloom(arcs, nArcs, fpp = 0.01)
-    // The bloom probes via a BROADCAST handle, not a plan literal:
-    // the literal form puts the full bitmap in the stage's task
-    // binary and every concurrent task deserializes a private copy —
-    // 32 tasks × 141 MB at the 100× lake OOM'd the 32 g contract
-    // heap in the wedge stage itself (r16 fourth probe attempt). The
-    // broadcast form ships the bitmap once per executor and
-    // [[graft.functions.BloomExpressions]] interns ONE deserialized
-    // filter per JVM, so the wedge stream's memory is back to the
-    // arc frame + one bitmap regardless of task concurrency.
-    val pre =
-      if (bloom == null) lit(false)
-      else graft.functions.BloomExpressions.mightContainBroadcast(
-        trackArcBloom(arcs.sparkSession.sparkContext.broadcast(bloom)),
-        xxhash64(struct(col("b"), col("c"))))
+    val bloom = BloomExpressions.build("triangleEnumJoin", arcs,
+      struct(col("s"), col("t")), nArcs)
     arcs.select(col("s").as("a"), col("t").as("b"))
       .join(arcs.select(col("s").as("a"), col("t").as("c")), "a")
-      .filter(pre)
+      .filter(BloomExpressions.mightContain(bloom, struct(col("b"), col("c"))))
       .join(arcs.select(col("s").as("b"), col("t").as("c")),
         Seq("b", "c"), "left_semi")
       .select(col("a"), col("b"), col("c").cast("long").as("c"))

@@ -33,57 +33,27 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
 object GraftExtensions {
 
-  /** (name, info, builder) row for `cosine_sim` — the fused
-    * single-pass [[CosineSimilarity]] expression.
-    */
-  val cosineSimEntry: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier("cosine_sim"),
-      new ExpressionInfo(classOf[CosineSimilarity].getName, "cosine_sim"),
+  /** The (name, info, builder) row of a two-argument native function. */
+  private def entry(name: String, cls: Class[_])(
+      make: (Expression, Expression) => Expression)
+      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
+    (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name),
       (args: Seq[Expression]) => {
         require(args.length == 2,
-          s"cosine_sim takes exactly 2 arguments, got ${args.length}")
-        CosineSimilarity(args.head, args(1))
-      })
-
-  /** (name, info, builder) row for `sq_l2_dist` — the fused
-    * [[SquaredL2Distance]] expression (the IVF probe metric).
-    */
-  val sqL2Entry: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier("sq_l2_dist"),
-      new ExpressionInfo(classOf[SquaredL2Distance].getName, "sq_l2_dist"),
-      (args: Seq[Expression]) => {
-        require(args.length == 2,
-          s"sq_l2_dist takes exactly 2 arguments, got ${args.length}")
-        SquaredL2Distance(args.head, args(1))
-      })
-
-  /** (name, info, builder) row for `dot_i` — the exact-integer
-    * [[IntDotProduct]] expression (the quantized-rerank kernel).
-    */
-  val dotIEntry: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier("dot_i"),
-      new ExpressionInfo(classOf[IntDotProduct].getName, "dot_i"),
-      (args: Seq[Expression]) => {
-        require(args.length == 2,
-          s"dot_i takes exactly 2 arguments, got ${args.length}")
-        IntDotProduct(args.head, args(1))
-      })
-
-  /** (name, info, builder) row for `sorted_intersect` — the
-    * two-pointer merge [[SortedLongIntersect]] (the triangle-
-    * enumeration kernel).
-    */
-  val sortedIntersectEntry: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier("sorted_intersect"),
-      new ExpressionInfo(classOf[SortedLongIntersect].getName, "sorted_intersect"),
-      (args: Seq[Expression]) => {
-        require(args.length == 2,
-          s"sorted_intersect takes exactly 2 arguments, got ${args.length}")
-        SortedLongIntersect(args.head, args(1))
+          s"$name takes exactly 2 arguments, got ${args.length}")
+        make(args.head, args(1))
       })
 
   val entries: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] =
-    Seq(cosineSimEntry, sqL2Entry, dotIEntry, sortedIntersectEntry)
+    Seq(
+      // the fused single-pass cosine
+      entry("cosine_sim", classOf[CosineSimilarity])(CosineSimilarity(_, _)),
+      // the IVF probe metric
+      entry("sq_l2_dist", classOf[SquaredL2Distance])(SquaredL2Distance(_, _)),
+      // the exact-integer quantized-rerank kernel
+      entry("dot_i", classOf[IntDotProduct])(IntDotProduct(_, _)),
+      // the two-pointer merge of triangle enumeration
+      entry("sorted_intersect", classOf[SortedLongIntersect])(SortedLongIntersect(_, _)))
 
   /** Registers the library's native functions in an existing session's
     * function registry (no-op when already present, so every engine

@@ -69,16 +69,14 @@ object Views {
       val daily = Lake.table(spark, sfDir, "events")
         .groupBy(to_date(col("ts")).as("date"), col("event_type"))
         .agg(count(lit(1)).as("n"))
-      val prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "STATIC")
-      spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      try {
+      Lake.withConf(spark, "spark.sql.sources.partitionOverwriteMode" -> "dynamic") {
         // full build
         daily.write.mode("overwrite").partitionBy("date").parquet(target)
         // incremental step: the latest day only (bounded 1-row collect)
         val lastDay = daily.agg(max(col("date"))).collect()(0).getDate(0)
         daily.filter(col("date") === lit(lastDay))
           .write.mode("overwrite").partitionBy("date").parquet(target)
-      } finally spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+      }
       spark.read.parquet(target)
         .select(date_format(col("date"), "yyyy-MM-dd").as("date"),
           col("event_type"), col("n"))

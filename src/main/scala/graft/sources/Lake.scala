@@ -50,7 +50,7 @@ object Lake {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  private val NanosKey = "spark.sql.legacy.parquet.nanosAsLong"
+  private[graft] val NanosKey = "spark.sql.legacy.parquet.nanosAsLong"
   private val OutTsKey = "spark.sql.parquet.outputTimestampType"
 
   /** Open [[withConf]] scopes per (session, conf key): the value the
@@ -74,7 +74,9 @@ object Lake {
     val keys = kvs.map { case (k, _) => (sessionId(spark), k) }
     confScopes.synchronized {
       kvs.zip(keys).foreach { case ((k, v), key) =>
-        val (orig, open) = confScopes.getOrElse(key, (spark.conf.getOption(k), 0))
+        // the value SET on the session, not getOption's default: a key
+        // that was unset goes back to unset
+        val (orig, open) = confScopes.getOrElse(key, (spark.conf.getAll.get(k), 0))
         confScopes(key) = (orig, open + 1)
         spark.conf.set(k, v)
       }

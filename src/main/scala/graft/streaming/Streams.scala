@@ -227,15 +227,13 @@ object Streams {
     * dataset generation), normalized after read by the SAME choke
     * point as the batch path (Lake.normalizeTs) so the two can never
     * drift; pathGlobFilter selects the events file out of the sf
-    * directory.
+    * directory. A nanos-encoded raw stream scans TIMESTAMP(NANOS)
+    * parquet at execution time, so callers run the whole query with
+    * nanos-as-long scoped around [[runToParquetSink]]: the query
+    * clones the session's conf at start(), and the sink run awaits its
+    * termination, so the scope ends after the last microbatch.
     */
   private def rawEventStream(spark: SparkSession, sfDir: String): DataFrame = {
-    // A nanos-encoded raw stream scans TIMESTAMP(NANOS) parquet at
-    // execution time, so nanos-as-long must hold for the stream's
-    // LIFETIME — a scoped set/restore (Lake.withConf) would be unset
-    // again by the time the microbatches run. Deliberately
-    // session-global here.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val schema = Lake.rawSchema(spark, sfDir, "events")
     Lake.normalizeTs(
       spark.readStream
@@ -284,14 +282,14 @@ object Streams {
     */
   def windowedCounts(spark: SparkSession, sfDir: String): DataFrame = {
     assertCorpusSpan(spark, sfDir)
-    runToParquetSink(spark,
-      rawEventStream(spark, sfDir)
-        .withWatermark("ts", "1 day")
-        .groupBy(window(col("ts"), "1 day"), col("event_type"))
-        .agg(count(lit(1)).as("n"))
-        .select(date_format(col("window.start"), "yyyy-MM-dd").as("day"),
-          col("event_type"), col("n")),
-      s"s01_${tag(sfDir)}")
+    Lake.withConf(spark, Lake.NanosKey -> "true")(runToParquetSink(spark,
+        rawEventStream(spark, sfDir)
+          .withWatermark("ts", "1 day")
+          .groupBy(window(col("ts"), "1 day"), col("event_type"))
+          .agg(count(lit(1)).as("n"))
+          .select(date_format(col("window.start"), "yyyy-MM-dd").as("day"),
+            col("event_type"), col("n")),
+        s"s01_${tag(sfDir)}"))
       .filter(col("day") >= "2024-01-01" && col("day") <= "2024-01-25")
       .orderBy(col("day"), col("event_type"))
   }
@@ -327,14 +325,14 @@ object Streams {
     */
   def slidingCounts(spark: SparkSession, sfDir: String): DataFrame = {
     assertCorpusSpan(spark, sfDir)
-    runToParquetSink(spark,
-      rawEventStream(spark, sfDir)
-        .withWatermark("ts", "1 day")
-        .groupBy(window(col("ts"), "2 days", "1 day"), col("event_type"))
-        .agg(count(lit(1)).as("n"))
-        .select(date_format(col("window.start"), "yyyy-MM-dd").as("wstart"),
-          col("event_type"), col("n")),
-      s"s03_${tag(sfDir)}")
+    Lake.withConf(spark, Lake.NanosKey -> "true")(runToParquetSink(spark,
+        rawEventStream(spark, sfDir)
+          .withWatermark("ts", "1 day")
+          .groupBy(window(col("ts"), "2 days", "1 day"), col("event_type"))
+          .agg(count(lit(1)).as("n"))
+          .select(date_format(col("window.start"), "yyyy-MM-dd").as("wstart"),
+            col("event_type"), col("n")),
+        s"s03_${tag(sfDir)}"))
       .filter(col("wstart") >= "2023-12-31" && col("wstart") <= "2024-01-24")
       .orderBy(col("wstart"), col("event_type"))
   }

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.ext.{AudioFeatures, Dedup, Multimodal, Sampling, Similarity, TextAnalysis}
+import graft.functions.BloomExpressions
 import graft.sources.Lake
 
 /** Semantics tests for the sketch-based (rows-only-checked) LLM
@@ -539,9 +540,8 @@ class ExtSpec extends SparkSpec {
   }
 
   test("bloom-accelerated contamination screen equals the exact screen frame-for-frame (x32 ≡ x25)") {
-    // the bloom is a pre-filter with no false negatives; the verify
-    // join removes false positives — so the two operators must agree
-    // on every row, not just in aggregate
+    // x32 is x25's screen under its former bloom-variant name, so the
+    // two registry names must agree on every row
     val exact = Dedup.queries("x25_contamination_screen")(spark, SfDir)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2)))
     val bloomed = Dedup.queries("x32_bloom_contamination")(spark, SfDir)
@@ -554,17 +554,17 @@ class ExtSpec extends SparkSpec {
     import spark.implicits._
     val vals = (0 until 2000).map(i => s"item_$i")
     val df = vals.toDF("v")
-    val bloom = Dedup.bloomFilterBytes(df, col("v"), expectedItems = 4096)
+    val bloom = BloomExpressions.build("ExtSpec", df, col("v"), expectedItems = 4096)
     // every built value MUST probe true (the exactness argument for
-    // x32/x33 rests on this)
-    val missed = df.filter(!Dedup.bloomMightContain(bloom, col("v"))).count()
+    // x33 and the wedge stream rests on this)
+    val missed = df.filter(!BloomExpressions.mightContain(bloom, col("v"))).count()
     assert(missed == 0, s"$missed false negatives")
     // disjoint probes mostly miss (fpp-bounded, generous margin)
     val fp = (5000 until 7000).map(i => s"other_$i").toDF("v")
-      .filter(Dedup.bloomMightContain(bloom, col("v"))).count()
+      .filter(BloomExpressions.mightContain(bloom, col("v"))).count()
     assert(fp < 200, s"false-positive rate implausibly high: $fp/2000")
-    val empty = Dedup.bloomFilterBytes(df.filter(lit(false)), col("v"), 64)
-    assert(df.filter(Dedup.bloomMightContain(empty, col("v"))).count() == 0)
+    val empty = BloomExpressions.build("ExtSpec", df.filter(lit(false)), col("v"), 64)
+    assert(df.filter(BloomExpressions.mightContain(empty, col("v"))).count() == 0)
   }
 
   test("incrementalDedup classifies corpus-dup, batch-dup and survivor; corpus probe is map-side") {
@@ -2602,19 +2602,20 @@ class ExtSpec extends SparkSpec {
     val n = 8000000L
     val arcs = spark.range(n)
       .select((col("id") * 2).as("s"), (col("id") * 2 + 1).as("t"))
-    val bloom = graft.ext.Graph.arcBloom(arcs, n, fpp = 0.01)
-    assert(bloom != null && bloom.length > 8000000,
-      s"bloom still clamped to ${if (bloom == null) -1 else bloom.length} bytes")
+    val bloom = BloomExpressions.build("ExtSpec", arcs,
+      org.apache.spark.sql.functions.struct(col("s"), col("t")), n)
+    val bytes = bloom.fold(-1)(_.value.length)
+    assert(bytes > 8000000, s"bloom still clamped to $bytes bytes")
     // 1M non-member pairs (reversed arcs are never inserted)
     val probes = spark.range(1000000L)
       .select((col("id") * 2 + 1).as("b"), (col("id") * 2).as("c"))
-    val fp = probes.filter(graft.ext.Dedup.bloomMightContain(bloom,
+    val fp = probes.filter(BloomExpressions.mightContain(bloom,
         org.apache.spark.sql.functions.struct(col("b"), col("c"))))
       .count()
     assert(fp < 30000, s"false-positive rate ${fp / 10000.0}% — filter saturated")
     // and every true member passes (no false negatives, ever)
     val tn = arcs.limit(100000)
-      .filter(graft.ext.Dedup.bloomMightContain(bloom,
+      .filter(BloomExpressions.mightContain(bloom,
         org.apache.spark.sql.functions.struct(col("s"), col("t"))))
       .count()
     assert(tn == 100000L, s"bloom dropped true members: $tn")

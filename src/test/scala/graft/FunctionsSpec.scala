@@ -292,22 +292,26 @@ class FunctionsSpec extends SparkSpec {
     val n = 100000L
     val arcs = spark.range(n)
       .select((col("id") * 2).as("s"), (col("id") * 2 + 1).as("t"))
-    val bytes = graft.ext.Dedup.bloomFilterBytes(
-      arcs, struct(col("s"), col("t")), n, fpp = 0.01)
-    val bc = spark.sparkContext.broadcast(bytes)
+    val bloom = graft.functions.BloomExpressions.build("FunctionsSpec",
+      arcs, struct(col("s"), col("t")), n)
     def probe(df: org.apache.spark.sql.DataFrame, a: String, b: String) =
-      df.filter(graft.functions.BloomExpressions.mightContainBroadcast(
-        bc, xxhash64(struct(col(a), col(b))))).count()
+      df.filter(graft.functions.BloomExpressions.mightContain(
+        bloom, struct(col(a), col(b)))).count()
     // no false negatives, ever
     assert(probe(arcs, "s", "t") == n, "broadcast probe dropped members")
     // non-members (reversed arcs) pass at ~1%
     val rev = arcs.select(col("t").as("s"), col("s").as("t"))
     val fp = probe(rev, "s", "t")
     assert(fp < 3000, s"broadcast probe saturated: $fp/100000 false positives")
-    // row-identical to the literal probe on the same sketch — the
+    // row-identical to Spark's literal probe on the same sketch — the
     // broadcast form changes WHERE the bitmap lives, never a verdict
-    val lit = rev.filter(graft.ext.Dedup.bloomMightContain(bytes,
-      struct(col("s"), col("t")))).count()
+    import org.apache.spark.sql.GraftExpressionBridge
+    import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
+    import org.apache.spark.sql.types.BinaryType
+    val literalProbe = GraftExpressionBridge.column(new BloomFilterMightContain(
+      Literal(bloom.get.value, BinaryType),
+      GraftExpressionBridge.expression(xxhash64(struct(col("s"), col("t"))))))
+    val lit = rev.filter(literalProbe).count()
     assert(fp == lit, s"broadcast $fp vs literal $lit verdicts diverge")
   }
 }

@@ -1,6 +1,7 @@
 package graft
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Paths}
+import java.util.regex.Pattern
 
 import scala.jdk.CollectionConverters._
 
@@ -14,47 +15,58 @@ import graft.tools.Time
   */
 class ToolsSpec extends AnyFunSuite {
 
-  test("SparkSession.builder occurs only in engine/Tuning.scala") {
+  /** (path under src/main/scala, text) of every main source file. */
+  private lazy val sources: Seq[(String, String)] = {
     val root = Paths.get("src/main/scala")
     assert(Files.isDirectory(root), s"run from the repository root: $root")
     val walk = Files.walk(root)
-    val hits: Seq[(Path, Int)] =
-      try walk.iterator.asScala.filter(_.toString.endsWith(".scala")).toSeq
-        .map(p => p -> "SparkSession\\.builder".r
-          .findAllIn(Files.readString(p)).size)
-        .filter(_._2 > 0)
-      finally walk.close()
-    assert(hits.map { case (p, n) => root.relativize(p).toString -> n } ==
-      Seq("graft/engine/Tuning.scala" -> 1), s"builder sites: $hits")
+    try walk.iterator.asScala.filter(_.toString.endsWith(".scala")).toSeq
+      .map(p => root.relativize(p).toString -> Files.readString(p))
+      .sortBy(_._1)
+    finally walk.close()
+  }
+
+  /** (file, occurrences) of each file holding the literal `s`. */
+  private def sitesOf(s: String): Seq[(String, Int)] =
+    sources
+      .map { case (p, text) => p -> Pattern.quote(s).r.findAllIn(text).size }
+      .filter(_._2 > 0)
+
+  test("SparkSession.builder occurs only in engine/Tuning.scala") {
+    val hits = sitesOf("SparkSession.builder")
+    assert(hits == Seq("graft/engine/Tuning.scala" -> 1), s"builder sites: $hits")
+  }
+
+  test("the bloom aggregate and probe expressions occur only in functions/BloomExpressions.scala") {
+    Seq("BloomFilterAggregate", "BloomFilterMightContain").foreach { s =>
+      val hits = sitesOf(s).map(_._1)
+      assert(hits == Seq("graft/functions/BloomExpressions.scala"), s"$s sites: $hits")
+    }
+  }
+
+  test("spark.conf.set occurs only in Lake.withConf, SparkEngine.wrap and tools/Time") {
+    // each site is named by the object member that holds it
+    val member = """(?m)^  (?:private(?:\[\w+\])? )?def (\w+)""".r
+    val hits = sources.flatMap { case (p, text) =>
+      Pattern.quote("spark.conf.set(").r.findAllMatchIn(text).map { m =>
+        val owner = member.findAllMatchIn(text.take(m.start)).toSeq.lastOption
+          .fold("?")(_.group(1))
+        if (p == "graft/tools/Time.scala") p else s"$p#$owner"
+      }
+    }.distinct
+    assert(hits == Seq("graft/engine/SparkEngine.scala#wrap",
+      "graft/sources/Lake.scala#withConf", "graft/tools/Time.scala"),
+      s"spark.conf.set sites: $hits")
   }
 
   test("foreachBatch and maxFilesPerTrigger occur once each, only in streaming/Streams.scala") {
-    val root = Paths.get("src/main/scala")
-    assert(Files.isDirectory(root), s"run from the repository root: $root")
-    val sources = {
-      val walk = Files.walk(root)
-      try walk.iterator.asScala.filter(_.toString.endsWith(".scala")).toSeq
-        .map(p => root.relativize(p).toString -> Files.readString(p))
-      finally walk.close()
-    }
     Seq(".foreachBatch {", "\"maxFilesPerTrigger\"").foreach { s =>
-      val hits = sources
-        .map { case (p, text) =>
-          p -> java.util.regex.Pattern.quote(s).r.findAllIn(text).size }
-        .filter(_._2 > 0)
+      val hits = sitesOf(s)
       assert(hits == Seq("graft/streaming/Streams.scala" -> 1), s"$s sites: $hits")
     }
   }
 
   test("lake tables are declared once: no string names a table at a Lake call") {
-    val root = Paths.get("src/main/scala")
-    assert(Files.isDirectory(root), s"run from the repository root: $root")
-    val sources = {
-      val walk = Files.walk(root)
-      try walk.iterator.asScala.filter(_.toString.endsWith(".scala")).toSeq
-        .map(p => root.relativize(p).toString -> Files.readString(p))
-      finally walk.close()
-    }
     // the table is the third argument; the first two are the session
     // and the source dir
     val named = ("""Lake\.(materialize|isBuilt|materializedPath)\(""" +
